@@ -13,6 +13,11 @@ are value-checked through tag-union/join composites in
 operators/composites.py, while the single-operator builders keep their
 own pytest + local-oracle coverage).  Rows-only entries (recall/error-
 bound-tested in pytest instead of SQL-oracled) come after.
+
+Every entry module registers its builders in a module-level `QUERIES`
+dict and its DuckDB SQL in `ORACLES`; `_MODULES` names each such module
+once.  Adding an entry takes two places: the home module's dicts and
+one of the order lists below.
 """
 
 from __future__ import annotations
@@ -21,6 +26,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.ml import quality
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.operators import (
     composites,
     constraints,
@@ -39,8 +45,42 @@ from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_dat
     text,
     tpchsql,
 )
-from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.operators.medications import (
-    MEDICATIONS_CTE,
+from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+    advisor,
+    deltaproto,
+    iceberg,
+    lakesql,
+    lakeview,
+    minilake,
+)
+
+#: Every module that registers entries: each exports `QUERIES` (name ->
+#: builder) and `ORACLES` (name -> DuckDB SQL; rows-only entries have
+#: none).  The driver order comes from the lists below, not from here.
+_MODULES = (
+    dashboard,
+    constraints,
+    relational,
+    events,
+    text,
+    dedup,
+    similarity,
+    sqlfront,
+    tpchsql,
+    multimodal,
+    sampling,
+    curation,
+    retrieval,
+    composites,
+    graph,
+    encoding,
+    quality,
+    minilake,
+    deltaproto,
+    iceberg,
+    advisor,
+    lakesql,
+    lakeview,
 )
 
 # First 50 = oracle-bearing (the driver's correctness window); the
@@ -317,102 +357,8 @@ _PACKAGED_IN_COMPOSITES = {
 
 def _pool() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     pool: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for mod in (
-        dashboard,
-        constraints,
-        relational,
-        events,
-        text,
-        dedup,
-        similarity,
-        sqlfront,
-        tpchsql,
-        multimodal,
-        sampling,
-        curation,
-        retrieval,
-        composites,
-        graph,
-    ):
+    for mod in _MODULES:
         pool.update(mod.QUERIES)
-    pool["ml_feature_encoding"] = encoding.ml_feature_encoding
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.ml import (
-        quality as _quality,
-    )
-
-    pool["ml_quality_scores"] = _quality.quality_scores_entry
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as _minilake,
-    )
-
-    pool["lake_documents_roundtrip"] = _minilake.documents_roundtrip_entry
-    pool["lake_partitioned_scan"] = _minilake.partitioned_scan_entry
-    pool["lake_changes_feed"] = _minilake.changes_feed_entry
-    pool["lake_dv_roundtrip"] = _minilake.dv_roundtrip_entry
-    pool["lake_bloom_lookup"] = _minilake.bloom_lookup_entry
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        deltaproto as _deltaproto,
-    )
-
-    pool["lake_delta_interop"] = _deltaproto.delta_interop_entry
-    pool["lake_delta_merge"] = _deltaproto.delta_merge_entry
-    pool["lake_delta_generated"] = _deltaproto.delta_generated_entry
-    pool["lake_delta_meta"] = _deltaproto.delta_meta_tables_entry
-    pool["lake_delta_row_tracking"] = _deltaproto.delta_row_tracking_entry
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        iceberg as _iceberg,
-    )
-
-    pool["lake_iceberg_interop"] = _iceberg.iceberg_interop_entry
-    pool["lake_iceberg_v2_deletes"] = _iceberg.iceberg_v2_deletes_entry
-    pool["lake_iceberg_changes"] = _iceberg.iceberg_changes_entry
-    pool["lake_uniform_dual"] = _iceberg.uniform_dual_entry
-    pool["lake_iceberg_eq_upsert"] = _iceberg.iceberg_eq_upsert_entry
-    pool["lake_iceberg_transforms"] = _iceberg.iceberg_transforms_entry
-    pool["lake_iceberg_meta"] = _iceberg.iceberg_meta_tables_entry
-    pool["lake_iceberg_v3_dv"] = _iceberg.iceberg_v3_dv_entry
-    pool["lake_iceberg_row_lineage"] = _iceberg.iceberg_row_lineage_entry
-    pool["lake_iceberg_upsert_atomic"] = _iceberg.iceberg_upsert_atomic_entry
-    pool["lake_iceberg_defaults"] = _iceberg.iceberg_defaults_entry
-    pool["lake_delta_variant"] = _deltaproto.delta_variant_entry
-    pool["lake_iceberg_variant"] = _iceberg.iceberg_variant_entry
-    pool["lake_iceberg_changes_eq"] = _iceberg.iceberg_changes_eq_entry
-    pool["lake_iceberg_stream_hours"] = _iceberg.iceberg_stream_hours_entry
-    pool["lake_uniform_dv"] = _iceberg.uniform_dv_entry
-    pool["lake_uniform_rev"] = _iceberg.uniform_rev_entry
-    pool["lake_iceberg_pstats"] = _iceberg.iceberg_pstats_entry
-    pool["lake_iceberg_ndv"] = _iceberg.iceberg_ndv_entry
-    pool["lake_delta_evolution"] = _deltaproto.delta_evolution_entry
-    pool["lake_iceberg_decimal"] = _iceberg.iceberg_decimal_entry
-    pool["lake_iceberg_exotic"] = _iceberg.iceberg_exotic_entry
-    pool["lake_delta_defaults"] = _deltaproto.delta_defaults_entry
-    pool["lake_iceberg_maint"] = _iceberg.iceberg_maint_entry
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        advisor as _advisor,
-    )
-
-    pool["lake_advised_join"] = _advisor.advised_join_entry
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesql as _lakesql,
-    )
-
-    pool["lake_delta_merge_sql"] = _lakesql.delta_merge_sql_entry
-    pool["lake_iceberg_delete_sql"] = _lakesql.iceberg_delete_sql_entry
-    pool["lake_delta_sql_lifecycle"] = _lakesql.delta_sql_lifecycle_entry
-    pool["lake_iceberg_sql_lifecycle"] = _lakesql.iceberg_sql_lifecycle_entry
-    pool["lake_named_catalog"] = _lakesql.named_catalog_entry
-    pool["lake_sql_maintenance"] = _lakesql.sql_maintenance_entry
-    pool["lake_sql_cdf_restore"] = _lakesql.sql_cdf_restore_entry
-    pool["lake_convert_in_place"] = _lakesql.convert_in_place_entry
-    pool["lake_delta_delete_pred_sql"] = _lakesql.delta_delete_pred_sql_entry
-    pool["lake_iceberg_update_pred_sql"] = (
-        _lakesql.iceberg_update_pred_sql_entry
-    )
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakeview as _lakeview,
-    )
-
-    pool["lake_incremental_view"] = _lakeview.incremental_view_entry
     unrouted = (
         set(pool) - set(_ORACLE_ORDER) - set(_TAIL_ORDER) - _PACKAGED_IN_COMPOSITES
     )
@@ -441,101 +387,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     pool: dict[str, str] = {}
-    for mod in (
-        dashboard,
-        constraints,
-        relational,
-        events,
-        text,
-        dedup,
-        similarity,
-        sqlfront,
-        tpchsql,
-        multimodal,
-        sampling,
-        curation,
-        retrieval,
-        composites,
-        graph,
-    ):
+    for mod in _MODULES:
         pool.update(mod.ORACLES)
-    pool["ml_feature_encoding"] = MEDICATIONS_CTE + encoding.ML_FEATURE_ENCODING_SQL
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as _minilake,
-    )
-
-    pool["lake_documents_roundtrip"] = _minilake.ROUNDTRIP_ORACLE_SQL
-    pool["lake_partitioned_scan"] = _minilake.PARTITIONED_ORACLE_SQL
-    pool["lake_changes_feed"] = _minilake.CHANGES_FEED_ORACLE_SQL
-    pool["lake_dv_roundtrip"] = _minilake.DV_ORACLE_SQL
-    pool["lake_bloom_lookup"] = _minilake.BLOOM_LOOKUP_ORACLE_SQL
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        deltaproto as _deltaproto,
-    )
-
-    pool["lake_delta_interop"] = _deltaproto.DELTA_INTEROP_ORACLE_SQL
-    pool["lake_delta_merge"] = _deltaproto.DELTA_MERGE_ORACLE_SQL
-    pool["lake_delta_generated"] = _deltaproto.DELTA_GENERATED_ORACLE_SQL
-    pool["lake_delta_meta"] = _deltaproto.DELTA_META_ORACLE_SQL
-    pool["lake_delta_row_tracking"] = _deltaproto.DELTA_RT_ORACLE_SQL
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        iceberg as _iceberg,
-    )
-
-    pool["lake_iceberg_interop"] = _iceberg.ICEBERG_INTEROP_ORACLE_SQL
-    pool["lake_iceberg_v2_deletes"] = _iceberg.ICEBERG_V2_ORACLE_SQL
-    pool["lake_iceberg_changes"] = _iceberg.ICEBERG_CHANGES_ORACLE_SQL
-    pool["lake_uniform_dual"] = _iceberg.UNIFORM_DUAL_ORACLE_SQL
-    pool["lake_iceberg_eq_upsert"] = _iceberg.ICEBERG_EQ_ORACLE_SQL
-    pool["lake_iceberg_transforms"] = _iceberg.ICEBERG_TRANSFORMS_ORACLE_SQL
-    pool["lake_iceberg_meta"] = _iceberg.ICEBERG_META_ORACLE_SQL
-    pool["lake_iceberg_v3_dv"] = _iceberg.ICEBERG_V3_ORACLE_SQL
-    pool["lake_iceberg_row_lineage"] = _iceberg.ICEBERG_LINEAGE_ORACLE_SQL
-    pool["lake_iceberg_upsert_atomic"] = _iceberg.ICEBERG_UPSERT_ORACLE_SQL
-    pool["lake_iceberg_defaults"] = _iceberg.ICEBERG_DEFAULTS_ORACLE_SQL
-    pool["lake_delta_variant"] = _deltaproto.DELTA_VARIANT_ORACLE_SQL
-    pool["lake_iceberg_variant"] = _iceberg.ICEBERG_VARIANT_ORACLE_SQL
-    pool["lake_iceberg_changes_eq"] = _iceberg.ICEBERG_CHANGES_EQ_ORACLE_SQL
-    pool["lake_iceberg_stream_hours"] = _iceberg.ICEBERG_STREAM_HOURS_ORACLE_SQL
-    pool["lake_uniform_dv"] = _iceberg.UNIFORM_DV_ORACLE_SQL
-    pool["lake_uniform_rev"] = _iceberg.UNIFORM_REV_ORACLE_SQL
-    pool["lake_iceberg_pstats"] = _iceberg.ICEBERG_PSTATS_ORACLE_SQL
-    pool["lake_iceberg_ndv"] = _iceberg.ICEBERG_NDV_ORACLE_SQL
-    pool["lake_delta_evolution"] = _deltaproto.DELTA_EVOLUTION_ORACLE_SQL
-    pool["lake_iceberg_decimal"] = _iceberg.ICEBERG_DECIMAL_ORACLE_SQL
-    pool["lake_iceberg_exotic"] = _iceberg.ICEBERG_EXOTIC_ORACLE_SQL
-    pool["lake_delta_defaults"] = _deltaproto.DELTA_DEFAULTS_ORACLE_SQL
-    pool["lake_iceberg_maint"] = _iceberg.ICEBERG_MAINT_ORACLE_SQL
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        advisor as _advisor,
-    )
-
-    pool["lake_advised_join"] = _advisor.ADVISED_JOIN_ORACLE_SQL
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesql as _lakesql,
-    )
-
-    pool["lake_delta_merge_sql"] = _lakesql.DELTA_MERGE_SQL_ORACLE_SQL
-    pool["lake_iceberg_delete_sql"] = _lakesql.ICEBERG_DELETE_SQL_ORACLE_SQL
-    pool["lake_delta_sql_lifecycle"] = _lakesql.DELTA_SQL_LIFECYCLE_ORACLE_SQL
-    pool["lake_iceberg_sql_lifecycle"] = (
-        _lakesql.ICEBERG_SQL_LIFECYCLE_ORACLE_SQL
-    )
-    pool["lake_named_catalog"] = _lakesql.NAMED_CATALOG_ORACLE_SQL
-    pool["lake_sql_maintenance"] = _lakesql.SQL_MAINTENANCE_ORACLE_SQL
-    pool["lake_sql_cdf_restore"] = _lakesql.SQL_CDF_RESTORE_ORACLE_SQL
-    pool["lake_convert_in_place"] = _lakesql.CONVERT_IN_PLACE_ORACLE_SQL
-    pool["lake_delta_delete_pred_sql"] = (
-        _lakesql.DELTA_DELETE_PRED_SQL_ORACLE_SQL
-    )
-    pool["lake_iceberg_update_pred_sql"] = (
-        _lakesql.ICEBERG_UPDATE_PRED_SQL_ORACLE_SQL
-    )
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakeview as _lakeview,
-    )
-
-    pool["lake_incremental_view"] = _lakeview.VIEW_ORACLE_SQL
     # window entries MUST have an oracle; tail entries carry one when
     # SQL-expressible (check_oracle / the judge's local gate use them)
     out = {name: pool[name] for name in _ORACLE_ORDER + _TAIL_ORDER if name in pool}

@@ -176,72 +176,72 @@ HEADLINE = [
 #: 24s → 14s → 13.5s → ~9.5s steady state, and single-warm timings
 #: bounce ±40% between processes.  These get extra warm passes so the
 #: timed run measures steady-state throughput, not C2 compilation.
-HEAVY_WARMUPS = {
-    "dedup_jaccard_pairs": 2,
-    "dedup_clusters": 2,
-    "dedup_minhash_lsh": 2,
-    "sim_ann_ivf": 2,
-    "sim_ann_ivf_pq": 2,
+HEAVY = {
+    "dedup_jaccard_pairs",
+    "dedup_clusters",
+    "dedup_minhash_lsh",
+    "sim_ann_ivf",
+    "sim_ann_ivf_pq",
     # serving entries: the first warm pass also builds the on-disk index,
     # so the timed pass measures the frozen-index query path only
-    "sim_ann_ivf_pq_serving": 2,
-    "retrieval_hybrid_rrf_serving": 2,
-    "dedup_containment_pairs": 2,
-    "text_topic_clusters": 2,
+    "sim_ann_ivf_pq_serving",
+    "retrieval_hybrid_rrf_serving",
+    "dedup_containment_pairs",
+    "text_topic_clusters",
     # first warm pass builds the on-disk topic index
-    "text_topic_serving": 2,
-    "dedup_embedding_clustered": 2,
+    "text_topic_serving",
+    "dedup_embedding_clustered",
     # first warm pass builds the cached lakes / delta log
-    "lake_documents_roundtrip": 2,
-    "lake_partitioned_scan": 2,
-    "lake_changes_feed": 2,
-    "lake_dv_roundtrip": 2,
-    "lake_incremental_view": 2,
+    "lake_documents_roundtrip",
+    "lake_partitioned_scan",
+    "lake_changes_feed",
+    "lake_dv_roundtrip",
+    "lake_incremental_view",
     # first warm pass builds the r13 lake fixtures
-    "lake_iceberg_decimal": 2,
-    "lake_advised_join": 2,
-    "lake_iceberg_exotic": 2,
-    "lake_delta_defaults": 2,
-    "lake_iceberg_maint": 2,
-    "lake_delta_interop": 2,
-    "lake_iceberg_interop": 2,
-    "lake_iceberg_v2_deletes": 2,
-    "lake_bloom_lookup": 2,
-    "lake_iceberg_eq_upsert": 2,
+    "lake_iceberg_decimal",
+    "lake_advised_join",
+    "lake_iceberg_exotic",
+    "lake_delta_defaults",
+    "lake_iceberg_maint",
+    "lake_delta_interop",
+    "lake_iceberg_interop",
+    "lake_iceberg_v2_deletes",
+    "lake_bloom_lookup",
+    "lake_iceberg_eq_upsert",
     # first warm pass builds the transform-partitioned orders table /
     # generated-column table / incremental posting index
-    "lake_iceberg_transforms": 2,
-    "lake_delta_generated": 2,
-    "dedup_incremental_pairs": 2,
-    "dedup_incremental_minhash": 2,
-    "lake_iceberg_meta": 2,
-    "lake_delta_meta": 2,
+    "lake_iceberg_transforms",
+    "lake_delta_generated",
+    "dedup_incremental_pairs",
+    "dedup_incremental_minhash",
+    "lake_iceberg_meta",
+    "lake_delta_meta",
     # first warm pass runs the full v3 lifecycle (upgrade + DV writes)
-    "lake_iceberg_v3_dv": 2,
-    "lake_iceberg_row_lineage": 2,
+    "lake_iceberg_v3_dv",
+    "lake_iceberg_row_lineage",
     # first warm pass runs the row-tracking lifecycle (enable/DV/update)
-    "lake_delta_row_tracking": 2,
+    "lake_delta_row_tracking",
     # first warm pass lands the atomic-upsert fixture
-    "lake_iceberg_upsert_atomic": 2,
+    "lake_iceberg_upsert_atomic",
     # first warm pass lands the two-era defaults fixture
-    "lake_iceberg_defaults": 2,
+    "lake_iceberg_defaults",
     # first warm pass lands the variant fixtures (write + DV delete)
-    "lake_delta_variant": 2,
-    "lake_iceberg_variant": 2,
+    "lake_delta_variant",
+    "lake_iceberg_variant",
     # shares the upsert fixture; warm pass builds it if absent
-    "lake_iceberg_changes_eq": 2,
+    "lake_iceberg_changes_eq",
     # first warm pass runs the SQL lifecycle (merge/delete/update/alter
     # statements) that builds the r14 fixtures
-    "lake_delta_merge_sql": 2,
-    "lake_iceberg_delete_sql": 2,
-    "lake_delta_sql_lifecycle": 2,
-    "lake_iceberg_sql_lifecycle": 2,
-    "lake_named_catalog": 2,
-    "lake_sql_maintenance": 2,
-    "lake_sql_cdf_restore": 2,
-    "lake_convert_in_place": 2,
-    "lake_delta_delete_pred_sql": 2,
-    "lake_iceberg_update_pred_sql": 2,
+    "lake_delta_merge_sql",
+    "lake_iceberg_delete_sql",
+    "lake_delta_sql_lifecycle",
+    "lake_iceberg_sql_lifecycle",
+    "lake_named_catalog",
+    "lake_sql_maintenance",
+    "lake_sql_cdf_restore",
+    "lake_convert_in_place",
+    "lake_delta_delete_pred_sql",
+    "lake_iceberg_update_pred_sql",
 }
 
 #: KMeans-family + iterative entries whose single-run walls bounce
@@ -272,7 +272,8 @@ def main() -> None:
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark import (
         get_spark,
     )
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.catalog import (
+        TABLE_NAMES,
         load_table,
     )
 
@@ -285,10 +286,7 @@ def main() -> None:
         "overwrite"
     ).save()
     if os.environ.get("SPARK_GRAFT_CACHE") == "1":
-        for t in [
-            "part", "customer", "orders", "lineitem", "supplier",
-            "nation", "region", "events", "documents", "embeddings",
-        ]:
+        for t in TABLE_NAMES:
             load_table(spark, sf_dir, t).count()
 
     # flag-gated noise damping (r14): parse ONCE before the loop so a
@@ -305,7 +303,7 @@ def main() -> None:
             # warm run(s) amortize whole-stage-codegen JIT for this plan;
             # the timed run rebuilds the DataFrame (fresh lineage, so no
             # shuffle-stage reuse — full recomputation, warm JVM)
-            for _ in range(HEAVY_WARMUPS.get(name, 1)):
+            for _ in range(2 if name in HEAVY else 1):
                 queries[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
@@ -317,7 +315,7 @@ def main() -> None:
             # of their extra warmups.
             reps = (
                 3
-                if name in VARIANCE_PRONE or name not in HEAVY_WARMUPS
+                if name in VARIANCE_PRONE or name not in HEAVY
                 else 1
             )
             # SPARK_GRAFT_BENCH_MIN_PASSES=N runs at least N timed

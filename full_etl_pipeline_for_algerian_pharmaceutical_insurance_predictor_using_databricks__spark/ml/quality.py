@@ -147,6 +147,11 @@ def quality_scores_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     return score(result.model, load_table(spark, sf_dir, "documents"))
 
 
+QUERIES = {"ml_quality_scores": quality_scores_entry}
+
+ORACLES: dict[str, str] = {}
+
+
 def save_quality_model(result: QualityTrainResult, path: str) -> None:
     """Persist the trained filter with its eval metrics (Spark ML
     writer — the cluster-loadable artifact, not a pickle)."""

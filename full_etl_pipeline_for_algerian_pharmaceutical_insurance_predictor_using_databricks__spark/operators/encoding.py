@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .dashboard import q13_ml_dataset
+from .medications import MEDICATIONS_CTE
 
 ENCODE_COLS = {
     "form": "form_idx",
@@ -79,3 +80,8 @@ FROM (
       AND pharmacological_class IS NOT NULL AND lab_name IS NOT NULL
 )
 """
+
+
+QUERIES = {"ml_feature_encoding": ml_feature_encoding}
+
+ORACLES = {"ml_feature_encoding": MEDICATIONS_CTE + ML_FEATURE_ENCODING_SQL}

@@ -118,8 +118,11 @@ def _corpus_scalars(stats: DataFrame) -> tuple[int, float]:
     `docs.count()` job per query — VERDICT r15 item 9: one action, not
     two).  Computed per query build, never memoized across queries —
     the buffer-pooled docs frame is shared between timed runs and a
-    cross-run memo would cache derived results."""
+    cross-run memo would cache derived results.  An empty corpus has a
+    NULL avgdl and scores nothing: (0, 0.0)."""
     row = stats.first()
+    if row["n_docs"] == 0:
+        return 0, 0.0
     return int(row["n_docs"]), float(row["avgdl"])
 
 

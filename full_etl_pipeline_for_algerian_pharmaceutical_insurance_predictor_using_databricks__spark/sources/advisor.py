@@ -410,3 +410,8 @@ JOIN part p ON p.p_partkey = l.l_partkey
 GROUP BY p.p_brand
 ORDER BY p.p_brand
 """
+
+
+QUERIES = {"lake_advised_join": advised_join_entry}
+
+ORACLES = {"lake_advised_join": ADVISED_JOIN_ORACLE_SQL}

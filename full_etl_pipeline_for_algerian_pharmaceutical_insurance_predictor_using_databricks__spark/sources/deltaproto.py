@@ -4254,19 +4254,6 @@ def _dv_positions(path: str, desc: dict) -> list[int]:
     return roaring.deserialize_rbm64(data[4:])
 
 
-def _write_dv_file(path: str, bitmaps: dict[str, list[int]]) -> dict[str, dict]:
-    """Positions-list convenience wrapper over `_write_dv_blobs`."""
-    from . import roaring
-
-    return _write_dv_blobs(
-        path,
-        {
-            f: (roaring.serialize_rbm64(v), len(set(v)))
-            for f, v in bitmaps.items()
-        },
-    )
-
-
 def _write_dv_blobs(
     path: str, blobs: dict[str, tuple[bytes, int]]
 ) -> dict[str, dict]:
@@ -5965,3 +5952,26 @@ FROM orders
 GROUP BY 1
 ORDER BY 1
 """
+
+
+QUERIES = {
+    "lake_delta_interop": delta_interop_entry,
+    "lake_delta_merge": delta_merge_entry,
+    "lake_delta_generated": delta_generated_entry,
+    "lake_delta_meta": delta_meta_tables_entry,
+    "lake_delta_row_tracking": delta_row_tracking_entry,
+    "lake_delta_variant": delta_variant_entry,
+    "lake_delta_evolution": delta_evolution_entry,
+    "lake_delta_defaults": delta_defaults_entry,
+}
+
+ORACLES = {
+    "lake_delta_interop": DELTA_INTEROP_ORACLE_SQL,
+    "lake_delta_merge": DELTA_MERGE_ORACLE_SQL,
+    "lake_delta_generated": DELTA_GENERATED_ORACLE_SQL,
+    "lake_delta_meta": DELTA_META_ORACLE_SQL,
+    "lake_delta_row_tracking": DELTA_RT_ORACLE_SQL,
+    "lake_delta_variant": DELTA_VARIANT_ORACLE_SQL,
+    "lake_delta_evolution": DELTA_EVOLUTION_ORACLE_SQL,
+    "lake_delta_defaults": DELTA_DEFAULTS_ORACLE_SQL,
+}

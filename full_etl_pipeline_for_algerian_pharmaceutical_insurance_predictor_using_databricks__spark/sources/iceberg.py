@@ -9917,3 +9917,52 @@ WHERE o_orderkey BETWEEN 1 AND 4000
 GROUP BY 1
 ORDER BY 1
 """
+
+
+QUERIES = {
+    "lake_iceberg_interop": iceberg_interop_entry,
+    "lake_iceberg_v2_deletes": iceberg_v2_deletes_entry,
+    "lake_iceberg_changes": iceberg_changes_entry,
+    "lake_uniform_dual": uniform_dual_entry,
+    "lake_iceberg_eq_upsert": iceberg_eq_upsert_entry,
+    "lake_iceberg_transforms": iceberg_transforms_entry,
+    "lake_iceberg_meta": iceberg_meta_tables_entry,
+    "lake_iceberg_v3_dv": iceberg_v3_dv_entry,
+    "lake_iceberg_row_lineage": iceberg_row_lineage_entry,
+    "lake_iceberg_upsert_atomic": iceberg_upsert_atomic_entry,
+    "lake_iceberg_defaults": iceberg_defaults_entry,
+    "lake_iceberg_variant": iceberg_variant_entry,
+    "lake_iceberg_changes_eq": iceberg_changes_eq_entry,
+    "lake_iceberg_stream_hours": iceberg_stream_hours_entry,
+    "lake_uniform_dv": uniform_dv_entry,
+    "lake_uniform_rev": uniform_rev_entry,
+    "lake_iceberg_pstats": iceberg_pstats_entry,
+    "lake_iceberg_ndv": iceberg_ndv_entry,
+    "lake_iceberg_decimal": iceberg_decimal_entry,
+    "lake_iceberg_exotic": iceberg_exotic_entry,
+    "lake_iceberg_maint": iceberg_maint_entry,
+}
+
+ORACLES = {
+    "lake_iceberg_interop": ICEBERG_INTEROP_ORACLE_SQL,
+    "lake_iceberg_v2_deletes": ICEBERG_V2_ORACLE_SQL,
+    "lake_iceberg_changes": ICEBERG_CHANGES_ORACLE_SQL,
+    "lake_uniform_dual": UNIFORM_DUAL_ORACLE_SQL,
+    "lake_iceberg_eq_upsert": ICEBERG_EQ_ORACLE_SQL,
+    "lake_iceberg_transforms": ICEBERG_TRANSFORMS_ORACLE_SQL,
+    "lake_iceberg_meta": ICEBERG_META_ORACLE_SQL,
+    "lake_iceberg_v3_dv": ICEBERG_V3_ORACLE_SQL,
+    "lake_iceberg_row_lineage": ICEBERG_LINEAGE_ORACLE_SQL,
+    "lake_iceberg_upsert_atomic": ICEBERG_UPSERT_ORACLE_SQL,
+    "lake_iceberg_defaults": ICEBERG_DEFAULTS_ORACLE_SQL,
+    "lake_iceberg_variant": ICEBERG_VARIANT_ORACLE_SQL,
+    "lake_iceberg_changes_eq": ICEBERG_CHANGES_EQ_ORACLE_SQL,
+    "lake_iceberg_stream_hours": ICEBERG_STREAM_HOURS_ORACLE_SQL,
+    "lake_uniform_dv": UNIFORM_DV_ORACLE_SQL,
+    "lake_uniform_rev": UNIFORM_REV_ORACLE_SQL,
+    "lake_iceberg_pstats": ICEBERG_PSTATS_ORACLE_SQL,
+    "lake_iceberg_ndv": ICEBERG_NDV_ORACLE_SQL,
+    "lake_iceberg_decimal": ICEBERG_DECIMAL_ORACLE_SQL,
+    "lake_iceberg_exotic": ICEBERG_EXOTIC_ORACLE_SQL,
+    "lake_iceberg_maint": ICEBERG_MAINT_ORACLE_SQL,
+}

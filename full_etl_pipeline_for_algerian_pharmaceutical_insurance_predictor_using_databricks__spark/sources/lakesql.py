@@ -2197,3 +2197,30 @@ FROM documents
 GROUP BY lang
 ORDER BY lang
 """
+
+
+QUERIES = {
+    "lake_delta_merge_sql": delta_merge_sql_entry,
+    "lake_iceberg_delete_sql": iceberg_delete_sql_entry,
+    "lake_delta_sql_lifecycle": delta_sql_lifecycle_entry,
+    "lake_iceberg_sql_lifecycle": iceberg_sql_lifecycle_entry,
+    "lake_named_catalog": named_catalog_entry,
+    "lake_sql_maintenance": sql_maintenance_entry,
+    "lake_sql_cdf_restore": sql_cdf_restore_entry,
+    "lake_convert_in_place": convert_in_place_entry,
+    "lake_delta_delete_pred_sql": delta_delete_pred_sql_entry,
+    "lake_iceberg_update_pred_sql": iceberg_update_pred_sql_entry,
+}
+
+ORACLES = {
+    "lake_delta_merge_sql": DELTA_MERGE_SQL_ORACLE_SQL,
+    "lake_iceberg_delete_sql": ICEBERG_DELETE_SQL_ORACLE_SQL,
+    "lake_delta_sql_lifecycle": DELTA_SQL_LIFECYCLE_ORACLE_SQL,
+    "lake_iceberg_sql_lifecycle": ICEBERG_SQL_LIFECYCLE_ORACLE_SQL,
+    "lake_named_catalog": NAMED_CATALOG_ORACLE_SQL,
+    "lake_sql_maintenance": SQL_MAINTENANCE_ORACLE_SQL,
+    "lake_sql_cdf_restore": SQL_CDF_RESTORE_ORACLE_SQL,
+    "lake_convert_in_place": CONVERT_IN_PLACE_ORACLE_SQL,
+    "lake_delta_delete_pred_sql": DELTA_DELETE_PRED_SQL_ORACLE_SQL,
+    "lake_iceberg_update_pred_sql": ICEBERG_UPDATE_PRED_SQL_ORACLE_SQL,
+}

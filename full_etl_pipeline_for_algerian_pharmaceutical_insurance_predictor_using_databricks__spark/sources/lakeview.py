@@ -213,3 +213,8 @@ WHERE doc_id NOT BETWEEN 100 AND 199
 GROUP BY source
 ORDER BY source
 """
+
+
+QUERIES = {"lake_incremental_view": incremental_view_entry}
+
+ORACLES = {"lake_incremental_view": VIEW_ORACLE_SQL}

@@ -1366,6 +1366,22 @@ WHERE md5(CAST(doc_id AS VARCHAR)) IN (
 ORDER BY doc_id
 """
 
+QUERIES = {
+    "lake_documents_roundtrip": documents_roundtrip_entry,
+    "lake_partitioned_scan": partitioned_scan_entry,
+    "lake_changes_feed": changes_feed_entry,
+    "lake_dv_roundtrip": dv_roundtrip_entry,
+    "lake_bloom_lookup": bloom_lookup_entry,
+}
+
+ORACLES = {
+    "lake_documents_roundtrip": ROUNDTRIP_ORACLE_SQL,
+    "lake_partitioned_scan": PARTITIONED_ORACLE_SQL,
+    "lake_changes_feed": CHANGES_FEED_ORACLE_SQL,
+    "lake_dv_roundtrip": DV_ORACLE_SQL,
+    "lake_bloom_lookup": BLOOM_LOOKUP_ORACLE_SQL,
+}
+
 
 def describe_detail(path: str) -> dict:
     """`DESCRIBE DETAIL`: the table's operational vitals from the log

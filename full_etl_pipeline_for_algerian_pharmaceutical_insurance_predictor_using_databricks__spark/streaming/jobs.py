@@ -1579,17 +1579,6 @@ def compact_registry(
     return written
 
 
-def compact_near_dup_registry(
-    spark: SparkSession, registry_dir: str, group_size: int = 8
-) -> int:
-    """`compact_registry` over the near-dup registry's three
-    batch-partitioned sub-stores (pairs / bands / arrays)."""
-    return sum(
-        compact_registry(spark, f"{registry_dir}/{kind}", group_size)
-        for kind in ("pairs", "bands", "arrays")
-    )
-
-
 def compact_hourly_rollup_registry(
     spark: SparkSession, registry_dir: str, group_size: int = 8
 ) -> int:

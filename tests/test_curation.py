@@ -256,6 +256,27 @@ def test_bm25_custom_query_and_empty_result(spark, sf_dir):
     assert some.count() == 5
 
 
+def test_bm25_empty_corpus_matches_oracle(spark, sf_dir, tmp_path):
+    """A documents table with no rows has a NULL avgdl; BM25 must
+    return no hits (like its DuckDB twin), not crash on the scalars."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    load_table(spark, sf_dir, "documents").limit(0).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    out = entry.queries()["text_bm25_search"](spark, str(tmp_path))
+    assert out.collect() == []
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    assert con.execute(entry.oracle_sql()["text_bm25_search"]).fetchall() == []
+    con.close()
+
+
 # --------------------------------------------------------------------------
 # Per-source document cap
 # --------------------------------------------------------------------------

@@ -6,6 +6,8 @@ value-check them like any window entry."""
 
 from __future__ import annotations
 
+import hashlib
+
 import __spark_entry__ as entry
 
 
@@ -47,3 +49,37 @@ def test_queries_and_oracles_are_callable_and_nonempty():
     assert all(callable(fn) for fn in q.values())
     assert all(isinstance(sql, str) and "SELECT" in sql.upper()
                for sql in entry.oracle_sql().values())
+
+
+def _digest(lines) -> str:
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+
+def test_registry_contract_is_frozen():
+    """Pins the driver contract byte for byte: entry order, the builder
+    behind every name, and every oracle string.  A registry refactor
+    must leave all three digests unchanged; a deliberate contract
+    change updates them in the same commit."""
+    q = entry.queries()
+    oracles = entry.oracle_sql()
+    assert (len(q), len(oracles)) == (205, 177)
+    assert _digest(q) == (
+        "59e881fed21be76e34eebffc54deb802f73424fdb10b5d4d96bb6034e816275f"
+    )
+    assert _digest(
+        f"{name}\t{fn.__module__}.{fn.__qualname__}" for name, fn in q.items()
+    ) == "e5936946fda76860aed217c958b77156f8d45f5be9f73e8c59e9edbd68cbd078"
+    assert _digest(f"{name}\t{sql}" for name, sql in oracles.items()) == (
+        "70eeb59f033d83a56929da906a991e69074626194d52ee0dd8d4ebb512e42c7a"
+    )
+
+
+def test_bench_lists_name_registered_entries():
+    """bench.py's hand lists must track the registry: a renamed entry
+    would otherwise surface only as a bench `errors` row."""
+    import bench
+
+    assert set(bench.HEADLINE) <= set(entry.queries())
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
+    assert bench.HEAVY <= set(bench.HEADLINE)
+    assert bench.VARIANCE_PRONE <= bench.HEAVY

@@ -1,33 +1,37 @@
-"""Driver-runnable oracle mini-sweep over the r16-touched entries.
+"""Driver-gate oracle pins run inside pytest.
 
-VERDICT r15 item 8: the driver's frozen 50-query correctness window
-covers few of the optimizer-touched entries, so this module pins every
-oracle-bearing entry the r16 optimization round rewrote against its
-declared DuckDB oracle at sf0.001 — inside the pytest gate the driver
-runs, not just the builder's out-of-band `tools/check_oracle.py`
-sweep.  Comparison semantics replicate the driver's gate: same column
-set, same rowcount, order-insensitive normalized multiset equality.
+The driver's frozen 50-entry correctness window covers few of the
+entries that optimization work rewrites, so every oracle-bearing entry
+whose plan or kernel a change touches is pinned here against its
+declared DuckDB oracle at sf0.001 — inside the pytest gate, not just the
+out-of-band `tools/check_oracle.py` sweep.  Comparison semantics
+replicate the driver's gate: same column set, same rowcount,
+order-insensitive normalized multiset equality.  A change that rewrites
+another oracle-bearing entry appends its name to `PINNED`.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 import __spark_entry__ as entry  # noqa: E402
 from check_oracle import _rows_to_multiset  # noqa: E402
+from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.catalog import (  # noqa: E402
+    TABLE_NAMES,
+)
 
-#: Every oracle-bearing entry whose plan or kernel r16 touched:
-#: BM25/hybrid stats-literal fold, per-row boilerplate scrub, the
-#: _read_entries group merge (stream/exotic are its heavy users),
-#: the JPEG codec rewrite, and the fused PNG kernel.  train_prep
+#: Oracle-bearing entries whose plan or kernel was rewritten: the
+#: BM25/hybrid stats-literal fold, the per-row boilerplate scrub, the
+#: Iceberg `_read_entries` group merge (stream/exotic are its heavy
+#: users), the JPEG codec rewrite and the fused PNG kernel.  train_prep
 #: composites over the scrub.
-TOUCHED = [
+PINNED = [
     "text_bm25_search",
     "retrieval_hybrid_rrf",
     "text_boilerplate_scrub",
@@ -45,10 +49,7 @@ TOUCHED = [
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS "
             f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -57,8 +58,8 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", TOUCHED)
-def test_touched_entry_matches_oracle(spark, sf_dir, duck, name):
+@pytest.mark.parametrize("name", PINNED)
+def test_pinned_entry_matches_oracle(spark, sf_dir, duck, name):
     queries = entry.queries()
     oracles = entry.oracle_sql()
     assert name in queries, f"{name} dropped from queries()"

@@ -71,13 +71,13 @@ def main():
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark import (
         get_spark,
     )
+    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.catalog import (
+        TABLE_NAMES,
+    )
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

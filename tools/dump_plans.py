@@ -388,7 +388,7 @@ def main() -> None:
         "|A∩B| = bit_count(a & b)) for the jaccard pair stage and the LSH\n"
         "verify; the general inverted-index / array_intersect paths remain the\n"
         "plan for real vocabularies. Measured steady-state wall (2 warm runs —\n"
-        "see bench.py HEAVY_WARMUPS), fresh lineage, 10× docs = 100× pairs:\n\n"
+        "see bench.py HEAVY), fresh lineage, 10× docs = 100× pairs:\n\n"
         "| op | sf0.01 | sf0.1 | growth |\n|---|---|---|---|\n"
         "| dedup_jaccard_pairs (exact, bitmask) | 1.9 s | 2.6 s | 1.4× |\n"
         "| dedup_jaccard_pairs (max_df=1000, inverted) | 1.9 s | 2.8 s | 1.5× |\n"
