@@ -85,9 +85,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (a byte-range split can't parallelize one row group), so repeated
     queries would otherwise re-run a serial scan each time; one cached
     columnar materialization amortizes it, exactly the `.cache()` the
-    reference never does (SURVEY §4.3.3). Off by default: correctness
-    runs and ad-hoc use read straight from parquet. At cluster scale
-    the same knob caches dims/derived tables, not 100 TB facts."""
+    reference never does (SURVEY §4.3.3). The pool returns the same
+    DataFrame object on every call, so `operators.medications` keys
+    its derived plan on the pooled `part` and builds it once — a plan,
+    not bytes, living as long as the pooled `part` does. Off by
+    default: correctness runs and ad-hoc use read straight from
+    parquet. At cluster scale the same knob caches dims/derived
+    tables, not 100 TB facts."""
     if os.environ.get("SPARK_GRAFT_CACHE") == "1":
         key = (spark.sparkContext.applicationId, sf_dir, name)
         if key not in _TABLE_CACHE:

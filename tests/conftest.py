@@ -64,6 +64,25 @@ def _compact_local_relations(s):
     s.createDataFrame = create
 
 
+@pytest.fixture
+def buffer_pool(monkeypatch):
+    """The engine's buffer pool (SPARK_GRAFT_CACHE=1) for one test, on
+    an empty pool; the pooled tables are unpersisted on both ends."""
+    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+        catalog,
+    )
+
+    def drain():
+        for df in catalog._TABLE_CACHE.values():
+            df.unpersist()
+        catalog._TABLE_CACHE.clear()
+
+    drain()
+    monkeypatch.setenv("SPARK_GRAFT_CACHE", "1")
+    yield catalog
+    drain()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

@@ -1840,11 +1840,13 @@ def test_widen_delta_column_refuses_narrowing(spark, tmp_path):
 
 def test_widen_then_stats_pruning_still_works(spark, tmp_path):
     path = os.path.join(tmp_path, "t")
+    # range layout: four disjoint n-ranges whatever the core count (a
+    # round-robin spread of 100 rows gives every file a 0..99 span)
     dp.write_delta(
         spark.range(0, 100).select(
             F.col("id").cast("bigint").alias("doc_id"),
             F.col("id").cast("int").alias("n"),
-        ).repartition(4),
+        ).repartitionByRange(4, "n"),
         path,
     )
     dp.widen_delta_column(spark, path, "n", "long")

@@ -3,10 +3,18 @@
 
 from __future__ import annotations
 
+import contextlib
+import gc
+import weakref
+
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.operators.medications import (
+    MEDICATIONS_CTE,
+    MEDICATIONS_RAW_CTE,
     medications,
+    medications_raw,
 )
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.schemas import (
     MEDICATIONS,
@@ -59,3 +67,80 @@ def test_derivation_deterministic(spark, sf_dir):
     a = medications(spark, sf_dir)
     b = medications(spark, sf_dir)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+# --------------------------------------------------------------------------
+# derived-plan memo under the buffer pool
+# --------------------------------------------------------------------------
+
+
+@contextlib.contextmanager
+def _py4j_calls(spark):
+    """Count the py4j round trips made inside the block: every
+    JavaObject calls `send_command` through the one gateway client."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig = type(client).send_command
+    calls = [0]
+
+    def counted(*args, **kwargs):
+        calls[0] += 1
+        return orig(client, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield calls
+    finally:
+        del client.send_command
+
+
+def _medications_entries() -> list[str]:
+    import __spark_entry__ as entry
+
+    return [
+        name
+        for name, sql in entry.oracle_sql().items()
+        if MEDICATIONS_CTE in sql or MEDICATIONS_RAW_CTE in sql
+    ]
+
+
+def test_pool_builds_derived_plan_once(spark, sf_dir, buffer_pool):
+    for build in (medications, medications_raw):
+        first = build(spark, sf_dir)
+        with _py4j_calls(spark) as calls:
+            again = build(spark, sf_dir)
+        assert again is first
+        assert calls[0] < 20, calls[0]
+
+
+def test_pool_memo_persists_nothing_beyond_part(spark, sf_dir, buffer_pool):
+    """The memo holds plans, not bytes: every medications-derived
+    entry run on a warm pool leaves only the pooled `part` cached."""
+    import __spark_entry__ as entry
+
+    queries = entry.queries()
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = {i.id() for i in storage()}
+    for name in _medications_entries():
+        df = queries[name](spark, sf_dir)
+        df.collect()
+        assert df.storageLevel == StorageLevel.NONE, name
+    for build in (medications, medications_raw):
+        assert build(spark, sf_dir).storageLevel == StorageLevel.NONE
+    infos = [i for i in storage() if i.id() not in before]
+    assert len(infos) == 1 and "part.parquet" in infos[0].name()
+
+
+def test_pool_memo_dies_with_pooled_part(spark, sf_dir, buffer_pool):
+    med = medications(spark, sf_dir)
+    part = weakref.ref(buffer_pool.load_table(spark, sf_dir, "part"))
+    part().unpersist()
+    buffer_pool._TABLE_CACHE.clear()
+    gc.collect()
+    assert part() is None  # the memo does not keep `part` alive
+    assert medications(spark, sf_dir) is not med
+
+
+def test_no_pool_no_memo(spark, sf_dir, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CACHE", raising=False)
+    assert medications(spark, sf_dir) is not medications(spark, sf_dir)
+    assert medications_raw(spark, sf_dir) is not medications_raw(spark, sf_dir)

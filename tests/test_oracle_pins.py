@@ -8,6 +8,10 @@ out-of-band `tools/check_oracle.py` sweep.  Comparison semantics
 replicate the driver's gate: same column set, same rowcount,
 order-insensitive normalized multiset equality.  A change that rewrites
 another oracle-bearing entry appends its name to `PINNED`.
+
+Every medications-derived entry is also pinned under the buffer pool,
+where its second build reuses the memoized `medications` plan; the
+composites then join or union two frames that share that one plan.
 """
 
 from __future__ import annotations
@@ -22,6 +26,10 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 import __spark_entry__ as entry  # noqa: E402
 from check_oracle import _rows_to_multiset  # noqa: E402
+from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.operators.medications import (  # noqa: E402
+    MEDICATIONS_CTE,
+    MEDICATIONS_RAW_CTE,
+)
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.catalog import (  # noqa: E402
     TABLE_NAMES,
 )
@@ -45,6 +53,13 @@ PINNED = [
     "mm_image_png_pipeline",
 ]
 
+#: Entries whose oracle derives the medications table from `part`.
+MEDICATIONS_DERIVED = [
+    name
+    for name, sql in entry.oracle_sql().items()
+    if MEDICATIONS_CTE in sql or MEDICATIONS_RAW_CTE in sql
+]
+
 
 @pytest.fixture(scope="module")
 def duck(sf_dir):
@@ -58,16 +73,10 @@ def duck(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", PINNED)
-def test_pinned_entry_matches_oracle(spark, sf_dir, duck, name):
-    queries = entry.queries()
-    oracles = entry.oracle_sql()
-    assert name in queries, f"{name} dropped from queries()"
-    assert name in oracles, f"{name} lost its oracle"
-    sdf = queries[name](spark, sf_dir)
+def _assert_matches_oracle(sdf, duck, name):
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
-    res = duck.execute(oracles[name])
+    res = duck.execute(entry.oracle_sql()[name])
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
     assert sorted(scols) == sorted(dcols)
@@ -75,3 +84,26 @@ def test_pinned_entry_matches_oracle(spark, sf_dir, duck, name):
     assert _rows_to_multiset(scols, srows) == _rows_to_multiset(
         dcols, drows
     )
+
+
+@pytest.mark.parametrize("name", PINNED)
+def test_pinned_entry_matches_oracle(spark, sf_dir, duck, name):
+    queries = entry.queries()
+    assert name in queries, f"{name} dropped from queries()"
+    assert name in entry.oracle_sql(), f"{name} lost its oracle"
+    _assert_matches_oracle(queries[name](spark, sf_dir), duck, name)
+
+
+def test_medications_derived_entries_selected():
+    assert {"med_q01_q07_overview", "med_q04_q12_breakdowns"} <= set(
+        MEDICATIONS_DERIVED
+    )
+
+
+@pytest.mark.parametrize("name", MEDICATIONS_DERIVED)
+def test_memoized_medications_entry_matches_oracle(
+    spark, sf_dir, duck, buffer_pool, name
+):
+    build = entry.queries()[name]
+    build(spark, sf_dir)
+    _assert_matches_oracle(build(spark, sf_dir), duck, name)
