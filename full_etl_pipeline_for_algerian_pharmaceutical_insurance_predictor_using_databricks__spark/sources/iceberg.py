@@ -1797,10 +1797,13 @@ def _read_entries(
     scan's `_metadata` row identity (merge-on-read, the same broadcast
     shape the minilake/Delta DV scans use); both sides key on the
     file-name tail, unique by construction (uuid part names).  When v2
-    EQUALITY-delete files are live, each one anti-joins null-safely on
-    its equality_ids columns, restricted to rows whose file's data
-    sequence number is strictly below the delete's (the spec's
-    application rule — rows appended after the delete survive).
+    EQUALITY-delete files are live, each set of equality_ids is ONE
+    scan of all its delete files and ONE null-safe anti-join,
+    restricted to rows whose file's data sequence number is strictly
+    below the delete file's (the spec's application rule — rows
+    appended after the delete survive); both sequence numbers come
+    per row from file-name-keyed map literals, so the plan has the
+    same size however many delete files are live.
     `keep_identity` keeps (_IB_FILE, _IB_POS) in the output — the
     merge-on-read delete writer uses it to locate matched rows.
     `extra_read_cols` [(name, spark_type)] are read from every data
@@ -1891,6 +1894,14 @@ def _read_entries(
     eqs = list(eq_deletes or [])
     dv_list = list(dvs or [])
     need_identity = bool(deletes) or bool(dv_list) or keep_identity
+    need_file = need_identity or bool(eqs)
+    # file-name tail → data sequence number; None marks a tail that files
+    # at different sequence numbers share: those group by sequence
+    seq_of: dict = {}
+    for e in entries if eqs else []:
+        s = int(e.get("_seq", 0))
+        t = e["data_file"]["file_path"].rsplit("/", 1)[-1]
+        seq_of[t] = s if seq_of.get(t, s) == s else None
 
     def _scope_str(sid: int, pkey: tuple) -> str:
         return str((int(sid), tuple(pkey)))
@@ -1928,11 +1939,13 @@ def _read_entries(
     # values live inside the data files and attach nothing — keying on
     # them would split an hours-partitioned table into one scan
     # relation PER HOUR, a measured 47-way plan blowup on the stream
-    # entry), default-column presence, data sequence number (only when
-    # equality deletes are live), and the full partition tuple only
-    # when a scoped delete actually consumes it (`_ib_part`).  All
-    # constant per group, so identity values, defaults, and the
-    # sequence attach as literals — no join.
+    # entry), default-column presence, and the full partition tuple
+    # only when a scoped delete actually consumes it (`_ib_part`).  All
+    # constant per group, so identity values and defaults attach as
+    # literals — no join.  The data sequence number is NOT a key: when
+    # equality deletes are live each row looks it up from one map
+    # literal on its file-name tail, so the scan stays one group
+    # however many upserts landed.
     groups: dict[tuple, list[str]] = {}
     for e in entries:
         df_rec = e["data_file"]
@@ -1952,15 +1965,18 @@ def _read_entries(
                 spec_infos[sid][0] if any_scoped else spec_infos[sid][1]
             )
         )
-        key = (sid,) + (part_vals,) + (presence,) + (
-            (e.get("_seq", 0),) if eqs else ()
-        )
+        tail = df_rec["file_path"].rsplit("/", 1)[-1]
+        lit_seq = e.get("_seq", 0) if eqs and seq_of[tail] is None else None
+        key = (sid, part_vals, presence, lit_seq)
         groups.setdefault(key, []).append(
             _abs_path(path, df_rec["file_path"])
         )
-    extra = ([_IB_FILE, _IB_POS] if need_identity else []) + (
-        [_IB_SEQ] if eqs else []
-    ) + (["_ib_part"] if any_scoped else []) + [n for n, _t in extras]
+    seq_by_file = _by_file(seq_of, "bigint") if eqs else None
+    extra = ([_IB_FILE] if need_file else []) + (
+        [_IB_POS] if need_identity else []
+    ) + ([_IB_SEQ] if eqs else []) + (
+        ["_ib_part"] if any_scoped else []
+    ) + [n for n, _t in extras]
     frames = []
     for key, files in sorted(groups.items(), key=lambda kv: str(kv[0])):
         sid = key[0]
@@ -1982,31 +1998,21 @@ def _read_entries(
         subframes = []
         if par_files:
             if has_time:
-                d = _pq_arrow_scan(
-                    spark, sorted(par_files), rs, need_identity
-                )
+                d = _pq_arrow_scan(spark, sorted(par_files), rs, need_file)
             else:
                 d = spark.read.schema(rs).parquet(*sorted(par_files))
-                if need_identity:
+                if need_file:
                     d = d.select(
                         "*",
-                        F.element_at(
-                            F.split(F.col("_metadata.file_path"), "/"), -1
-                        ).alias(_IB_FILE),
+                        F.col("_metadata.file_name").alias(_IB_FILE),
                         F.col("_metadata.row_index").alias(_IB_POS),
                     )
             subframes.append(d)
         if avr_files:
-            subframes.append(
-                _avro_scan(spark, avr_files, rs, need_identity)
-            )
+            subframes.append(_avro_scan(spark, avr_files, rs, need_file))
         if orc_files:
-            subframes.append(
-                _orc_scan(spark, orc_files, rs, need_identity)
-            )
-        df = subframes[0]
-        for d in subframes[1:]:
-            df = df.unionByName(d)
+            subframes.append(_orc_scan(spark, orc_files, rs, need_file))
+        df = _functools.reduce(DataFrame.unionByName, subframes)
         # ONE select per group replaces the per-column withColumn chain
         # (each withColumn is an eagerly-analyzed Dataset + a py4j
         # round trip — O(plan²) driver work on wide protocol plans)
@@ -2044,7 +2050,10 @@ def _read_entries(
             proj.append(e_col.alias(f.name))
         for name in extra:
             if name == _IB_SEQ:
-                proj.append(F.lit(int(key[-1])).alias(_IB_SEQ))
+                proj.append(
+                    (seq_by_file if key[3] is None else F.lit(key[3]))
+                    .alias(_IB_SEQ)
+                )
             elif name == "_ib_part":
                 proj.append(
                     F.lit(_scope_str(sid, pkey)).alias("_ib_part")
@@ -2052,9 +2061,7 @@ def _read_entries(
             else:
                 proj.append(F.col(name))
         frames.append(df.select(*proj))
-    out = frames[0]
-    for df in frames[1:]:
-        out = out.unionByName(df)
+    out = _functools.reduce(DataFrame.unionByName, frames)
     masks = []
     if deletes:
         masks.append(_pos_delete_rows(spark, deletes))
@@ -2068,16 +2075,15 @@ def _read_entries(
         # across blobs.
         masks.append(_dv_positions_df(spark, dv_list))
     if masks:
-        mask = masks[0]
-        for m in masks[1:]:
-            mask = mask.unionByName(m)
-        out = out.join(
-            F.broadcast(mask.dropDuplicates()),
-            [_IB_FILE, _IB_POS],
-            "left_anti",
-        )
-    for ed in sorted(eqs, key=lambda d: (d["seq"], d["path"])):
-        for i in ed["ids"]:
+        mask = _functools.reduce(DataFrame.unionByName, masks)
+        # duplicate positions on the build side of a left-anti join
+        # cannot change which rows survive: no dedup shuffle
+        out = out.join(F.broadcast(mask), [_IB_FILE, _IB_POS], "left_anti")
+    by_ids: dict[tuple, list[dict]] = {}
+    for ed in eqs:
+        by_ids.setdefault(tuple(ed["ids"]), []).append(ed)
+    for ids, group in sorted(by_ids.items()):
+        for i in ids:
             f0 = by_id.get(i)
             if f0 is None or not isinstance(f0["type"], str):
                 raise ValueError(
@@ -2094,33 +2100,57 @@ def _read_entries(
                     "file's physical form cannot be matched against "
                     "the projected column without ambiguity"
                 )
-        cols = [by_id[i]["name"] for i in ed["ids"]]
-        if _is_avro_file(ed["path"]):
-            eq_src = _avro_scan(
-                spark,
-                [ed["path"]],
-                _spark_schema([by_id[i] for i in ed["ids"]]),
-                with_identity=False,
+        cols = [by_id[i]["name"] for i in ids]
+        key_schema = _spark_schema([by_id[i] for i in ids])
+        # ONE scan of all this set's delete files; each row takes its
+        # file's sequence number and scope from map literals
+        tails = {
+            (ed["path"].rsplit("/", 1)[-1], int(ed["seq"]), ed["_scope"])
+            for ed in group
+        }
+        if len(tails) != len({t[0] for t in tails}):
+            raise ValueError(
+                "equality-delete files share a file name at different "
+                "sequence numbers or scopes — refusing to mis-apply"
             )
-        elif _is_orc_file(ed["path"]):
-            eq_src = _orc_scan(
-                spark,
-                [ed["path"]],
-                _spark_schema([by_id[i] for i in ed["ids"]]),
-                with_identity=False,
+        paths = sorted({ed["path"] for ed in group})
+        avr = [f for f in paths if _is_avro_file(f)]
+        orc = [f for f in paths if _is_orc_file(f)]
+        par = [f for f in paths if f not in set(avr) | set(orc)]
+        # an explicit-schema read fills an absent key column with NULL,
+        # which would delete the NULL-key rows
+        for f in par:
+            if not set(cols) <= _footer_names(f):
+                raise ValueError(f"delete file {f} lacks a key of {cols}")
+        legs = [
+            scan(spark, files, key_schema, True).select(*cols, _IB_FILE)
+            for files, scan in ((avr, _avro_scan), (orc, _orc_scan))
+            if files
+        ]
+        if par:
+            legs.append(
+                spark.read.schema(key_schema).parquet(*par).select(
+                    *cols, F.col("_metadata.file_name").alias(_IB_FILE)
+                )
             )
-        else:
-            eq_src = spark.read.parquet(ed["path"])
-        dels = (
-            eq_src
-            .select(*[F.col(c).alias(f"_eq_{c}") for c in cols])
-            .dropDuplicates()
+        dels = _functools.reduce(DataFrame.unionByName, legs).select(
+            *[F.col(c).alias(f"_eq_{c}") for c in cols],
+            _by_file({t: q for t, q, _p in tails}, "bigint").alias("_eq_seq"),
+            *(
+                [_by_file({t: p for t, _q, p in tails}, "string")
+                 .alias("_eq_scope")]
+                if any_scoped
+                else []
+            ),
         )
-        cond = F.col(_IB_SEQ) < F.lit(int(ed["seq"]))
-        if ed.get("_scope") is not None:
-            # partition-scoped: rows outside the delete's partition
-            # never match the anti-join condition
-            cond = cond & (F.col("_ib_part") == F.lit(ed["_scope"]))
+        cond = F.col(_IB_SEQ) < F.col("_eq_seq")
+        if any_scoped:
+            # partition-scoped deletes never match rows outside their
+            # partition; a NULL scope is a global delete
+            cond = cond & (
+                F.col("_eq_scope").isNull()
+                | (F.col("_ib_part") == F.col("_eq_scope"))
+            )
         for c in cols:
             cond = cond & F.col(c).eqNullSafe(F.col(f"_eq_{c}"))
         out = out.join(F.broadcast(dels), on=cond, how="left_anti")
@@ -2128,9 +2158,19 @@ def _read_entries(
         out = out.drop(_IB_SEQ)
     if any_scoped:
         out = out.drop("_ib_part")
-    if (deletes or dv_list) and not keep_identity:
+    if need_file and not keep_identity:
         out = out.drop(_IB_FILE, _IB_POS)
     return out
+
+
+def _by_file(values: dict, typ: str):
+    """Each row's value from `values` keyed on its file-name tail, as
+    ONE constant-folded map literal: O(1) py4j calls however many
+    files (`create_map` costs O(files)); an absent tail reads NULL."""
+    return F.element_at(
+        F.from_json(F.lit(json.dumps(values)), f"map<string,{typ}>"),
+        F.col(_IB_FILE),
+    )
 
 
 #: v3 row-lineage metadata column names (spec: `_row_id`,
@@ -5311,8 +5351,8 @@ def compact_iceberg(
     applied, re-land it as ~`target_mb` data files, and commit a
     REPLACE snapshot that ADDs the rewrites, marks every old data file
     DELETED, and carries NO delete manifests — the read-rent
-    mitigation after merge-on-read maintenance (each accumulated
-    delete file costs an anti-join on every subsequent read; after
+    mitigation after merge-on-read maintenance (accumulated delete
+    rows are scanned and broadcast on every subsequent read; after
     compaction reads are plain scans again).  `operation: "replace"`
     makes downstream consumers skip it: the incremental-append stream
     passes it silently (icestream) and the changelog's carryover

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import contextlib
 import sys
+import threading
 
 import pytest
 
@@ -81,6 +83,35 @@ def buffer_pool(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CACHE", "1")
     yield catalog
     drain()
+
+
+@pytest.fixture
+def py4j_calls(spark):
+    """`with py4j_calls() as calls:` counts in `calls[0]` the py4j round
+    trips the calling thread makes inside the block: every JavaObject
+    call goes through the one gateway client's `send_command`.  Sends
+    from other threads are not counted: py4j's finalizer thread sends
+    the release message of each garbage-collected JavaObject whenever
+    it drains its queue, so those land in a block at random."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig = type(client).send_command
+
+    @contextlib.contextmanager
+    def count():
+        calls = [0]
+        owner = threading.get_ident()
+
+        def counted(*args, **kwargs):
+            calls[0] += threading.get_ident() == owner
+            return orig(client, *args, **kwargs)
+
+        client.send_command = counted
+        try:
+            yield calls
+        finally:
+            del client.send_command
+
+    return count
 
 
 @pytest.fixture(scope="session")

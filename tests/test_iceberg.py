@@ -1698,6 +1698,210 @@ def test_upsert_iceberg_repeated_and_partitioned(spark, tmp_path):
     assert got[0] == 0 and got[29] == 290
 
 
+def _keyed(spark, rows):
+    return spark.createDataFrame(rows, "doc_id bigint, lang string, v bigint")
+
+
+def _nsorted(df):
+    """(doc_id, lang, v) rows sorted with NULL keys first."""
+    return sorted(
+        ((r["doc_id"], r["lang"], r["v"]) for r in df.collect()),
+        key=lambda r: (r[0] is not None, r[0] or 0, r[1], r[2]),
+    )
+
+
+def _visible(rows, deletes):
+    """The spec's equality-delete rule as a Python model.  `rows` are
+    (doc_id, lang, v, seq); `deletes` are (column, keys, seq, scope).
+    A row is hidden by a delete with a STRICTLY higher sequence number
+    whose keys hold the row's value (NULL matches NULL) and whose
+    scope, when set, is the row's `lang` partition."""
+    kept = [
+        (k, lang, v)
+        for k, lang, v, seq in rows
+        if not any(
+            dseq > seq
+            and (scope is None or scope == lang)
+            and {"doc_id": k, "lang": lang, "v": v}[col] in keys
+            for col, keys, dseq, scope in deletes
+        )
+    ]
+    return sorted(kept, key=lambda r: (r[0] is not None, r[0] or 0) + r[1:])
+
+
+def _last_seq(path):
+    """The newest data sequence number (0 on a v1 table)."""
+    return ib.current_metadata(path).get("last-sequence-number", 0)
+
+
+def test_eq_delete_read_matches_sequence_model(spark, tmp_path):
+    """Upserts with overlapping keys and a NULL key, then global plus
+    partition-scoped deletes, read through `read_iceberg`,
+    `read_iceberg_pruned` and after `compact_iceberg`, all against the
+    model.  Each upsert deletes its keys in the commit that re-inserts
+    them (one sequence number), so its own rows survive."""
+    path = str(tmp_path / "flat")
+    base = [(k, str(k % 3), k * 10) for k in range(12)] + [(None, "0", -1)]
+    ib.write_iceberg(_keyed(spark, base), path, format_version=2)
+    rows = [r + (_last_seq(path),) for r in base]
+    deletes = []
+    batches = [[3, 4, 5], [4, 5, 6, None], [5, 100], [3, 6, 101, None]]
+    for tag, keys in enumerate(batches, 1):
+        up = [(k, "u", (k or 0) * 10 + tag) for k in keys]
+        ib.upsert_iceberg(spark, _keyed(spark, up), path, ["doc_id"])
+        rows += [r + (_last_seq(path),) for r in up]
+        deletes.append(("doc_id", set(keys), _last_seq(path), None))
+    want = _visible(rows, deletes)
+    assert len(want) == 15 and (None, "u", 4) in want
+    assert _nsorted(ib.read_iceberg(spark, path)) == want
+    pruned, *_ = ib.read_iceberg_pruned(spark, path, "doc_id", 4, 100)
+    assert _nsorted(pruned) == [
+        r for r in want if r[0] is not None and 4 <= r[0] <= 100
+    ]
+    ib.compact_iceberg(spark, path, target_mb=512)
+    assert _nsorted(ib.read_iceberg(spark, path)) == want
+
+    ppath = str(tmp_path / "part")
+    base = [(k, str(k % 3), k * 10) for k in range(12)]
+    ib.write_iceberg(_keyed(spark, base), ppath, partition_by=["lang"])
+    rows = [r + (_last_seq(ppath),) for r in base]
+    up = [(6, "0", 61), (7, "1", 71), (None, "2", 0)]
+    ib.upsert_iceberg(spark, _keyed(spark, up), ppath, ["doc_id"])
+    rows += [r + (_last_seq(ppath),) for r in up]
+    deletes = [("doc_id", {6, 7, None}, _last_seq(ppath), None)]
+    # v=90 is doc 9 in lang '0': scoped to '1' it hides nothing; v=61
+    # is the upserted doc 6, hidden by the delete scoped to '0'
+    for scope, vals in (("1", [90]), ("0", [61])):
+        ib.delete_eq_iceberg(
+            ppath, ["v"], vals, partition_scope={"lang": scope}
+        )
+        deletes.append(("v", set(vals), _last_seq(ppath), scope))
+    ib.write_iceberg(_keyed(spark, [(6, "0", 61)]), ppath)  # re-append
+    rows.append((6, "0", 61, _last_seq(ppath)))
+    want = _visible(rows, deletes)
+    assert (9, "0", 90) in want and (6, "0", 61) in want
+    assert _nsorted(ib.read_iceberg(spark, ppath)) == want
+    pruned, *_ = ib.read_iceberg_pruned(spark, ppath, "lang", "0", "0")
+    assert _nsorted(pruned) == [r for r in want if r[1] == "0"]
+    ib.compact_iceberg(spark, ppath, target_mb=512)
+    assert _nsorted(ib.read_iceberg(spark, ppath)) == want
+
+
+def _commit_file(path, rel, rows, equality_ids=None):
+    """Commit one hand-written parquet file at `rel` as its own
+    snapshot: data, or an equality delete on `equality_ids`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    local = os.path.join(path, rel)
+    os.makedirs(os.path.dirname(local), exist_ok=True)
+    pq.write_table(pa.table(rows), local)
+    fields = ib._schema_of(ib.current_metadata(path))
+    schema_json = {"type": "struct", "schema-id": 0, "fields": fields}
+    rec = {
+        "content": 2 if equality_ids else 0,
+        "file_path": ib._file_uri(path, rel),
+        "file_format": "PARQUET",
+        "partition": {},
+        "record_count": pq.read_metadata(local).num_rows,
+        "file_size_in_bytes": os.path.getsize(local),
+        "value_counts": None,
+        "null_value_counts": None,
+        "lower_bounds": None,
+        "upper_bounds": None,
+        "split_offsets": None,
+        "equality_ids": equality_ids,
+    }
+
+    def build(base, snapshot_id, seq, fv):
+        mfs = ib._read_manifest_list(path, ib._snapshot(base, None))
+        mf = ib._write_manifest(
+            path,
+            [{"status": 1, "snapshot_id": snapshot_id, "data_file": rec}],
+            snapshot_id, fields, [], schema_json, fv=2,
+            content="deletes" if equality_ids else "data", seq=seq,
+        )
+        return list(mfs) + [mf]
+
+    ib._commit_snapshot(path, "append", build)
+
+
+def test_eq_delete_data_files_sharing_a_name(spark, tmp_path):
+    """Two data files with one file name in different directories, at
+    sequence numbers either side of an equality delete: each row keeps
+    its own file's sequence number, so only the older file's rows are
+    hidden."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "t")
+    ib.write_iceberg(_df(spark, 0, 10).coalesce(1), path, format_version=2)
+    (old,) = ib._live_entries(
+        path, ib.current_metadata(path),
+        ib._snapshot(ib.current_metadata(path), None),
+    )
+    tail = old["data_file"]["file_path"].rsplit("/", 1)[-1]
+    ib.delete_eq_iceberg(path, ["doc_id"], [1, 2])
+    _commit_file(
+        path,
+        f"data/again/{tail}",
+        {
+            "doc_id": pa.array([1, 2], pa.int64()),
+            "lang": ["x", "x"],
+            "v": pa.array([11, 21], pa.int64()),
+        },
+    )
+    got = _rows(ib.read_iceberg(spark, path))
+    assert got == sorted(
+        [(i, str(i % 3), i * 10) for i in range(10) if i not in (1, 2)]
+        + [(1, "x", 11), (2, "x", 21)]
+    )
+
+
+def test_eq_delete_file_missing_key_column_refused(spark, tmp_path):
+    """A delete file lacking its key column must not read as NULL keys
+    (which would delete the NULL-key rows): the read refuses."""
+    path = str(tmp_path / "t")
+    ib.write_iceberg(
+        _keyed(spark, [(1, "a", 10), (None, "b", 20)]), path,
+        format_version=2,
+    )
+    fields = ib._schema_of(ib.current_metadata(path))
+    key_id = next(f["id"] for f in fields if f["name"] == "doc_id")
+    _commit_file(
+        path, "data/eq-del.parquet", {"lang": ["a"]}, equality_ids=[key_id]
+    )
+    with pytest.raises(ValueError, match="lacks a key"):
+        ib.read_iceberg(spark, path)
+
+
+def test_eq_delete_read_plan_stays_flat(spark, tmp_path, py4j_calls):
+    """Each upsert lands one more equality-delete file at a new
+    sequence number; the read's plan still has the same scans and
+    anti-joins after 4 upserts as after 1, and its build makes about
+    the same number of py4j round trips."""
+    path = str(tmp_path / "t")
+    ib.write_iceberg(_df(spark, 0, 40), path, format_version=2)
+    shape = {}
+    for n in range(1, 5):
+        ib.upsert_iceberg(
+            spark, _df(spark, n * 5, n * 5 + 10, tag=n), path, ["doc_id"]
+        )
+        if n in (1, 4):
+            ib.read_iceberg(spark, path)  # warm the per-file memos
+            with py4j_calls() as calls:
+                got = ib.read_iceberg(spark, path)
+            plan = got._jdf.queryExecution().analyzed().toString()
+            shape[n] = (
+                plan.count("Relation ["), plan.count("LeftAnti"), calls[0]
+            )
+    # upsert n rewrites keys [5n, 5n + 10) with v = 10k + n; last wins
+    tag = {k: n for n in range(1, 5) for k in range(5 * n, 5 * n + 10)}
+    got = {r["doc_id"]: r["v"] for r in got.collect()}
+    assert got == {k: k * 10 + tag.get(k, 0) for k in range(40)}
+    assert shape[4][:2] == shape[1][:2] == (2, 1), shape
+    assert shape[4][2] <= 1.2 * shape[1][2], shape
+
+
 def test_upsert_iceberg_refuses_schema_mismatch(spark, tmp_path):
     path = os.path.join(tmp_path, "t")
     ib.write_iceberg(_df(spark, 0, 5), path)

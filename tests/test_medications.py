@@ -3,7 +3,6 @@
 
 from __future__ import annotations
 
-import contextlib
 import gc
 import weakref
 
@@ -74,25 +73,6 @@ def test_derivation_deterministic(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-@contextlib.contextmanager
-def _py4j_calls(spark):
-    """Count the py4j round trips made inside the block: every
-    JavaObject calls `send_command` through the one gateway client."""
-    client = spark.sparkContext._gateway._gateway_client
-    orig = type(client).send_command
-    calls = [0]
-
-    def counted(*args, **kwargs):
-        calls[0] += 1
-        return orig(client, *args, **kwargs)
-
-    client.send_command = counted
-    try:
-        yield calls
-    finally:
-        del client.send_command
-
-
 def _medications_entries() -> list[str]:
     import __spark_entry__ as entry
 
@@ -103,10 +83,12 @@ def _medications_entries() -> list[str]:
     ]
 
 
-def test_pool_builds_derived_plan_once(spark, sf_dir, buffer_pool):
+def test_pool_builds_derived_plan_once(
+    spark, sf_dir, buffer_pool, py4j_calls
+):
     for build in (medications, medications_raw):
         first = build(spark, sf_dir)
-        with _py4j_calls(spark) as calls:
+        with py4j_calls() as calls:
             again = build(spark, sf_dir)
         assert again is first
         assert calls[0] < 20, calls[0]

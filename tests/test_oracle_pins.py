@@ -38,7 +38,8 @@ from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_dat
 #: BM25/hybrid stats-literal fold, the per-row boilerplate scrub, the
 #: Iceberg `_read_entries` group merge (stream/exotic are its heavy
 #: users), the JPEG codec rewrite and the fused PNG kernel.  train_prep
-#: composites over the scrub.
+#: composites over the scrub.  The last four read Iceberg tables through
+#: the merge-on-read delete path (equality deletes, position deletes).
 PINNED = [
     "text_bm25_search",
     "retrieval_hybrid_rrf",
@@ -51,6 +52,10 @@ PINNED = [
     "mm_video_mp4_pipeline",
     "mm_image_jpeg_pipeline",
     "mm_image_png_pipeline",
+    "lake_iceberg_eq_upsert",
+    "lake_iceberg_upsert_atomic",
+    "lake_iceberg_changes_eq",
+    "lake_iceberg_v2_deletes",
 ]
 
 #: Entries whose oracle derives the medications table from `part`.
