@@ -12,9 +12,18 @@ other tool and they decode it the same way (asserted against
 hand-built files in tests).  Video is REAL too as of r7: the fixtures
 are genuine AVI containers (RIFF 'AVI ' with avih/strh/strf headers
 and a movi list of uncompressed BI_RGB '00db' DIB frames) and the
-decoder walks the actual chunk tree.  Compressed formats
-(JPEG/MP3/H.264) would swap the parse body for PIL/soundfile/PyAV and
-keep every other line.
+decoder walks the actual chunk tree.  The compressed codecs are native
+too, one sibling module each (jpeg, isobmff for MP4/avc1, mpegaudio,
+flac, ogg, adpcm, g711).
+
+Every kernel is a per-row generator run through `_map_rows`, the one
+`mapInPandas` call: it feeds each input row to the kernel and builds
+each output batch from the tuples it yields, with pandas dtypes taken
+from the declared Spark schema.  Whether an entry first spreads its
+single-file input over the executor threads is decided in one place,
+`_spread`: the eleven entries that encode and parse their own stream
+from the digest call it; the `synthetic_*_media` fixtures and the
+kernels that read them do not.
 
 Because the fixture bytes are digest-derived, every decoded feature is
 ALSO SQL-expressible, so the DuckDB oracles value-check the full real
@@ -32,13 +41,15 @@ header-bounded, not payload-bounded.
 
 from __future__ import annotations
 
+import math
 import struct
-from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from ..sources import load_table
+from . import adpcm, flac, g711, isobmff, jpeg, mpegaudio, ogg
 
 BMP_HEADER_BYTES = 54  # 14-byte file header + 40-byte BITMAPINFOHEADER
 WAV_HEADER_BYTES = 44  # canonical RIFF/fmt/data layout
@@ -57,6 +68,85 @@ def _digest_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: pandas dtype of each Spark field type a kernel may emit.
+_PANDAS_DTYPES = {
+    T.LongType: "int64",
+    T.IntegerType: "int32",
+    T.DoubleType: "float64",
+    T.BooleanType: "bool",
+    T.StringType: "object",
+    T.BinaryType: "object",
+}
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Spread a frame over the executor threads before a compute-bound
+    kernel: the fixture parquet is a single file, and a per-row codec
+    on its one partition would run on a single core."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _map_rows(media: DataFrame, schema, rows_of) -> DataFrame:
+    """Run the per-row kernel `rows_of(*row)` over `media` in Arrow
+    batches.  `row` is one input row's values in column order; the
+    kernel yields zero or more output tuples in `schema` order (a DDL
+    string or StructType).  Each output batch is built once from the
+    tuples, with pandas dtypes derived here, on the driver, so a field
+    type without a dtype mapping fails when the plan is built."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    dtypes = {}
+    for f in schema.fields:
+        if type(f.dataType) not in _PANDAS_DTYPES:
+            raise TypeError(
+                f"no pandas dtype for kernel field {f.name}: {f.dataType}"
+            )
+        dtypes[f.name] = _PANDAS_DTYPES[type(f.dataType)]
+    names = schema.fieldNames()
+
+    def run(batches):
+        for batch in batches:
+            records = [
+                out
+                for row in batch.itertuples(index=False, name=None)
+                for out in rows_of(*row)
+            ]
+            yield pd.DataFrame.from_records(records, columns=names).astype(dtypes)
+
+    return media.mapInPandas(run, schema)
+
+
+def _tile(digest: bytes, *shape):
+    """The 16 digest bytes tiled over `shape` in C order — element i is
+    digest[i mod 16], the SQL-replayable pixel model of every fixture."""
+    return np.resize(np.frombuffer(digest, dtype=np.uint8), shape)
+
+
+def _psnr_db(dec, orig) -> float:
+    """Peak signal-to-noise ratio of 8-bit pixels in dB (inf if equal)."""
+    mse = float(((dec.astype(np.float64) - orig.astype(np.float64)) ** 2).mean())
+    return float("inf") if mse == 0 else 10.0 * np.log10(255.0**2 / mse)
+
+
+def _snr_db(decoded, x) -> float:
+    """Signal-to-noise ratio of decoded int16 audio vs the original in
+    dB (inf if equal; a silent original counts as unit power)."""
+    x64 = x.astype(np.int64)
+    err = float(((np.asarray(decoded, dtype=np.int64) - x64) ** 2).mean())
+    sig = float((x64**2).mean()) or 1.0
+    return float("inf") if err == 0 else 10.0 * math.log10(sig / err)
+
+
+def _sine(n: int, amp_b: int, freq_b: int, phase_b: int):
+    """n int16 samples of the digest-parameterized test sine (amplitude,
+    frequency and phase from three digest bytes)."""
+    amp = 2000 + amp_b * 90
+    freq = 1 + freq_b % 16
+    phase = phase_b / 256.0 * 2 * math.pi
+    t = np.arange(n)
+    return (amp * np.sin(2 * np.pi * freq * t / n + phase)).astype(np.int16)
+
+
 # --------------------------------------------------------------------------
 # BMP: encode (fixture generator) and decode (the real codec)
 # --------------------------------------------------------------------------
@@ -70,8 +160,6 @@ def _bmp_row_size(width: int) -> int:
 def _encode_bmp(img) -> bytes:
     """numpy (h, w, 3) uint8 image → real uncompressed 24-bit BMP bytes
     (bottom-up rows, 4-byte row padding — the standard layout)."""
-    import numpy as np
-
     h, w = img.shape[:2]
     row_size = _bmp_row_size(w)
     data_size = h * row_size
@@ -89,8 +177,6 @@ def _decode_bmp(b: bytes):
     """Real BMP parse: validate magic/compression, read geometry from
     the header, strip row padding, un-reverse the bottom-up rows.
     Returns (h, w, 3) uint8 in top-down image order."""
-    import numpy as np
-
     if b[:2] != b"BM":
         raise ValueError("not a BMP: missing 'BM' magic")
     offset = struct.unpack_from("<I", b, 10)[0]
@@ -112,24 +198,13 @@ def synthetic_bmp_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2..9 square-ish) and pixel bytes derive from the md5 digest —
     image pixel (r, c, ch) = digest[(r·w·3 + c·3 + ch) mod 16] — so
     the decoded features are SQL-replayable."""
-    media = _digest_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        w, h = 2 + digest[0] % 8, 2 + digest[1] % 8
+        yield doc_id, _encode_bmp(_tile(digest, h, w, 3))
 
-        for batch in batches:
-            out = []
-            for b in batch["digest"]:
-                d = np.frombuffer(b, dtype=np.uint8)
-                w, h = 2 + int(d[0]) % 8, 2 + int(d[1]) % 8
-                img = np.resize(d, h * w * 3).reshape(h, w, 3)
-                out.append(_encode_bmp(img))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "image_bytes": out}
-            )
-
-    return media.mapInPandas(
-        run, "doc_id long, image_bytes binary"
+    return _map_rows(
+        _digest_media(spark, sf_dir), "doc_id long, image_bytes binary", rows_of
     )
 
 
@@ -145,35 +220,16 @@ IMAGE_META_SCHEMA = T.StructType(
 )
 
 
-def _decode_image_batch(batch: pd.DataFrame) -> pd.DataFrame:
-    """REAL decode kernel: sniff the magic, parse the BMP header fields.
-    Geometry comes from the bytes themselves, not from any sidecar."""
-    metas = []
-    for b in batch["image_bytes"]:
-        img = _decode_bmp(bytes(b))
-        h, w = img.shape[:2]
-        metas.append((len(b), w, h, "bmp"))
-    return pd.DataFrame(
-        {
-            "doc_id": batch["doc_id"],
-            "n_bytes": pd.Series([m[0] for m in metas], dtype="int32"),
-            "width": pd.Series([m[1] for m in metas], dtype="int32"),
-            "height": pd.Series([m[2] for m in metas], dtype="int32"),
-            "format": [m[3] for m in metas],
-        }
-    )
-
-
 def image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """binary column → typed metadata via mapInPandas (Arrow batches),
-    decoding genuine BMP bytes."""
-    media = synthetic_bmp_media(spark, sf_dir)
+    decoding genuine BMP bytes: the magic is checked and the geometry
+    comes from the parsed header, not from any sidecar."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            yield _decode_image_batch(batch)
+    def rows_of(doc_id, image_bytes):
+        h, w = _decode_bmp(bytes(image_bytes)).shape[:2]
+        yield doc_id, len(image_bytes), w, h, "bmp"
 
-    return media.mapInPandas(run, IMAGE_META_SCHEMA)
+    return _map_rows(synthetic_bmp_media(spark, sf_dir), IMAGE_META_SCHEMA, rows_of)
 
 
 #: Output contract of the resize kernel.
@@ -194,29 +250,13 @@ def image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum of the resized image; the DuckDB oracle recomputes both
     from the digest math, so a botched decode (padding, row order)
     or resize indexing fails the value check."""
-    media = synthetic_bmp_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for b in batch["image_bytes"]:
-                img = _decode_bmp(bytes(b))
-                small = img[::2, ::2, :]
-                out = _encode_bmp(small)
-                rows.append(
-                    (small.shape[1], small.shape[0], len(out), int(small.sum()))
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"],
-                    "out_width": pd.Series([r[0] for r in rows], dtype="int32"),
-                    "out_height": pd.Series([r[1] for r in rows], dtype="int32"),
-                    "n_bytes_out": pd.Series([r[2] for r in rows], dtype="int32"),
-                    "pixel_sum": pd.Series([r[3] for r in rows], dtype="int64"),
-                }
-            )
+    def rows_of(doc_id, image_bytes):
+        small = _decode_bmp(bytes(image_bytes))[::2, ::2, :]
+        out = _encode_bmp(small)
+        yield doc_id, small.shape[1], small.shape[0], len(out), int(small.sum())
 
-    return media.mapInPandas(run, RESIZE_SCHEMA)
+    return _map_rows(synthetic_bmp_media(spark, sf_dir), RESIZE_SCHEMA, rows_of)
 
 
 # --------------------------------------------------------------------------
@@ -241,8 +281,6 @@ def _png_chunk(ctype: bytes, body: bytes) -> bytes:
 def _paeth(a, b, c):
     """The Paeth predictor (PNG spec §9.4), vectorized over numpy
     arrays: pick whichever of left/up/up-left is closest to a+b-c."""
-    import numpy as np
-
     p = a.astype(np.int32) + b.astype(np.int32) - c.astype(np.int32)
     pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
     out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
@@ -257,8 +295,6 @@ def _encode_png(img, level: int = 6) -> bytes:
     against ORIGINAL neighbors is fully vectorized (the sequential
     dependency only exists on the decode side)."""
     import zlib
-
-    import numpy as np
 
     h, w = img.shape[:2]
     bpp = 3
@@ -302,8 +338,6 @@ def _decode_png(b: bytes):
     variant every fixture and the common fast path use; anything else
     raises rather than mis-decoding."""
     import zlib
-
-    import numpy as np
 
     if b[: len(PNG_SIG)] != PNG_SIG:
         raise ValueError("not a PNG: bad signature")
@@ -377,23 +411,14 @@ def synthetic_png_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r, c, ch) = digest[(r·w·3 + c·3 + ch) mod 16] — same SQL-replayable
     pixel model as the BMP fixture, but the bytes go through genuine
     DEFLATE compression and all five PNG filters."""
-    media = _digest_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        w, h = 2 + digest[2] % 8, 2 + digest[3] % 8
+        yield doc_id, _encode_png(_tile(digest, h, w, 3))
 
-        for batch in batches:
-            out = []
-            for b in batch["digest"]:
-                d = np.frombuffer(b, dtype=np.uint8)
-                w, h = 2 + int(d[2]) % 8, 2 + int(d[3]) % 8
-                img = np.resize(d, h * w * 3).reshape(h, w, 3)
-                out.append(_encode_png(img))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "image_bytes": out}
-            )
-
-    return media.mapInPandas(run, "doc_id long, image_bytes binary")
+    return _map_rows(
+        _digest_media(spark, sf_dir), "doc_id long, image_bytes binary", rows_of
+    )
 
 
 PNG_PIPELINE_SCHEMA = T.StructType(
@@ -426,47 +451,24 @@ def image_png_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused kernel ships 16 digest bytes per row instead of the PNG
     twice.  Same codec calls, same rows (`synthetic_png_media` stays
     the declared fixture surface for byte-level tests)."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
+
+    def rows_of(doc_id, digest):
+        w, h = 2 + digest[2] % 8, 2 + digest[3] % 8
+        img = _decode_png(_encode_png(_tile(digest, h, w, 3)))
+        small = img[::2, ::2, :]
+        yield (
+            doc_id,
+            img.shape[1],
+            img.shape[0],
+            int(img.sum()),
+            small.shape[1],
+            small.shape[0],
+            int(small.sum()),
+        )
+
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)), PNG_PIPELINE_SCHEMA, rows_of
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for batch in batches:
-            rows = []
-            for b in batch["digest"]:
-                d = np.frombuffer(b, dtype=np.uint8)
-                w, h = 2 + int(d[2]) % 8, 2 + int(d[3]) % 8
-                img = _decode_png(
-                    _encode_png(np.resize(d, h * w * 3).reshape(h, w, 3))
-                )
-                small = img[::2, ::2, :]
-                rows.append(
-                    (
-                        img.shape[1],
-                        img.shape[0],
-                        int(img.sum()),
-                        small.shape[1],
-                        small.shape[0],
-                        int(small.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"],
-                    "width": pd.Series([r[0] for r in rows], dtype="int32"),
-                    "height": pd.Series([r[1] for r in rows], dtype="int32"),
-                    "pixel_sum": pd.Series([r[2] for r in rows], dtype="int64"),
-                    "out_width": pd.Series([r[3] for r in rows], dtype="int32"),
-                    "out_height": pd.Series([r[4] for r in rows], dtype="int32"),
-                    "resized_pixel_sum": pd.Series(
-                        [r[5] for r in rows], dtype="int64"
-                    ),
-                }
-            )
-
-    return media.mapInPandas(run, PNG_PIPELINE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -482,25 +484,14 @@ def synthetic_jpeg_media(
     bytes 4/5 (8..15 — at least one full DCT block), pixels from the
     digest tiling.  The bytes go through genuine DCT + quantization +
     Huffman coding; decode is lossy-but-deterministic."""
-    media = _digest_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        w, h = 8 + digest[4] % 8, 8 + digest[5] % 8
+        yield doc_id, jpeg.encode_jpeg(_tile(digest, h, w, 3), quality)
 
-        from . import jpeg
-
-        for batch in batches:
-            out = []
-            for b in batch["digest"]:
-                d = np.frombuffer(b, dtype=np.uint8)
-                w, h = 8 + int(d[4]) % 8, 8 + int(d[5]) % 8
-                img = np.resize(d, h * w * 3).reshape(h, w, 3)
-                out.append(jpeg.encode_jpeg(img, quality))
-            yield pd.DataFrame(
-                {"doc_id": batch["doc_id"], "image_bytes": out}
-            )
-
-    return media.mapInPandas(run, "doc_id long, image_bytes binary")
+    return _map_rows(
+        _digest_media(spark, sf_dir), "doc_id long, image_bytes binary", rows_of
+    )
 
 
 JPEG_PIPELINE_SCHEMA = T.StructType(
@@ -527,52 +518,21 @@ def image_jpeg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     are SQL-stated by the oracle (dims from digest math; psnr_ok must
     be TRUE for every row) — so a broken entropy decode or IDCT fails
     the value match even though quantized pixel values themselves are
-    not SQL-expressible.  One mapInPandas carries the digest through
+    not SQL-expressible.  One kernel carries the digest through
     encode → decode → score so the original never leaves the batch.
-    The digest frame is repartitioned first: the fixture parquet is a
-    single file, and a per-row DCT+Huffman kernel on one partition
-    would serialize ~2.6 ms/image on a single core — the repartition
-    spreads the Arrow batches across the executor threads (the rule
-    for any compute-bound mapInPandas kernel)."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
+    The digest frame is spread first (`_spread`): a per-row
+    DCT+Huffman kernel costs ~2.6 ms/image."""
+
+    def rows_of(doc_id, digest):
+        w, h = 8 + digest[4] % 8, 8 + digest[5] % 8
+        orig = _tile(digest, h, w, 3)
+        dec = jpeg.decode_jpeg(jpeg.encode_jpeg(orig, 90))
+        ok = _psnr_db(dec, orig) >= JPEG_PSNR_FLOOR_DB
+        yield doc_id, dec.shape[1], dec.shape[0], "jpeg", ok
+
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)), JPEG_PIPELINE_SCHEMA, rows_of
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from . import jpeg
-
-        for batch in batches:
-            ids, ws, hs, oks = [], [], [], []
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                w, h = 8 + int(d[4]) % 8, 8 + int(d[5]) % 8
-                orig = np.resize(d, h * w * 3).reshape(h, w, 3)
-                dec = jpeg.decode_jpeg(jpeg.encode_jpeg(orig, 90))
-                mse = float(
-                    ((dec.astype(np.float64) - orig.astype(np.float64)) ** 2).mean()
-                )
-                psnr = (
-                    float("inf")
-                    if mse == 0
-                    else 10.0 * np.log10(255.0**2 / mse)
-                )
-                ids.append(doc_id)
-                ws.append(dec.shape[1])
-                hs.append(dec.shape[0])
-                oks.append(psnr >= JPEG_PSNR_FLOOR_DB)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "format": ["jpeg"] * len(ids),
-                    "psnr_ok": pd.Series(oks, dtype="bool"),
-                }
-            )
-
-    return media.mapInPandas(run, JPEG_PIPELINE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -599,8 +559,6 @@ def _decode_wav(b: bytes):
     """Real RIFF parse: validate magic, WALK the chunk list (not a
     fixed offset — files with LIST/fact chunks parse too), read the
     fmt fields, return (samples int16 array, sample_rate)."""
-    import numpy as np
-
     if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a WAV: missing RIFF/WAVE magic")
     pos, fmt, data = 12, None, None
@@ -625,19 +583,22 @@ def _decode_wav(b: bytes):
 def synthetic_wav_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attach a REAL deterministic PCM-WAV to each document: 8 signed
     16-bit samples, sample i = int16(digest[2i] | digest[2i+1] << 8)."""
-    media = _digest_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        yield doc_id, _encode_wav(np.frombuffer(digest, dtype="<i2"))
 
-        for batch in batches:
-            out = [
-                _encode_wav(np.frombuffer(b, dtype="<i2"))
-                for b in batch["digest"]
-            ]
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "audio_bytes": out})
+    return _map_rows(
+        _digest_media(spark, sf_dir), "doc_id long, audio_bytes binary", rows_of
+    )
 
-    return media.mapInPandas(run, "doc_id long, audio_bytes binary")
+
+def _window_sq_sums(audio_bytes: bytes):
+    """Decode a PCM-WAV and return the exact int64 square sum of each
+    full AUDIO_WINDOW of its samples."""
+    samples = _decode_wav(bytes(audio_bytes))[0].astype(np.int64)
+    n_win = len(samples) // AUDIO_WINDOW
+    windows = samples[: n_win * AUDIO_WINDOW].reshape(n_win, AUDIO_WINDOW)
+    return (windows * windows).sum(axis=1)
 
 
 #: Output contract of the audio feature extractor.
@@ -656,32 +617,13 @@ def audio_rms_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     in mapInPandas, decoding genuine RIFF bytes (chunk walk + int16
     samples).  Integer square sums are exact in int64 → double, so the
     kernel is bit-comparable to the SQL oracle."""
-    media = synthetic_wav_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, audio_bytes):
+        rms = np.sqrt(_window_sq_sums(audio_bytes) / float(AUDIO_WINDOW))
+        for i, r in enumerate(rms):
+            yield doc_id, i, r, AUDIO_WINDOW
 
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            decoded = [_decode_wav(bytes(b))[0] for b in batch["audio_bytes"]]
-            samples = np.stack(decoded).astype(np.int64)
-            n_win = samples.shape[1] // AUDIO_WINDOW
-            windows = samples[:, : n_win * AUDIO_WINDOW].reshape(
-                len(batch), n_win, AUDIO_WINDOW
-            )
-            sq_sum = (windows * windows).sum(axis=2)  # exact int sums
-            rms = np.sqrt(sq_sum.astype(np.float64) / float(AUDIO_WINDOW))
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(batch["doc_id"].to_numpy(), n_win),
-                    "window_idx": np.tile(np.arange(n_win, dtype=np.int32), len(batch)),
-                    "rms": rms.ravel(),
-                    "n_samples": np.int32(AUDIO_WINDOW),
-                }
-            )
-
-    return media.mapInPandas(run, AUDIO_RMS_SCHEMA)
+    return _map_rows(synthetic_wav_media(spark, sf_dir), AUDIO_RMS_SCHEMA, rows_of)
 
 
 def audio_low_energy_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -697,32 +639,16 @@ def audio_low_energy_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, window_idx, sq_sum) out of the Arrow batch; islands are
     the classic `idx − row_number` constant-group trick — one window
     pass per doc, no joins, no iteration."""
-    media = synthetic_wav_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, audio_bytes):
+        for i, sq in enumerate(_window_sq_sums(audio_bytes)):
+            yield doc_id, i, sq
 
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            decoded = [_decode_wav(bytes(b))[0] for b in batch["audio_bytes"]]
-            samples = np.stack(decoded).astype(np.int64)
-            n_win = samples.shape[1] // AUDIO_WINDOW
-            windows = samples[:, : n_win * AUDIO_WINDOW].reshape(
-                len(batch), n_win, AUDIO_WINDOW
-            )
-            sq_sum = (windows * windows).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(batch["doc_id"].to_numpy(), n_win),
-                    "window_idx": np.tile(
-                        np.arange(n_win, dtype=np.int32), len(batch)
-                    ),
-                    "sq_sum": sq_sum.ravel(),
-                }
-            )
-
-    energy = media.mapInPandas(run, "doc_id long, window_idx int, sq_sum long")
+    energy = _map_rows(
+        synthetic_wav_media(spark, sf_dir),
+        "doc_id long, window_idx int, sq_sum long",
+        rows_of,
+    )
     w_doc = Window.partitionBy("doc_id")
     low = (
         energy.withColumn("total", F.sum("sq_sum").over(w_doc))
@@ -801,8 +727,6 @@ VIDEO_MIN_FRAMES = 2  # n_frames = 2 + digest[2] % 3 → 2..4
 def _encode_dib(img) -> bytes:
     """numpy (h, w, 3) uint8 → raw DIB pixel data (bottom-up rows,
     4-byte row padding) — the frame payload format BMP and AVI share."""
-    import numpy as np
-
     h, w = img.shape[:2]
     row_size = _bmp_row_size(w)
     rows = np.zeros((h, row_size), dtype=np.uint8)
@@ -814,8 +738,6 @@ def _decode_dib(buf: bytes, w: int, h: int, flip: bool = True):
     """Raw padded DIB pixel data → (h, w, 3) uint8 top-down.  `flip`
     reverses the row order (positive-height bottom-up storage, the
     default); top-down DIBs (negative biHeight) pass flip=False."""
-    import numpy as np
-
     row_size = _bmp_row_size(w)
     px = np.frombuffer(buf, dtype=np.uint8, count=h * row_size)
     img = px.reshape(h, row_size)[:, : 3 * w].reshape(h, w, 3)
@@ -873,8 +795,6 @@ def _decode_avi(b: bytes):
     handler is 'DIB ').  Unknown chunks (JUNK, idx1, extra LISTs) are
     skipped by size, like the WAV walk.  Returns (frames (n,h,w,3)
     uint8 top-down, fps)."""
-    import numpy as np
-
     if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
         raise ValueError("not an AVI: missing RIFF/'AVI ' magic")
 
@@ -937,49 +857,30 @@ def synthetic_avi_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_frames = 2 + d[2] % 3), pixel (f, r, c, ch) =
     digest[(f·h·w·3 + r·w·3 + c·3 + ch) mod 16] — every decoded frame
     feature stays SQL-replayable."""
-    media = _digest_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        w, h = 2 + digest[0] % 8, 2 + digest[1] % 8
+        n = VIDEO_MIN_FRAMES + digest[2] % 3
+        yield doc_id, _encode_avi(_tile(digest, n, h, w, 3))
 
-        for batch in batches:
-            out = []
-            for b in batch["digest"]:
-                d = np.frombuffer(b, dtype=np.uint8)
-                w, h = 2 + int(d[0]) % 8, 2 + int(d[1]) % 8
-                n = VIDEO_MIN_FRAMES + int(d[2]) % 3
-                frames = np.resize(d, n * h * w * 3).reshape(n, h, w, 3)
-                out.append(_encode_avi(frames))
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "video_bytes": out})
-
-    return media.mapInPandas(run, "doc_id long, video_bytes binary")
+    return _map_rows(
+        _digest_media(spark, sf_dir), "doc_id long, video_bytes binary", rows_of
+    )
 
 
 def video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """binary AVI column → typed metadata (frame count, geometry, fps,
     container size), all read from the parsed container itself."""
-    media = synthetic_avi_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for b in batch["video_bytes"]:
-                frames, fps = _decode_avi(bytes(b))
-                n, h, w = frames.shape[:3]
-                rows.append((n, w, h, float(fps), len(b)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"],
-                    "n_frames": pd.Series([r[0] for r in rows], dtype="int32"),
-                    "width": pd.Series([r[1] for r in rows], dtype="int32"),
-                    "height": pd.Series([r[2] for r in rows], dtype="int32"),
-                    "fps": [r[3] for r in rows],
-                    "n_bytes": pd.Series([r[4] for r in rows], dtype="int32"),
-                }
-            )
+    def rows_of(doc_id, video_bytes):
+        frames, fps = _decode_avi(bytes(video_bytes))
+        n, h, w = frames.shape[:3]
+        yield doc_id, n, w, h, float(fps), len(video_bytes)
 
-    return media.mapInPandas(
-        run, "doc_id long, n_frames int, width int, height int, fps double, n_bytes int"
+    return _map_rows(
+        synthetic_avi_media(spark, sf_dir),
+        "doc_id long, n_frames int, width int, height int, fps double, n_bytes int",
+        rows_of,
     )
 
 
@@ -989,28 +890,17 @@ def frame_sample(spark: SparkSession, sf_dir: str, every_n: int = 2) -> DataFram
     checksum) — the sample-then-featurize shape of a video training
     pipeline.  Only (doc_id, frame_idx, int64) leaves the Arrow batch;
     the frame pixels never hit a shuffle."""
-    media = synthetic_avi_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, video_bytes):
+        frames, _ = _decode_avi(bytes(video_bytes))
+        for i in range(0, frames.shape[0], every_n):
+            yield doc_id, i, int(frames[i].astype(np.int64).sum())
 
-        for batch in batches:
-            ids, idxs, sums = [], [], []
-            for doc_id, b in zip(batch["doc_id"], batch["video_bytes"]):
-                frames, _ = _decode_avi(bytes(b))
-                for i in range(0, frames.shape[0], every_n):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    sums.append(int(frames[i].astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "pixel_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(run, "doc_id long, frame_idx int, pixel_sum long")
+    return _map_rows(
+        synthetic_avi_media(spark, sf_dir),
+        "doc_id long, frame_idx int, pixel_sum long",
+        rows_of,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1028,8 +918,6 @@ def _encode_avi_mjpeg(frames, quality: int = MJPEG_QUALITY) -> bytes:
     fourcc, and a movi list of '00dc' chunks each holding a complete
     baseline JPEG — the layout ffmpeg/VLC/OpenCV produce and consume
     for motion-JPEG."""
-    from . import jpeg
-
     n, h, w = frames.shape[:3]
     payloads = [jpeg.encode_jpeg(f, quality) for f in frames]
     max_sz = max(len(p) for p in payloads)
@@ -1067,10 +955,6 @@ def _decode_avi_mjpeg(b: bytes):
     strf must announce the 'MJPG' fourcc and every '00dc' chunk is a
     standalone JPEG decoded through operators/jpeg.  Returns (frames
     (n, h, w, 3) uint8, fps)."""
-    import numpy as np
-
-    from . import jpeg
-
     if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
         raise ValueError("not an AVI: missing RIFF/'AVI ' magic")
 
@@ -1116,62 +1000,26 @@ def video_mjpeg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked against the originals (`frames_ok`).  Geometry and frame
     count are digest math the oracle restates; the booleans must be
     TRUE — so a broken container walk, Huffman table, or IDCT fails
-    the value match.  Same compute-bound-kernel rule as the JPEG
-    entry: repartition before the mapInPandas so the per-frame DCT
-    work spreads across the executor threads."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    the value match.  Spread first (`_spread`), like the JPEG entry:
+    the per-frame DCT work is compute-bound."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        w, h = 8 + digest[4] % 8, 8 + digest[5] % 8
+        n = VIDEO_MIN_FRAMES + digest[2] % 3
+        orig = _tile(digest, n, h, w, 3)
+        dec, fps = _decode_avi_mjpeg(_encode_avi_mjpeg(orig))
+        ok = (
+            dec.shape == orig.shape
+            and fps == float(AVI_FPS)
+            and all(_psnr_db(*f) >= JPEG_PSNR_FLOOR_DB for f in zip(dec, orig))
+        )
+        yield doc_id, n, w, h, "mjpeg", ok
 
-        for batch in batches:
-            ids, ns, ws, hs, oks = [], [], [], [], []
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                w, h = 8 + int(d[4]) % 8, 8 + int(d[5]) % 8
-                n = VIDEO_MIN_FRAMES + int(d[2]) % 3
-                orig = np.resize(d, n * h * w * 3).reshape(n, h, w, 3)
-                dec, fps = _decode_avi_mjpeg(_encode_avi_mjpeg(orig))
-                ok = dec.shape == orig.shape and fps == float(AVI_FPS)
-                if ok:
-                    for f in range(n):
-                        mse = float(
-                            (
-                                (dec[f].astype(np.float64)
-                                 - orig[f].astype(np.float64))
-                                ** 2
-                            ).mean()
-                        )
-                        psnr = (
-                            float("inf")
-                            if mse == 0
-                            else 10.0 * np.log10(255.0**2 / mse)
-                        )
-                        if psnr < JPEG_PSNR_FLOOR_DB:
-                            ok = False
-                            break
-                ids.append(doc_id)
-                ns.append(n)
-                ws.append(w)
-                hs.append(h)
-                oks.append(ok)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_frames": pd.Series(ns, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "format": ["mjpeg"] * len(ids),
-                    "frames_ok": pd.Series(oks, dtype="bool"),
-                }
-            )
-
-    return media.mapInPandas(
-        run,
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
         "doc_id long, n_frames int, width int, height int, "
         "format string, frames_ok boolean",
+        rows_of,
     )
 
 
@@ -1194,58 +1042,27 @@ def audio_adpcm_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     `n_blocks` are digest math the oracle restates; the booleans must
     be TRUE — a broken step table, nibble order, or block-boundary
     state fails the value match."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def rows_of(doc_id, digest):
+        # >=326 samples: the last block's padding amortizes and the
+        # 3:1 ratio check holds for every length
+        n = ADPCM_MIN_SAMPLES + digest[0] % 128
+        x = _sine(n, digest[1], digest[2], digest[3])
+        y, _rate = adpcm.decode_ima_wav(adpcm.encode_ima_wav(x))
+        data_sz = len(adpcm.encode_blocks(x))
+        yield (
+            doc_id,
+            len(y),
+            data_sz // adpcm.BLOCK_ALIGN,
+            data_sz * 3 < 2 * n,
+            _snr_db(y, x) >= ADPCM_SNR_FLOOR_DB,
+        )
 
-        import numpy as np
-
-        from . import adpcm
-
-        for batch in batches:
-            ids, ns, nb, ratio_oks, snr_oks = [], [], [], [], []
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                # >=326 samples: the last block's padding amortizes
-                # and the 3:1 ratio check holds for every length
-                n = ADPCM_MIN_SAMPLES + int(d[0]) % 128
-                amp = 2000 + int(d[1]) * 90
-                freq = 1 + int(d[2]) % 16
-                phase = int(d[3]) / 256.0 * 2 * math.pi
-                t = np.arange(n)
-                x = (amp * np.sin(2 * np.pi * freq * t / n + phase)).astype(
-                    np.int16
-                )
-                wav = adpcm.encode_ima_wav(x)
-                y, _rate = adpcm.decode_ima_wav(wav)
-                y64 = np.asarray(y, dtype=np.int64)
-                x64 = x.astype(np.int64)
-                err = float(((y64 - x64) ** 2).mean())
-                sig = float((x64**2).mean()) or 1.0
-                snr = float("inf") if err == 0 else 10.0 * math.log10(sig / err)
-                data_sz = len(adpcm.encode_blocks(x))
-                ids.append(doc_id)
-                ns.append(len(y))
-                nb.append(data_sz // adpcm.BLOCK_ALIGN)
-                ratio_oks.append(data_sz * 3 < 2 * n)
-                snr_oks.append(snr >= ADPCM_SNR_FLOOR_DB)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int32"),
-                    "n_blocks": pd.Series(nb, dtype="int32"),
-                    "ratio_ok": pd.Series(ratio_oks, dtype="bool"),
-                    "snr_ok": pd.Series(snr_oks, dtype="bool"),
-                }
-            )
-
-    return media.mapInPandas(
-        run,
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
         "doc_id long, n_samples int, n_blocks int, "
         "ratio_ok boolean, snr_ok boolean",
+        rows_of,
     )
 
 
@@ -1271,63 +1088,30 @@ def audio_g711_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the value match.  Encode/decode are numpy-vectorized table
     math (no per-sample loop), so the kernel is memory-, not
     compute-bound, and scales with Arrow batch streaming."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def law_ok(x, law: str) -> bool:
+        y, _rate = g711.decode_g711_wav(g711.encode_g711_wav(x, law))
+        if len(y) != len(x):
+            return False
+        enc = g711.encode_mulaw if law == "mulaw" else g711.encode_alaw
+        dec = g711.decode_mulaw if law == "mulaw" else g711.decode_alaw
+        if len(enc(x)) != len(x):  # 2:1 by construction, keep honest
+            return False
+        # value-level companding fixpoint (byte-level would trip on
+        # mu-law's two zero codes: -0 re-encodes as +0 per spec)
+        if not np.array_equal(dec(enc(y)), y):
+            return False
+        return _snr_db(y, x) >= G711_SNR_FLOOR_DB
 
-        import numpy as np
+    def rows_of(doc_id, digest):
+        n = G711_MIN_SAMPLES + digest[4] % 128
+        x = _sine(n, digest[5], digest[6], digest[7])
+        yield doc_id, n, law_ok(x, "mulaw"), law_ok(x, "alaw")
 
-        from . import g711
-
-        def law_ok(x: "np.ndarray", law: str) -> bool:
-            wav = g711.encode_g711_wav(x, law)
-            y, _rate = g711.decode_g711_wav(wav)
-            if len(y) != len(x):
-                return False
-            enc = g711.encode_mulaw if law == "mulaw" else g711.encode_alaw
-            dec = g711.decode_mulaw if law == "mulaw" else g711.decode_alaw
-            if len(enc(x)) != len(x):  # 2:1 by construction, keep honest
-                return False
-            # value-level companding fixpoint (byte-level would trip on
-            # mu-law's two zero codes: -0 re-encodes as +0 per spec)
-            if not np.array_equal(dec(enc(y)), y):
-                return False
-            x64 = x.astype(np.int64)
-            err = float(((y.astype(np.int64) - x64) ** 2).mean())
-            sig = float((x64**2).mean()) or 1.0
-            snr = float("inf") if err == 0 else 10.0 * math.log10(sig / err)
-            return snr >= G711_SNR_FLOOR_DB
-
-        for batch in batches:
-            ids, ns, mu_oks, al_oks = [], [], [], []
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                n = G711_MIN_SAMPLES + int(d[4]) % 128
-                amp = 2000 + int(d[5]) * 90
-                freq = 1 + int(d[6]) % 16
-                phase = int(d[7]) / 256.0 * 2 * math.pi
-                t = np.arange(n)
-                x = (amp * np.sin(2 * np.pi * freq * t / n + phase)).astype(
-                    np.int16
-                )
-                ids.append(doc_id)
-                ns.append(n)
-                mu_oks.append(law_ok(x, "mulaw"))
-                al_oks.append(law_ok(x, "alaw"))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(ns, dtype="int32"),
-                    "mulaw_ok": pd.Series(mu_oks, dtype="bool"),
-                    "alaw_ok": pd.Series(al_oks, dtype="bool"),
-                }
-            )
-
-    return media.mapInPandas(
-        run, "doc_id long, n_samples int, mulaw_ok boolean, alaw_ok boolean"
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
+        "doc_id long, n_samples int, mulaw_ok boolean, alaw_ok boolean",
+        rows_of,
     )
 
 
@@ -1348,70 +1132,26 @@ def video_mp4_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     mdhd timescale) and is digest math the oracle restates at 10 fps;
     a wrong box length, fixed-point width, timescale conversion, or
     chunk-offset expansion fails the value match (or refuses)."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        w, h = 8 + digest[4] % 8, 8 + digest[5] % 8
+        n = VIDEO_MIN_FRAMES + digest[2] % 3
+        orig = _tile(digest, n, h, w, 3)
+        dec, meta = isobmff.decode_mp4_frames(isobmff.encode_mp4_mjpeg(orig))
+        ok = (
+            dec.shape == orig.shape
+            and meta["width"] == w
+            and meta["height"] == h
+            and meta["movie_timescale"] == isobmff.MOVIE_TIMESCALE
+            and all(_psnr_db(*f) >= JPEG_PSNR_FLOOR_DB for f in zip(dec, orig))
+        )
+        yield doc_id, n, w, h, meta["duration_ms"], "mp4", ok
 
-        from . import isobmff
-
-        for batch in batches:
-            ids, ns, ws, hs, durs, oks = [], [], [], [], [], []
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                w, h = 8 + int(d[4]) % 8, 8 + int(d[5]) % 8
-                n = VIDEO_MIN_FRAMES + int(d[2]) % 3
-                orig = np.resize(d, n * h * w * 3).reshape(n, h, w, 3)
-                dec, meta = isobmff.decode_mp4_frames(
-                    isobmff.encode_mp4_mjpeg(orig)
-                )
-                ok = (
-                    dec.shape == orig.shape
-                    and meta["width"] == w
-                    and meta["height"] == h
-                    and meta["movie_timescale"] == isobmff.MOVIE_TIMESCALE
-                )
-                if ok:
-                    for f in range(n):
-                        mse = float(
-                            (
-                                (dec[f].astype(np.float64)
-                                 - orig[f].astype(np.float64))
-                                ** 2
-                            ).mean()
-                        )
-                        psnr = (
-                            float("inf")
-                            if mse == 0
-                            else 10.0 * np.log10(255.0**2 / mse)
-                        )
-                        if psnr < JPEG_PSNR_FLOOR_DB:
-                            ok = False
-                            break
-                ids.append(doc_id)
-                ns.append(n)
-                ws.append(w)
-                hs.append(h)
-                durs.append(meta["duration_ms"])
-                oks.append(ok)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_frames": pd.Series(ns, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "duration_ms": pd.Series(durs, dtype="int64"),
-                    "format": ["mp4"] * len(ids),
-                    "frames_ok": pd.Series(oks, dtype="bool"),
-                }
-            )
-
-    return media.mapInPandas(
-        run,
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
         "doc_id long, n_frames int, width int, height int, "
         "duration_ms long, format string, frames_ok boolean",
+        rows_of,
     )
 
 
@@ -1433,56 +1173,35 @@ def audio_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk and fails the value match (or refuses).  No payload byte is
     ever read — the scan is header-bounded, exactly how a 100-TB
     corpus indexes compressed audio it never decodes."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        n_frames = 4 + digest[8] % 8
+        sr_idx = digest[9] % 3
+        br1 = 1 + digest[10] % 14
+        br2 = 1 + digest[11] % 14
+        pad = digest[12] % 2  # odd frames carry the padding bit
+        specs = [
+            (br1 if i % 2 == 0 else br2, sr_idx, pad if i % 2 else 0)
+            for i in range(n_frames)
+        ]
+        id3 = bytes(range(digest[13]))
+        meta = mpegaudio.scan_mpeg_stream(
+            mpegaudio.encode_mp3_stream(specs, id3_payload=id3)
+        )
+        yield (
+            doc_id,
+            meta["n_frames"],
+            meta["sample_rate"],
+            meta["duration_ms"],
+            meta["stream_bytes"],
+            meta["is_vbr"],
+        )
 
-        from . import mpegaudio
-
-        for batch in batches:
-            rows = {
-                "doc_id": [], "n_frames": [], "sample_rate": [],
-                "duration_ms": [], "stream_bytes": [], "is_vbr": [],
-            }
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                n_frames = 4 + int(d[8]) % 8
-                sr_idx = int(d[9]) % 3
-                br1 = 1 + int(d[10]) % 14
-                br2 = 1 + int(d[11]) % 14
-                pad = int(d[12]) % 2  # odd frames carry the padding bit
-                specs = [
-                    (br1 if i % 2 == 0 else br2, sr_idx, pad if i % 2 else 0)
-                    for i in range(n_frames)
-                ]
-                id3 = bytes(range(int(d[13])))
-                meta = mpegaudio.scan_mpeg_stream(
-                    mpegaudio.encode_mp3_stream(specs, id3_payload=id3)
-                )
-                rows["doc_id"].append(doc_id)
-                rows["n_frames"].append(meta["n_frames"])
-                rows["sample_rate"].append(meta["sample_rate"])
-                rows["duration_ms"].append(meta["duration_ms"])
-                rows["stream_bytes"].append(meta["stream_bytes"])
-                rows["is_vbr"].append(meta["is_vbr"])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "n_frames": pd.Series(rows["n_frames"], dtype="int32"),
-                    "sample_rate": pd.Series(rows["sample_rate"], dtype="int32"),
-                    "duration_ms": pd.Series(rows["duration_ms"], dtype="int64"),
-                    "stream_bytes": pd.Series(rows["stream_bytes"], dtype="int64"),
-                    "is_vbr": pd.Series(rows["is_vbr"], dtype="bool"),
-                }
-            )
-
-    return media.mapInPandas(
-        run,
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
         "doc_id long, n_frames int, sample_rate int, duration_ms long, "
         "stream_bytes long, is_vbr boolean",
+        rows_of,
     )
 
 
@@ -1500,79 +1219,42 @@ def audio_flac_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     a mis-shifted STREAMINFO bit field, a wrong block-header stride,
     or a big/little-endian slip desynchronizes the walk and fails the
     value match (or refuses)."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    srs = [8000, 16000, 22050, 24000, 32000, 44100, 48000, 96000]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from . import flac
-
-        srs = [8000, 16000, 22050, 24000, 32000, 44100, 48000, 96000]
-        for batch in batches:
-            rows = {
-                "doc_id": [], "sample_rate": [], "channels": [],
-                "bits_per_sample": [], "total_samples": [],
-                "duration_ms": [], "n_blocks": [], "n_seekpoints": [],
-                "n_comments": [], "stream_bytes": [],
-            }
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                sr = srs[int(d[8]) % 8]
-                channels = 1 + int(d[9]) % 2
-                bps = 16 if int(d[10]) % 2 == 0 else 24
-                total = 1000 + int(d[11]) * 251 + int(d[12])
-                n_seek = int(d[13]) % 5
-                n_comm = int(d[14]) % 4
-                pad = int(d[15]) % 64
-                meta = flac.scan_flac_stream(
-                    flac.encode_flac_stream(
-                        sr, channels, bps, total,
-                        n_seekpoints=n_seek,
-                        comments=[f"C{i:02d}=V" for i in range(n_comm)],
-                        padding_len=pad,
-                        audio_bytes=100 + int(d[15]),
-                    )
-                )
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(meta["sample_rate"])
-                rows["channels"].append(meta["channels"])
-                rows["bits_per_sample"].append(meta["bits_per_sample"])
-                rows["total_samples"].append(meta["total_samples"])
-                rows["duration_ms"].append(meta["duration_ms"])
-                rows["n_blocks"].append(meta["n_blocks"])
-                rows["n_seekpoints"].append(meta["n_seekpoints"])
-                rows["n_comments"].append(meta["n_comments"])
-                rows["stream_bytes"].append(meta["stream_bytes"])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "sample_rate": pd.Series(rows["sample_rate"], dtype="int32"),
-                    "channels": pd.Series(rows["channels"], dtype="int32"),
-                    "bits_per_sample": pd.Series(
-                        rows["bits_per_sample"], dtype="int32"
-                    ),
-                    "total_samples": pd.Series(
-                        rows["total_samples"], dtype="int64"
-                    ),
-                    "duration_ms": pd.Series(rows["duration_ms"], dtype="int64"),
-                    "n_blocks": pd.Series(rows["n_blocks"], dtype="int32"),
-                    "n_seekpoints": pd.Series(
-                        rows["n_seekpoints"], dtype="int32"
-                    ),
-                    "n_comments": pd.Series(rows["n_comments"], dtype="int32"),
-                    "stream_bytes": pd.Series(
-                        rows["stream_bytes"], dtype="int64"
-                    ),
-                }
+    def rows_of(doc_id, digest):
+        sr = srs[digest[8] % 8]
+        channels = 1 + digest[9] % 2
+        bps = 16 if digest[10] % 2 == 0 else 24
+        total = 1000 + digest[11] * 251 + digest[12]
+        n_comm = digest[14] % 4
+        meta = flac.scan_flac_stream(
+            flac.encode_flac_stream(
+                sr, channels, bps, total,
+                n_seekpoints=digest[13] % 5,
+                comments=[f"C{i:02d}=V" for i in range(n_comm)],
+                padding_len=digest[15] % 64,
+                audio_bytes=100 + digest[15],
             )
+        )
+        yield (
+            doc_id,
+            meta["sample_rate"],
+            meta["channels"],
+            meta["bits_per_sample"],
+            meta["total_samples"],
+            meta["duration_ms"],
+            meta["n_blocks"],
+            meta["n_seekpoints"],
+            meta["n_comments"],
+            meta["stream_bytes"],
+        )
 
-    return media.mapInPandas(
-        run,
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
         "doc_id long, sample_rate int, channels int, bits_per_sample int, "
         "total_samples long, duration_ms long, n_blocks int, "
         "n_seekpoints int, n_comments int, stream_bytes long",
+        rows_of,
     )
 
 
@@ -1587,60 +1269,36 @@ def video_avc1_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exercised on purpose: half the widths/heights are not multiples
     of 16, so a wrong crop-unit or Exp-Golomb slip shifts geometry and
     fails the value match."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, digest):
+        w = 160 + (digest[8] % 8) * 32 - (digest[9] % 2) * 6
+        h = 96 + (digest[10] % 8) * 16 - (digest[11] % 2) * 4
+        n = 2 + digest[12] % 6
+        base = 50 + digest[13]
+        payloads = [b"\x00" * (base + j) for j in range(n)]
+        meta = isobmff.parse_mp4(isobmff.encode_mp4_avc1(w, h, payloads))
+        yield (
+            doc_id,
+            meta["width"],
+            meta["height"],
+            meta["n_samples"],
+            meta["duration_ms"],
+            meta["profile_idc"],
+            meta["level_idc"],
+            sum(sz for _o, sz in meta["samples"]),
+        )
 
-        from . import isobmff
-
-        for batch in batches:
-            rows = {
-                "doc_id": [], "width": [], "height": [], "n_samples": [],
-                "duration_ms": [], "profile_idc": [], "level_idc": [],
-                "sample_bytes": [],
-            }
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                w = 160 + (int(d[8]) % 8) * 32 - (int(d[9]) % 2) * 6
-                h = 96 + (int(d[10]) % 8) * 16 - (int(d[11]) % 2) * 4
-                n = 2 + int(d[12]) % 6
-                base = 50 + int(d[13])
-                payloads = [b"\x00" * (base + j) for j in range(n)]
-                meta = isobmff.parse_mp4(
-                    isobmff.encode_mp4_avc1(w, h, payloads)
-                )
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(meta["width"])
-                rows["height"].append(meta["height"])
-                rows["n_samples"].append(meta["n_samples"])
-                rows["duration_ms"].append(meta["duration_ms"])
-                rows["profile_idc"].append(meta["profile_idc"])
-                rows["level_idc"].append(meta["level_idc"])
-                rows["sample_bytes"].append(
-                    sum(sz for _o, sz in meta["samples"])
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "n_samples": pd.Series(rows["n_samples"], dtype="int32"),
-                    "duration_ms": pd.Series(rows["duration_ms"], dtype="int64"),
-                    "profile_idc": pd.Series(rows["profile_idc"], dtype="int32"),
-                    "level_idc": pd.Series(rows["level_idc"], dtype="int32"),
-                    "sample_bytes": pd.Series(rows["sample_bytes"], dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(
-        run,
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
         "doc_id long, width int, height int, n_samples int, "
         "duration_ms long, profile_idc int, level_idc int, "
         "sample_bytes long",
+        rows_of,
     )
+
+
+#: Vorbis sample rates the Ogg fixtures pick from by digest byte.
+_OGG_RATES = [8000, 11025, 16000, 22050, 24000, 32000, 44100, 48000]
 
 
 def audio_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1653,59 +1311,33 @@ def audio_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     position.  Every output column is digest math the oracle restates:
     a wrong lacing stride, CRC slip or endianness mistake desyncs the
     walk and refuses."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from . import ogg
-
-        srs = [8000, 11025, 16000, 22050, 24000, 32000, 44100, 48000]
-        for batch in batches:
-            rows = {
-                "doc_id": [], "sample_rate": [], "channels": [],
-                "n_pages": [], "n_packets": [], "duration_ms": [],
-                "stream_bytes": [],
-            }
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                sr = srs[int(d[8]) % 8]
-                channels = 1 + int(d[9]) % 2
-                n = 3 + int(d[10]) % 6
-                base = 40 + int(d[11]) % 160
-                granule = 256 * (1 + int(d[12])) + int(d[13])
-                meta = ogg.scan_ogg_stream(
-                    ogg.encode_ogg_vorbis(
-                        sr, channels,
-                        [base + j for j in range(n)],
-                        granule,
-                    )
-                )
-                rows["doc_id"].append(doc_id)
-                rows["sample_rate"].append(meta["sample_rate"])
-                rows["channels"].append(meta["channels"])
-                rows["n_pages"].append(meta["n_pages"])
-                rows["n_packets"].append(meta["n_packets"])
-                rows["duration_ms"].append(meta["duration_ms"])
-                rows["stream_bytes"].append(meta["stream_bytes"])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "sample_rate": pd.Series(rows["sample_rate"], dtype="int32"),
-                    "channels": pd.Series(rows["channels"], dtype="int32"),
-                    "n_pages": pd.Series(rows["n_pages"], dtype="int32"),
-                    "n_packets": pd.Series(rows["n_packets"], dtype="int32"),
-                    "duration_ms": pd.Series(rows["duration_ms"], dtype="int64"),
-                    "stream_bytes": pd.Series(rows["stream_bytes"], dtype="int64"),
-                }
+    def rows_of(doc_id, digest):
+        sr = _OGG_RATES[digest[8] % 8]
+        channels = 1 + digest[9] % 2
+        n = 3 + digest[10] % 6
+        base = 40 + digest[11] % 160
+        granule = 256 * (1 + digest[12]) + digest[13]
+        meta = ogg.scan_ogg_stream(
+            ogg.encode_ogg_vorbis(
+                sr, channels, [base + j for j in range(n)], granule
             )
+        )
+        yield (
+            doc_id,
+            meta["sample_rate"],
+            meta["channels"],
+            meta["n_pages"],
+            meta["n_packets"],
+            meta["duration_ms"],
+            meta["stream_bytes"],
+        )
 
-    return media.mapInPandas(
-        run,
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
         "doc_id long, sample_rate int, channels int, n_pages int, "
         "n_packets int, duration_ms long, stream_bytes long",
+        rows_of,
     )
 
 
@@ -1718,69 +1350,35 @@ def audio_ogg_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle restates every column (page sizes are lacing math), so
     a value match proves per-link accounting never mixes links and the
     offsets make each link independently seekable."""
-    media = _digest_media(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from . import ogg
-
-        srs = [8000, 11025, 16000, 22050, 24000, 32000, 44100, 48000]
-        cols = [
-            "doc_id", "link", "sample_rate", "channels", "n_pages",
-            "n_packets", "duration_ms", "byte_lo", "byte_hi",
-        ]
-        for batch in batches:
-            rows = {c: [] for c in cols}
-            for doc_id, b in zip(batch["doc_id"], batch["digest"]):
-                d = np.frombuffer(b, dtype=np.uint8)
-                links = []
-                for off in (8, 12):
-                    sr = srs[int(d[off]) % 8]
-                    ch = 1 + int(d[off + 1]) % 2
-                    n = 2 + int(d[off + 2]) % 5
-                    base = 30 + int(d[off + 3]) % 120
-                    granule = 512 * (1 + int(d[off]) % 4)
-                    links.append(
-                        (sr, ch, [base + j for j in range(n)], granule)
-                    )
-                for r in ogg.scan_ogg(ogg.encode_ogg_chain(links)):
-                    rows["doc_id"].append(doc_id)
-                    rows["link"].append(r["link"])
-                    rows["sample_rate"].append(r["sample_rate"])
-                    rows["channels"].append(r["channels"])
-                    rows["n_pages"].append(r["n_pages"])
-                    rows["n_packets"].append(r["n_packets"])
-                    rows["duration_ms"].append(r["duration_ms"])
-                    rows["byte_lo"].append(r["byte_lo"])
-                    rows["byte_hi"].append(r["byte_hi"])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "link": pd.Series(rows["link"], dtype="int32"),
-                    "sample_rate": pd.Series(
-                        rows["sample_rate"], dtype="int32"
-                    ),
-                    "channels": pd.Series(rows["channels"], dtype="int32"),
-                    "n_pages": pd.Series(rows["n_pages"], dtype="int32"),
-                    "n_packets": pd.Series(
-                        rows["n_packets"], dtype="int32"
-                    ),
-                    "duration_ms": pd.Series(
-                        rows["duration_ms"], dtype="int64"
-                    ),
-                    "byte_lo": pd.Series(rows["byte_lo"], dtype="int64"),
-                    "byte_hi": pd.Series(rows["byte_hi"], dtype="int64"),
-                }
+    def rows_of(doc_id, digest):
+        links = []
+        for off in (8, 12):
+            sr = _OGG_RATES[digest[off] % 8]
+            ch = 1 + digest[off + 1] % 2
+            n = 2 + digest[off + 2] % 5
+            base = 30 + digest[off + 3] % 120
+            granule = 512 * (1 + digest[off] % 4)
+            links.append((sr, ch, [base + j for j in range(n)], granule))
+        for r in ogg.scan_ogg(ogg.encode_ogg_chain(links)):
+            yield (
+                doc_id,
+                r["link"],
+                r["sample_rate"],
+                r["channels"],
+                r["n_pages"],
+                r["n_packets"],
+                r["duration_ms"],
+                r["byte_lo"],
+                r["byte_hi"],
             )
 
-    return media.mapInPandas(
-        run,
+    return _map_rows(
+        _spread(_digest_media(spark, sf_dir)),
         "doc_id long, link int, sample_rate int, channels int, "
         "n_pages int, n_packets int, duration_ms long, byte_lo long, "
         "byte_hi long",
+        rows_of,
     )
 
 
@@ -1800,31 +1398,24 @@ def probe_media(b: bytes) -> dict:
 
     Returns ``{"container": ..., **format_fields}``; unknown magic
     refuses loudly (never guess a parser)."""
-    import struct as _struct
-
-    from . import flac as _flac
-    from . import isobmff as _iso
-    from . import mpegaudio as _mpeg
-    from . import ogg as _ogg
-
     if len(b) >= 4 and b[:4] == b"fLaC":
-        return {"container": "flac", **_flac.scan_flac_stream(b)}
+        return {"container": "flac", **flac.scan_flac_stream(b)}
     if len(b) >= 4 and b[:4] == b"OggS":
-        return {"container": "ogg", **_ogg.scan_ogg_stream(b)}
+        return {"container": "ogg", **ogg.scan_ogg_stream(b)}
     if len(b) >= 12 and b[4:8] == b"ftyp":
-        meta = _iso.parse_mp4(b)
+        meta = isobmff.parse_mp4(b)
         meta.pop("samples", None)
         return {"container": "mp4", **meta}
     if (len(b) >= 3 and b[:3] == b"ID3") or (
         len(b) >= 2 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0
     ):
-        return {"container": "mp3", **_mpeg.scan_mpeg_stream(b)}
+        return {"container": "mp3", **mpegaudio.scan_mpeg_stream(b)}
     if len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        sr, n_ch = _struct.unpack_from("<IH", b, 24)[0], _struct.unpack_from(
+        sr, n_ch = struct.unpack_from("<IH", b, 24)[0], struct.unpack_from(
             "<H", b, 22
         )[0]
-        bits = _struct.unpack_from("<H", b, 34)[0]
-        data_len = _struct.unpack_from("<I", b, 40)[0]
+        bits = struct.unpack_from("<H", b, 34)[0]
+        data_len = struct.unpack_from("<I", b, 40)[0]
         n = data_len // (n_ch * max(1, bits // 8))
         return {
             "container": "wav",
@@ -1851,12 +1442,10 @@ def probe_media(b: bytes) -> dict:
             "height": int(img.shape[0]),
         }
     if len(b) >= 8 and b[:8] == b"\x89PNG\r\n\x1a\n":
-        w, h = _struct.unpack_from(">II", b, 16)
+        w, h = struct.unpack_from(">II", b, 16)
         return {"container": "png", "width": int(w), "height": int(h)}
     if len(b) >= 2 and b[:2] == b"\xff\xd8":
-        from . import jpeg as _jpeg
-
-        img = _jpeg.decode_jpeg(b)
+        img = jpeg.decode_jpeg(b)
         return {
             "container": "jpeg",
             "width": int(img.shape[1]),
@@ -1878,36 +1467,23 @@ def image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard perceptual fingerprint: byte-level re-encodes keep the
     hash, small pixel edits flip few bits.  Decode+hash runs in the
     Arrow batch where the bytes live; only (doc_id, int64) leaves."""
-    media = synthetic_bmp_media(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def rows_of(doc_id, image_bytes):
+        gray = _decode_bmp(bytes(image_bytes)).astype(np.float64).mean(axis=2)
+        h, w = gray.shape
+        rows = (np.arange(8) * h) // 8
+        cols = (np.arange(8) * w) // 8
+        g8 = gray[np.ix_(rows, cols)]
+        bits = (g8 > g8.mean()).flatten()
+        val = np.uint64(0)
+        for i, bit in enumerate(bits):
+            if bit:
+                val |= np.uint64(1) << np.uint64(i)
+        yield doc_id, np.int64(val)  # wrap bit 63 to signed
 
-        out_ids, out_hashes = [], []
-        for batch in batches:
-            for doc_id, b in zip(batch["doc_id"], batch["image_bytes"]):
-                img = _decode_bmp(bytes(b))
-                gray = img.astype(np.float64).mean(axis=2)
-                h, w = gray.shape
-                rows = (np.arange(8) * h) // 8
-                cols = (np.arange(8) * w) // 8
-                g8 = gray[np.ix_(rows, cols)]
-                bits = (g8 > g8.mean()).flatten()
-                val = np.uint64(0)
-                for i, bit in enumerate(bits):
-                    if bit:
-                        val |= np.uint64(1) << np.uint64(i)
-                out_ids.append(doc_id)
-                out_hashes.append(np.int64(val))  # wrap bit 63 to signed
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out_ids, dtype="int64"),
-                    "ahash": pd.Series(out_hashes, dtype="int64"),
-                }
-            )
-            out_ids, out_hashes = [], []
-
-    return media.mapInPandas(run, "doc_id long, ahash long")
+    return _map_rows(
+        synthetic_bmp_media(spark, sf_dir), "doc_id long, ahash long", rows_of
+    )
 
 
 def image_ahash_pairs(

@@ -779,9 +779,9 @@ def read_snapshot(
 
 def compact(spark: SparkSession, path: str, target_mb: int = 128) -> int:
     """Log-driven OPTIMIZE: rewrite the live snapshot into
-    ceil(bytes/target) files and commit (add=new, remove=old).  Unlike
-    `sinks.compact_files`, every PRE-compaction version stays readable
-    afterwards — old files leave the log, not the disk.  Zone maps are
+    ceil(bytes/target) files and commit (add=new, remove=old).  Every
+    PRE-compaction version stays readable afterwards — old files leave
+    the log, not the disk.  Zone maps are
     RE-RECORDED for every column any live file had stats on, so data
     skipping survives compaction (clustering quality is whatever the
     rewrite's partitioning gives — re-run `optimize_zorder` to restore

@@ -255,45 +255,3 @@ def merge_upsert(
     if os.path.exists(old):
         shutil.rmtree(old)
 
-
-def compact_files(
-    spark: SparkSession, path: str, target_mb: int = 128
-) -> int:
-    """Small-file compaction (the OPTIMIZE bin-packing pass): rewrite a
-    parquet directory into ceil(total_bytes / target_mb) files.  Small
-    files are the classic 100-TB read-amplification killer — every
-    streaming sink and partition-grained merge produces them, and scan
-    task count tracks file count.
-
-    Crash-safe like `merge_upsert`: the compacted copy lands in a
-    `_compact_tmp` sibling and swaps in by rename; stale temps from a
-    crashed run are cleared at entry, and a crash mid-write leaves the
-    original untouched.  Returns the new file count."""
-    import math
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "_compact_tmp"
-    old = path.rstrip("/") + "_compact_old"
-    # Recover from a crash inside the rename window of a previous run:
-    # if the data directory is gone but `_compact_old` survives, the crash
-    # happened between `rename(path, old)` and `rename(tmp, path)` — the
-    # ONLY complete copy is `old`, so restore it before clearing temps
-    # (mirrors merge_upsert's _recover_merge_state).
-    if not os.path.exists(path) and os.path.isdir(old):
-        os.rename(old, path)
-    for stale in (tmp, old):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
-    total = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / (target_mb << 20)))
-    df = spark.read.parquet(path)
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return len([f for f in os.listdir(path) if f.endswith(".parquet")])

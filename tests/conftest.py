@@ -1,12 +1,13 @@
 from __future__ import annotations
 
 import contextlib
+import os
 import sys
 import threading
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark import (  # noqa: E402
     get_spark,

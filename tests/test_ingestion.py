@@ -556,59 +556,6 @@ def test_datasource_writer_roundtrip_and_two_phase_commit(
     assert not [f for f in os.listdir(out) if f.endswith(".tmp")]
 
 
-def test_compact_files_bin_packs_and_preserves_rows(spark, tmp_path):
-    """OPTIMIZE-style compaction: many small files → few, same rows;
-    idempotent; stale temp dirs from a crash are cleared at entry."""
-    import os
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.sinks import (
-        compact_files,
-    )
-
-    path = str(tmp_path / "smallfiles")
-    df = spark.range(10000).withColumn("v", F.col("id") * 2)
-    df.repartition(32).write.parquet(path)
-    before = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(before) == 32
-
-    os.makedirs(path + "_compact_tmp")  # stale temp from a "crash"
-    n = compact_files(spark, path, target_mb=512)
-    assert n == 1  # tiny data packs into one target-size file
-    back = spark.read.parquet(path)
-    assert back.count() == 10000
-    assert back.agg(F.sum("v")).first()[0] == sum(2 * i for i in range(10000))
-    # idempotent
-    assert compact_files(spark, path, target_mb=512) == 1
-
-
-def test_compact_files_recovers_from_mid_swap_crash(spark, tmp_path):
-    """A crash BETWEEN the two swap renames leaves the only complete
-    copy in `_compact_old`; the next run must restore it, not rmtree
-    it (the data-loss window the round-6 review flagged)."""
-    import os
-    import shutil
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.sinks import (
-        compact_files,
-    )
-
-    path = str(tmp_path / "compactable")
-    spark.range(1000).withColumn("v", F.col("id") + 1).repartition(8).write.parquet(path)
-
-    # simulate the crash window: data dir renamed away, tmp half-written
-    os.rename(path, path + "_compact_old")
-    os.makedirs(path + "_compact_tmp")
-
-    n = compact_files(spark, path, target_mb=512)
-    assert n == 1
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    assert back.agg(F.sum("v")).first()[0] == sum(i + 1 for i in range(1000))
-    assert not os.path.isdir(path + "_compact_old")
-    assert not os.path.isdir(path + "_compact_tmp")
-    shutil.rmtree(path)
-
-
 def test_datasource_append_does_not_clobber_prior_parts(
     spark, landing, registered, tmp_path
 ):

@@ -222,6 +222,15 @@ def test_multimodal_metadata_schema_and_determinism(spark, sf_correct):
     assert all(1 <= w <= 64 and 1 <= h <= 64 for w, h, _ in rows.values())
 
 
+def test_map_rows_refuses_unmapped_field_type_at_build(spark):
+    """The kernel harness derives output dtypes from the schema on the
+    driver: a field type it has no dtype for fails before any task."""
+    with pytest.raises(TypeError, match="no pandas dtype"):
+        multimodal._map_rows(
+            spark.range(1), "id long, v float", lambda i: iter([(i, 0.0)])
+        )
+
+
 def test_frame_sample_keeps_every_nth(spark, sf_correct):
     out = multimodal.frame_sample(spark, sf_correct, every_n=2)
     assert out.filter(F.col("frame_idx") % 2 != 0).count() == 0

@@ -7,11 +7,17 @@ declared DuckDB oracle at sf0.001 — inside the pytest gate, not just the
 out-of-band `tools/check_oracle.py` sweep.  Comparison semantics
 replicate the driver's gate: same column set, same rowcount,
 order-insensitive normalized multiset equality.  A change that rewrites
-another oracle-bearing entry appends its name to `PINNED`.
+another oracle-bearing entry appends its name to `PINNED`.  Every
+oracle-bearing `mm_*` entry is pinned too, by name prefix (`MULTIMODAL`):
+all of their kernels run through one shared per-row harness.
 
 Every medications-derived entry is also pinned under the buffer pool,
 where its second build reuses the memoized `medications` plan; the
 composites then join or union two frames that share that one plan.
+
+Every `mm_*` entry also runs on two degenerate copies of the fixture,
+`documents` cut to zero rows and to its single lowest `doc_id`: its
+schema must not change, and its rows must still equal the oracle's.
 """
 
 from __future__ import annotations
@@ -37,9 +43,9 @@ from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_dat
 #: Oracle-bearing entries whose plan or kernel was rewritten: the
 #: BM25/hybrid stats-literal fold, the per-row boilerplate scrub, the
 #: Iceberg `_read_entries` group merge (stream/exotic are its heavy
-#: users), the JPEG codec rewrite and the fused PNG kernel.  train_prep
-#: composites over the scrub.  The last four read Iceberg tables through
-#: the merge-on-read delete path (equality deletes, position deletes).
+#: users).  train_prep composites over the scrub.  The last four read
+#: Iceberg tables through the merge-on-read delete path (equality
+#: deletes, position deletes).
 PINNED = [
     "text_bm25_search",
     "retrieval_hybrid_rrf",
@@ -48,15 +54,14 @@ PINNED = [
     "lake_iceberg_stream_hours",
     "lake_iceberg_exotic",
     "lake_iceberg_row_lineage",
-    "mm_video_mjpeg_pipeline",
-    "mm_video_mp4_pipeline",
-    "mm_image_jpeg_pipeline",
-    "mm_image_png_pipeline",
     "lake_iceberg_eq_upsert",
     "lake_iceberg_upsert_atomic",
     "lake_iceberg_changes_eq",
     "lake_iceberg_v2_deletes",
 ]
+
+#: Oracle-bearing multimodal entries, composites included.
+MULTIMODAL = [n for n in entry.oracle_sql() if n.startswith("mm_")]
 
 #: Entries whose oracle derives the medications table from `part`.
 MEDICATIONS_DERIVED = [
@@ -66,16 +71,42 @@ MEDICATIONS_DERIVED = [
 ]
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
+def _duck_over(sf_dir):
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS "
             f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = _duck_over(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture(scope="module", params=["empty", "single"])
+def degenerate_dir(request, sf_dir, tmp_path_factory):
+    """sf_dir with `documents` cut to zero rows ("empty") or to the row
+    with the lowest doc_id ("single"); the other tables are symlinks."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp(f"documents_{request.param}")
+    for t in TABLE_NAMES:
+        if t != "documents":
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"), out / f"{t}.parquet")
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    if request.param == "empty":
+        docs = docs.slice(0, 0)
+    else:
+        docs = docs.filter(pc.equal(docs["doc_id"], pc.min(docs["doc_id"])))
+        assert docs.num_rows == 1
+    pq.write_table(docs, out / "documents.parquet")
+    return str(out)
 
 
 def _assert_matches_oracle(sdf, duck, name):
@@ -91,7 +122,7 @@ def _assert_matches_oracle(sdf, duck, name):
     )
 
 
-@pytest.mark.parametrize("name", PINNED)
+@pytest.mark.parametrize("name", PINNED + MULTIMODAL)
 def test_pinned_entry_matches_oracle(spark, sf_dir, duck, name):
     queries = entry.queries()
     assert name in queries, f"{name} dropped from queries()"
@@ -99,10 +130,35 @@ def test_pinned_entry_matches_oracle(spark, sf_dir, duck, name):
     _assert_matches_oracle(queries[name](spark, sf_dir), duck, name)
 
 
+def test_multimodal_entries_selected():
+    assert len(MULTIMODAL) >= 15
+    assert {"mm_image_meta_resize", "mm_frame_audio"} <= set(MULTIMODAL)
+    assert not set(PINNED) & set(MULTIMODAL)
+
+
 def test_medications_derived_entries_selected():
     assert {"med_q01_q07_overview", "med_q04_q12_breakdowns"} <= set(
         MEDICATIONS_DERIVED
     )
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in entry.queries() if n.startswith("mm_")]
+)
+def test_multimodal_entry_on_degenerate_documents(
+    spark, sf_dir, degenerate_dir, name
+):
+    build = entry.queries()[name]
+    sdf = build(spark, degenerate_dir)
+    assert sdf.schema == build(spark, sf_dir).schema
+    if name not in entry.oracle_sql():
+        assert sdf.collect() == []  # mm_image_ahash_pairs: a pair needs two docs
+        return
+    con = _duck_over(degenerate_dir)
+    try:
+        _assert_matches_oracle(sdf, con, name)
+    finally:
+        con.close()
 
 
 @pytest.mark.parametrize("name", MEDICATIONS_DERIVED)
