@@ -51,7 +51,6 @@ from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_dat
     iceberg,
     lakesql,
     lakeview,
-    minilake,
 )
 
 #: Every module that registers entries: each exports `QUERIES` (name ->
@@ -75,7 +74,6 @@ _MODULES = (
     graph,
     encoding,
     quality,
-    minilake,
     deltaproto,
     iceberg,
     advisor,

@@ -130,26 +130,24 @@ _MEDALLION_LAKE_VERSION = 1
 def q02_over_lake_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEDALLION-fidelity entry (reference chain ING:211
     `format("delta")...saveAsTable` → ING:218 / ML:9 `spark.table`):
-    the cleaned medications frame is SUNK into the engine's own table
-    format (minilake commit log, built once per sf like the serving
-    indexes) and Query 2 runs UNCHANGED over the snapshot read — the
-    dashboard pack over the lake tier, not the parquet CTE.  The
-    oracle is Query 2's own SQL over the shared derivation, so a value
-    match proves the sink → snapshot-read roundtrip content-exact."""
+    the cleaned medications frame is SUNK into a Delta table (built
+    once per sf like the serving indexes) and Query 2 runs UNCHANGED
+    over the snapshot read — the dashboard pack over the lake tier,
+    not the parquet CTE.  The oracle is Query 2's own SQL over the
+    shared derivation, so a value match proves the sink → snapshot-read
+    roundtrip content-exact."""
     import os
 
     from ..functions.scale import default_index_dir
-    from ..sources import minilake
+    from ..sources import deltaproto
 
     path = os.path.join(
-        default_index_dir("medallion", _MEDALLION_LAKE_VERSION, sf_dir),
+        default_index_dir("medallion_delta", _MEDALLION_LAKE_VERSION, sf_dir),
         "medications_lake",
     )
-    if not minilake.versions(path):
-        minilake.commit_append(
-            medications(spark, sf_dir), path, stat_cols=["price"]
-        )
-    return _q02_agg(minilake.read_snapshot(spark, path), min_drug_count=30)
+    if not deltaproto.delta_versions(path):
+        deltaproto.write_delta(medications(spark, sf_dir), path)
+    return _q02_agg(deltaproto.read_delta(spark, path), min_drug_count=30)
 
 
 _Q02_SQL = """

@@ -4,12 +4,12 @@ tables (reference ING:211 `format("delta")...saveAsTable`; the
 every round, but the transaction-log FORMAT is public — the Delta
 PROTOCOL.md spec — so this module speaks it directly).
 
-What this adds over `minilake` (the engine's own commit-log format):
-BYTE-LEVEL interop.  A table written here is a protocol-v1 Delta table
-— `_delta_log/<v>.json` with `protocol` / `metaData` / `add` / `remove`
-actions (newline-delimited JSON), hive-layout partition directories,
-relative paths — that any real Delta engine (Spark+delta, DuckDB
-delta, Trino, polars) can read; and `read_delta` folds a `_delta_log`
+This is the engine's table format, and it is BYTE-LEVEL interop: a
+table written here is a protocol-v1 Delta table — `_delta_log/<v>.json`
+with `protocol` / `metaData` / `add` / `remove` actions
+(newline-delimited JSON), hive-layout partition directories, relative
+paths — that any real Delta engine (Spark+delta, DuckDB delta, Trino,
+polars) can read; and `read_delta` folds a `_delta_log`
 produced by any such engine, including parquet CHECKPOINTS via
 `_last_checkpoint`, deletion vectors (v3 `deletionVectors`), and
 column mapping in name mode (v3 `columnMapping` — physical parquet
@@ -23,9 +23,8 @@ in distributed parquet scans.  Partition values come from the log's
 `partitionValues` (authoritative — partition columns are NOT stored in
 the data files, per the Delta/Hive layout), attached as typed literal
 columns per partition group so Catalyst still prunes and codegens the
-scan.  Commits claim versions with the same atomic put-if-absent
-(`os.link`) rule minilake uses — the optimistic concurrency the
-protocol requires of writers.
+scan.  Commits claim versions with an atomic put-if-absent (`os.link`) —
+the optimistic concurrency the protocol requires of writers.
 """
 
 from __future__ import annotations
@@ -2419,7 +2418,7 @@ def _delete_where_delta_dv(
         )
         groups.setdefault(key, []).append(fname)
     frames = []
-    for key, fs in sorted(groups.items()):
+    for key, fs in sorted(groups.items(), key=_partition_group_order):
         df = spark.read.schema(read_schema).parquet(
             *[_abs_add_path(path, f) for f in sorted(fs)]
         )
@@ -2646,6 +2645,20 @@ def _land_cdc(
     return out
 
 
+def _derived_changes(
+    df: DataFrame, change_type: str, version: int
+) -> DataFrame:
+    """Tag rows derived from file actions as one change-feed leg.
+    `_change_type` is NULLABLE, like the column read back from `cdc`
+    files, so the feed's schema does not depend on which commits carry
+    cdc actions (`nullif(x, NULL)` is x, typed nullable; a plain
+    literal is not, and Spark folds `when(true, x)` back to one)."""
+    kind = F.nullif(F.lit(change_type), F.lit(None).cast("string"))
+    return df.withColumn("_change_type", kind).withColumn(
+        "_commit_version", F.lit(version)
+    )
+
+
 def read_changes_delta(
     spark: SparkSession,
     path: str,
@@ -2729,11 +2742,7 @@ def read_changes_delta(
                     )
             if adds:
                 df = _read_adds(spark, path, meta, adds)
-                frames.append(
-                    df.withColumn("_change_type", F.lit("insert")).withColumn(
-                        "_commit_version", F.lit(v)
-                    )
-                )
+                frames.append(_derived_changes(df, "insert", v))
             if removes:
                 # pre-image files are still on disk (VACUUM-less log);
                 # every still-visible row of a dataChange remove is a
@@ -2749,11 +2758,7 @@ def read_changes_delta(
                         "cannot reconstruct the change feed"
                     )
                 df = _read_adds(spark, path, meta, avail)
-                frames.append(
-                    df.withColumn("_change_type", F.lit("delete")).withColumn(
-                        "_commit_version", F.lit(v)
-                    )
-                )
+                frames.append(_derived_changes(df, "delete", v))
         for p in all_remove_paths:
             pre_live.pop(p, None)
         pre_live.update(all_adds)
@@ -2761,10 +2766,7 @@ def read_changes_delta(
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        empty = spark.createDataFrame([], schema)
-        return empty.withColumn("_change_type", F.lit("")).withColumn(
-            "_commit_version", F.lit(0)
-        )
+        return _derived_changes(spark.createDataFrame([], schema), "", 0)
     out = frames[0]
     for df in frames[1:]:
         out = out.unionByName(df)
@@ -4446,22 +4448,29 @@ def vacuum_delta(
     if not vs:
         return 0
     retained = vs[-(retain_versions + 1) :]
+    # ONE forward fold: a file live in some retained version is live at
+    # the first of them or added by a later retained commit, so the
+    # oldest retained snapshot plus the retained commits' actions name
+    # every referenced file (re-folding per version would read the log
+    # O(retained x commits) times)
+    _meta, live, _v = _fold_delta_state(spark, path, retained[0])
+    adds = list(live.values())
     referenced: set[str] = set()
     for v in retained:
-        _meta, live, _v = _fold_delta_state(spark, path, v)
-        for f, add in live.items():
-            referenced.add(f)
-            dv = add.get("deletionVector")
-            if dv:
-                name = _dv_file_name(path, dv)
-                if name:
-                    referenced.add(name)
         for a in _read_actions(path, v):
-            if "cdc" in a:
+            if "add" in a and v != retained[0]:
+                adds.append(a["add"])
+            elif "cdc" in a:
+                # CDF replay over the retained window needs them too
                 referenced.add(a["cdc"]["path"])
-    # CDF replay over the retained window also needs cdc files of the
-    # retained commits themselves (covered above); everything else is
-    # reclaimable once old enough
+    for add in adds:
+        referenced.add(add["path"])
+        dv = add.get("deletionVector")
+        if dv:
+            name = _dv_file_name(path, dv)
+            if name:
+                referenced.add(name)
+    # everything else is reclaimable once old enough
     now = _time.time()
     deleted = 0
     for dirpath, dirs, files in os.walk(path):
@@ -4499,6 +4508,13 @@ def _abs_add_path(table_path: str, p: str) -> str:
     if os.path.isabs(p):
         return p
     return os.path.join(table_path, p)
+
+
+def _partition_group_order(item: tuple[tuple, list[str]]) -> list:
+    """Sort key for {partition-value tuple: files} groups: a NULL
+    partition value (None in the log) orders before any string instead
+    of failing the comparison."""
+    return [(v is not None, v or "") for v in item[0]]
 
 
 def _read_adds(
@@ -4584,7 +4600,7 @@ def _read_adds(
         )
         groups.setdefault(key, []).append(fname)
     frames = []
-    for key, fs in sorted(groups.items()):
+    for key, fs in sorted(groups.items(), key=_partition_group_order):
         dv_files = {
             f: adds[f]["deletionVector"]
             for f in fs
@@ -5395,23 +5411,6 @@ def convert_to_delta(
     return _claim_delta_version(path, lines, read_version=None)
 
 
-def delta_to_minilake(
-    spark: SparkSession, delta_path: str, minilake_path: str
-) -> int:
-    """Migration helper — the 'switch engines' story: snapshot a real
-    Delta table and commit it into a minilake table (same partition
-    spec), so every minilake capability (zone maps, DVs, CDF, restore)
-    applies from the next commit on."""
-    from . import minilake
-
-    meta, _live, _v = _fold_delta_state(spark, delta_path, None)
-    spec = list(meta.get("partitionColumns") or [])
-    snap = read_delta(spark, delta_path)
-    return minilake.commit_append(
-        snap, minilake_path, partition_by=spec or None
-    )
-
-
 # --------------------------------------------------------------------------
 # Driver entry
 # --------------------------------------------------------------------------
@@ -5954,7 +5953,287 @@ ORDER BY 1
 """
 
 
+#: doc_id range deleted by the roundtrip pipeline.
+_ROUNDTRIP_DELETE_LO, _ROUNDTRIP_DELETE_HI = 100, 199
+#: Bump a lake version when its entry's pipeline changes shape: each
+#: entry reuses a previously-built lake only if its version tag matches.
+_ROUNDTRIP_LAKE_VERSION = 1
+
+
+def _ensure_roundtrip_lake(spark: SparkSession, sf_dir: str) -> str:
+    """Build (once per version+sf, under spark-warehouse) the shared
+    append → stats-pruned DELETE → OPTIMIZE documents table used by the
+    roundtrip and changes-feed entries."""
+    from ..functions.scale import default_index_dir
+    from . import load_table
+
+    path = os.path.join(
+        default_index_dir("docs_delta", _ROUNDTRIP_LAKE_VERSION, sf_dir),
+        "docs_lake",
+    )
+    if not delta_versions(path):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "lang", "text"
+        )
+        write_delta(docs.repartitionByRange(8, "doc_id"), path)
+        delete_where_delta(
+            spark, path, "doc_id", _ROUNDTRIP_DELETE_LO, _ROUNDTRIP_DELETE_HI
+        )
+        compact_delta(spark, path, target_mb=128)
+    return path
+
+
+def documents_roundtrip_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-checked entry that value-checks the TABLE FORMAT itself:
+    write `documents` as a Delta table, run a stats-pruned DELETE of a
+    doc_id range and an OPTIMIZE compaction, then aggregate the
+    surviving snapshot per source.  The DuckDB oracle states the same
+    aggregate over the raw parquet with the deleted range excluded — so
+    a value match proves the log fold, file pruning, delete rewrite and
+    compaction preserved content EXACTLY (not just row counts).  The
+    lake is built once per (version, sf) under spark-warehouse and
+    reused — the same build-once pattern as the ANN/topic serving
+    indexes."""
+    snap = read_delta(spark, _ensure_roundtrip_lake(spark, sf_dir))
+    return (
+        snap.groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum(F.length("text")).cast("bigint").alias("total_chars"),
+            F.count_distinct("lang").cast("bigint").alias("n_langs"),
+        )
+        .orderBy("source")
+    )
+
+
+ROUNDTRIP_ORACLE_SQL = f"""
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars,
+       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
+FROM documents
+WHERE doc_id NOT BETWEEN {_ROUNDTRIP_DELETE_LO} AND {_ROUNDTRIP_DELETE_HI}
+GROUP BY source
+ORDER BY source
+"""
+
+
+_DV_LAKE_VERSION = 1
+_DV_DELETE_A = (100, 199)
+_DV_DELETE_B = (300, 349)
+
+
+def dv_roundtrip_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-checked entry for DELETION VECTORS: write `documents`, run
+    TWO stacked DV deletes (no data file is rewritten — each touched
+    file is re-added with its unioned deletion vector), then aggregate
+    the visible snapshot per source.  The DuckDB oracle states the same
+    aggregate over the raw parquet with both ranges excluded, so a
+    value match proves position capture, DV stacking and scan-time DV
+    application hide EXACTLY the deleted rows.  Lake built once per
+    (version, sf), like its siblings."""
+    from ..functions.scale import default_index_dir
+    from . import load_table
+
+    path = os.path.join(
+        default_index_dir("docs_delta_dv", _DV_LAKE_VERSION, sf_dir),
+        "docs_lake_dv",
+    )
+    if not delta_versions(path):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "lang", "text"
+        )
+        write_delta(docs.repartitionByRange(8, "doc_id"), path)
+        delete_where_delta(spark, path, "doc_id", *_DV_DELETE_A, strategy="dv")
+        delete_where_delta(spark, path, "doc_id", *_DV_DELETE_B, strategy="dv")
+    return (
+        read_delta(spark, path)
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum(F.length("text")).cast("bigint").alias("total_chars"),
+            F.sum("doc_id").cast("bigint").alias("sum_ids"),
+        )
+        .orderBy("source")
+    )
+
+
+DV_ORACLE_SQL = f"""
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars,
+       CAST(SUM(doc_id) AS BIGINT) AS sum_ids
+FROM documents
+WHERE doc_id NOT BETWEEN {_DV_DELETE_A[0]} AND {_DV_DELETE_A[1]}
+  AND doc_id NOT BETWEEN {_DV_DELETE_B[0]} AND {_DV_DELETE_B[1]}
+GROUP BY source
+ORDER BY source
+"""
+
+
+def changes_feed_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-checked entry for the CHANGE DATA FEED: over the shared
+    append → DELETE → OPTIMIZE lake, `read_changes_delta` from version
+    0 must emit every ingested row as an 'insert', the deleted doc_id
+    range as 'delete' rows (the DELETE commit's `cdc` file), and
+    NOTHING for the compaction (its actions carry `dataChange: false`).
+    The DuckDB oracle states both legs straight off the raw parquet, so
+    a value match proves the feed is exact and maintenance commits are
+    invisible to incremental consumers."""
+    feed = read_changes_delta(
+        spark, _ensure_roundtrip_lake(spark, sf_dir), since_version=0
+    )
+    return (
+        feed.groupBy(
+            F.col("_change_type").alias("change_type"), F.col("source")
+        )
+        .agg(
+            F.count("*").cast("bigint").alias("n_rows"),
+            F.sum("doc_id").cast("bigint").alias("sum_ids"),
+        )
+        .orderBy("change_type", "source")
+    )
+
+
+CHANGES_FEED_ORACLE_SQL = f"""
+SELECT change_type, source, n_rows, sum_ids FROM (
+  SELECT 'insert' AS change_type, source,
+         CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(SUM(doc_id) AS BIGINT) AS sum_ids
+  FROM documents GROUP BY source
+  UNION ALL
+  SELECT 'delete' AS change_type, source,
+         CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(SUM(doc_id) AS BIGINT) AS sum_ids
+  FROM documents
+  WHERE doc_id BETWEEN {_ROUNDTRIP_DELETE_LO} AND {_ROUNDTRIP_DELETE_HI}
+  GROUP BY source
+)
+ORDER BY change_type, source
+"""
+
+
+_PART_LAKE_VERSION = 1
+_PART_SCAN_LANG = "en"
+_PART_SCAN_LO, _PART_SCAN_HI = 0, 249
+
+
+def partitioned_scan_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-checked entry for PARTITIONED Delta tables: write `documents`
+    PARTITIONED BY (lang), range-clustered on doc_id so the per-file
+    stats are tight, then answer a lang + doc_id box query:
+    `read_delta_pruned` skips files from the add-actions' doc_id stats
+    alone (no footer reads) and the lang filter runs on the partition
+    column rebuilt from `partitionValues`.  The surviving rows are
+    aggregated per source; the DuckDB oracle states the same aggregate
+    over the raw parquet, so a value match proves partition landing,
+    partition-value reconstruction and stats pruning lost no rows and
+    leaked none.  Lake built once per (version, sf) under
+    spark-warehouse, like the roundtrip entry."""
+    from ..functions.scale import default_index_dir
+    from . import load_table
+
+    path = os.path.join(
+        default_index_dir("docs_delta_part", _PART_LAKE_VERSION, sf_dir),
+        "docs_lake_part",
+    )
+    if not delta_versions(path):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "lang", "text"
+        )
+        write_delta(
+            docs.repartitionByRange(4, "doc_id"), path, partition_by=["lang"]
+        )
+    df, _read, _skipped = read_delta_pruned(
+        spark, path, "doc_id", _PART_SCAN_LO, _PART_SCAN_HI
+    )
+    return (
+        df.filter(F.col("lang") == _PART_SCAN_LANG)
+        .groupBy("source")
+        .agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum(F.length("text")).cast("bigint").alias("total_chars"),
+        )
+        .orderBy("source")
+    )
+
+
+PARTITIONED_ORACLE_SQL = f"""
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars
+FROM documents
+WHERE lang = '{_PART_SCAN_LANG}'
+  AND doc_id BETWEEN {_PART_SCAN_LO} AND {_PART_SCAN_HI}
+GROUP BY source
+ORDER BY source
+"""
+
+
+_BLOOM_LAKE_VERSION = 1
+#: Probe ids present at every SF (documents spans 0..499 even at
+#: sf0.001) plus two keys absent from the table, which must match
+#: nothing.
+_BLOOM_PROBE_IDS = (7, 57, 123, 250, 411)
+_BLOOM_ABSENT_KEYS = ("not-a-key-a", "not-a-key-b")
+
+
+def bloom_lookup_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oracle-checked entry for point lookups on a high-cardinality
+    UNSORTED string key: write `documents` keyed by `md5(doc_id)`, then
+    look up five present keys and two absent ones in ONE scan with an
+    IN filter.  Every file's [min, max] key range spans ~the whole hex
+    space, so stats cannot skip here; one filtered scan beats a pruned
+    read per key.  The DuckDB oracle states the same lookup over the
+    raw parquet (`md5` is hex-identical in Spark and DuckDB), so a value
+    match proves every probed row surfaces and nothing else leaks.
+    Lake built once per (version, sf) under spark-warehouse, like its
+    siblings."""
+    import hashlib
+
+    from ..functions.scale import default_index_dir
+    from . import load_table
+
+    path = os.path.join(
+        default_index_dir("docs_delta_keys", _BLOOM_LAKE_VERSION, sf_dir),
+        "docs_lake_keys",
+    )
+    if not delta_versions(path):
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            "source",
+            "lang",
+            "n_chars",
+            F.md5(F.col("doc_id").cast("string")).alias("key"),
+        )
+        write_delta(docs, path)
+    probes = [
+        hashlib.md5(str(i).encode()).hexdigest() for i in _BLOOM_PROBE_IDS
+    ] + list(_BLOOM_ABSENT_KEYS)
+    return (
+        read_delta(spark, path)
+        .filter(F.col("key").isin(probes))
+        .select("doc_id", "source", "lang", "n_chars")
+        .orderBy("doc_id")
+    )
+
+
+BLOOM_LOOKUP_ORACLE_SQL = f"""
+SELECT doc_id, source, lang, n_chars
+FROM documents
+WHERE md5(CAST(doc_id AS VARCHAR)) IN (
+    {", ".join(f"md5(CAST({i} AS VARCHAR))" for i in _BLOOM_PROBE_IDS)}
+)
+ORDER BY doc_id
+"""
+
+
 QUERIES = {
+    "lake_documents_roundtrip": documents_roundtrip_entry,
+    "lake_partitioned_scan": partitioned_scan_entry,
+    "lake_changes_feed": changes_feed_entry,
+    "lake_dv_roundtrip": dv_roundtrip_entry,
+    "lake_bloom_lookup": bloom_lookup_entry,
     "lake_delta_interop": delta_interop_entry,
     "lake_delta_merge": delta_merge_entry,
     "lake_delta_generated": delta_generated_entry,
@@ -5966,6 +6245,11 @@ QUERIES = {
 }
 
 ORACLES = {
+    "lake_documents_roundtrip": ROUNDTRIP_ORACLE_SQL,
+    "lake_partitioned_scan": PARTITIONED_ORACLE_SQL,
+    "lake_changes_feed": CHANGES_FEED_ORACLE_SQL,
+    "lake_dv_roundtrip": DV_ORACLE_SQL,
+    "lake_bloom_lookup": BLOOM_LOOKUP_ORACLE_SQL,
     "lake_delta_interop": DELTA_INTEROP_ORACLE_SQL,
     "lake_delta_merge": DELTA_MERGE_ORACLE_SQL,
     "lake_delta_generated": DELTA_GENERATED_ORACLE_SQL,

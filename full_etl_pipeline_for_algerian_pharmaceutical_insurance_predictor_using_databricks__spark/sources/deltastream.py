@@ -1,8 +1,7 @@
 """Spark DataSource over the REAL Delta log — `sources/deltaproto.py`
 surfaced as a first-class `format("deltaproto")` for batch and
-Structured Streaming, the same contract `lakesource.py` gives the
-minilake tier (and the same contract delta-spark gives real Delta
-tables: a table is also a stream).
+Structured Streaming, the contract delta-spark gives real Delta
+tables: a table is also a stream.
 
 - **Batch** (`spark.read.format("deltaproto").load(path)`): the
   current snapshot, one live add-action → one `InputPartition`; each

@@ -4,10 +4,9 @@ data files) straight from the PUBLIC Iceberg table spec, with no
 `pyiceberg` / catalog service dependency (neither is installable in
 this sandbox; the FORMAT is public).
 
-This is the third lakehouse tier next to `minilake` (the engine's own
-commit-log format) and `deltaproto` (the Delta protocol): a table
-written here follows the HadoopTables filesystem convention
-(`metadata/v<N>.metadata.json` + `version-hint.text`) with
+This is the second lakehouse tier next to `deltaproto` (the Delta
+protocol): a table written here follows the HadoopTables filesystem
+convention (`metadata/v<N>.metadata.json` + `version-hint.text`) with
 format-version 1 metadata by default — the maximally-compatible tier
 — so real engines (Spark+iceberg-runtime, Trino, DuckDB iceberg,
 pyiceberg) can read it; merge-on-read DELETE upgrades a table to
@@ -1795,7 +1794,7 @@ def _read_entries(
     may be absent from data files).  When v2 POSITION-delete files are
     live, their (file_path, pos) rows are anti-joined against the
     scan's `_metadata` row identity (merge-on-read, the same broadcast
-    shape the minilake/Delta DV scans use); both sides key on the
+    shape the Delta DV scans use); both sides key on the
     file-name tail, unique by construction (uuid part names).  When v2
     EQUALITY-delete files are live, each set of equality_ids is ONE
     scan of all its delete files and ONE null-safe anti-join,
@@ -3433,7 +3432,7 @@ def _commit_snapshot(
     seq, fv) → list of manifest_file records; wrap them in a manifest
     list and a new metadata version.  Retries against a refreshed base
     on races (the manifest build re-runs, so remove lists can never go
-    stale — the claim-time refresh rule minilake's rewrites follow).
+    stale — a claim-time refresh of the remove list).
     `expect_schema` (RMW commits whose rewrite frames/manifest schema
     were computed against a snapshot read) refuses when the CURRENT
     schema differs — a racing evolve_iceberg_schema would otherwise be
@@ -8372,23 +8371,6 @@ def convert_to_iceberg(
     return _commit_snapshot(
         path, "append", build_manifests,
         schema_fields=fields, spec_fields=spec,
-    )
-
-
-def iceberg_to_minilake(
-    spark: SparkSession, iceberg_path: str, minilake_path: str
-) -> int:
-    """Migration helper — snapshot a real Iceberg table into a minilake
-    table with the same identity partition spec, so every native
-    capability (zone maps, DVs, CDF, restore) applies from the next
-    commit on."""
-    from . import minilake
-
-    meta = current_metadata(iceberg_path)
-    spec_names = [pf["name"] for pf in _spec_of(meta)]
-    snap = read_iceberg(spark, iceberg_path)
-    return minilake.commit_append(
-        snap, minilake_path, partition_by=spec_names or None
     )
 
 

@@ -1,7 +1,7 @@
 """Spark DataSource over the Iceberg metadata tree —
 `sources/iceberg.py` surfaced as a first-class `format("iceberg")`
-for batch and Structured Streaming, completing the triad
-(`format("minilake")`, `format("deltaproto")`, `format("iceberg")`).
+for batch and Structured Streaming, the sibling of
+`format("deltaproto")`.
 
 - **Batch** (`spark.read.format("iceberg").load(path)`): the current
   snapshot, one live manifest entry → one `InputPartition`; each task
@@ -17,8 +17,8 @@ for batch and Structured Streaming, completing the triad
   incremental append scan.  `replace` snapshots (compaction) carry no
   new rows and pass through silently; `delete` / `overwrite`
   snapshots fail the batch loudly (an incremental consumer across a
-  row-removing snapshot must re-sync — the same rule the minilake and
-  deltaproto streams apply).
+  row-removing snapshot must re-sync — the same rule the deltaproto
+  stream applies).
 
 Readers run in Python workers on pyarrow + the avrotiny codec (both
 SparkSession-free); rows are schema-ordered tuples.  The slow general

@@ -12,7 +12,7 @@ this module closes the WRITE half plus named resolution:
 - a **named catalog**: `register_lake_table(name, fmt, path)` maps a
   table NAME to its (format, path); `lake_table(spark, name)` resolves
   a read through the right protocol reader (deltaproto / iceberg /
-  minilake / parquet), and the SELECT path auto-registers temp views so
+  parquet), and the SELECT path auto-registers temp views so
   ``FROM name`` works with no filesystem path in sight.  The registry
   round-trips through JSON (`save_lake_catalog` / `load_lake_catalog`)
   so a warehouse layout survives process restarts like a metastore.
@@ -64,7 +64,7 @@ __all__ = [
     "lake_sql",
 ]
 
-_FORMATS = ("delta", "iceberg", "minilake", "parquet")
+_FORMATS = ("delta", "iceberg", "parquet")
 
 #: name -> (format, path).  Process-wide, like a session catalog.
 _REGISTRY: dict[str, tuple[str, str]] = {}
@@ -111,7 +111,7 @@ def lake_table(
     ref: str | None = None,
 ) -> DataFrame:
     """Resolve a registered name through the right protocol reader,
-    optionally time-travelled.  `version` means a Delta/minilake
+    optionally time-travelled.  `version` means a Delta
     version number or an Iceberg snapshot-id; `ref` an Iceberg
     tag/branch name."""
     fmt, path = lake_table_location(name)
@@ -133,19 +133,11 @@ def lake_table(
             spark, path, snapshot_id=version, ref=ref,
             timestamp_ms=timestamp_ms,
         )
-    if fmt == "minilake":
-        from . import minilake
-
-        if ref is not None:
-            raise ValueError("named refs are an Iceberg feature")
-        return minilake.read_snapshot(
-            spark, path, version=version, timestamp_ms=timestamp_ms
-        )
     # parquet: plain directory scan — no log, no travel
     if version is not None or timestamp_ms is not None or ref is not None:
         raise ValueError(
             f"{name!r} is a plain parquet location — no commit log to "
-            "time-travel; register it as delta/iceberg/minilake first"
+            "time-travel; register it as delta/iceberg first"
         )
     return spark.read.parquet(path)
 
@@ -492,22 +484,8 @@ def _exec_merge(spark: SparkSession, m: re.Match) -> DataFrame:
             return _dml_result(spark, "MERGE DELETE", target, snap)
         snap = ib.upsert_iceberg(spark, src, path, keys)
         return _dml_result(spark, "MERGE", target, snap)
-    if fmt == "minilake":
-        from . import minilake
-
-        if is_delete:
-            raise ValueError(
-                "minilake MERGE DELETE is not implemented — use the "
-                "delta or iceberg tiers for key-list deletes"
-            )
-        if len(keys) != 1:
-            raise ValueError(
-                "minilake MERGE keys on ONE column (merge_upsert_lake)"
-            )
-        v = minilake.merge_upsert_lake(spark, src, path, keys[0])
-        return _dml_result(spark, "MERGE", target, v)
     raise ValueError(
-        f"MERGE needs a delta/iceberg/minilake table; {target!r} is {fmt}"
+        f"MERGE needs a delta/iceberg table; {target!r} is {fmt}"
     )
 
 
@@ -582,21 +560,8 @@ def _exec_delete(spark: SparkSession, m: re.Match) -> DataFrame:
                 strategy=_iceberg_write_mode(path, "delete"),
             )
         return _dml_result(spark, "DELETE", target, snap)
-    if fmt == "minilake":
-        from . import minilake
-
-        if shape is None or shape[0] != "range":
-            raise ValueError(
-                "minilake DELETE dispatches to the zone-map-pruned "
-                "range rewrite (delete_where) — IN-list and general "
-                "predicates are served by the delta/iceberg tiers "
-                "(delete_predicate_delta / delete_predicate_iceberg)"
-            )
-        _k, col, lo, hi = shape
-        v = minilake.delete_where(spark, path, col, lo, hi)
-        return _dml_result(spark, "DELETE", target, v)
     raise ValueError(
-        f"DELETE needs a delta/iceberg/minilake table; {target!r} is {fmt}"
+        f"DELETE needs a delta/iceberg table; {target!r} is {fmt}"
     )
 
 
@@ -690,14 +655,6 @@ def _exec_insert(spark: SparkSession, m: re.Match) -> DataFrame:
 
         snap = ib.write_iceberg(aligned, path, mode=mode)
         return _dml_result(spark, f"INSERT {mode.upper()}", target, snap)
-    if fmt == "minilake":
-        from . import minilake
-
-        if mode == "overwrite":
-            v = minilake.commit_overwrite(aligned, path)
-        else:
-            v = minilake.commit_append(aligned, path)
-        return _dml_result(spark, f"INSERT {mode.upper()}", target, v)
     raise ValueError(f"cannot INSERT into plain parquet table {target!r}")
 
 
@@ -935,7 +892,7 @@ _RESTORE_RE = re.compile(
 
 
 def _exec_restore(spark: SparkSession, m: re.Match) -> DataFrame:
-    """RESTORE TABLE t TO VERSION|TIMESTAMP AS OF … — Delta/minilake
+    """RESTORE TABLE t TO VERSION|TIMESTAMP AS OF … — Delta
     restore commits (re-adds for files live then, removes for files
     live now; history preserved), Iceberg rollback_to_snapshot
     (metadata-only current-snapshot jump, ref names resolve)."""
@@ -972,18 +929,8 @@ def _exec_restore(spark: SparkSession, m: re.Match) -> DataFrame:
         return _dml_result(
             spark, "RESTORE", target, ib.rollback_iceberg(path, sid)
         )
-    if fmt == "minilake":
-        from . import minilake
-
-        version = (
-            minilake.version_at_timestamp(path, ts_ms)
-            if ts_ms is not None
-            else int(tok)
-        )
-        v = minilake.restore(path, version)
-        return _dml_result(spark, "RESTORE", target, v)
     raise ValueError(
-        f"RESTORE needs a delta/iceberg/minilake table; {target!r} is {fmt}"
+        f"RESTORE needs a delta/iceberg table; {target!r} is {fmt}"
     )
 
 
@@ -1022,10 +969,9 @@ def _exec_create(spark: SparkSession, m: re.Match) -> DataFrame:
     log-bearing formats)."""
     name = m.group("t")
     fmt = m.group("fmt").lower()
-    if fmt not in ("delta", "iceberg", "minilake"):
+    if fmt not in ("delta", "iceberg"):
         raise ValueError(
-            f"CREATE TABLE USING {fmt!r} unsupported — one of "
-            "delta/iceberg/minilake"
+            f"CREATE TABLE USING {fmt!r} unsupported — one of delta/iceberg"
         )
     replace = m.group("orrep") is not None
     parts = (
@@ -1050,7 +996,7 @@ def _exec_create(spark: SparkSession, m: re.Match) -> DataFrame:
             df, loc, mode="overwrite" if exists else "append",
             partition_by=parts,
         )
-    elif fmt == "iceberg":
+    else:
         from . import iceberg as ib
 
         exists = bool(ib._metadata_versions(loc))
@@ -1059,17 +1005,6 @@ def _exec_create(spark: SparkSession, m: re.Match) -> DataFrame:
         v = ib.write_iceberg(
             df, loc, mode="overwrite" if exists else "append",
             partition_by=parts,
-        )
-    else:
-        from . import minilake
-
-        exists = bool(minilake.versions(loc))
-        if exists and not replace:
-            raise ValueError(f"a minilake table already lives at {loc!r}")
-        v = (
-            minilake.commit_overwrite(df, loc, partition_by=parts)
-            if exists
-            else minilake.commit_append(df, loc, partition_by=parts)
         )
     register_lake_table(name, fmt, loc)
     return _dml_result(spark, "CREATE TABLE", name, v)
@@ -1128,21 +1063,8 @@ def _exec_optimize(spark: SparkSession, m: re.Match) -> DataFrame:
             )
         )
         return _dml_result(spark, "OPTIMIZE", target, snap)
-    if fmt == "minilake":
-        from . import minilake
-
-        if cols is None:
-            v = minilake.compact(spark, path)
-        elif len(cols) == 2:
-            v = minilake.optimize_zorder(spark, path, cols[0], cols[1])
-        else:
-            raise ValueError(
-                "minilake ZORDER BY takes exactly two columns (the "
-                "Morton interleave)"
-            )
-        return _dml_result(spark, "OPTIMIZE", target, v)
     raise ValueError(
-        f"OPTIMIZE needs a delta/iceberg/minilake table; {target!r} "
+        f"OPTIMIZE needs a delta/iceberg table; {target!r} "
         f"is {fmt}"
     )
 
@@ -1179,13 +1101,8 @@ def _exec_vacuum(spark: SparkSession, m: re.Match) -> DataFrame:
         )
         n = ib.remove_orphan_iceberg_files(path, min_age_s=min_age_s)
         return _dml_result(spark, "VACUUM", target, n)
-    if fmt == "minilake":
-        from . import minilake
-
-        n = minilake.vacuum(path, min_age_s=min_age_s)
-        return _dml_result(spark, "VACUUM", target, n)
     raise ValueError(
-        f"VACUUM needs a delta/iceberg/minilake table; {target!r} is {fmt}"
+        f"VACUUM needs a delta/iceberg table; {target!r} is {fmt}"
     )
 
 
@@ -1223,21 +1140,8 @@ def _exec_describe_history(spark: SparkSession, m: re.Match) -> DataFrame:
             list(reversed(rows)),
             "snapshot_id bigint, operation string, timestamp_ms bigint",
         )
-    if fmt == "minilake":
-        from . import minilake
-
-        rows = [
-            (int(h["version"]), h["mode"], int(h["n_added"]),
-             int(h["n_removed"]))
-            for h in minilake.history(path)
-        ]
-        return local_rows_df(spark, 
-            sorted(rows, reverse=True),
-            "version bigint, operation string, n_added bigint, "
-            "n_removed bigint",
-        )
     raise ValueError(
-        f"DESCRIBE HISTORY needs a delta/iceberg/minilake table; "
+        f"DESCRIBE HISTORY needs a delta/iceberg table; "
         f"{target!r} is {fmt}"
     )
 
@@ -1276,7 +1180,7 @@ _NON_WORD = re.compile(r"\W+")
 #: {view name: {"broadcast": bool, "bytes": int, "rows": int|None,
 #: "sources": [...]}} — the advisor decision each registered view got,
 #: recorded so a plan review can check WHY a join flipped to
-#: BroadcastHashJoin (None for parquet/minilake views, which Spark
+#: BroadcastHashJoin (None for parquet views, which Spark
 #: sizes natively).
 LAST_SELECT_ADVICE: dict[str, dict | None] = {}
 
@@ -1331,12 +1235,6 @@ def _changes_view(
         from . import deltaproto as dp
 
         df = dp.read_changes_delta(spark, path, start, end)
-    elif fmt == "minilake":
-        from . import minilake
-
-        df = minilake.read_changes(
-            spark, path, start, end, change_feed=True
-        )
     elif fmt == "iceberg":
         from . import iceberg as ib
 
@@ -1432,7 +1330,7 @@ def lake_sql(spark: SparkSession, sql: str) -> DataFrame:
         if not m:
             raise ValueError(
                 "cannot parse CREATE — supported shape: CREATE [OR "
-                "REPLACE] TABLE t USING delta|iceberg|minilake "
+                "REPLACE] TABLE t USING delta|iceberg "
                 "[PARTITIONED BY (…)] [LOCATION '…'] AS SELECT …"
             )
         return _exec_create(spark, m)

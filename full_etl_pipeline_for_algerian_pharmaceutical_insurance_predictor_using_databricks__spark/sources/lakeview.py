@@ -1,47 +1,47 @@
-"""Incremental materialized views over the minilake change feed — the
+"""Incremental materialized views over the Delta change feed — the
 lakehouse capability the CDF exists to enable (Delta Live Tables /
 materialized-view maintenance): keep a grouped aggregate table fresh
-by applying each commit's insert/delete DELTAS instead of recomputing
-from the base table.
+by applying each commit's row DELTAS instead of recomputing from the
+base table.
 
 At 100 TB the difference is the whole point: a full refresh rescans
-the table per refresh; the incremental path reads ONLY the files of
-the commits since the last sync (appends/deletes), aggregates the
-delta (map-side partial + shuffle on the group key — the same shape as
-the view itself), and MERGEs the per-group adjustments into the view
-with minilake's file-pruned upsert.  Pure rewrites (compact/OPTIMIZE)
-contribute nothing and cost nothing, because the feed skips them.
+the table per refresh; the incremental path reads ONLY the change
+files of the commits since the last sync (appends, deletes, updates,
+merges), aggregates the delta (map-side partial + shuffle on the group
+key — the same shape as the view itself), and folds the per-group
+adjustments into the view.  Pure rewrites (OPTIMIZE) carry
+`dataChange: false`, so the feed skips them and they cost nothing.
 
 Self-maintainable aggregates only (COUNT / SUM — and anything
 derivable from them, e.g. AVG = sum/count): deltas apply as
 additions/subtractions with no need to see the base table.  MIN/MAX
 are NOT self-maintainable under deletes (a deleted minimum forces a
-re-scan of its group) — `refresh()` raises if the feed cannot be
-applied (a merge commit in range) and the caller falls back to
-`full_refresh`, mirroring how production IVM systems degrade.
+re-scan of its group).  `insert` and `update_postimage` rows count +1,
+`delete` and `update_preimage` rows −1.  A commit the feed cannot
+derive raises from `read_changes_delta`; `full_refresh` is then the
+fallback, mirroring how production IVM systems degrade.
 
-The view is itself a minilake table; its sync position rides in the
-view table's commit log (a `view_synced_version` field on each view
-commit), so refresh is idempotent and crash-safe: a refresh that
-commits records the new position atomically WITH the new rows, and a
-re-run reads the position back and re-applies only what's missing.
+The view is itself a Delta table; its sync position is the spec's
+`txn` action (appId `lakeview`, version = the synced base version),
+committed atomically WITH the new rows, so refresh is idempotent and
+crash-safe: a replayed refresh is dropped by `write_delta`'s txn rule,
+and a re-run reads the position back and applies only what's missing.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import minilake
+from . import deltaproto as dp
+
+_TXN_APP = "lakeview"
 
 
-def _view_state(view_path: str) -> tuple[int, int]:
-    """(view's latest version, base version the view is synced to);
-    (-1, -1) for an absent view."""
-    vs = minilake.versions(view_path)
-    if not vs:
-        return -1, -1
-    c = minilake._read_commit(view_path, vs[-1])
-    return vs[-1], int(c.get("view_synced_version", -1))
+def _synced_version(spark: SparkSession, view_path: str) -> int:
+    """Base version the view is synced to; -1 for an absent view."""
+    if not dp.delta_versions(view_path):
+        return -1
+    return dp.delta_txn_versions(spark, view_path).get(_TXN_APP, -1)
 
 
 def _grouped_counts(df: DataFrame, group_cols: list[str], value_col: str):
@@ -60,24 +60,13 @@ def full_refresh(
 ) -> int:
     """Recompute the view from the base snapshot (the bootstrap, and
     the fallback when the feed is not applicable).  Commits the result
-    as an overwrite carrying the synced base version."""
-    base_v = minilake.versions(base_path)[-1]
-    agg = _grouped_counts(
-        minilake.read_snapshot(spark, base_path), group_cols, value_col
-    )
-    files = minilake._land_data_files(agg, view_path)
-    return minilake._claim_version(
-        view_path,
-        {
-            "mode": "overwrite",
-            "add": files,
-            "remove": sorted(minilake._live_files(view_path)),
-            "schema": agg.schema.json(),
-            "view_synced_version": base_v,
-        },
-        refresh=lambda c: c.__setitem__(
-            "remove", sorted(minilake._live_files(view_path))
-        ),
+    as an overwrite carrying the synced base version; a view already
+    synced to the base's current version is left as is (the txn
+    rule drops the replay)."""
+    base_v = dp.delta_versions(base_path)[-1]
+    agg = _grouped_counts(dp.read_delta(spark, base_path), group_cols, value_col)
+    return dp.write_delta(
+        agg, view_path, mode="overwrite", txn=(_TXN_APP, base_v)
     )
 
 
@@ -91,22 +80,19 @@ def refresh(
     """INCREMENTAL refresh: apply the change feed since the view's
     synced position.  Returns the view's new commit version, None if
     already current.  Groups whose row count reaches zero are dropped
-    from the view (SQL GROUP BY semantics).  Raises ValueError when
-    the range contains a commit the feed cannot replay (merge) — fall
-    back to `full_refresh`."""
-    base_v = minilake.versions(base_path)[-1]
-    _view_v, synced = _view_state(view_path)
+    from the view (SQL GROUP BY semantics)."""
+    base_v = dp.delta_versions(base_path)[-1]
+    synced = _synced_version(spark, view_path)
     if synced < 0:
         return full_refresh(spark, base_path, view_path, group_cols, value_col)
     if base_v <= synced:
         return None
-    feed = minilake.read_changes(
-        spark, base_path, since_version=synced, to_version=base_v,
-        change_feed=True,
+    feed = dp.read_changes_delta(
+        spark, base_path, since_version=synced + 1, end_version=base_v
     )
-    sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
-        F.lit(-1)
-    )
+    sign = F.when(
+        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
+    ).otherwise(F.lit(-1))
     delta = (
         feed.withColumn("_sign", sign)
         .groupBy(*group_cols)
@@ -118,7 +104,7 @@ def refresh(
         )
         .filter((F.col("d_rows") != 0) | (F.col("d_value") != 0))
     )
-    current = minilake.read_snapshot(spark, view_path)
+    current = dp.read_delta(spark, view_path)
     merged = (
         current.alias("v")
         .join(delta.alias("d"), group_cols, "full_outer")
@@ -139,19 +125,8 @@ def refresh(
         )
         .filter(F.col("n_rows") > 0)
     )
-    files = minilake._land_data_files(merged, view_path)
-    return minilake._claim_version(
-        view_path,
-        {
-            "mode": "overwrite",
-            "add": files,
-            "remove": sorted(minilake._live_files(view_path)),
-            "schema": merged.schema.json(),
-            "view_synced_version": base_v,
-        },
-        refresh=lambda c: c.__setitem__(
-            "remove", sorted(minilake._live_files(view_path))
-        ),
+    return dp.write_delta(
+        merged, view_path, mode="overwrite", txn=(_TXN_APP, base_v)
     )
 
 
@@ -169,35 +144,33 @@ def incremental_view_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction through INCREMENTAL refreshes only — and return the
     view.  The DuckDB oracle recomputes the same aggregate from
     scratch over the raw parquet minus the deleted ranges, so a value
-    match proves delta application (±signs, group drops, DV position
-    sets, maintenance skips) is exact — the view was never fully
+    match proves delta application (±signs, group drops, DV deletes,
+    maintenance skips) is exact — the view was never fully
     recomputed after bootstrap."""
     import os
 
     from ..functions.scale import default_index_dir
     from . import load_table
 
-    root = default_index_dir("lakeview", _VIEW_LAKE_VERSION, sf_dir)
+    root = default_index_dir("lakeview_delta", _VIEW_LAKE_VERSION, sf_dir)
     base = os.path.join(root, "docs_base")
     view = os.path.join(root, "docs_view")
-    if not minilake.versions(view):
+    if not dp.delta_versions(view):
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", F.length("text").cast("bigint").alias("chars")
         )
         first = docs.filter(F.col("doc_id") % 2 == 0)
         rest = docs.filter(F.col("doc_id") % 2 == 1)
-        minilake.commit_append(
-            first.repartitionByRange(4, "doc_id"), base, stat_cols=["doc_id"]
-        )
+        dp.write_delta(first.repartitionByRange(4, "doc_id"), base)
         refresh(spark, base, view, ["source"], "chars")  # bootstrap
-        minilake.commit_append(rest, base)
+        dp.write_delta(rest, base)
         refresh(spark, base, view, ["source"], "chars")
-        minilake.delete_where(spark, base, "doc_id", 100, 199)
-        minilake.delete_where(spark, base, "doc_id", 300, 349, strategy="dv")
-        minilake.compact(spark, base)
+        dp.delete_where_delta(spark, base, "doc_id", 100, 199)
+        dp.delete_where_delta(spark, base, "doc_id", 300, 349, strategy="dv")
+        dp.compact_delta(spark, base)
         refresh(spark, base, view, ["source"], "chars")
     return (
-        minilake.read_snapshot(spark, view)
+        dp.read_delta(spark, view)
         .select("source", "n_rows", "sum_value")
         .orderBy("source")
     )

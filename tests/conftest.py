@@ -115,6 +115,43 @@ def py4j_calls(spark):
     return count
 
 
+@pytest.fixture
+def race_before_claim(monkeypatch):
+    """`race_before_claim(operation, racer)` runs `racer(path)` once,
+    right before the first Delta commit claim whose
+    commitInfo.operation is `operation` — a racing commit injected
+    inside that operation's read→claim window.  Returns a dict whose
+    "done" flag tells whether the race ran; `monkeypatch.undo()`
+    removes the racer."""
+    import json
+
+    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+        deltaproto as dp,
+    )
+
+    orig = dp._claim_delta_version
+
+    def install(operation, racer):
+        raced = {"done": False}
+
+        def racing_claim(p, lines, read_version=None, read_scope=None):
+            info = next(
+                (a["commitInfo"] for a in map(json.loads, lines) if "commitInfo" in a),
+                {},
+            )
+            if info.get("operation") == operation and not raced["done"]:
+                raced["done"] = True
+                racer(p)
+            return orig(
+                p, lines, read_version=read_version, read_scope=read_scope
+            )
+
+        monkeypatch.setattr(dp, "_claim_delta_version", racing_claim)
+        return raced
+
+    return install
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

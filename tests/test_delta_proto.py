@@ -553,24 +553,6 @@ def test_unknown_future_reader_feature_raises(spark, tmp_path):
         dp.read_delta(spark, path)
 
 
-def test_delta_to_minilake_migration(spark, tmp_path):
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
-    src = str(tmp_path / "delta")
-    dst = str(tmp_path / "mlk")
-    dp.write_delta(_df(spark, 0, 30), src, partition_by=["lang"])
-    dp.write_delta(_df(spark, 30, 45), src)
-    dp.delta_to_minilake(spark, src, dst)
-    assert minilake.partition_spec(dst) == ["lang"]
-    got = sorted(
-        (r["doc_id"], r["lang"], r["v"])
-        for r in minilake.read_snapshot(spark, dst).collect()
-    )
-    assert got == _rows(_df(spark, 0, 45))
-
-
 def test_stats_recorded_pruned_read_and_delete(spark, tmp_path):
     """Add actions carry the spec's stats JSON (numRecords/minValues/
     maxValues/nullCount); read_delta_pruned skips files from the log

@@ -68,7 +68,7 @@ def test_registry_contract_is_frozen():
     )
     assert _digest(
         f"{name}\t{fn.__module__}.{fn.__qualname__}" for name, fn in q.items()
-    ) == "e5936946fda76860aed217c958b77156f8d45f5be9f73e8c59e9edbd68cbd078"
+    ) == "5b9d8eb0ac531c90ff9698aaad44d1b4f9ea0b8b20294fb2086df30f261a5f38"
     assert _digest(f"{name}\t{sql}" for name, sql in oracles.items()) == (
         "70eeb59f033d83a56929da906a991e69074626194d52ee0dd8d4ebb512e42c7a"
     )

@@ -912,18 +912,6 @@ def test_concurrent_appends_both_survive(spark, tmp_path):
     )
 
 
-def test_migration_to_minilake(spark, tmp_path):
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
-    ice = str(tmp_path / "ice")
-    ml = str(tmp_path / "ml")
-    ib.write_iceberg(_df(spark, 0, 30), ice, partition_by=["lang"])
-    ib.iceberg_to_minilake(spark, ice, ml)
-    assert _rows(minilake.read_snapshot(spark, ml)) == _rows(_df(spark, 0, 30))
-
-
 def test_entry_matches_oracle_shape(spark):
     df = ib.iceberg_interop_entry(spark, "/root/testdata/sf0.001")
     rows = df.collect()

@@ -1,12 +1,12 @@
-"""Change-data-feed across rewrites (minilake.read_changes):
+"""Change-data-feed across rewrites (deltaproto.read_changes_delta):
 
-- plain row feed and the format('minilake') stream source SKIP pure
-  rewrites (compact/optimize) — routine maintenance no longer breaks
-  incremental consumers;
-- change_feed=True emits exact insert/delete rows for append, DELETE
-  (via the commit's recorded predicate), RESTORE, and OVERWRITE —
-  verified by APPLYING the feed and comparing with the real snapshot;
-- MERGE commits still raise (not row-splittable from the log).
+- the feed and the format('deltaproto') stream source SKIP pure
+  rewrites (OPTIMIZE / z-order, `dataChange: false`) — routine
+  maintenance never breaks incremental consumers;
+- the feed emits exact insert/delete rows for append, DELETE (its
+  `cdc` file) and OVERWRITE — verified by APPLYING the feed and
+  comparing with the real snapshot; a RESTORE (a mixed rewrite with no
+  `cdc` actions) refuses instead of mis-reading.
 """
 
 from __future__ import annotations
@@ -15,10 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-    minilake,
-)
-from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.streaming import (
-    jobs,
+    deltaproto as dp,
+    deltastream,
 )
 
 
@@ -46,41 +44,38 @@ def _apply_feed(feed_df):
 
 def test_plain_feed_skips_compaction(spark, tmp_path):
     path = str(tmp_path / "lake")
-    minilake.commit_append(_df(spark, 0, 50), path)
-    v1 = minilake.commit_append(_df(spark, 50, 80), path)
-    minilake.compact(spark, path)
-    minilake.commit_append(_df(spark, 80, 90), path)
+    dp.write_delta(_df(spark, 0, 50), path)
+    v1 = dp.write_delta(_df(spark, 50, 80), path)
+    dp.compact_delta(spark, path)
+    dp.write_delta(_df(spark, 80, 90), path)
     # consumer synced through v1: sees ONLY the post-compact append
     got = sorted(
         r["doc_id"]
-        for r in minilake.read_changes(spark, path, since_version=v1).collect()
+        for r in dp.read_changes_delta(spark, path, since_version=v1 + 1)
+        .collect()
     )
     assert got == list(range(80, 90))
-    # a full-history plain feed over appends+compact = all appended rows
-    allrows = minilake.read_changes(spark, path, since_version=-1)
+    # a full-history feed over appends+compact = all appended rows
+    allrows = dp.read_changes_delta(spark, path, since_version=0)
     assert allrows.count() == 90
+    assert {r["_change_type"] for r in allrows.collect()} == {"insert"}
 
 
 def test_change_feed_apply_parity_delete_restore_overwrite(spark, tmp_path):
     """The acid test: replaying the feed reproduces the live snapshot
-    exactly through append → delete → compact → overwrite → restore."""
+    exactly through append → delete → compact → overwrite; a RESTORE
+    after that is a mixed rewrite without `cdc` actions, so a feed
+    spanning it refuses loudly while the feed up to it stays exact."""
     path = str(tmp_path / "lake")
-    minilake.commit_append(
-        _df(spark, 0, 100).repartitionByRange(4, "doc_id"),
-        path,
-        stat_cols=["doc_id"],
-    )
-    minilake.delete_where(spark, path, "doc_id", 20, 39)
-    minilake.compact(spark, path)
-    v_pre_over = minilake.versions(path)[-1]
-    minilake.commit_overwrite(_df(spark, 500, 520, tag=1), path)
-    minilake.restore(path, v_pre_over)
+    dp.write_delta(_df(spark, 0, 100).repartitionByRange(4, "doc_id"), path)
+    dp.delete_where_delta(spark, path, "doc_id", 20, 39)
+    v_compact = dp.compact_delta(spark, path)
+    v_over = dp.write_delta(_df(spark, 500, 520, tag=1), path, mode="overwrite")
 
-    feed = minilake.read_changes(spark, path, since_version=-1, change_feed=True)
+    feed = dp.read_changes_delta(spark, path, since_version=0)
     applied = _apply_feed(feed)
     snap = sorted(
-        (r["doc_id"], r["v"])
-        for r in minilake.read_snapshot(spark, path).collect()
+        (r["doc_id"], r["v"]) for r in dp.read_delta(spark, path).collect()
     )
     assert applied == snap
     # the delete leg is exactly the predicate rows, tagged per commit
@@ -89,43 +84,28 @@ def test_change_feed_apply_parity_delete_restore_overwrite(spark, tmp_path):
     )
     assert sorted(r["doc_id"] for r in deletes.collect()) == list(range(20, 40))
     # compaction contributed nothing
-    compact_vs = [
-        h["version"] for h in minilake.history(path) if h["mode"] == "compact"
-    ]
-    assert compact_vs and feed.filter(
-        F.col("_commit_version").isin(compact_vs)
-    ).count() == 0
+    assert feed.filter(F.col("_commit_version") == v_compact).count() == 0
 
-
-def test_change_feed_merge_still_raises(spark, tmp_path):
-    path = str(tmp_path / "lake")
-    minilake.commit_append(_df(spark, 0, 50), path, stat_cols=["doc_id"])
-    minilake.merge_upsert_lake(spark, _df(spark, 10, 15, tag=3), path, "doc_id")
-    with pytest.raises(ValueError, match="merge"):
-        minilake.read_changes(
-            spark, path, since_version=-1, change_feed=True
-        ).collect()
+    dp.restore_delta(spark, path, v_compact)
+    with pytest.raises(ValueError, match="without cdc"):
+        dp.read_changes_delta(spark, path, since_version=0).collect()
+    up_to = dp.read_changes_delta(spark, path, since_version=0, end_version=v_over)
+    assert _apply_feed(up_to) == snap
 
 
 def test_stream_source_survives_interleaved_optimize(spark, sf_dir, tmp_path):
-    """format('minilake') stream: append → drain → OPTIMIZE/compact →
-    append → drain again.  The second drain skips the rewrite commits
-    and delivers ONLY the new append — parity with the batch rows,
-    registry ingest keeps working (the r7 cross-quadrant pipeline no
-    longer breaks on routine maintenance)."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-    )
-
-    lakesource.register(spark)
+    """format('deltaproto') stream: append → drain → OPTIMIZE/z-order
+    → append → drain again.  The second drain skips the rewrite commits
+    and delivers ONLY the new append — parity with the batch rows."""
+    deltastream.register(spark)
     path = str(tmp_path / "lake")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    minilake.commit_append(_df(spark, 0, 40), path, stat_cols=["doc_id"])
+    dp.write_delta(_df(spark, 0, 40), path)
 
     def drain():
         q = (
-            spark.readStream.format("minilake")
+            spark.readStream.format("deltaproto")
             .load(path)
             .writeStream.format("parquet")
             .option("path", out)
@@ -138,25 +118,24 @@ def test_stream_source_survives_interleaved_optimize(spark, sf_dir, tmp_path):
     drain()
     assert spark.read.parquet(out).count() == 40
 
-    minilake.compact(spark, path)
-    minilake.optimize_zorder(spark, path, "doc_id", "v", n_files=2)
-    minilake.commit_append(_df(spark, 40, 55), path)
+    dp.compact_delta(spark, path)
+    dp.optimize_zorder_delta(spark, path, "doc_id", "v", n_files=2)
+    dp.write_delta(_df(spark, 40, 55), path)
     drain()
     got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
     assert got == list(range(55))  # new rows once, rewrites never re-sent
 
 
 def test_registry_ingest_survives_optimize(spark, sf_dir, tmp_path):
-    """The incremental dedup registry fed from a minilake stream keeps
+    """Registry batches fed from a format('deltaproto') stream keep
     exactly-once row delivery when an OPTIMIZE lands between drains."""
     import glob
 
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
         load_table,
     )
 
-    lakesource.register(spark)
+    deltastream.register(spark)
     path = str(tmp_path / "lake")
     reg = str(tmp_path / "registry")
     ckpt = str(tmp_path / "ckpt")
@@ -165,10 +144,10 @@ def test_registry_ingest_survives_optimize(spark, sf_dir, tmp_path):
     )
     half = docs.filter(F.col("doc_id") % 2 == 0)
     rest = docs.filter(F.col("doc_id") % 2 == 1)
-    minilake.commit_append(half, path, stat_cols=["doc_id"])
+    dp.write_delta(half, path)
 
     def drain():
-        stream = spark.readStream.format("minilake").load(path)
+        stream = spark.readStream.format("deltaproto").load(path)
         q = (
             stream.writeStream.foreachBatch(
                 lambda b, bid: b.write.mode("overwrite").parquet(
@@ -182,8 +161,8 @@ def test_registry_ingest_survives_optimize(spark, sf_dir, tmp_path):
         assert q.awaitTermination(120)
 
     drain()
-    minilake.compact(spark, path)
-    minilake.commit_append(rest, path)
+    dp.compact_delta(spark, path)
+    dp.write_delta(rest, path)
     drain()  # must not raise on the compact commit
     landed = spark.read.parquet(*sorted(glob.glob(f"{reg}/batch=*")))
     assert landed.count() == docs.count()
@@ -191,27 +170,19 @@ def test_registry_ingest_survives_optimize(spark, sf_dir, tmp_path):
 
 
 def test_stream_change_feed_option(spark, tmp_path):
-    """format('minilake') with readChangeFeed=true streams the CHANGE
+    """format('deltaproto') with readChangeFeed=true streams the CHANGE
     FEED: inserts for appends, exact delete rows for DV and predicate
     deletes, nothing for compaction — exactly-once across drains with
     a persistent checkpoint."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-    )
-
-    lakesource.register(spark)
+    deltastream.register(spark)
     path = str(tmp_path / "lake")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    minilake.commit_append(
-        _df(spark, 0, 60).repartitionByRange(3, "doc_id"),
-        path,
-        stat_cols=["doc_id"],
-    )
+    dp.write_delta(_df(spark, 0, 60).repartitionByRange(3, "doc_id"), path)
 
     def drain():
         q = (
-            spark.readStream.format("minilake")
+            spark.readStream.format("deltaproto")
             .option("readChangeFeed", "true")
             .load(path)
             .writeStream.format("parquet")
@@ -227,9 +198,9 @@ def test_stream_change_feed_option(spark, tmp_path):
     assert first.count() == 60
     assert {r["_change_type"] for r in first.collect()} == {"insert"}
 
-    minilake.delete_where(spark, path, "doc_id", 10, 19, strategy="dv")
-    minilake.delete_where(spark, path, "doc_id", 40, 44)  # rewrite path
-    minilake.compact(spark, path)
+    dp.delete_where_delta(spark, path, "doc_id", 10, 19, strategy="dv")
+    dp.delete_where_delta(spark, path, "doc_id", 40, 44)  # rewrite path
+    dp.compact_delta(spark, path)
     drain()
     feed = spark.read.parquet(out)
     deletes = feed.filter(F.col("_change_type") == "delete")
@@ -243,7 +214,7 @@ def test_stream_change_feed_option(spark, tmp_path):
         r["doc_id"] for r in deletes.collect()
     }
     snap_ids = {
-        r["doc_id"] for r in minilake.read_snapshot(spark, path).collect()
+        r["doc_id"] for r in dp.read_delta(spark, path).collect()
     }
     assert net == snap_ids
     # third drain with nothing new: no extra rows

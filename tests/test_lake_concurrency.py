@@ -1,22 +1,24 @@
-"""Concurrency-conflict tests for the minilake commit log.
+"""Concurrency-conflict tests for Delta commits (sources/deltaproto.py).
 
 The optimistic-concurrency windows are deterministic here: every
-rewrite op reads its snapshot, lands files, then claims a version with
-a claim-time refresh callback.  These tests inject a RACING commit
-inside that window (by wrapping `_land_data_files` / `_claim_version`)
-and assert the documented conflict rules:
+rewrite op reads its snapshot, lands files, then claims a version
+through `_claim_delta_version`, which validates every commit that
+landed since the snapshot.  These tests inject a RACING commit inside
+that window (the `race_before_claim` fixture wraps
+`_claim_delta_version`) and assert the conflict rules:
 
-- compact vs delete/overwrite  → compact ABORTS, no resurrection or
-  duplication, its orphaned rewrite is unlinked;
+- compact vs delete            → compact ABORTS, no resurrection or
+  duplication; its landed rewrite stays invisible until VACUUM;
 - compact vs append            → commutes (the appended file survives);
 - merge vs compact             → merge ABORTS (stale remove list);
-- restore vs append            → restore's claim-time delta refresh
-  removes the racing append, postcondition holds exactly;
+- restore vs append            → restore ABORTS (the append landed
+  inside the whole-table scope it read), a retry restores exactly;
 - stream sink across drains    → a persisted checkpoint makes a grown
   source deliver NEW batch ids (no silent skip / data loss);
-- stream batch schema          → divergent schema rejected at commit.
+- stream batch schema          → divergent schema rejected at commit;
+- vacuum                       → one forward fold over the log.
 
-The 8-writer append stress test (`test_streaming.py`) covers the
+The 8-writer append stress test (`test_ingestion.py`) covers the
 append-append race; appends never conflict, so these rewrites are the
 cases it cannot reach.
 """
@@ -24,13 +26,13 @@ cases it cannot reach.
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-    minilake,
+    deltaproto as dp,
+    deltastream,
 )
 
 
@@ -39,59 +41,67 @@ def _seed(spark, path, n=200, files=4):
         F.col("id").cast("bigint").alias("doc_id"),
         (F.col("id") * 7).cast("bigint").alias("v"),
     )
-    minilake.commit_append(
-        df.repartitionByRange(files, "doc_id"), path, stat_cols=["doc_id"]
-    )
+    dp.write_delta(df.repartitionByRange(files, "doc_id"), path)
     return df
 
 
 def _rows(spark, path):
     return sorted(
-        (r["doc_id"], r["v"])
-        for r in minilake.read_snapshot(spark, path).collect()
+        (r["doc_id"], r["v"]) for r in dp.read_delta(spark, path).collect()
     )
 
 
-def test_compact_aborts_on_racing_delete(spark, tmp_path, monkeypatch):
+def _data_files(path):
+    return {
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _dirs, files in os.walk(path)
+        if "_delta_log" not in d and "_change_data" not in d
+        for f in files
+        if f.endswith(".parquet")
+    }
+
+
+def test_compact_aborts_on_racing_delete(
+    spark, tmp_path, monkeypatch, race_before_claim
+):
     """A delete that commits inside compact's land→claim window must
     abort the compaction: committing the stale remove list would
     resurrect the deleted rows AND double the kept rows of the file
     the delete rewrote."""
     path = str(tmp_path / "lake")
     _seed(spark, path)
-
-    orig_land = minilake._land_data_files
-    raced = {"done": False}
-
-    def racing_land(df, p, *args, **kwargs):
-        out = orig_land(df, p, *args, **kwargs)
-        if not raced["done"]:
-            raced["done"] = True  # guard: delete_where lands files too
-            minilake.delete_where(spark, p, "doc_id", 50, 99)
-        return out
-
-    monkeypatch.setattr(minilake, "_land_data_files", racing_land)
-    with pytest.raises(RuntimeError, match="compact lost a race"):
-        minilake.compact(spark, path)
-    monkeypatch.setattr(minilake, "_land_data_files", orig_land)
+    raced = race_before_claim(
+        "OPTIMIZE",
+        lambda p: dp.delete_where_delta(spark, p, "doc_id", 50, 99),
+    )
+    with pytest.raises(dp.ConcurrentDeltaCommit, match="rewrote"):
+        dp.compact_delta(spark, path)
+    assert raced["done"]
+    monkeypatch.undo()
 
     got = _rows(spark, path)
     want = [(i, i * 7) for i in range(200) if not 50 <= i <= 99]
     assert got == want  # no resurrection, no duplication
-    # compact's orphaned rewrite was unlinked, not left for vacuum:
-    # every file still on disk is referenced by SOME version (removed
-    # files legitimately remain for time travel; true orphans don't)
+    assert dp.delta_history(path)[-1]["operation"] == "DELETE"
+    # compact's landed rewrite is referenced by no version; VACUUM
+    # reclaims exactly such files and the table still reads the same
     referenced = set()
-    for v in minilake.versions(path):
-        referenced |= minilake._live_files(path, as_of=v)
-    on_disk = set(os.listdir(minilake._data_dir(path)))
-    assert on_disk == referenced
+    for v in dp.delta_versions(path):
+        referenced |= set(dp._fold_delta_state(spark, path, v)[1])
+    orphans = _data_files(path) - referenced
+    assert orphans
+    assert dp.vacuum_delta(spark, path, retain_versions=0, min_age_s=0) >= len(
+        orphans
+    )
+    assert not (_data_files(path) & orphans)
     # and a clean re-run against the new snapshot succeeds
-    minilake.compact(spark, path)
+    dp.compact_delta(spark, path)
     assert _rows(spark, path) == want
 
 
-def test_compact_commutes_with_racing_append(spark, tmp_path, monkeypatch):
+def test_compact_commutes_with_racing_append(
+    spark, tmp_path, monkeypatch, race_before_claim
+):
     """A concurrent APPEND is not a conflict: its file is not in
     compact's remove list, so both commits land and every row survives
     exactly once."""
@@ -101,71 +111,55 @@ def test_compact_commutes_with_racing_append(spark, tmp_path, monkeypatch):
         F.col("id").cast("bigint").alias("doc_id"),
         (F.col("id") * 7).cast("bigint").alias("v"),
     )
-
-    orig_claim = minilake._claim_version
-    raced = {"done": False}
-
-    def racing_claim(p, commit, refresh=None):
-        if commit.get("mode") == "compact" and not raced["done"]:
-            raced["done"] = True
-            minilake.commit_append(extra, p)
-        return orig_claim(p, commit, refresh)
-
-    monkeypatch.setattr(minilake, "_claim_version", racing_claim)
-    minilake.compact(spark, path)
-    monkeypatch.setattr(minilake, "_claim_version", orig_claim)
+    raced = race_before_claim("OPTIMIZE", lambda p: dp.write_delta(extra, p))
+    dp.compact_delta(spark, path)
+    assert raced["done"]
+    monkeypatch.undo()
 
     assert _rows(spark, path) == [(i, i * 7) for i in range(230)]
-    assert minilake.history(path)[-1]["mode"] == "compact"
+    assert dp.delta_history(path)[-1]["operation"] == "OPTIMIZE"
 
 
-def test_merge_aborts_on_racing_compact(spark, tmp_path, monkeypatch):
-    """merge_upsert_lake computes its touched-file list from a
-    pre-claim snapshot; a compaction that commits first invalidates
-    every name in it, so the merge must abort instead of committing
-    stale removes."""
+def test_merge_aborts_on_racing_compact(
+    spark, tmp_path, monkeypatch, race_before_claim
+):
+    """merge_upsert_delta computes its touched-file list from a
+    pre-claim snapshot; a compaction that commits first removes every
+    name in it, so the merge must abort instead of committing stale
+    removes."""
     path = str(tmp_path / "lake")
     _seed(spark, path)
     updates = spark.range(10, 20).select(
         F.col("id").cast("bigint").alias("doc_id"),
         F.lit(-1).cast("bigint").alias("v"),
     )
-
-    orig_claim = minilake._claim_version
-    raced = {"done": False}
-
-    def racing_claim(p, commit, refresh=None):
-        if commit.get("mode") == "merge" and not raced["done"]:
-            raced["done"] = True
-            minilake.compact(spark, p)
-        return orig_claim(p, commit, refresh)
-
-    monkeypatch.setattr(minilake, "_claim_version", racing_claim)
-    with pytest.raises(RuntimeError, match="merge_upsert_lake lost a race"):
-        minilake.merge_upsert_lake(spark, updates, path, "doc_id")
-    monkeypatch.setattr(minilake, "_claim_version", orig_claim)
+    raced = race_before_claim("MERGE", lambda p: dp.compact_delta(spark, p))
+    with pytest.raises(dp.ConcurrentDeltaCommit):
+        dp.merge_upsert_delta(spark, updates, path, "doc_id")
+    assert raced["done"]
+    monkeypatch.undo()
 
     # table is exactly the compacted seed — the merge left no trace
     assert _rows(spark, path) == [(i, i * 7) for i in range(200)]
-    referenced = set()
-    for v in minilake.versions(path):
-        referenced |= minilake._live_files(path, as_of=v)
-    assert set(os.listdir(minilake._data_dir(path))) == referenced
+    assert dp.delta_history(path)[-1]["operation"] == "OPTIMIZE"
     # retry succeeds against the new snapshot
-    minilake.merge_upsert_lake(spark, updates, path, "doc_id")
+    dp.merge_upsert_delta(spark, updates, path, "doc_id")
     want = [(i, -1 if 10 <= i <= 19 else i * 7) for i in range(200)]
     assert _rows(spark, path) == want
 
 
-def test_restore_accounts_for_racing_append(spark, tmp_path, monkeypatch):
+def test_restore_accounts_for_racing_append(
+    spark, tmp_path, monkeypatch, race_before_claim
+):
     """restore's postcondition is 'the live set becomes exactly the
-    target version's'.  Its add/remove deltas are recomputed at claim
-    time, so an append that lands between the fold and the claim is
-    removed by the restore commit rather than silently surviving."""
+    target version's'.  It reads the whole table, so an append that
+    lands between its fold and its claim is a read conflict: the
+    restore refuses rather than letting the append silently survive,
+    and a retry restores exactly."""
     path = str(tmp_path / "lake")
     _seed(spark, path)
-    v0 = minilake.versions(path)[-1]
-    minilake.commit_append(
+    v0 = dp.delta_versions(path)[-1]
+    dp.write_delta(
         spark.range(500, 510).select(
             F.col("id").cast("bigint").alias("doc_id"),
             F.lit(0).cast("bigint").alias("v"),
@@ -176,115 +170,122 @@ def test_restore_accounts_for_racing_append(spark, tmp_path, monkeypatch):
         F.col("id").cast("bigint").alias("doc_id"),
         F.lit(1).cast("bigint").alias("v"),
     )
+    raced = race_before_claim("RESTORE", lambda p: dp.write_delta(extra, p))
+    with pytest.raises(dp.ConcurrentDeltaCommit, match="appended"):
+        dp.restore_delta(spark, path, v0)
+    assert raced["done"]
+    monkeypatch.undo()
+    assert len(_rows(spark, path)) == 220  # nothing restored yet
 
-    orig_claim = minilake._claim_version
-    raced = {"done": False}
-
-    def racing_claim(p, commit, refresh=None):
-        if commit.get("mode") == "restore" and not raced["done"]:
-            raced["done"] = True
-            minilake.commit_append(extra, p)
-        return orig_claim(p, commit, refresh)
-
-    monkeypatch.setattr(minilake, "_claim_version", racing_claim)
-    minilake.restore(path, v0)
-    monkeypatch.setattr(minilake, "_claim_version", orig_claim)
-
-    assert minilake._live_files(path) == minilake._live_files(path, as_of=v0)
+    dp.restore_delta(spark, path, v0)
+    live_now = dp._fold_delta_state(spark, path, None)[1]
+    assert set(live_now) == set(dp._fold_delta_state(spark, path, v0)[1])
     assert _rows(spark, path) == [(i, i * 7) for i in range(200)]
 
 
 def test_stream_sink_persisted_checkpoint_survives_source_growth(
     spark, tmp_path
 ):
-    """Exactly-once ACROSS drains: with the checkpoint persisted next
-    to the table, a second drain of a GROWN source delivers only the
-    new rows under fresh batch ids.  (A throwaway per-drain checkpoint
-    restarts ids at 0 — the default single-batch trigger would then
-    replay ALL files as an already-committed batch 0 and silently drop
-    the new file: data loss.)"""
+    """Exactly-once ACROSS drains: with the checkpoint persisted, a
+    second drain of a GROWN source delivers only the new rows under a
+    fresh batch id, and an unchanged source is a pure no-op."""
+    deltastream.register(spark)
     src = tmp_path / "src"
     src.mkdir()
     path = str(tmp_path / "lake")
+    ckpt = str(tmp_path / "ckpt")
     df1 = spark.range(100).select(F.col("id").alias("doc_id"))
     df1.coalesce(1).write.mode("append").parquet(str(src))
 
     def drain():
         stream = spark.readStream.schema("doc_id bigint").parquet(str(src))
-        minilake.lake_stream_sink(stream, path, timeout_s=120)
+        q = (
+            stream.writeStream.format("deltaproto")
+            .option("path", path)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
 
     drain()
-    assert minilake.read_snapshot(spark, path).count() == 100
+    assert dp.read_delta(spark, path).count() == 100
 
     spark.range(100, 130).select(F.col("id").alias("doc_id")).coalesce(
         1
     ).write.mode("append").parquet(str(src))
     drain()
-    got = sorted(
-        r["doc_id"] for r in minilake.read_snapshot(spark, path).collect()
-    )
+    got = sorted(r["doc_id"] for r in dp.read_delta(spark, path).collect())
     assert got == list(range(130))  # the new file was NOT skipped
-    # and batch ids are monotonic — the second drain used a fresh id
-    assert len(minilake.committed_stream_batches(path)) >= 2
+    # batch ids are monotonic — the second drain used a fresh id
+    assert max(dp.delta_txn_versions(spark, path).values()) >= 1
 
     # unchanged source: a third drain is a pure no-op
-    n_versions = len(minilake.versions(path))
+    n_versions = len(dp.delta_versions(path))
     drain()
-    assert len(minilake.versions(path)) == n_versions
+    assert len(dp.delta_versions(path)) == n_versions
 
 
 def test_commit_stream_batch_enforces_schema(spark, tmp_path):
-    """foreachBatch streaming commits honor the same write-time schema
-    contract as batch appends — a divergent frame is rejected, not
-    silently committed into the log."""
+    """Idempotent (txn-keyed) batch commits honor the same write-time
+    schema contract as plain appends — a divergent frame is rejected,
+    and neither its rows nor its txn version are committed."""
     path = str(tmp_path / "lake")
     _seed(spark, path)
-    bad = spark.range(5).select(F.col("id").alias("doc_id"))  # missing v
-    with pytest.raises(ValueError, match="missing table columns"):
-        minilake.commit_stream_batch(bad, path, batch_id=999)
+    bad = spark.range(5).select(
+        F.col("id").cast("bigint").alias("doc_id"),
+        F.lit("x").alias("v"),  # string where the table says bigint
+    )
+    vs = dp.delta_versions(path)
+    with pytest.raises(ValueError, match="table schema says bigint"):
+        dp.write_delta(bad, path, txn=("stream", 999))
     # nothing landed, nothing committed
-    assert 999 not in minilake.committed_stream_batches(path)
+    assert dp.delta_versions(path) == vs
+    assert "stream" not in dp.delta_txn_versions(spark, path)
 
 
-def test_vacuum_single_forward_fold(tmp_path, monkeypatch):
-    """vacuum builds the referenced set in ONE forward fold: the commit
-    log is read O(tail) times total, never O(retained × tail).  Pure
-    log-level test — commits are hand-written JSON, data files are
-    empty placeholders (vacuum only stats/unlinks them)."""
+def test_vacuum_single_forward_fold(spark, tmp_path, monkeypatch):
+    """vacuum_delta builds the referenced set in ONE forward fold: the
+    log is read once per commit (plus the oldest retained commit again
+    for its cdc files), never once per retained version, and every file
+    live in any retained version survives while the rest go."""
     path = str(tmp_path / "lake")
-    os.makedirs(minilake._data_dir(path))
-    monkeypatch.setattr(minilake, "_CHECKPOINT_EVERY", 0)
-
-    def touch(name):
-        open(os.path.join(minilake._data_dir(path), name), "w").close()
-
-    live: list[str] = []
     n_commits = 24
     for i in range(n_commits):
-        name = f"{uuid.uuid4().hex}.parquet"
-        touch(name)
-        commit = {"mode": "append", "add": [name], "remove": [], "schema": "{}"}
-        if i % 3 == 2 and live:  # periodically rewrite the oldest file
-            commit["mode"] = "delete"
-            commit["remove"] = [live.pop(0)]
-        minilake._claim_version(path, commit)
-        live.append(name)
+        if i % 3 == 2:  # periodically rewrite half of an earlier batch
+            lo = (i - 2) * 10
+            dp.delete_where_delta(spark, path, "doc_id", lo, lo + 4)
+        else:
+            df = spark.range(i * 10, (i + 1) * 10).select(
+                F.col("id").cast("bigint").alias("doc_id")
+            )
+            dp.write_delta(df.coalesce(1), path)
+    vs = dp.delta_versions(path)
+    assert len(vs) == n_commits
+    retained = vs[-13:]
+    referenced = set()
+    for v in retained:
+        referenced |= set(dp._fold_delta_state(spark, path, v)[1])
+    before = _data_files(path)
+    want = dp.read_delta(spark, path).count()
+
+    def n_files():  # data and cdc files alike
+        return sum(len(fs) for d, _, fs in os.walk(path) if "_delta_log" not in d)
+
+    n_before = n_files()
 
     calls = {"n": 0}
-    orig = minilake._read_commit
+    orig = dp._read_actions
 
     def counting(p, v):
         calls["n"] += 1
         return orig(p, v)
 
-    monkeypatch.setattr(minilake, "_read_commit", counting)
-    deleted = minilake.vacuum(path, retain_versions=12, min_age_s=0.0)
-    assert calls["n"] <= n_commits  # one pass over the log, not per-version
-    # correctness: every file live in any retained version survives
-    vs = minilake.versions(path)
-    referenced = set()
-    for v in vs[-13:]:
-        referenced |= minilake._live_files(path, as_of=v)
-    on_disk = set(os.listdir(minilake._data_dir(path)))
-    assert on_disk == referenced
-    assert deleted == n_commits - len(referenced)
+    monkeypatch.setattr(dp, "_read_actions", counting)
+    deleted = dp.vacuum_delta(spark, path, retain_versions=12, min_age_s=0.0)
+    monkeypatch.undo()
+    assert calls["n"] <= n_commits + 1  # one pass, not one per version
+    assert _data_files(path) == referenced
+    assert deleted == n_before - n_files() > len(before - referenced) > 0
+    assert dp.read_delta(spark, path).count() == want
+    assert dp.read_delta(spark, path, version=retained[0]).count() > 0

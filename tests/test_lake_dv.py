@@ -1,8 +1,8 @@
-"""Deletion vectors for minilake: merge-on-read deletes that commit a
-position sidecar instead of rewriting files, applied at scan time by a
-broadcast anti-join — plus their interactions with stacking, rewrites,
-compaction, merge, restore, the change feed, the DataSource reader,
-and vacuum."""
+"""Deletion vectors on Delta tables: merge-on-read deletes that re-add
+the touched files with a DeletionVectorDescriptor instead of rewriting
+them, applied at scan time — plus their interactions with stacking,
+rewrites, compaction, merge, restore, the change feed, the pruned read,
+the DataSource reader, and vacuum."""
 
 from __future__ import annotations
 
@@ -12,8 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-    lakesource,
-    minilake,
+    deltaproto as dp,
+    deltastream,
 )
 
 
@@ -26,79 +26,77 @@ def _df(spark, lo, hi, tag=0):
 
 def _ids(spark, path, version=None):
     return sorted(
-        r["doc_id"]
-        for r in minilake.read_snapshot(spark, path, version).collect()
+        r["doc_id"] for r in dp.read_delta(spark, path, version).collect()
     )
+
+
+def _live(spark, path):
+    return dp._fold_delta_state(spark, path, None)[1]
+
+
+def _dv_files(path):
+    return [f for f in os.listdir(path) if f.startswith("deletion_vector_")]
 
 
 @pytest.fixture()
 def lake(spark, tmp_path):
     path = str(tmp_path / "lake")
-    minilake.commit_append(
-        _df(spark, 0, 100).repartitionByRange(4, "doc_id"),
-        path,
-        stat_cols=["doc_id"],
-    )
+    dp.write_delta(_df(spark, 0, 100).repartitionByRange(4, "doc_id"), path)
     return path
 
 
 def test_dv_delete_hides_without_rewrite(spark, lake):
-    live_before = minilake._live_files(lake)
-    v = minilake.delete_where(spark, lake, "doc_id", 10, 29, strategy="dv")
-    # no data file added or removed — the commit is a pure DV attach
-    assert minilake._live_files(lake) == live_before
-    c = minilake._read_commit(lake, v)
-    assert c["add"] == [] and c["remove"] == [] and c["dv"]
+    live_before = set(_live(spark, lake))
+    v = dp.delete_where_delta(spark, lake, "doc_id", 10, 29, strategy="dv")
+    # no data file rewritten — the commit re-adds the same paths with DVs
+    assert set(_live(spark, lake)) == live_before
+    acts = dp._read_actions(lake, v)
+    adds = [a["add"] for a in acts if "add" in a]
+    assert adds and all(a["deletionVector"] for a in adds)
+    assert sorted(a["path"] for a in adds) == sorted(
+        a["remove"]["path"] for a in acts if "remove" in a
+    )
     assert _ids(spark, lake) == [i for i in range(100) if not 10 <= i <= 29]
     # time travel: the pre-delete snapshot still shows every row
     assert _ids(spark, lake, version=v - 1) == list(range(100))
-    assert minilake.describe_detail(lake)["num_dv_files"] >= 1
+    files = dp.read_delta_meta(spark, lake, "files").collect()
+    assert sum(r["has_dv"] for r in files) >= 1
 
 
 def test_dv_stacking_and_exact_increments(spark, lake):
-    """Overlapping second delete: its DV holds ONLY the newly-hidden
-    positions (load-bearing for exact CDF legs)."""
-    import pyarrow.parquet as pq
-
-    minilake.delete_where(spark, lake, "doc_id", 10, 29, strategy="dv")
-    v2 = minilake.delete_where(spark, lake, "doc_id", 20, 39, strategy="dv")
+    """Overlapping second delete: its change feed holds ONLY the newly
+    hidden rows (the DVs union, so 20..29 are not counted twice)."""
+    dp.delete_where_delta(spark, lake, "doc_id", 10, 29, strategy="dv")
+    v2 = dp.delete_where_delta(spark, lake, "doc_id", 20, 39, strategy="dv")
     assert _ids(spark, lake) == [i for i in range(100) if not 10 <= i <= 39]
-    c2 = minilake._read_commit(lake, v2)
-    names2 = {n for ns in c2["dv"].values() for n in ns}
-    n_rows = sum(
-        pq.ParquetFile(os.path.join(minilake._dv_dir(lake), n)).metadata.num_rows
-        for n in names2
-    )
-    assert n_rows == 10  # only 30..39 — 20..29 were already hidden
+    ch = dp.read_changes_delta(spark, lake, v2, v2)
+    assert sorted(r["doc_id"] for r in ch.collect()) == list(range(30, 40))
     # zero-match DV delete is a no-op commit
-    vs = minilake.versions(lake)
+    vs = dp.delta_versions(lake)
     assert (
-        minilake.delete_where(spark, lake, "doc_id", 15, 25, strategy="dv")
+        dp.delete_where_delta(spark, lake, "doc_id", 15, 25, strategy="dv")
         == vs[-1]
     )
-    assert minilake.versions(lake) == vs
+    assert dp.delta_versions(lake) == vs
 
 
 def test_rewrite_and_compact_materialize_dvs(spark, lake):
     """A copy-on-write delete or a compaction applies pending DVs
-    physically: the DV mappings drop from the fold and the data stays
-    exactly the visible set."""
-    minilake.delete_where(spark, lake, "doc_id", 10, 29, strategy="dv")
-    minilake.delete_where(spark, lake, "doc_id", 50, 59)  # rewrite path
+    physically: the descriptors drop from the live adds and the data
+    stays exactly the visible set."""
+    dp.delete_where_delta(spark, lake, "doc_id", 10, 29, strategy="dv")
+    dp.delete_where_delta(spark, lake, "doc_id", 50, 59)  # rewrite path
     want = [i for i in range(100) if not (10 <= i <= 29 or 50 <= i <= 59)]
     assert _ids(spark, lake) == want
-    minilake.compact(spark, lake)
-    assert minilake._fold_state(lake)["dvs"] == {}
+    dp.compact_delta(spark, lake)
+    assert not any(a.get("deletionVector") for a in _live(spark, lake).values())
     assert _ids(spark, lake) == want
 
 
 def test_merge_does_not_resurrect_dv_rows(spark, lake):
-    minilake.delete_where(spark, lake, "doc_id", 10, 29, strategy="dv")
-    minilake.merge_upsert_lake(spark, _df(spark, 25, 35, tag=7), lake, "doc_id")
-    snap = {
-        r["doc_id"]: r["v"]
-        for r in minilake.read_snapshot(spark, lake).collect()
-    }
+    dp.delete_where_delta(spark, lake, "doc_id", 10, 29, strategy="dv")
+    dp.merge_upsert_delta(spark, _df(spark, 25, 35, tag=7), lake, "doc_id")
+    snap = {r["doc_id"]: r["v"] for r in dp.read_delta(spark, lake).collect()}
     # 25..34 upserted (back) with tag 7; 10..24 stay deleted
     assert all(snap[i] == i * 10 + 7 for i in range(25, 35))
     assert all(i not in snap for i in range(10, 25))
@@ -106,30 +104,28 @@ def test_merge_does_not_resurrect_dv_rows(spark, lake):
 
 
 def test_scan_pruned_and_datasource_apply_dvs(spark, lake):
-    minilake.delete_where(spark, lake, "doc_id", 10, 29, strategy="dv")
-    df, n_read, _s = minilake.scan_pruned(spark, lake, "doc_id", 0, 49)
+    dp.delete_where_delta(spark, lake, "doc_id", 10, 29, strategy="dv")
+    df, n_read, n_skipped = dp.read_delta_pruned(spark, lake, "doc_id", 0, 49)
     got = sorted(r["doc_id"] for r in df.collect())
     assert got == [i for i in range(50) if not 10 <= i <= 29]
-    lakesource.register(spark)
-    ds = spark.read.format("minilake").load(lake)
+    assert n_skipped > 0
+    deltastream.register(spark)
+    ds = spark.read.format("deltaproto").load(lake)
     assert sorted(r["doc_id"] for r in ds.collect()) == [
         i for i in range(100) if not 10 <= i <= 29
     ]
 
 
 def test_change_feed_and_restore_across_dvs(spark, lake):
-    """CDF legs for DV deletes are exact (only newly-hidden rows), and
-    a restore across a DV delete emits the un-hidden rows as inserts —
-    replaying the feed reproduces every snapshot transition."""
-    v_pre = minilake.versions(lake)[-1]
-    minilake.delete_where(spark, lake, "doc_id", 10, 29, strategy="dv")
-    minilake.delete_where(spark, lake, "doc_id", 20, 39, strategy="dv")
-    minilake.restore(lake, v_pre)
-    assert _ids(spark, lake) == list(range(100))
+    """CDF legs for DV deletes are exact (only newly-hidden rows) and
+    replaying them reproduces the snapshot; a restore across both DV
+    deletes brings every row back by re-adding the target's DV-free
+    add actions, while the DV'd versions stay travelable."""
+    v_pre = dp.delta_versions(lake)[-1]
+    v1 = dp.delete_where_delta(spark, lake, "doc_id", 10, 29, strategy="dv")
+    v2 = dp.delete_where_delta(spark, lake, "doc_id", 20, 39, strategy="dv")
 
-    feed = minilake.read_changes(
-        spark, lake, since_version=-1, change_feed=True
-    )
+    feed = dp.read_changes_delta(spark, lake, since_version=0)
     rows = [
         (r["doc_id"], r["_change_type"], r["_commit_version"])
         for r in feed.collect()
@@ -141,42 +137,27 @@ def test_change_feed_and_restore_across_dvs(spark, lake):
             state.add(doc_id)
         else:
             state.remove(doc_id)
-    assert sorted(state) == list(range(100))
-    # per-commit exactness
+    assert sorted(state) == _ids(spark, lake)
     by_commit: dict = {}
     for doc_id, ctype, v in rows:
         by_commit.setdefault((v, ctype), set()).add(doc_id)
-    deletes = [k for k in by_commit if k[1] == "delete"]
-    assert sorted(by_commit[deletes[0]]) == list(range(10, 30))
-    assert sorted(by_commit[deletes[1]]) == list(range(30, 40))
-    restore_v = minilake.versions(lake)[-1]
-    assert sorted(by_commit[(restore_v, "insert")]) == list(range(10, 40))
+    assert sorted(by_commit[(v1, "delete")]) == list(range(10, 30))
+    assert sorted(by_commit[(v2, "delete")]) == list(range(30, 40))
+
+    dp.restore_delta(spark, lake, v_pre)
+    assert _ids(spark, lake) == list(range(100))
+    assert not any(a.get("deletionVector") for a in _live(spark, lake).values())
+    assert _ids(spark, lake, version=v2) == [
+        i for i in range(100) if not 10 <= i <= 39
+    ]
 
 
 def test_vacuum_sweeps_obsolete_dv_files(spark, lake):
-    minilake.delete_where(spark, lake, "doc_id", 10, 29, strategy="dv")
-    assert len(os.listdir(minilake._dv_dir(lake))) >= 1
-    minilake.compact(spark, lake)  # materializes: DVs now unreferenced
+    dp.delete_where_delta(spark, lake, "doc_id", 10, 29, strategy="dv")
+    assert len(_dv_files(lake)) >= 1
+    dp.compact_delta(spark, lake)  # materializes: DVs now unreferenced
     want = _ids(spark, lake)
-    deleted = minilake.vacuum(lake, retain_versions=0, min_age_s=0.0)
+    deleted = dp.vacuum_delta(spark, lake, retain_versions=0, min_age_s=0.0)
     assert deleted >= 1
-    assert os.listdir(minilake._dv_dir(lake)) == []
+    assert _dv_files(lake) == []
     assert _ids(spark, lake) == want
-
-
-def test_maybe_compact_dv_ratio_trigger(spark, lake):
-    """The DV-density maintenance trigger: under the ratio it declines,
-    over it it compacts (materializing the DVs) — decided from the log
-    plus sidecar footers only."""
-    minilake.delete_where(spark, lake, "doc_id", 0, 9, strategy="dv")  # 10%
-    assert (
-        minilake.maybe_compact(spark, lake, max_live_files=64, max_dv_ratio=0.3)
-        is None
-    )
-    minilake.delete_where(spark, lake, "doc_id", 10, 44, strategy="dv")  # 45%
-    v = minilake.maybe_compact(
-        spark, lake, max_live_files=64, max_dv_ratio=0.3
-    )
-    assert v is not None
-    assert minilake._fold_state(lake)["dvs"] == {}
-    assert _ids(spark, lake) == list(range(45, 100))

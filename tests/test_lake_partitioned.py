@@ -1,17 +1,20 @@
-"""Partitioned minilake tables: Iceberg-style landing (partition
-columns stay IN the data files; the log records each file's partition
-tuple), two-tier pruning (partition tuples before zone maps), spec
-enforcement across commits, and maintenance ops preserving tuples."""
+"""Partitioned Delta tables: hive-layout landing (partition columns live
+in the log's `partitionValues` and the directory names, not in the
+data files), partition- and stats-tier pruning from the log alone,
+spec enforcement across commits, maintenance ops preserving partition
+values, NULL partition values, timestamp travel and CHECK constraints."""
 
 from __future__ import annotations
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-    lakesource,
+    deltaproto as dp,
+    deltastream,
     load_table,
-    minilake,
 )
 
 
@@ -21,167 +24,166 @@ def _docs(spark, sf_dir):
     )
 
 
+def _live(spark, path):
+    return dp._fold_delta_state(spark, path, None)[1]
+
+
 @pytest.fixture()
 def part_lake(spark, sf_dir, tmp_path):
     path = str(tmp_path / "plake")
     docs = _docs(spark, sf_dir)
-    minilake.commit_append(
-        docs.repartitionByRange(4, "doc_id"),
-        path,
-        stat_cols=["doc_id"],
-        partition_by=["lang"],
+    dp.write_delta(
+        docs.repartitionByRange(4, "doc_id"), path, partition_by=["lang"]
     )
     return path, docs
 
 
 def test_partition_tuples_recorded_and_rows_complete(spark, part_lake):
-    """Every live file carries an exact single-value partition tuple in
-    the log, and the data files are self-contained — the snapshot reads
-    back every row WITH its partition column, no directory-name
-    reconstruction."""
+    """Every live file carries its exact partition value in the log and
+    lives under the matching hive directory; the snapshot reads back
+    every row WITH its partition column, rebuilt from the log."""
     path, docs = part_lake
-    zones = minilake._live_zones(path)
-    assert zones and all(
-        z is not None and set(z["partition"]) == {"lang"} for z in zones.values()
+    live = _live(spark, path)
+    assert live and all(
+        set(a["partitionValues"]) == {"lang"} for a in live.values()
     )
-    langs = {z["partition"]["lang"] for z in zones.values()}
+    langs = {a["partitionValues"]["lang"] for a in live.values()}
     want_langs = {r["lang"] for r in docs.select("lang").distinct().collect()}
     assert langs == want_langs
-    snap = minilake.read_snapshot(spark, path)
+    snap = dp.read_delta(spark, path)
     assert snap.columns == docs.columns
     assert sorted(
         (r["doc_id"], r["lang"]) for r in snap.select("doc_id", "lang").collect()
     ) == sorted(
         (r["doc_id"], r["lang"]) for r in docs.select("doc_id", "lang").collect()
     )
-    # per-file purity: each file really holds one lang (tuple is exact)
-    import os
-
-    import pyarrow.parquet as pq
-
-    for f, z in zones.items():
-        vals = set(
-            pq.read_table(
-                os.path.join(minilake._data_dir(path), f), columns=["lang"]
-            )
-            .column("lang")
-            .to_pylist()
-        )
-        assert vals == {z["partition"]["lang"]}
+    # per-file purity: each file sits in its own partition directory
+    for f, a in live.items():
+        assert f.startswith(f"lang={a['partitionValues']['lang']}/")
 
 
 def test_two_tier_pruning_counts(spark, part_lake):
-    """The partition tier alone (exact tuples, no footer reads) drops
-    every non-'en' file; the zone tier then drops 'en' files whose
-    doc_id range cannot match.  Most of the table is skipped, and the
-    result is exactly the brute-force filter."""
+    """The partition tier alone (exact values from the log, no footer
+    reads) drops every non-'en' file; the stats tier then drops files
+    whose doc_id range cannot match.  Together they give exactly the
+    brute-force filter."""
     path, docs = part_lake
-    zones = minilake._live_zones(path)
-    n_en = sum(1 for z in zones.values() if z["partition"]["lang"] == "en")
-    df, n_read, n_skipped = minilake.scan_pruned_multi(
-        spark, path, {"lang": ("en", "en"), "doc_id": (0, 249)}
+    live = _live(spark, path)
+    n_en = sum(1 for a in live.values() if a["partitionValues"]["lang"] == "en")
+    en_df, n_read, n_skipped = dp.read_delta_pruned(spark, path, "lang", "en", "en")
+    assert (n_read, n_skipped) == (n_en, len(live) - n_en)
+    id_df, id_read, id_skipped = dp.read_delta_pruned(
+        spark, path, "doc_id", 0, 249
     )
-    assert n_read + n_skipped == len(zones)
-    # every non-en file skipped by the partition tier...
-    assert n_skipped >= len(zones) - n_en
-    # ...and the zone tier still bites within the en partition
-    assert n_read < n_en or n_en == 1
+    assert id_read + id_skipped == len(live) and id_skipped > 0
     want = docs.filter(
         (F.col("lang") == "en") & F.col("doc_id").between(0, 249)
     )
-    assert sorted(r["doc_id"] for r in df.collect()) == sorted(
+    got = en_df.filter(F.col("doc_id").between(0, 249))
+    assert sorted(r["doc_id"] for r in got.collect()) == sorted(
         r["doc_id"] for r in want.collect()
     )
+    assert sorted(
+        r["doc_id"] for r in id_df.filter(F.col("lang") == "en").collect()
+    ) == sorted(r["doc_id"] for r in want.collect())
 
 
 def test_partition_pruned_delete_touches_only_matching_partition(
     spark, part_lake
 ):
-    """DELETE WHERE lang='fr' rewrites ONLY the fr files — every other
-    partition's files keep their names in the log (byte-identical), by
-    the partition tier of `_file_outside_range`."""
+    """DELETE WHERE lang='fr' removes ONLY the fr files — every other
+    partition's files keep their names in the log."""
     path, docs = part_lake
-    before = minilake._live_zones(path)
-    fr_files = {f for f, z in before.items() if z["partition"]["lang"] == "fr"}
+    before = _live(spark, path)
+    fr_files = {
+        f for f, a in before.items() if a["partitionValues"]["lang"] == "fr"
+    }
     other = set(before) - fr_files
-    minilake.delete_where(spark, path, "lang", "fr", "fr")
-    after = set(minilake._live_files(path))
+    dp.delete_where_delta(spark, path, "lang", "fr", "fr")
+    after = set(_live(spark, path))
     assert other <= after  # untouched partitions survive by name
     assert not (fr_files & after)  # fr files all removed
-    snap = minilake.read_snapshot(spark, path)
+    snap = dp.read_delta(spark, path)
     assert snap.filter(F.col("lang") == "fr").count() == 0
     assert snap.count() == docs.filter(F.col("lang") != "fr").count()
 
 
 def test_spec_enforced_and_inherited(spark, sf_dir, part_lake):
     """Later appends inherit the table's partition spec automatically;
-    an explicitly contradicting spec is rejected; describe_detail
-    surfaces the spec and live partition count."""
+    an explicitly contradicting spec is rejected; the detail and
+    partitions metadata tables surface the spec and partition count."""
     path, docs = part_lake
     with pytest.raises(ValueError, match="contradicts the table's partition"):
-        minilake.commit_append(docs, path, partition_by=["source"])
+        dp.write_delta(docs, path, partition_by=["source"])
     extra = docs.withColumn("doc_id", F.col("doc_id") + 100000).limit(40)
-    minilake.commit_append(extra, path)  # inherits ["lang"]
-    zones = minilake._live_zones(path)
-    assert all(z and "partition" in z for z in zones.values())
-    d = minilake.describe_detail(path)
-    assert d["partition_by"] == ["lang"]
-    assert d["num_partitions"] == docs.select("lang").distinct().count()
+    dp.write_delta(extra, path)  # inherits ["lang"]
+    live = _live(spark, path)
+    assert all("lang" in a["partitionValues"] for a in live.values())
+    detail = dp.read_delta_meta(spark, path, "detail").first()
+    assert json.loads(detail["partitionColumns"]) == ["lang"]
+    n_parts = dp.read_delta_meta(spark, path, "partitions").count()
+    assert n_parts == docs.select("lang").distinct().count()
 
 
 def test_compact_and_stream_append_preserve_tuples(spark, sf_dir, part_lake):
-    """compact() re-lands through the partition spec, so tuples (and
-    two-tier pruning) survive compaction; commit_stream_batch on a
-    partitioned table records tuples too."""
+    """compact_delta re-lands through the partition spec, so partition
+    values (and partition pruning) survive compaction; a txn-keyed
+    micro-batch append on a partitioned table records them too."""
     path, docs = part_lake
-    minilake.commit_stream_batch(
+    dp.write_delta(
         docs.withColumn("doc_id", F.col("doc_id") + 200000).limit(30),
         path,
-        batch_id=7,
+        txn=("stream", 7),
     )
-    minilake.compact(spark, path, target_mb=128)
-    zones = minilake._live_zones(path)
-    assert zones and all(
-        z is not None and "partition" in z for z in zones.values()
-    )
-    _df, n_read, n_skipped = minilake.scan_pruned_multi(
-        spark, path, {"lang": ("zh", "zh")}
-    )
+    dp.compact_delta(spark, path, target_mb=128)
+    live = _live(spark, path)
+    assert live and all("lang" in a["partitionValues"] for a in live.values())
+    _df, n_read, n_skipped = dp.read_delta_pruned(spark, path, "lang", "zh", "zh")
     assert n_skipped > 0  # pruning still works post-compact
-    total = minilake.read_snapshot(spark, path).count()
+    total = dp.read_delta(spark, path).count()
     assert total == docs.count() + 30
 
 
 def test_null_partition_values_roundtrip_and_prune(spark, sf_dir, tmp_path):
     """A NULL partition value lands under Hive's default-partition
-    sentinel, reads back as NULL (the column lives in the data file),
-    and a BETWEEN predicate provably skips the file (three-valued
-    logic: NULL never matches)."""
+    directory with a null `partitionValues` entry, reads back as NULL
+    next to the non-null partition, and a BETWEEN predicate provably
+    skips its file (three-valued logic: NULL never matches)."""
     path = str(tmp_path / "plake_null")
     df = spark.range(20).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 2 == 0, F.lit("en")).alias("lang"),
     )
-    minilake.commit_append(df, path, partition_by=["lang"])
-    snap = minilake.read_snapshot(spark, path)
+    dp.write_delta(df.coalesce(1), path, partition_by=["lang"])
+    live = _live(spark, path)
+    assert {a["partitionValues"]["lang"] for a in live.values()} == {None, "en"}
+    assert any(f.startswith("lang=__HIVE_DEFAULT_PARTITION__/") for f in live)
+    snap = dp.read_delta(spark, path)
     assert snap.filter(F.col("lang").isNull()).count() == 10
-    _df, n_read, n_skipped = minilake.scan_pruned_multi(
-        spark, path, {"lang": ("en", "en")}
-    )
+    assert snap.filter(F.col("lang") == "en").count() == 10
+    en, n_read, n_skipped = dp.read_delta_pruned(spark, path, "lang", "en", "en")
     assert n_skipped >= 1  # the NULL-partition file is provably outside
+    assert en.count() == 10
+    # a DV delete over a table with a NULL partition keeps both legs
+    dp.delete_where_delta(spark, path, "doc_id", 0, 3, strategy="dv")
+    after = dp.read_delta(spark, path)
+    assert sorted(r["doc_id"] for r in after.collect()) == list(range(4, 20))
+    assert after.filter(F.col("lang").isNull()).count() == 8
 
 
 def test_datasource_reader_works_writer_refuses(spark, part_lake):
-    """format('minilake') READS a partitioned table fine (files are
-    self-contained), but the Python write paths refuse — they cannot
-    land partition tuples, which would silently disable pruning."""
+    """format('deltaproto') READS a partitioned table (partition values
+    rebuilt from the log), but it has no batch write path: a batch
+    `.write` refuses instead of landing files outside the log."""
     path, docs = part_lake
-    lakesource.register(spark)
-    got = spark.read.format("minilake").load(path)
+    deltastream.register(spark)
+    got = spark.read.format("deltaproto").load(path)
     assert got.count() == docs.count()
     assert "lang" in got.columns
-    with pytest.raises(Exception, match="PARTITIONED"):
-        docs.limit(5).write.format("minilake").mode("append").save(path)
+    n_versions = len(dp.delta_versions(path))
+    with pytest.raises(Exception):
+        docs.limit(5).write.format("deltaproto").mode("append").save(path)
+    assert len(dp.delta_versions(path)) == n_versions
 
 
 def test_timestamp_time_travel(spark, tmp_path, monkeypatch):
@@ -189,104 +191,85 @@ def test_timestamp_time_travel(spark, tmp_path, monkeypatch):
     past instant resolves to the last version committed by then."""
     import time as time_mod
 
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as mlk,
-    )
-
     path = str(tmp_path / "ts_lake")
     clock = {"now": 1_000.0}
     monkeypatch.setattr(time_mod, "time", lambda: clock["now"])
     df = spark.range(10).select(F.col("id").alias("doc_id"))
-    mlk.commit_append(df, path)  # v0 @ t=1000s
+    dp.write_delta(df, path)  # v0 @ t=1000s
     clock["now"] = 2_000.0
-    mlk.commit_append(df.withColumn("doc_id", F.col("doc_id") + 10), path)
+    dp.write_delta(df.withColumn("doc_id", F.col("doc_id") + 10), path)
     clock["now"] = 3_000.0
-    mlk.delete_where(spark, path, "doc_id", 0, 4)
+    dp.delete_where_delta(spark, path, "doc_id", 0, 4)
 
-    assert mlk.version_at_timestamp(path, 1_500_000) == 0
-    assert mlk.read_snapshot(spark, path, timestamp_ms=1_500_000).count() == 10
-    assert mlk.read_snapshot(spark, path, timestamp_ms=2_500_000).count() == 20
-    assert mlk.read_snapshot(spark, path, timestamp_ms=9_999_999).count() == 15
-    with pytest.raises(ValueError, match="no commit at or before"):
-        mlk.version_at_timestamp(path, 500_000)
+    assert dp.delta_version_at_timestamp(path, 1_500_000) == 0
+    assert dp.read_delta(spark, path, timestamp_ms=1_500_000).count() == 10
+    assert dp.read_delta(spark, path, timestamp_ms=2_500_000).count() == 20
+    assert dp.read_delta(spark, path, timestamp_ms=9_999_999).count() == 15
+    with pytest.raises(ValueError, match="no Delta commit at or before"):
+        dp.delta_version_at_timestamp(path, 500_000)
     with pytest.raises(ValueError, match="not both"):
-        mlk.read_snapshot(spark, path, version=0, timestamp_ms=1_500_000)
+        dp.read_delta(spark, path, version=0, timestamp_ms=1_500_000)
 
 
 def test_isnull_pruning_via_null_counts(spark, tmp_path):
-    """Null-count zone stats: files with provably zero NULLs in the
-    probed column are skipped by `scan_pruned_isnull`; files holding
-    the NULL rows are read and only those rows return."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as mlk,
-    )
-
+    """Per-file `nullCount` stats in the add actions: the files holding
+    the NULL rows are identifiable from the log alone (the others
+    record zero nulls), and the counts are exact."""
     path = str(tmp_path / "null_lake")
     df = spark.range(100).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") >= 20, F.col("id")).alias("maybe"),  # NULL < 20
     )
     # range-partition by doc_id (5 x 20-row files): the NULLs live
-    # entirely in the bottom file; the other four provably skip
-    mlk.commit_append(
-        df.repartitionByRange(5, "doc_id"),
-        path,
-        stat_cols=["doc_id", "maybe"],
-    )
-    out, n_read, n_skipped = mlk.scan_pruned_isnull(spark, path, "maybe")
-    assert n_skipped >= 3 and n_read <= 2
-    assert out.count() == 20
-    # and the zone metadata actually recorded the counts
-    zones = mlk._live_zones(path)
-    assert sum(z["nulls"]["maybe"] for z in zones.values()) == 20
+    # entirely in the bottom file; the other four record zero nulls
+    dp.write_delta(df.repartitionByRange(5, "doc_id"), path)
+    counts = [
+        json.loads(a["stats"])["nullCount"]["maybe"]
+        for a in _live(spark, path).values()
+    ]
+    assert sum(counts) == 20
+    assert sum(1 for c in counts if c == 0) >= 3
+    nulls = dp.read_delta(spark, path).filter(F.col("maybe").isNull())
+    assert sorted(r["doc_id"] for r in nulls.collect()) == list(range(20))
 
 
 def test_check_constraints_enforced_at_write_time(spark, tmp_path):
     """ALTER TABLE ADD CONSTRAINT: validated against existing rows,
-    enforced on append / stream batch / merge BEFORE anything lands
-    (SQL CHECK semantics: NULL passes), droppable, and visible in
-    describe_detail."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as mlk,
-    )
-
+    enforced on append / txn-keyed batch / merge BEFORE anything lands
+    (SQL CHECK semantics: NULL passes) and visible in the table
+    metadata."""
     path = str(tmp_path / "cons_lake")
     df = spark.range(10).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 3 == 0, F.col("id") * 2).alias("price"),
     )
-    mlk.commit_append(df, path)
-    mlk.add_constraint(spark, path, "price_nonneg", "price >= 0")
+    dp.write_delta(df, path)
+    dp.add_delta_constraint(spark, path, "price_nonneg", "price >= 0")
     with pytest.raises(ValueError, match="already exists"):
-        mlk.add_constraint(spark, path, "price_nonneg", "price >= 0")
+        dp.add_delta_constraint(spark, path, "price_nonneg", "price >= 0")
     # a constraint the current rows violate cannot be added
-    with pytest.raises(ValueError, match="existing rows violate"):
-        mlk.add_constraint(spark, path, "big_ids", "doc_id >= 5")
-    assert mlk.describe_detail(path)["constraints"] == {
-        "price_nonneg": "price >= 0"
-    }
+    with pytest.raises(ValueError, match="existing row"):
+        dp.add_delta_constraint(spark, path, "big_ids", "doc_id >= 5")
+    meta = dp._fold_delta_state(spark, path, None)[0]
+    assert dp._table_constraints(meta) == {"price_nonneg": "price >= 0"}
 
     good = spark.range(20, 25).select(
         F.col("id").alias("doc_id"), F.lit(None).cast("bigint").alias("price")
     )
-    mlk.commit_append(good, path)  # NULL price passes CHECK
+    dp.write_delta(good, path)  # NULL price passes CHECK
 
     bad = spark.range(30, 35).select(
         F.col("id").alias("doc_id"),
         (F.lit(-1) * F.col("id")).alias("price"),
     )
-    n_before = len(mlk._live_files(path))
+    n_before = len(_live(spark, path))
     with pytest.raises(ValueError, match="price_nonneg"):
-        mlk.commit_append(bad, path)
+        dp.write_delta(bad, path)
     with pytest.raises(ValueError, match="price_nonneg"):
-        mlk.commit_stream_batch(bad, path, batch_id=99)
+        dp.write_delta(bad, path, txn=("stream", 99))
     with pytest.raises(ValueError, match="price_nonneg"):
-        mlk.merge_upsert_lake(spark, bad, path, "doc_id")
+        dp.merge_upsert_delta(spark, bad, path, "doc_id")
     # rejected writes left no trace
-    assert len(mlk._live_files(path)) == n_before
-    assert 99 not in mlk.committed_stream_batches(path)
-    assert mlk.read_snapshot(spark, path).count() == 15
-
-    mlk.drop_constraint(path, "price_nonneg")
-    mlk.commit_append(bad, path)  # now allowed
-    assert mlk.read_snapshot(spark, path).count() == 20
+    assert len(_live(spark, path)) == n_before
+    assert "stream" not in dp.delta_txn_versions(spark, path)
+    assert dp.read_delta(spark, path).count() == 15

@@ -1,16 +1,15 @@
-"""Incremental materialized views (sources/lakeview.py): delta
-application parity vs full recompute across appends, both delete
-strategies, and maintenance; zero-group drops; idempotence; the
-merge fallback."""
+"""Incremental materialized views (sources/lakeview.py) over Delta
+tables: delta application parity vs full recompute across appends,
+both delete strategies, maintenance and MERGE; zero-group drops;
+idempotence through the view's `txn` sync position."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+    deltaproto as dp,
     lakeview,
-    minilake,
 )
 
 
@@ -25,14 +24,14 @@ def _df(spark, lo, hi):
 def _view_rows(spark, view):
     return sorted(
         (r["grp"], r["n_rows"], r["sum_value"])
-        for r in minilake.read_snapshot(spark, view).collect()
+        for r in dp.read_delta(spark, view).collect()
     )
 
 
 def _expected(spark, base):
     return sorted(
         (r["grp"], r["n_rows"], r["sum_value"])
-        for r in minilake.read_snapshot(spark, base)
+        for r in dp.read_delta(spark, base)
         .groupBy("grp")
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),
@@ -45,61 +44,65 @@ def _expected(spark, base):
 def test_incremental_refresh_parity_and_idempotence(spark, tmp_path):
     base = str(tmp_path / "base")
     view = str(tmp_path / "view")
-    minilake.commit_append(
-        _df(spark, 0, 80).repartitionByRange(4, "doc_id"),
-        base,
-        stat_cols=["doc_id"],
-    )
+    dp.write_delta(_df(spark, 0, 80).repartitionByRange(4, "doc_id"), base)
     lakeview.refresh(spark, base, view, ["grp"], "val")  # bootstrap
     assert _view_rows(spark, view) == _expected(spark, base)
 
     # append + both delete strategies + compaction, one refresh
-    minilake.commit_append(_df(spark, 80, 120), base)
-    minilake.delete_where(spark, base, "doc_id", 10, 29)
-    minilake.delete_where(spark, base, "doc_id", 50, 59, strategy="dv")
-    minilake.compact(spark, base)
+    dp.write_delta(_df(spark, 80, 120), base)
+    dp.delete_where_delta(spark, base, "doc_id", 10, 29)
+    dp.delete_where_delta(spark, base, "doc_id", 50, 59, strategy="dv")
+    dp.compact_delta(spark, base)
     assert lakeview.refresh(spark, base, view, ["grp"], "val") is not None
     assert _view_rows(spark, view) == _expected(spark, base)
 
     # already current: no-op; re-running stays exact (idempotent)
+    view_vs = dp.delta_versions(view)
     assert lakeview.refresh(spark, base, view, ["grp"], "val") is None
     assert _view_rows(spark, view) == _expected(spark, base)
+    # a replayed full refresh at the synced base version is dropped by
+    # the view's txn position: no new view commit
+    base_v = dp.delta_versions(base)[-1]
+    assert dp.delta_txn_versions(spark, view) == {"lakeview": base_v}
+    lakeview.full_refresh(spark, base, view, ["grp"], "val")
+    assert dp.delta_versions(view) == view_vs
 
 
 def test_group_drops_to_zero(spark, tmp_path):
     base = str(tmp_path / "base")
     view = str(tmp_path / "view")
-    minilake.commit_append(
-        _df(spark, 0, 8).repartitionByRange(2, "doc_id"),
-        base,
-        stat_cols=["doc_id"],
-    )
+    dp.write_delta(_df(spark, 0, 8).repartitionByRange(2, "doc_id"), base)
     lakeview.refresh(spark, base, view, ["grp"], "val")
     # delete every row of grp '3' (ids 3 and 7)
-    minilake.delete_where(spark, base, "doc_id", 3, 3)
-    minilake.delete_where(spark, base, "doc_id", 7, 7)
+    dp.delete_where_delta(spark, base, "doc_id", 3, 3)
+    dp.delete_where_delta(spark, base, "doc_id", 7, 7)
     lakeview.refresh(spark, base, view, ["grp"], "val")
     got = _view_rows(spark, view)
     assert all(g != "3" for g, _n, _s in got)  # group gone, not zero-row
     assert got == _expected(spark, base)
 
 
-def test_merge_falls_back_to_full_refresh(spark, tmp_path):
+def test_merge_refreshes_incrementally_and_equals_full_refresh(spark, tmp_path):
+    """A MERGE commit's change feed carries update_preimage (-1) and
+    update_postimage (+1) rows plus inserts, so the view refreshes
+    incrementally across it and equals a from-scratch full refresh."""
     base = str(tmp_path / "base")
     view = str(tmp_path / "view")
-    minilake.commit_append(_df(spark, 0, 40), base, stat_cols=["doc_id"])
+    full = str(tmp_path / "full")
+    dp.write_delta(_df(spark, 0, 40), base)
     lakeview.refresh(spark, base, view, ["grp"], "val")
-    minilake.merge_upsert_lake(
+    # keys 30..44: 30..39 update (val 999), 40..44 insert
+    dp.merge_upsert_delta(
         spark,
-        _df(spark, 10, 15).withColumn("val", F.lit(999).cast("bigint")),
+        _df(spark, 30, 45).withColumn("val", F.lit(999).cast("bigint")),
         base,
         "doc_id",
     )
-    with pytest.raises(ValueError, match="merge"):
-        lakeview.refresh(spark, base, view, ["grp"], "val")
-    lakeview.full_refresh(spark, base, view, ["grp"], "val")
+    assert lakeview.refresh(spark, base, view, ["grp"], "val") is not None
     assert _view_rows(spark, view) == _expected(spark, base)
-    # and incremental refresh resumes from the new position
-    minilake.commit_append(_df(spark, 100, 120), base)
+    lakeview.full_refresh(spark, base, full, ["grp"], "val")
+    assert _view_rows(spark, view) == _view_rows(spark, full)
+    # and incremental refresh keeps going from the new position
+    dp.write_delta(_df(spark, 100, 120), base)
     lakeview.refresh(spark, base, view, ["grp"], "val")
     assert _view_rows(spark, view) == _expected(spark, base)

@@ -266,21 +266,12 @@ def test_loud_refusals(spark, sf_dir, tmp_path):
             "AND t.source = s.source WHEN MATCHED THEN UPDATE SET * "
             "WHEN NOT MATCHED THEN INSERT *",
         )
-    # r15 narrowed the IN-list refusal: delta DELETE … IN now lowers
-    # onto the general predicate rewrite; the refusal remains only on
-    # the minilake tier, which has no general rewrite
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as _ml,
-    )
-
-    mlp = str(tmp_path / "ref_ml")
-    _ml.commit_append(docs.limit(5), mlp, stat_cols=["doc_id"])
-    lq.register_lake_table("t_refuse_ml", "minilake", mlp)
-    with pytest.raises(ValueError, match="delta/iceberg"):
-        lq.lake_sql(spark, "DELETE FROM t_refuse_ml WHERE doc_id IN (1, 2)")
-    with pytest.raises(ValueError, match="delta/iceberg"):
+    # the retired commit-log format is no longer a registrable tier
+    with pytest.raises(ValueError, match="unknown format 'minilake'"):
+        lq.register_lake_table("t_refuse_ml", "minilake", p)
+    with pytest.raises(ValueError, match="unsupported"):
         lq.lake_sql(
-            spark, "DELETE FROM t_refuse_ml WHERE doc_id < 2 OR lang = 'xx'"
+            spark, "CREATE TABLE t_refuse_ml USING minilake AS SELECT 1 AS x"
         )
     with pytest.raises(ValueError, match="cannot parse MERGE"):
         lq.lake_sql(
@@ -523,20 +514,16 @@ def test_merge_delete_both_tiers(spark, sf_dir, tmp_path):
 
 
 def test_minilake_full_sql_lifecycle(spark, sf_dir, tmp_path):
-    """The minilake tier through the dispatcher: CTAS, MERGE upsert,
-    range DELETE, INSERT OVERWRITE, OPTIMIZE, VACUUM, DESCRIBE
-    HISTORY, SHOW TABLES — each lowering onto the zone-map-pruned
-    helpers, content pinned at every step."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
+    """The full SQL lifecycle through the dispatcher on a Delta table
+    (the tier that replaced the engine's own commit-log format): CTAS,
+    MERGE upsert, range DELETE, OPTIMIZE, VACUUM, DESCRIBE HISTORY,
+    INSERT OVERWRITE, SHOW TABLES — content pinned at every step."""
     docs = _docs(spark, sf_dir)
     docs.limit(100).createOrReplaceTempView("ml_src")
     loc = str(tmp_path / "ml_t")
     lq.lake_sql(
         spark,
-        f"CREATE TABLE t_ml_sql USING minilake LOCATION '{loc}' AS "
+        f"CREATE TABLE t_ml_sql USING delta LOCATION '{loc}' AS "
         "SELECT doc_id, lang, text FROM ml_src",
     )
     ups = (
@@ -551,12 +538,12 @@ def test_minilake_full_sql_lifecycle(spark, sf_dir, tmp_path):
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
     )
     lq.lake_sql(spark, "DELETE FROM t_ml_sql WHERE doc_id BETWEEN 50 AND 69")
-    snap = minilake.read_snapshot(spark, loc)
+    snap = dp.read_delta(spark, loc)
     assert snap.count() == 80
     assert snap.filter("doc_id < 10 AND text <> UPPER(text)").count() == 0
     lq.lake_sql(spark, "OPTIMIZE t_ml_sql")
     lq.lake_sql(spark, "VACUUM t_ml_sql RETAIN 0 HOURS")
-    assert minilake.read_snapshot(spark, loc).count() == 80
+    assert dp.read_delta(spark, loc).count() == 80
     hist = lq.lake_sql(spark, "DESCRIBE HISTORY t_ml_sql").collect()
     assert [h["version"] for h in hist] == [3, 2, 1, 0]
     lq.lake_sql(
@@ -564,12 +551,12 @@ def test_minilake_full_sql_lifecycle(spark, sf_dir, tmp_path):
         "INSERT OVERWRITE t_ml_sql SELECT doc_id, lang, text FROM "
         "ml_src WHERE doc_id < 5",
     )
-    assert minilake.read_snapshot(spark, loc).count() == 5
+    assert dp.read_delta(spark, loc).count() == 5
     shown = {
         (r["name"], r["format"])
         for r in lq.lake_sql(spark, "SHOW TABLES").collect()
     }
-    assert ("t_ml_sql", "minilake") in shown
+    assert ("t_ml_sql", "delta") in shown
     lq.lake_sql(spark, "DROP TABLE t_ml_sql")
 
 

@@ -1,142 +1,61 @@
+"""Delta tables (sources/deltaproto.py): the point-lookup entry, and a
+VARIANT column composing with per-file stats, pruning and deletion
+vectors.  The module and test names are kept so the suite's test ids
+stay stable."""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+    deltaproto as dp,
+)
 
 
-def test_bloom_equality_skipping_and_carry(spark, tmp_path):
-    """Bloom tier: on a HIGH-CARDINALITY UNSORTED column every file's
-    [min, max] zone contains any probe (range zones skip nothing), but
-    the per-file bloom prunes point lookups to ~the one true file;
-    zero false skips (probed values always found); the index survives
-    a compaction rewrite (carry like stat columns)."""
-    import random
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
-    rnd = random.Random(11)
-    # tokens randomly scattered across files: min/max spans everything
-    rows = [(i, f"tok-{rnd.randrange(0, 10**9):09d}") for i in range(8000)]
-    df = spark.createDataFrame(rows, "doc_id bigint, token string")
-    path = str(tmp_path / "lake")
-    minilake.commit_append(
-        df.repartition(8), path, stat_cols=["token"], bloom_cols=["token"]
-    )
-    probes = [rows[13][1], rows[4321][1], rows[7999][1]]
-    for probe in probes:
-        got, nread, nskip = minilake.scan_pruned_eq(spark, path, "token", probe)
-        assert nskip > 0, "bloom pruned nothing"
-        vals = [r["doc_id"] for r in got.collect()]
-        assert vals == [
-            i for i, (di, t) in enumerate(rows) if t == probe
-        ]  # zero false skips
-    # range-zone tier alone cannot prune this layout
-    _g, _r, range_skips = minilake.scan_pruned(
-        spark, path, "token", probes[0], probes[0]
-    )
-    # a value absent from the table skips (almost) every file
-    _g2, nread2, nskip2 = minilake.scan_pruned_eq(
-        spark, path, "token", "tok-nonexistent"
-    )
-    assert nread2 <= 1 and nskip2 >= 7
-    # compaction carries the bloom index forward
-    minilake.compact(spark, path, target_mb=1)
-    zones = minilake._live_zones(path)
-    assert any("bloom" in (z or {}) for z in zones.values())
-    got3, _r3, nskip3 = minilake.scan_pruned_eq(spark, path, "token", probes[0])
-    assert sorted(r["doc_id"] for r in got3.collect()) == sorted(
-        i for i, (di, t) in enumerate(rows) if t == probes[0]
-    )
-
-def test_bloom_lookup_entry_matches_and_skips(spark):
-    """The driver-gate entry surfaces exactly the probed docs, and on
-    its 8-file hash-distributed lake the bloom tier is doing the
-    pruning: present keys skip most files, absent keys read none."""
-    import hashlib
-    import os
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.functions.scale import (
-        default_index_dir,
-    )
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    got = minilake.bloom_lookup_entry(spark, sf_dir).collect()
-    assert [r["doc_id"] for r in got] == sorted(minilake._BLOOM_PROBE_IDS)
-
-    path = os.path.join(
-        default_index_dir(
-            "minilake_bloom", minilake._BLOOM_LAKE_VERSION, sf_dir
-        ),
-        "docs_lake_bloom",
-    )
-    for i in minilake._BLOOM_PROBE_IDS:
-        key = hashlib.md5(str(i).encode()).hexdigest()
-        _df, nread, nskip = minilake.scan_pruned_eq(spark, path, "key", key)
-        assert nskip >= 6 and nread <= 2  # bloom pruned the point lookup
-    for key in minilake._BLOOM_ABSENT_KEYS:
-        _df, nread, nskip = minilake.scan_pruned_eq(spark, path, "key", key)
-        assert nread <= 1  # absent key: (almost) everything skipped
+def test_bloom_lookup_entry_matches_and_skips(spark, sf_dir):
+    """The point-lookup entry surfaces exactly the probed docs: every
+    present key once, the absent keys nothing, in doc_id order."""
+    df = dp.bloom_lookup_entry(spark, sf_dir)
+    assert df.columns == ["doc_id", "source", "lang", "n_chars"]
+    assert [r["doc_id"] for r in df.collect()] == sorted(dp._BLOOM_PROBE_IDS)
 
 
 def test_variant_column_with_zone_maps_and_dv(spark, tmp_path):
-    """A VARIANT column in a minilake table (r11): the zone-map
-    collector routes through the JVM footer fallback (pyarrow cannot
-    open variant files), so SIBLING columns keep their min/max
-    skipping stats and blooms degrade gracefully; reads, pruning, and
-    DV deletes all compose; files land UNSHREDDED like the other lake
-    writers."""
-    from pyspark.sql import functions as F
+    """A VARIANT column in a Delta table: the add actions keep min/max
+    stats for the SIBLING columns (none for the variant), so stats
+    pruning still works; reads and DV deletes compose."""
+    import json
 
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        minilake as ml,
-    )
-
-    path = str(tmp_path / "mlvar")
+    path = str(tmp_path / "dvar")
     df = spark.range(40).select(
         F.col("id").cast("bigint").alias("doc_id"),
         (F.col("id") % 2).cast("string").alias("lang"),
         F.parse_json(F.format_string('{"a": %d}', "id")).alias("props"),
     )
-    ml.commit_append(
-        df.repartitionByRange(4, "doc_id"), path,
-        stat_cols=["doc_id", "lang"], bloom_cols=["doc_id"],
-    )
-    back = ml.read_snapshot(spark, path)
+    dp.write_delta(df.repartitionByRange(4, "doc_id"), path)
+    back = dp.read_delta(spark, path)
     assert back.schema["props"].dataType.typeName() == "variant"
     got = sorted(
-        r[0]
-        for r in back.select(
-            F.variant_get("props", "$.a", "long")
-        ).collect()
+        r[0] for r in back.select(F.variant_get("props", "$.a", "long")).collect()
     )
     assert got == list(range(40))
-    # sibling zone maps present on every file (JVM footer fallback)
-    import json as _json
-    import os as _os
-
-    commit = _json.load(
-        open(sorted(
-            _os.path.join(ml._log_dir(path), f)
-            for f in _os.listdir(ml._log_dir(path))
-            if f.endswith(".json")
-        )[0])
-    )
-    zones = commit["zones"]
-    assert len(zones) == 4
-    for z in zones.values():
-        assert z["rows"] > 0
-        assert "doc_id" in z["stats"] and "lang" in z["stats"]
-        assert "props" not in z["stats"]
+    # sibling stats present on every file
+    live = dp._fold_delta_state(spark, path, None)[1]
+    assert len(live) == 4
+    for a in live.values():
+        stats = json.loads(a["stats"])
+        assert stats["numRecords"] > 0
+        assert "doc_id" in stats["minValues"] and "lang" in stats["minValues"]
+        assert "props" not in stats["minValues"]
     # range pruning still works through the variant table
-    pruned, n_read, n_skip = ml.scan_pruned(spark, path, "doc_id", 0, 9)
+    pruned, n_read, n_skip = dp.read_delta_pruned(spark, path, "doc_id", 0, 9)
     assert sorted(r["doc_id"] for r in pruned.collect()) == list(range(10))
     assert n_skip > 0
     # DV delete composes with the variant column
-    ml.delete_where(spark, path, "doc_id", 5, 14, strategy="dv")
+    dp.delete_where_delta(spark, path, "doc_id", 5, 14, strategy="dv")
     left = sorted(
         r[0]
-        for r in ml.read_snapshot(spark, path)
+        for r in dp.read_delta(spark, path)
         .select(F.variant_get("props", "$.a", "long"))
         .collect()
     )

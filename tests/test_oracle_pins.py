@@ -18,6 +18,9 @@ composites then join or union two frames that share that one plan.
 Every `mm_*` entry also runs on two degenerate copies of the fixture,
 `documents` cut to zero rows and to its single lowest `doc_id`: its
 schema must not change, and its rows must still equal the oracle's.
+The `LAKE` entries (Delta-table lifecycles built once per fixture
+directory) are pinned on the full fixture and on both degenerate
+copies.
 """
 
 from __future__ import annotations
@@ -58,6 +61,19 @@ PINNED = [
     "lake_iceberg_upsert_atomic",
     "lake_iceberg_changes_eq",
     "lake_iceberg_v2_deletes",
+]
+
+#: Entries that run a Delta-table lifecycle (write, DELETE, DV delete,
+#: OPTIMIZE, partitions, change feed, incremental view) before their
+#: aggregate.
+LAKE = [
+    "lake_documents_roundtrip",
+    "lake_partitioned_scan",
+    "lake_changes_feed",
+    "lake_dv_roundtrip",
+    "lake_bloom_lookup",
+    "lake_incremental_view",
+    "med_q02_lake_table",
 ]
 
 #: Oracle-bearing multimodal entries, composites included.
@@ -122,7 +138,7 @@ def _assert_matches_oracle(sdf, duck, name):
     )
 
 
-@pytest.mark.parametrize("name", PINNED + MULTIMODAL)
+@pytest.mark.parametrize("name", PINNED + MULTIMODAL + LAKE)
 def test_pinned_entry_matches_oracle(spark, sf_dir, duck, name):
     queries = entry.queries()
     assert name in queries, f"{name} dropped from queries()"
@@ -134,6 +150,7 @@ def test_multimodal_entries_selected():
     assert len(MULTIMODAL) >= 15
     assert {"mm_image_meta_resize", "mm_frame_audio"} <= set(MULTIMODAL)
     assert not set(PINNED) & set(MULTIMODAL)
+    assert not set(PINNED + MULTIMODAL) & set(LAKE)
 
 
 def test_medications_derived_entries_selected():
@@ -142,12 +159,7 @@ def test_medications_derived_entries_selected():
     )
 
 
-@pytest.mark.parametrize(
-    "name", [n for n in entry.queries() if n.startswith("mm_")]
-)
-def test_multimodal_entry_on_degenerate_documents(
-    spark, sf_dir, degenerate_dir, name
-):
+def _assert_degenerate_matches_oracle(spark, sf_dir, degenerate_dir, name):
     build = entry.queries()[name]
     sdf = build(spark, degenerate_dir)
     assert sdf.schema == build(spark, sf_dir).schema
@@ -159,6 +171,20 @@ def test_multimodal_entry_on_degenerate_documents(
         _assert_matches_oracle(sdf, con, name)
     finally:
         con.close()
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in entry.queries() if n.startswith("mm_")]
+)
+def test_multimodal_entry_on_degenerate_documents(
+    spark, sf_dir, degenerate_dir, name
+):
+    _assert_degenerate_matches_oracle(spark, sf_dir, degenerate_dir, name)
+
+
+@pytest.mark.parametrize("name", LAKE)
+def test_lake_entry_on_degenerate_documents(spark, sf_dir, degenerate_dir, name):
+    _assert_degenerate_matches_oracle(spark, sf_dir, degenerate_dir, name)
 
 
 @pytest.mark.parametrize("name", MEDICATIONS_DERIVED)

@@ -1525,47 +1525,58 @@ def test_dashboard_registry_serves_batch_dashboard(spark, sf_dir, tmp_path):
 
 
 def test_lake_stream_sink_exactly_once_and_cdc(spark, sf_dir, tmp_path):
-    """Streaming into the commit-log table: one commit per micro-batch,
-    a replayed batch id is a NO-OP (exactly-once on top of
-    at-least-once foreachBatch), and incremental readers scan only the
-    files of the commits in their version range — never the table."""
+    """Streaming into a Delta table: one txn-keyed commit per
+    micro-batch, a replayed batch id is a NO-OP (exactly-once on top of
+    at-least-once delivery), and the change feed of a version range
+    holds exactly the rows those commits added — an overwrite shows up
+    as exact delete + insert legs."""
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        load_table,
-        minilake,
+        deltaproto as dp,
+        deltastream,
     )
 
+    deltastream.register(spark)
     path = str(tmp_path / "lake_stream")
     stream = jobs.documents_stream(spark, sf_dir, max_files_per_trigger=1)
-    minilake.lake_stream_sink(stream, path)
+    q = (
+        stream.writeStream.format("deltaproto")
+        .option("path", path)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
 
     docs = load_table(spark, sf_dir, "documents")
-    snap = minilake.read_snapshot(spark, path)
-    assert snap.count() == docs.count()
-    vs = minilake.versions(path)
+    assert dp.read_delta(spark, path).count() == docs.count()
+    vs = dp.delta_versions(path)
     assert len(vs) >= 1
 
     # retry of an already-committed batch id: no new version, no dupes
-    some_batch = sorted(minilake.committed_stream_batches(path))[0]
-    assert (
-        minilake.commit_stream_batch(docs.limit(5), path, some_batch) is None
-    )
-    assert minilake.versions(path) == vs
-    assert minilake.read_snapshot(spark, path).count() == docs.count()
+    app, last_batch = next(iter(dp.delta_txn_versions(spark, path).items()))
+    replay = dp.read_delta(spark, path).limit(5)
+    assert dp.write_delta(replay, path, txn=(app, last_batch)) == vs[-1]
+    assert dp.delta_versions(path) == vs
+    assert dp.read_delta(spark, path).count() == docs.count()
 
-    # CDC: rows added after version v are exactly the later commits
+    # CDF: rows added after version `mid` are exactly the later commits
     mid = vs[len(vs) // 2]
-    changes = minilake.read_changes(spark, path, since_version=mid)
-    upto = minilake.read_snapshot(spark, path, version=mid)
+    changes = dp.read_changes_delta(spark, path, since_version=mid + 1)
+    upto = dp.read_delta(spark, path, version=mid)
     assert changes.count() == docs.count() - upto.count()
     # disjointness: no doc appears in both the snapshot and the delta
     assert upto.join(changes, "doc_id", "inner").count() == 0
 
-    # an overwrite in the range breaks incremental consumption loudly
-    minilake.commit_overwrite(docs.limit(3), path)
-    import pytest
-
-    with pytest.raises(ValueError, match="re-sync"):
-        minilake.read_changes(spark, path, since_version=mid)
+    # an overwrite is an exact delete of the old snapshot + its inserts
+    v_over = dp.write_delta(replay.limit(3), path, mode="overwrite")
+    legs = {
+        r["_change_type"]: r["count"]
+        for r in dp.read_changes_delta(spark, path, since_version=v_over)
+        .groupBy("_change_type")
+        .count()
+        .collect()
+    }
+    assert legs == {"delete": docs.count(), "insert": 3}
 
 
 def test_gated_registry_matches_ungated_and_prunes(spark, sf_dir, tmp_path):
@@ -1616,25 +1627,25 @@ def test_gated_registry_matches_ungated_and_prunes(spark, sf_dir, tmp_path):
 
 
 def test_minilake_datasource_batch_and_stream(spark, sf_dir, tmp_path):
-    """format('minilake'): batch read equals the snapshot; the stream's
-    offsets are commit versions — the first micro-batch is the
-    committed history, appends BETWEEN triggers arrive as exactly
-    their delta rows, and a checkpoint restart resumes from the stored
-    version without re-emitting consumed commits."""
+    """format('deltaproto'): batch read equals the snapshot; the stream's
+    offsets are log versions — the first micro-batch is the committed
+    history, appends BETWEEN triggers arrive as exactly their delta
+    rows, and a checkpoint restart resumes from the stored version
+    without re-emitting consumed commits."""
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-        minilake,
+        deltaproto as dp,
+        deltastream,
     )
 
-    lakesource.register(spark)
+    deltastream.register(spark)
     path = str(tmp_path / "lake_src")
     df1 = spark.range(40).withColumn("v", F.col("id") * 2)
     df2 = spark.range(40, 50).withColumn("v", F.col("id") * 2)
-    minilake.commit_append(df1, path)
+    dp.write_delta(df1, path)
 
     # batch parity with the native snapshot read
-    got = spark.read.format("minilake").load(path)
-    want = minilake.read_snapshot(spark, path)
+    got = spark.read.format("deltaproto").load(path)
+    want = dp.read_delta(spark, path)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     # stream: drain history, append, drain the delta — same checkpoint
@@ -1643,7 +1654,7 @@ def test_minilake_datasource_batch_and_stream(spark, sf_dir, tmp_path):
 
     def drain() -> None:
         q = (
-            spark.readStream.format("minilake")
+            spark.readStream.format("deltaproto")
             .load(path)
             .writeStream.format("parquet")
             .option("checkpointLocation", ckpt)
@@ -1655,12 +1666,12 @@ def test_minilake_datasource_batch_and_stream(spark, sf_dir, tmp_path):
 
     drain()
     assert spark.read.parquet(out).count() == 40
-    minilake.commit_append(df2, path)
+    dp.write_delta(df2, path)
     drain()
     result = spark.read.parquet(out)
     assert result.count() == 50  # only the 10 new rows were appended
     assert sorted(map(tuple, result.collect())) == sorted(
-        map(tuple, minilake.read_snapshot(spark, path).collect())
+        map(tuple, dp.read_delta(spark, path).collect())
     )
 
 
@@ -1723,124 +1734,83 @@ def test_stream_stream_full_outer_join_matches_batch(spark, sf_dir):
     assert got_null_clicks and got_null_purch
 
 
-def test_lake_stream_sink_auto_compacts_small_files(spark, sf_dir, tmp_path):
-    """The small-file maintenance rule: a per-file-trigger drain leaves
-    one small commit per micro-batch; with `auto_compact_files` the
-    post-drain pass compacts once the live-file count crosses the
-    threshold — row parity holds, the pre-compaction version stays
-    travelable, and a second drain with nothing new is a no-op that
-    compacts nothing."""
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        load_table,
-        minilake,
-    )
-
-    path = str(tmp_path / "lake_autocompact")
-    docs = load_table(spark, sf_dir, "documents")
-    # three seed appends of disjoint id-offset slices: small files that
-    # never collide with the streamed rows
-    offset = docs.withColumn("doc_id", -F.col("doc_id") - 1)
-    for i in range(3):
-        minilake.commit_append(
-            offset.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(1),
-            path,
-        )
-    assert len(minilake._live_files(path)) >= 3
-
-    stream = jobs.documents_stream(spark, sf_dir, max_files_per_trigger=1)
-    minilake.lake_stream_sink(stream, path, auto_compact_files=2)
-    total = docs.count() * 2
-    hist = minilake.history(path)
-    assert hist[-1]["mode"] == "compact"
-    live_after = minilake._live_files(path)
-    assert len(live_after) <= 2
-    assert minilake.read_snapshot(spark, path).count() == total
-    # pre-compaction snapshot still readable
-    pre = hist[-1]["version"] - 1
-    assert minilake.read_snapshot(spark, path, version=pre).count() == total
-
-    # under threshold: maybe_compact declines
-    assert minilake.maybe_compact(spark, path, max_live_files=64) is None
-
-    # re-drain the same source: every batch id already committed → no
-    # appends, still under threshold → no second compaction
-    n_versions = len(minilake.versions(path))
-    stream2 = jobs.documents_stream(spark, sf_dir, max_files_per_trigger=1)
-    minilake.lake_stream_sink(stream2, path, auto_compact_files=2)
-    assert len(minilake.versions(path)) == n_versions
-    assert minilake.read_snapshot(spark, path).count() == total
-
-
 def test_minilake_datasource_writer_two_phase_commit(spark, sf_dir, tmp_path):
-    """format('minilake') WRITE path: each append/overwrite is exactly
-    ONE log commit regardless of task count, append enforces the table
-    schema contract, overwrite removes the prior live set, and the
-    written table reads back identically through both the native
-    snapshot and the DataSource reader."""
-    import pyspark.sql.utils  # noqa: F401
+    """format('deltaproto') WRITE path (the streaming sink): tasks land
+    files and each micro-batch commits as exactly ONE log version
+    regardless of task count, a later batch appends, the sink
+    enforces the table schema, and the written table reads back
+    identically through read_delta and the DataSource reader."""
     import pytest
 
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-        minilake,
+        deltaproto as dp,
+        deltastream,
     )
 
-    lakesource.register(spark)
+    deltastream.register(spark)
+    src = str(tmp_path / "src")
     path = str(tmp_path / "lake_write")
-    df1 = spark.range(60).withColumn("v", F.col("id") * 3)
-    df1.repartition(4).write.format("minilake").mode("append").save(path)
-    assert [h["mode"] for h in minilake.history(path)] == ["append"]
-    assert minilake.read_snapshot(spark, path).count() == 60
+    ckpt = str(tmp_path / "ckpt")
 
-    df2 = spark.range(60, 75).withColumn("v", F.col("id") * 3)
-    df2.write.format("minilake").mode("append").save(path)
-    hist = minilake.history(path)
-    assert [h["mode"] for h in hist] == ["append", "append"]
-    snap = minilake.read_snapshot(spark, path)
+    def drain(schema="id bigint, v bigint", ckpt_dir=ckpt):
+        q = (
+            spark.readStream.schema(schema)
+            .parquet(src)
+            .writeStream.format("deltaproto")
+            .option("path", path)
+            .option("checkpointLocation", ckpt_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+
+    spark.range(60).withColumn("v", F.col("id") * 3).repartition(4).write.parquet(src)
+    drain()
+    hist = dp.delta_history(path)
+    assert [h["operation"] for h in hist] == ["STREAMING UPDATE"]
+    assert hist[0]["n_added"] > 1  # several task files, one commit
+    assert dp.read_delta(spark, path).count() == 60
+
+    spark.range(60, 75).withColumn("v", F.col("id") * 3).write.mode(
+        "append"
+    ).parquet(src)
+    drain()
+    assert len(dp.delta_history(path)) == 2
+    snap = dp.read_delta(spark, path)
     assert snap.count() == 75
 
     # read-back parity through the DataSource reader
-    got = spark.read.format("minilake").load(path)
+    got = spark.read.format("deltaproto").load(path)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, snap.collect())
     )
 
-    # schema contract: a type-changed append fails loudly
-    bad = spark.range(3).withColumn("v", F.lit("oops"))
-    with pytest.raises(Exception, match="column types|missing table"):
-        bad.write.format("minilake").mode("append").save(path)
-    assert len(minilake.versions(path)) == 2
-
-    # overwrite: one commit, prior live set removed, still travelable
-    df3 = spark.range(5).withColumn("v", F.lit(0).cast("long"))
-    df3.write.format("minilake").mode("overwrite").save(path)
-    hist = minilake.history(path)
-    assert hist[-1]["mode"] == "overwrite" and hist[-1]["n_removed"] > 0
-    assert minilake.read_snapshot(spark, path).count() == 5
-    assert minilake.read_snapshot(spark, path, version=1).count() == 75
+    # schema contract: a type-changed stream fails loudly
+    with pytest.raises(Exception, match="schema differs"):
+        drain("id bigint, v string", str(tmp_path / "ckpt_bad"))
+    assert len(dp.delta_versions(path)) == 2
 
 
 def test_minilake_native_stream_sink_exactly_once(spark, sf_dir, tmp_path):
-    """writeStream.format('minilake'): one batch-id-keyed commit per
+    """writeStream.format('deltaproto'): one txn-keyed commit per
     micro-batch; a re-drain from a FRESH checkpoint replays the same
     batch ids and commits nothing (exactly-once over at-least-once
     replay), leaving no duplicate rows and no new versions."""
     import tempfile
 
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-        load_table,
-        minilake,
+        deltaproto as dp,
+        deltastream,
     )
 
-    lakesource.register(spark)
+    deltastream.register(spark)
     path = str(tmp_path / "native_sink_lake")
 
     def drain():
         stream = jobs.documents_stream(spark, sf_dir, max_files_per_trigger=1)
         with tempfile.TemporaryDirectory() as ckpt:
             q = (
-                stream.writeStream.format("minilake")
+                stream.writeStream.format("deltaproto")
                 .option("path", path)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
@@ -1850,22 +1820,21 @@ def test_minilake_native_stream_sink_exactly_once(spark, sf_dir, tmp_path):
 
     drain()
     docs = load_table(spark, sf_dir, "documents")
-    assert minilake.read_snapshot(spark, path).count() == docs.count()
-    vs = minilake.versions(path)
-    batches = minilake.committed_stream_batches(path)
-    assert len(vs) == len(batches) >= 1
+    assert dp.read_delta(spark, path).count() == docs.count()
+    vs = dp.delta_versions(path)
+    assert len(vs) >= 1
     assert all(
-        "stream_batch_id" in minilake._read_commit(path, v) for v in vs
+        any("txn" in a for a in dp._read_actions(path, v)) for v in vs
     )
 
     # fresh checkpoint → the engine replays batch ids from 0; every
     # commit must no-op
     drain()
-    assert minilake.versions(path) == vs
-    assert minilake.read_snapshot(spark, path).count() == docs.count()
+    assert dp.delta_versions(path) == vs
+    assert dp.read_delta(spark, path).count() == docs.count()
     # replayed batches left no visible duplicates
     assert (
-        minilake.read_snapshot(spark, path)
+        dp.read_delta(spark, path)
         .groupBy("doc_id")
         .count()
         .filter(F.col("count") > 1)
@@ -1876,20 +1845,20 @@ def test_minilake_native_stream_sink_exactly_once(spark, sf_dir, tmp_path):
 
 def test_lake_stream_source_feeds_dedup_registry(spark, sf_dir, tmp_path):
     """Composition across the format's quadrants: documents land in a
-    minilake table (with injected exact duplicates), the table's
-    STREAM SOURCE feeds the incremental dedup registry, and the
-    registry's keeper set equals the batch exact-dedup answer over the
-    lake snapshot.  New appends then flow through as deltas — the
-    registry adds only genuinely new fingerprints."""
+    Delta table (with injected exact duplicates), the table's
+    format('deltaproto') STREAM SOURCE feeds the incremental dedup
+    registry, and the registry's keeper set equals the batch
+    exact-dedup answer over the snapshot.  New appends then flow
+    through as deltas — the registry adds only genuinely new
+    fingerprints."""
     import glob
 
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-        load_table,
-        minilake,
+        deltaproto as dp,
+        deltastream,
     )
 
-    lakesource.register(spark)
+    deltastream.register(spark)
     lake = str(tmp_path / "corpus_lake")
     reg = str(tmp_path / "registry")
 
@@ -1899,14 +1868,14 @@ def test_lake_stream_source_feeds_dedup_registry(spark, sf_dir, tmp_path):
     dupes = docs.limit(20).withColumn(
         "doc_id", F.col("doc_id") + 10_000_000
     )
-    minilake.commit_append(docs, lake)
-    minilake.commit_append(dupes, lake)
+    dp.write_delta(docs, lake)
+    dp.write_delta(dupes, lake)
 
-    stream = spark.readStream.format("minilake").load(lake)
+    stream = spark.readStream.format("deltaproto").load(lake)
     jobs.corpus_registry_ingest(stream, reg)
 
     registry = spark.read.parquet(*glob.glob(f"{reg}/batch=*"))
-    snap = minilake.read_snapshot(spark, lake)
+    snap = dp.read_delta(spark, lake)
     normalized = F.trim(
         F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]+", " ")
     )
@@ -1931,29 +1900,29 @@ def test_lake_stream_source_feeds_dedup_registry(spark, sf_dir, tmp_path):
     more_dupes = docs.limit(1).withColumn(
         "doc_id", F.col("doc_id") + 30_000_000
     )
-    minilake.commit_append(fresh.unionByName(more_dupes), lake)
-    stream2 = spark.readStream.format("minilake").load(lake)
+    dp.write_delta(fresh.unionByName(more_dupes), lake)
+    stream2 = spark.readStream.format("deltaproto").load(lake)
     jobs.corpus_registry_ingest(stream2, reg)
     after = spark.read.parquet(*glob.glob(f"{reg}/batch=*"))
     assert after.count() == n_before + 1
 
 
 def test_minilake_native_stream_sink_enforces_schema(spark, sf_dir, tmp_path):
-    """The native stream sink applies the same write-time schema
-    contract as batch append: a type-changed stream fails at start
-    instead of committing a divergent schema."""
+    """The native stream sink applies a write-time schema contract: a
+    type-changed stream fails at start instead of committing a
+    divergent schema."""
     import tempfile
 
     import pytest
 
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
-        lakesource,
-        minilake,
+        deltaproto as dp,
+        deltastream,
     )
 
-    lakesource.register(spark)
+    deltastream.register(spark)
     path = str(tmp_path / "schema_sink_lake")
-    minilake.commit_append(
+    dp.write_delta(
         spark.range(5).withColumn("text", F.lit("x")).withColumnRenamed(
             "id", "doc_id"
         ),
@@ -1965,9 +1934,9 @@ def test_minilake_native_stream_sink_enforces_schema(spark, sf_dir, tmp_path):
         .withColumn("text", F.col("text").cast("binary"))
     )
     with tempfile.TemporaryDirectory() as ckpt:
-        with pytest.raises(Exception, match="column types"):
+        with pytest.raises(Exception, match="schema differs"):
             q = (
-                bad_stream.writeStream.format("minilake")
+                bad_stream.writeStream.format("deltaproto")
                 .option("path", path)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
@@ -1975,7 +1944,7 @@ def test_minilake_native_stream_sink_enforces_schema(spark, sf_dir, tmp_path):
             )
             q.awaitTermination(120)
             q.processAllAvailable()
-    assert len(minilake.versions(path)) == 1  # nothing committed
+    assert len(dp.delta_versions(path)) == 1  # nothing committed
 
 
 def test_cep_stream_matches_batch_two_batches(spark, sf_dir, tmp_path):

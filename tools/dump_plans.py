@@ -34,6 +34,9 @@ def main() -> None:
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.plans.audit import (
         formatted_plan,
     )
+    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+        deltaproto,
+    )
 
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("plans")
@@ -292,6 +295,23 @@ def main() -> None:
          "pruning) and a plain equi-join back to customers — the same "
          "single-shuffle plan as the hand-written window top-k; no "
          "nested-loop, no per-row subquery execution."),
+        ("lake_partitioned_scan", deltaproto.partitioned_scan_entry,
+         "Delta table PARTITIONED BY (lang), range-clustered on doc_id. "
+         "`read_delta_pruned` drops every file whose doc_id stats miss "
+         "[0, 249] before Spark plans anything (no footer reads), and "
+         "each partition group carries `lang` as a typed literal, so "
+         "Catalyst folds `lang = 'en'` per group and prunes the other "
+         "langs' scans outright: ONE parquet scan over the surviving en "
+         "file(s), doc_id bounds pushed into it, partial agg before the "
+         "single exchange."),
+        ("lake_dv_roundtrip", deltaproto.dv_roundtrip_entry,
+         "Two stacked deletion-vector deletes applied at scan time: ONE "
+         "parquet scan over every live file exposes "
+         "`_metadata.row_index`, the decoded DV positions (file, row) "
+         "are a small local relation broadcast into a LeftAnti "
+         "BroadcastHashJoin, then the per-source aggregate. No data "
+         "file was rewritten by either delete; the read rent is one "
+         "broadcast anti-join."),
         ("scale.bloom_pruned_revenue (runtime Bloom-filter pruning)",
          lambda s, d: (
              scale.set_runtime_bloom(s, application_side_min="0", disable_broadcast=True),
