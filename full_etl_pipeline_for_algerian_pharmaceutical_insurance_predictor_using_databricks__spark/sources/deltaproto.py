@@ -1439,6 +1439,19 @@ def _file_stats_json(local_path: str) -> str | None:
     )
 
 
+def _landed_rows(path: str, rel: str, stats: str | None = None) -> int | None:
+    """Row count of a landed file: its add-action `stats` when given,
+    else its parquet footer; None when neither can be read."""
+    if stats:
+        return json.loads(stats).get("numRecords")
+    from .pqfooter import read_footer
+
+    try:
+        return read_footer(os.path.join(path, *rel.split("/")))["num_rows"]
+    except Exception:
+        return None
+
+
 def _phys_select(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     """Rename a logical frame to the mapping's PHYSICAL namespace,
     stamping `parquet.field.id` column metadata on id-mode tables
@@ -1609,11 +1622,6 @@ def write_delta(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unsupported mode {mode!r}")
     vs = delta_versions(path)
-    if txn is not None and vs:
-        app_id, txv = txn
-        committed = delta_txn_versions(df.sparkSession, path).get(app_id, -1)
-        if committed >= int(txv):
-            return vs[-1]  # replayed batch: exactly-once no-op
     # "first" = the log is truly empty: neither JSON commits NOR a
     # checkpoint (a log-cleaned table with only a checkpoint is an
     # EXISTING table — treating it as new would clobber it)
@@ -1623,6 +1631,13 @@ def write_delta(
     evolved_fields = None
     if not first:
         existing_meta, live, _v = _fold_delta_state(spark, path, None)
+        # the txn state is read AFTER the fold: a racing commit either
+        # shows here (this write is a replay) or lands after `_v`,
+        # where an overwrite's claim validates it as a conflict
+        if txn is not None:
+            app_id, txv = txn
+            if delta_txn_versions(spark, path).get(app_id, -1) >= int(txv):
+                return _v  # replayed batch: exactly-once no-op
         _check_writer(_current_protocol(path), existing_meta, mode)
         dflts = _column_defaults(existing_meta)
         if dflts:
@@ -2210,7 +2225,9 @@ def delete_where_delta(
 
     Both write a `cdc` action whose `_change_data` file carries the
     deleted rows (`_change_type='delete'`), so CDF readers get the
-    exact row-level feed.  Zero touched files → no-op.
+    exact row-level feed.  A delete that matches no row commits
+    nothing and returns the current version; under ``rewrite`` a file
+    it empties gets a remove action and no zero-row add.
 
     ``strategy="auto"`` (r14) resolves from the table's own
     configuration — ``delta.enableDeletionVectors=true`` picks the DV
@@ -2319,6 +2336,17 @@ def _delete_delta_pred(
         dropped.withColumn("_change_type", F.lit("delete")), path,
         mapping=mapping,
     )
+    # a scan that dropped no row commits nothing, and a file the
+    # delete emptied gets its remove action only: a zero-row add has
+    # no min/max stats, so no later range could prove it disjoint
+    if not any(_landed_rows(path, rel) != 0 for rel, _size in cdc_files):
+        for rel in [f[0] for f in files] + [rel for rel, _ in cdc_files]:
+            os.remove(os.path.join(path, *rel.split("/")))
+        return vs[-1]
+    empty = [f for f in files if _landed_rows(path, f[0], f[3]) == 0]
+    for f in empty:
+        os.remove(os.path.join(path, *f[0].split("/")))
+    files = [f for f in files if f not in empty]
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -4448,29 +4476,22 @@ def vacuum_delta(
     if not vs:
         return 0
     retained = vs[-(retain_versions + 1) :]
-    # ONE forward fold: a file live in some retained version is live at
-    # the first of them or added by a later retained commit, so the
-    # oldest retained snapshot plus the retained commits' actions name
-    # every referenced file (re-folding per version would read the log
-    # O(retained x commits) times)
-    _meta, live, _v = _fold_delta_state(spark, path, retained[0])
-    adds = list(live.values())
     referenced: set[str] = set()
     for v in retained:
+        _meta, live, _v = _fold_delta_state(spark, path, v)
+        for f, add in live.items():
+            referenced.add(f)
+            dv = add.get("deletionVector")
+            if dv:
+                name = _dv_file_name(path, dv)
+                if name:
+                    referenced.add(name)
         for a in _read_actions(path, v):
-            if "add" in a and v != retained[0]:
-                adds.append(a["add"])
-            elif "cdc" in a:
-                # CDF replay over the retained window needs them too
+            if "cdc" in a:
                 referenced.add(a["cdc"]["path"])
-    for add in adds:
-        referenced.add(add["path"])
-        dv = add.get("deletionVector")
-        if dv:
-            name = _dv_file_name(path, dv)
-            if name:
-                referenced.add(name)
-    # everything else is reclaimable once old enough
+    # CDF replay over the retained window also needs cdc files of the
+    # retained commits themselves (covered above); everything else is
+    # reclaimable once old enough
     now = _time.time()
     deleted = 0
     for dirpath, dirs, files in os.walk(path):

@@ -26,6 +26,9 @@ The view is itself a Delta table; its sync position is the spec's
 committed atomically WITH the new rows, so refresh is idempotent and
 crash-safe: a replayed refresh is dropped by `write_delta`'s txn rule,
 and a re-run reads the position back and applies only what's missing.
+Of two refreshes racing on one view, the later either sees the
+earlier's txn (and is dropped) or aborts with `ConcurrentDeltaCommit`
+at its claim, so the view never holds rows older than its position.
 """
 
 from __future__ import annotations

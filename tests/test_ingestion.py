@@ -885,8 +885,10 @@ def test_minilake_checkpoint_carries_stream_ids(spark, tmp_path):
 def test_minilake_delete_where_prunes_files(spark, tmp_path):
     """Stats-pruned DELETE: only files whose key range can contain the
     predicate are rewritten; the rest keep their names in the log.  The
-    pre-delete snapshot stays time-travelable, and the commit's change
-    feed is exactly the deleted rows."""
+    pre-delete snapshot stays time-travelable, the commit's change feed
+    is exactly the deleted rows, a rewrite that comes back empty
+    commits no zero-row parquet, and a delete that matches no row
+    commits nothing."""
     from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
         deltaproto as dp,
     )
@@ -895,8 +897,6 @@ def test_minilake_delete_where_prunes_files(spark, tmp_path):
     base = spark.range(1000).withColumn("v", F.col("id") % 7)
     dp.write_delta(base.repartitionByRange(10, "id"), path)
     before = set(_delta_live(spark, path))
-    # predicate outside every file's range: provable no-op
-    assert dp.delete_where_delta(spark, path, "id", 5000, 6000) == 0
 
     v = dp.delete_where_delta(spark, path, "id", 100, 199)
     after = set(_delta_live(spark, path))
@@ -912,10 +912,21 @@ def test_minilake_delete_where_prunes_files(spark, tmp_path):
     assert {r["_change_type"] for r in feed} == {"delete"}
     assert sorted(r["id"] for r in feed) == list(range(100, 200))
 
-    # deleting every remaining row empties the snapshot
-    dp.delete_where_delta(spark, path, "id", -1, 2000)
-    assert dp.read_delta(spark, path).count() == 0
+    # stats overlap a file but no row matches: nothing to commit
+    assert dp.delete_where_delta(spark, path, "id", 250, 250) == v + 1
+    assert dp.delete_where_delta(spark, path, "id", 250, 250) == v + 1
+
+    # deleting every remaining row commits no add (no zero-row files)
+    n_live = len(_delta_live(spark, path))
+    v = dp.delete_where_delta(spark, path, "id", -1, 2000)
+    actions = dp._read_actions(path, v)
     assert dp.delta_history(path)[-1]["operation"] == "DELETE"
+    assert not [a for a in actions if "add" in a]
+    assert len([a for a in actions if "remove" in a]) == n_live
+    assert dp.read_delta(spark, path).count() == 0
+
+    # predicate outside every file's range: provable no-op, version unchanged
+    assert dp.delete_where_delta(spark, path, "id", 5000, 6000) == v
 
 
 def test_minilake_optimize_zorder_upgrades_layout_in_place(spark, tmp_path):

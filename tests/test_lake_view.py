@@ -106,3 +106,48 @@ def test_merge_refreshes_incrementally_and_equals_full_refresh(spark, tmp_path):
     dp.write_delta(_df(spark, 100, 120), base)
     lakeview.refresh(spark, base, view, ["grp"], "val")
     assert _view_rows(spark, view) == _expected(spark, base)
+
+
+def test_racing_refresh_aborts_instead_of_landing_a_stale_view(
+    spark, tmp_path, monkeypatch
+):
+    """Two refreshes of one view: when the other one commits after this
+    one read the view's sync position, this overwrite aborts, so the
+    view never holds contents older than the position its log reports."""
+    import pytest
+
+    base = str(tmp_path / "base")
+    view = str(tmp_path / "view")
+    dp.write_delta(_df(spark, 0, 40), base)
+    lakeview.refresh(spark, base, view, ["grp"], "val")
+    dp.write_delta(_df(spark, 40, 60), base)
+
+    raced = {"inside": False, "done": False}
+    orig_write, orig_txns = dp.write_delta, dp.delta_txn_versions
+
+    def writing(df, path, *args, **kwargs):
+        raced["inside"] = path == view
+        try:
+            return orig_write(df, path, *args, **kwargs)
+        finally:
+            raced["inside"] = False
+
+    def racing_txns(sp, path):
+        got = orig_txns(sp, path)
+        if raced["inside"] and not raced["done"]:
+            # the other refresh lands right after this write read the
+            # view's txn state
+            raced["done"] = True
+            dp.write_delta(_df(spark, 60, 80), base)
+            lakeview.refresh(spark, base, view, ["grp"], "val")
+        return got
+
+    monkeypatch.setattr(dp, "write_delta", writing)
+    monkeypatch.setattr(dp, "delta_txn_versions", racing_txns)
+    with pytest.raises(dp.ConcurrentDeltaCommit):
+        lakeview.refresh(spark, base, view, ["grp"], "val")
+    monkeypatch.undo()
+    assert raced["done"]
+    base_v = dp.delta_versions(base)[-1]
+    assert dp.delta_txn_versions(spark, view) == {"lakeview": base_v}
+    assert _view_rows(spark, view) == _expected(spark, base)
