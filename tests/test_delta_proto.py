@@ -3264,3 +3264,180 @@ def test_set_delta_properties(spark, tmp_path):
         dp.set_delta_properties(
             spark, path, {"delta.columnMapping.mode": "name"}
         )
+
+
+# --------------------------------------------------------------------------
+# MERGE output pinned against the join formula it implements
+# --------------------------------------------------------------------------
+
+MERGE_SHAPES = [
+    "null_keys",
+    "dup_keys",
+    "partitioned_null_part",
+    "name_mapping",
+    "id_mapping",
+    "row_tracking",
+    "dv_touched",
+    "no_touched",
+    "empty_updates",
+]
+
+
+def _kpv(spark, rows, names=("k", "p", "v")):
+    k, p, v = names
+    return spark.createDataFrame(rows, f"{k} bigint, {p} string, {v} bigint")
+
+
+def _id_mode_table(spark, path):
+    """An empty id-mode table (log 0: protocol + metaData only); later
+    appends land id-stamped files through the table's own mapping."""
+    fields = [
+        {
+            "name": name,
+            "type": typ,
+            "nullable": True,
+            "metadata": {
+                "delta.columnMapping.id": fid,
+                "delta.columnMapping.physicalName": f"col-{fid}",
+            },
+        }
+        for fid, (name, typ) in enumerate(
+            [("k", "long"), ("p", "string"), ("v", "long")], start=1
+        )
+    ]
+    os.makedirs(os.path.join(path, "_delta_log"))
+    actions = [
+        {
+            "protocol": {
+                "minReaderVersion": 3,
+                "minWriterVersion": 7,
+                "readerFeatures": ["columnMapping"],
+                "writerFeatures": ["columnMapping"],
+            }
+        },
+        {
+            "metaData": {
+                "id": "m",
+                "format": {"provider": "parquet"},
+                "schemaString": json.dumps(
+                    {"type": "struct", "fields": fields}
+                ),
+                "partitionColumns": [],
+                "configuration": {
+                    "delta.columnMapping.mode": "id",
+                    "delta.columnMapping.maxColumnId": "3",
+                },
+            }
+        },
+    ]
+    with open(os.path.join(path, "_delta_log", dp._LOG_FMT.format(0)), "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in actions))
+
+
+def _merge_shape(spark, path, shape):
+    """Build the target table of one MERGE shape at `path`; returns
+    (updates, key column)."""
+    base = [(i, str(i % 3), i * 10) for i in range(30)]
+
+    def table(rows, **kw):
+        dp.write_delta(_kpv(spark, rows).repartitionByRange(3, "k"), path, **kw)
+
+    if shape == "null_keys":
+        table(base + [(None, "0", -1), (None, "1", -2)])
+        ups = [(12, "x", 1), (25, "y", 2), (40, "z", 3), (None, "n", 4), (None, "m", 5)]
+    elif shape == "dup_keys":
+        table(base + [(5, "d", 51), (5, "e", 52), (7, "d", 71)])
+        ups = [(5, "u", 1), (5, "w", 2), (7, "u", 3), (40, "i", 4), (40, "j", 5)]
+    elif shape == "partitioned_null_part":
+        rows = [(k, None if k % 5 == 0 else p, v) for k, p, v in base]
+        table(rows, partition_by=["p"])
+        ups = [(5, None, 1), (10, "1", 2), (6, None, 3), (50, None, 4), (51, "2", 5)]
+    elif shape == "name_mapping":
+        table(base)
+        dp.rename_delta_column(spark, path, "k", "kk")
+        dp.rename_delta_column(spark, path, "v", "val")
+        ups = _kpv(spark, [(3, "u", 1), (20, "u", 2), (44, "i", 3)], ("kk", "p", "val"))
+        return ups, "kk"
+    elif shape == "id_mapping":
+        _id_mode_table(spark, path)
+        table(base)
+        ups = [(3, "u", 1), (20, "u", 2), (44, "i", 3)]
+    elif shape == "row_tracking":
+        table(base + [(5, "d", 51)])
+        dp.enable_delta_row_tracking(spark, path)
+        ups = [(5, "u", 1), (12, "u", 2), (40, "i", 3), (41, "i", 4)]
+    elif shape == "dv_touched":
+        table(base)
+        dp.delete_where_delta(spark, path, "k", 10, 14, strategy="dv")
+        ups = [(12, "u", 1), (15, "u", 2), (40, "i", 3)]
+    elif shape == "no_touched":
+        table(base)
+        ups = [(100, "i", 1), (101, "j", 2)]
+    else:
+        assert shape == "empty_updates"
+        table(base)
+        ups = []
+    return _kpv(spark, ups), "k"
+
+
+@pytest.mark.parametrize("shape", MERGE_SHAPES)
+def test_merge_matches_reference_formula(spark, tmp_path, shape):
+    """merge_upsert_delta's commit equals the SQL join formula of
+    MERGE … WHEN MATCHED UPDATE … WHEN NOT MATCHED INSERT on each
+    shape: the snapshot is (target ANTI JOIN source keys) ∪ source, and
+    the change feed is target SEMI JOIN source keys → update_preimage,
+    source SEMI JOIN target keys → update_postimage, source ANTI JOIN
+    target keys → insert.  A NULL key matches nothing.  On row-tracked
+    tables each matched target row keeps its `_row_id` (one output row
+    per matched target row) and every source row takes the merge's
+    commit version; unmatched source rows take fresh ids."""
+    from collections import Counter
+
+    path = str(tmp_path / "t")
+    updates, key = _merge_shape(spark, path, shape)
+    rt = shape == "row_tracking"
+    cols = updates.columns
+    ki = cols.index(key)
+    before = dp.read_delta(spark, path, with_row_tracking=rt).collect()
+    old = [tuple(r[c] for c in cols) for r in before]
+    new = [tuple(r) for r in updates.collect()]
+    v0 = dp.delta_versions(path)[-1]
+    v = dp.merge_upsert_delta(spark, updates, path, key)
+    after = dp.read_delta(spark, path, with_row_tracking=rt).collect()
+    got = Counter(tuple(r[c] for c in cols) for r in after)
+    if not new:
+        assert v == v0 == dp.delta_versions(path)[-1]
+        assert got == Counter(old)
+        return
+    assert v == v0 + 1
+    ukeys = {u[ki] for u in new} - {None}
+    okeys = {o[ki] for o in old} - {None}
+    if not rt:
+        assert got == Counter([o for o in old if o[ki] not in ukeys] + new)
+    changes = dp.read_changes_delta(spark, path, v, v).collect()
+    assert Counter(tuple(r[c] for c in [*cols, "_change_type"]) for r in changes) == Counter(
+        [(*o, "update_preimage") for o in old if o[ki] in ukeys]
+        + [(*u, "update_postimage") for u in new if u[ki] in okeys]
+        + [(*u, "insert") for u in new if u[ki] not in okeys]
+    )
+    if rt:
+        old_ids = {r["_row_id"]: r for r in before}
+        want = [
+            (o, r["_row_id"], r["_row_commit_version"])
+            for o, r in zip(old, before)
+            if o[ki] not in ukeys
+        ]
+        for u in new:
+            ids = [r["_row_id"] for o, r in zip(old, before) if o[ki] == u[ki]]
+            want += [(u, rid, v) for rid in ids] or [(u, "fresh", v)]
+        fresh = [r["_row_id"] for r in after if r["_row_id"] not in old_ids]
+        assert len(set(fresh)) == len(fresh)
+        assert min(fresh) > max(old_ids)
+        assert Counter(
+            (
+                tuple(r[c] for c in cols),
+                r["_row_id"] if r["_row_id"] in old_ids else "fresh",
+                r["_row_commit_version"],
+            )
+            for r in after
+        ) == Counter(want)
