@@ -37,7 +37,7 @@ import struct
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .catalog import local_rows_df
 
@@ -3148,10 +3148,17 @@ def merge_upsert_delta(
     range can contain an updated key; ONLY those are rewritten (their
     unmatched rows carried over, deletion vectors applied so hidden
     rows never resurrect), untouched files keep their add actions.
-    The commit carries the spec's MERGE change feed — cdc actions with
-    `update_preimage` / `update_postimage` rows for matched keys and
-    `insert` rows for new keys — so CDF readers see row-level merge
-    semantics, not a file diff."""
+
+    One pass, like Delta's own MERGE: the touched pre-image ∪ the
+    updates, one window over `key` flagging whether the key has a
+    target row (`has_old`) and a source row (`has_new`) — a NULL key
+    has neither, so never matches — checkpointed once.  From it land
+    the data (updates + target rows without `has_new`) and the spec's
+    cdc feed: target rows with `has_new` → `update_preimage`, source
+    rows → `update_postimage` if `has_old` else `insert`.  Row-tracked
+    tables: a source row takes the `_row_id` of each target row it
+    matches (one row per match; fresh id if none) and the merge's
+    commit version."""
     meta, live, _v = _fold_delta_state(spark, path, None)
     _check_writer(_current_protocol(path), meta, "merge")
     _enforce_constraints(updates, meta)
@@ -3176,64 +3183,43 @@ def merge_upsert_delta(
             )
         )
     }
-    keys = updates.select(key).distinct()
     rt_cols = _rt_materialized_cols(meta)
+    cols = updates.columns
+    rows = updates.withColumn(_DP_NEW, F.lit(True))
+    if rt_cols:
+        none = F.lit(None).cast("bigint")
+        rows = rows.withColumns({"_row_id": none, "_row_commit_version": none})
     if touched:
-        old_rows = _read_adds(
-            spark, path, meta, touched, row_tracking=bool(rt_cols)
-        ).localCheckpoint(eager=True)
-        carried = old_rows.join(keys, key, "left_anti")
-        matched_old = old_rows.join(F.broadcast(keys), key, "left_semi")
-        # keys present in the pre-image (touched files provably hold
-        # every possible match — pruning is conservative); NOT
-        # broadcast: touched files can be arbitrarily large
-        old_keys = old_rows.select(key).distinct()
-        if rt_cols:
-            # matched rows KEEP their _row_id (joined back by key) and
-            # renew their commit version (null → inherits the merge
-            # commit); unmatched source rows stay null on both —
-            # genuinely fresh rows get fresh ids from baseRowId+pos
-            merged = carried.unionByName(
-                updates.join(
-                    matched_old.select(key, "_row_id"), key, "left"
-                )
-                .withColumn(
-                    "_row_commit_version", F.lit(None).cast("bigint")
-                )
-                .select(*carried.columns)
-            )
-        else:
-            merged = carried.unionByName(updates)
-    else:
-        old_rows = None
-        matched_old = None
-        old_keys = None
-        merged = updates
-    if rt_cols and touched:
-        merged = _rt_materialize(merged, rt_cols)
+        old = _read_adds(spark, path, meta, touched, row_tracking=bool(rt_cols))
+        rows = old.withColumn(_DP_NEW, F.lit(False)).unionByName(rows)
+    new, hit = F.col(_DP_NEW), F.col(key).isNotNull()
+    w = Window.partitionBy(key)
+    flags = {
+        _DP_HAS_OLD: F.max(hit & ~new).over(w),
+        _DP_HAS_NEW: F.max(hit & new).over(w),
+    }
+    if rt_cols:
+        # ids are never NULL on a row-tracked table (every add carries
+        # its baseRowId anchor), so collect_list drops no match
+        flags["_row_id"] = F.when(
+            new, F.collect_list(F.when(hit & ~new, F.col("_row_id"))).over(w)
+        ).otherwise(F.array("_row_id"))
+    tagged = rows.withColumns(flags).localCheckpoint(eager=True)
+    merged = tagged.where(new | ~F.col(_DP_HAS_NEW)).drop(
+        _DP_NEW, _DP_HAS_OLD, _DP_HAS_NEW
+    )
+    if rt_cols:
+        merged = _rt_materialize(
+            merged.withColumn("_row_id", F.explode_outer("_row_id")), rt_cols
+        )
     files = _land_parquet(merged, path, part_cols or None, mapping=mapping)
-    # MERGE change feed: preimage/postimage for matched, insert for new
-    cdc_frames = []
-    if matched_old is not None:
-        if rt_cols:
-            matched_old = matched_old.drop(
-                "_row_id", "_row_commit_version"
-            )
-        cdc_frames.append(
-            matched_old.withColumn("_change_type", F.lit("update_preimage"))
-        )
-        cdc_frames.append(
-            updates.join(old_keys, key, "left_semi").withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-        )
-        inserts = updates.join(old_keys, key, "left_anti")
-    else:
-        inserts = updates
-    cdc_frames.append(inserts.withColumn("_change_type", F.lit("insert")))
-    cdc = cdc_frames[0]
-    for f in cdc_frames[1:]:
-        cdc = cdc.unionByName(f)
+    cdc = tagged.where(new | F.col(_DP_HAS_NEW)).select(
+        *cols,
+        F.when(~new, "update_preimage")
+        .when(F.col(_DP_HAS_OLD), "update_postimage")
+        .otherwise("insert")
+        .alias("_change_type"),
+    )
     cdc_files = _land_cdc(cdc, path, mapping=mapping)
     now_ms = int(time.time() * 1000)
     lines = [
@@ -4324,6 +4310,9 @@ def _write_dv_blobs(
 
 
 _DP_FILE, _DP_RI = "_dp_dv_file", "_dp_dv_ri"
+#: merge_upsert_delta's row tags: source side, key has a target row,
+#: key has a source row
+_DP_NEW, _DP_HAS_OLD, _DP_HAS_NEW = "_dp_new", "_dp_has_old", "_dp_has_new"
 
 
 def _apply_dvs(

@@ -5,15 +5,25 @@ with Delta when available, parquet fallback — same `saveAsTable` /
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
+
+#: SparkContext -> whether Delta Lake's `DeltaLog` is on its classpath.
+_DELTA_ON_CLASSPATH: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def delta_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.Class.forName("org.apache.spark.sql.delta.DeltaLog")  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
+    """Whether `format("delta")` is on the classpath, looked up once per
+    SparkContext (a failed `Class.forName` costs ~77 py4j round trips)."""
+    sc = spark.sparkContext
+    if sc not in _DELTA_ON_CLASSPATH:
+        try:
+            spark._jvm.Class.forName("org.apache.spark.sql.delta.DeltaLog")  # type: ignore[union-attr]
+            _DELTA_ON_CLASSPATH[sc] = True
+        except Exception:
+            _DELTA_ON_CLASSPATH[sc] = False
+    return _DELTA_ON_CLASSPATH[sc]
 
 
 def save_as_table(df: DataFrame, name: str, mode: str = "overwrite") -> str:

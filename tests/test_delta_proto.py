@@ -3421,7 +3421,7 @@ def test_merge_matches_reference_formula(spark, tmp_path, shape):
         + [(*u, "insert") for u in new if u[ki] not in okeys]
     )
     if rt:
-        old_ids = {r["_row_id"]: r for r in before}
+        old_ids = {r["_row_id"] for r in before}
         want = [
             (o, r["_row_id"], r["_row_commit_version"])
             for o, r in zip(old, before)
@@ -3441,3 +3441,40 @@ def test_merge_matches_reference_formula(spark, tmp_path, shape):
             )
             for r in after
         ) == Counter(want)
+
+
+def test_merge_over_touched_files_is_one_pass(spark, tmp_path):
+    """A MERGE that rewrites touched files starts at most 6 Spark jobs
+    — the key bounds, one checkpoint of the tagged union of pre-image
+    and updates (its exchange and its result), one data write, one
+    change-feed write — and lands one data file and one cdc file.
+    Jobs are counted by job group from the status tracker, on the
+    ingest shape: name-keyed upserts of 5,000 rows over a 4-file
+    table."""
+    import uuid
+
+    def batch(seed):
+        name = F.pmod(F.xxhash64("id", F.lit(seed)), F.lit(10_000))
+        return spark.range(5000).select(
+            F.format_string("m-%05d", name).alias("name"),
+            (F.col("id") % 1450).cast("int").alias("price"),
+        ).dropDuplicates(["name"])
+
+    path, ups = str(tmp_path / "t"), str(tmp_path / "ups")
+    dp.write_delta(batch(0).repartition(4), path)
+    batch(1).write.parquet(ups)
+    updates = spark.read.parquet(ups)
+    sc = spark.sparkContext
+    group = f"merge-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "merge_upsert_delta")
+    try:
+        v = dp.merge_upsert_delta(spark, updates, path, "name")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+    acts = dp._read_actions(path, v)
+    assert sum("remove" in a for a in acts) == 4
+    assert sum("add" in a for a in acts) == 1
+    assert sum("cdc" in a for a in acts) == 1

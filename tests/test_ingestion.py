@@ -113,6 +113,17 @@ def test_partitioned_write_prunes_at_scan(spark, landing, tmp_path):
     assert one_letter.count() == 2  # ASPIRINE + AMOXIL
 
 
+def test_delta_available_looked_up_once_per_context(spark, py4j_calls):
+    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.sinks import (
+        delta_available,
+    )
+
+    first = delta_available(spark)
+    with py4j_calls() as calls:
+        assert delta_available(spark) is first
+    assert calls[0] == 0
+
+
 def test_merge_upsert_semantics(spark, tmp_path):
     """MERGE on a parquet dir: matched rows replaced, unmatched
     inserted, untouched carried over; duplicate-key updates rejected;

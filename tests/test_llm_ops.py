@@ -1803,31 +1803,46 @@ def test_jpeg_fixture_pipeline_locally(spark, sf_dir):
     assert all(r["psnr_ok"] for r in out)
 
 
-def _plan_indent(ln: str) -> int:
-    return len(ln) - len(ln.lstrip(" :+-"))
+def _plan_nodes(node) -> list:
+    """Every node of a JVM physical plan, through AQE's wrappers (the
+    adaptive root, query stages, reused exchanges)."""
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif kind.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    elif kind == "ReusedExchangeExec":
+        kids = [node.child()]
+    else:
+        seq = node.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    return [node] + [n for k in kids for n in _plan_nodes(k)]
 
 
-def _bhj_sides(plan: str, needle: str) -> tuple[str, str]:
-    """Split the first BroadcastHashJoin whose line contains `needle`
-    into (build_subtree, stream_subtree) using the plan string's
-    indentation — lets tests pin WHICH side of a specific join is the
-    broadcast build side."""
-    lines = plan.splitlines()
-    for i, ln in enumerate(lines):
-        if "BroadcastHashJoin" not in ln or needle not in ln:
-            continue
-        base = _plan_indent(ln)
-        sub = []
-        for nxt in lines[i + 1 :]:
-            if _plan_indent(nxt) <= base:
-                break
-            sub.append(nxt)
-        child_ind = min(_plan_indent(x) for x in sub)
-        bounds = [k for k, x in enumerate(sub) if _plan_indent(x) == child_ind]
-        assert len(bounds) == 2, "\n".join(sub)
-        left = "\n".join(sub[bounds[0] : bounds[1]])
-        right = "\n".join(sub[bounds[1] :])
-        return (left, right) if "BuildLeft" in ln else (right, left)
+def _scan_paths(node) -> set[str]:
+    """Root paths of the file scans under `node`, read from each scan's
+    relation: the printed plan cuts a `Location:` longer than
+    spark.sql.maxMetadataStringLength short."""
+    out = set()
+    for n in _plan_nodes(node):
+        if n.getClass().getSimpleName() == "FileSourceScanExec":
+            roots = n.relation().location().rootPaths()
+            out |= {roots.apply(i).toUri().getPath() for i in range(roots.size())}
+    return out
+
+
+def _bhj_sides(plan, needle: str) -> tuple:
+    """(build, stream) children of the first BroadcastHashJoin whose
+    own line contains `needle` — lets tests pin WHICH side of a
+    specific join is the broadcast build side."""
+    for n in _plan_nodes(plan):
+        if (
+            n.getClass().getSimpleName() == "BroadcastHashJoinExec"
+            and needle in n.verboseString(1000)
+        ):
+            left, right = n.left(), n.right()
+            build_left = n.buildSide().toString() == "BuildLeft"
+            return (left, right) if build_left else (right, left)
     raise AssertionError(f"no BroadcastHashJoin matching {needle!r} in plan")
 
 
@@ -1879,8 +1894,8 @@ def test_incremental_minhash_matches_full_lsh_slice(spark, sf_correct):
         elif b % 10 == 0 and a % 10 != 0:
             want[(b, a)] = round(r.jaccard, 9)
     assert got == want and got
-    plan = inc._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    plan = inc._jdf.queryExecution().executedPlan()
+    assert "BroadcastHashJoin" in plan.toString()
     import os
 
     root = dedup._ensure_incremental_lsh_index(spark, sf_correct)
@@ -1891,15 +1906,16 @@ def test_incremental_minhash_matches_full_lsh_slice(spark, sf_correct):
     # 1. verify join (identified by its array_intersect condition):
     #    build = candidates ⋈ new rep arrays; stream = index groups
     build, stream = _bhj_sides(plan, "array_intersect")
-    assert groups_path in stream and groups_path not in build
+    assert groups_path in _scan_paths(stream)
+    assert groups_path not in _scan_paths(build)
     # 2. band probe: build = the NEW batch's band keys; stream = the
     #    index band scan
     pb, ps = _bhj_sides(plan, "band_key")
-    assert bands_path in ps and bands_path not in pb
+    assert bands_path in _scan_paths(ps) and bands_path not in _scan_paths(pb)
     # 3. expansion join (the remaining top-level rep_base join): its
     #    STREAMED side is the index members scan
     xb, xs = _bhj_sides(plan, "rep_base#")
-    assert "array_intersect" in xb or groups_path in xs
+    assert "array_intersect" in xb.toString() or groups_path in _scan_paths(xs)
     # index is N_BANDS rows per distinct base token set
     bands = spark.read.parquet(os.path.join(root, "bands"))
     n_base = bands.select("doc_id").distinct().count()

@@ -35,6 +35,9 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 import __spark_entry__ as entry  # noqa: E402
 from check_oracle import _rows_to_multiset  # noqa: E402
+from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.functions import (  # noqa: E402
+    scale,
+)
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.operators.medications import (  # noqa: E402
     MEDICATIONS_CTE,
     MEDICATIONS_RAW_CTE,
@@ -46,9 +49,10 @@ from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_dat
 #: Oracle-bearing entries whose plan or kernel was rewritten: the
 #: BM25/hybrid stats-literal fold, the per-row boilerplate scrub, the
 #: Iceberg `_read_entries` group merge (stream/exotic are its heavy
-#: users).  train_prep composites over the scrub.  The last four read
-#: Iceberg tables through the merge-on-read delete path (equality
-#: deletes, position deletes).
+#: users).  train_prep composites over the scrub.  Four read Iceberg
+#: tables through the merge-on-read delete path (equality deletes,
+#: position deletes).  The last two build their Delta table with
+#: `merge_upsert_delta` (`FRESH_LAKE`).
 PINNED = [
     "text_bm25_search",
     "retrieval_hybrid_rrf",
@@ -61,7 +65,14 @@ PINNED = [
     "lake_iceberg_upsert_atomic",
     "lake_iceberg_changes_eq",
     "lake_iceberg_v2_deletes",
+    "lake_delta_merge",
+    "lake_delta_merge_sql",
 ]
+
+#: Entries whose lake is built in a fresh directory for the test: a lake
+#: an older MERGE left under `spark-warehouse/` would be read instead of
+#: running the MERGE again.
+FRESH_LAKE = {"lake_delta_merge", "lake_delta_merge_sql"}
 
 #: Entries that run a Delta-table lifecycle (write, DELETE, DV delete,
 #: OPTIMIZE, partitions, change feed, incremental view) before their
@@ -139,7 +150,15 @@ def _assert_matches_oracle(sdf, duck, name):
 
 
 @pytest.mark.parametrize("name", PINNED + MULTIMODAL + LAKE)
-def test_pinned_entry_matches_oracle(spark, sf_dir, duck, name):
+def test_pinned_entry_matches_oracle(
+    spark, sf_dir, duck, name, monkeypatch, tmp_path
+):
+    if name in FRESH_LAKE:
+        monkeypatch.setattr(
+            scale,
+            "default_index_dir",
+            lambda kind, version, _sf: str(tmp_path / f"{kind}_v{version}"),
+        )
     queries = entry.queries()
     assert name in queries, f"{name} dropped from queries()"
     assert name in entry.oracle_sql(), f"{name} lost its oracle"
