@@ -385,10 +385,11 @@ def _verify_pairs_exact(
 # --------------------------------------------------------------------------
 
 
-def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group by normalized-text fingerprint; keep the smallest doc_id.
-    Output one row per distinct content with its duplicate count."""
-    docs = load_table(spark, sf_dir, "documents")
+def exact_fingerprints(docs: DataFrame) -> DataFrame:
+    """Group by normalized-text md5 fingerprint; keep the smallest
+    doc_id.  One row per distinct content with its duplicate count — a
+    body over any documents frame (the table here, one micro-batch in
+    the streaming dedup registries)."""
     normalized = F.trim(F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]+", " "))
     return (
         docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
@@ -398,6 +399,11 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("copies"),
         )
     )
+
+
+def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`exact_fingerprints` over the documents table."""
+    return exact_fingerprints(load_table(spark, sf_dir, "documents"))
 
 
 _EXACT_SQL = """
@@ -1448,6 +1454,8 @@ def embedding_near_dup_clustered(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    from .similarity import sqdist_col
+
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .withColumn("vec", array_to_vector(F.col("embedding").cast("array<double>")))
@@ -1467,14 +1475,8 @@ def embedding_near_dup_clustered(
         .select(
             "vec_id",
             "cell",
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding").cast("array<double>"),
-                    F.col("centroid"),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+            sqdist_col(
+                F.col("embedding").cast("array<double>"), F.col("centroid")
             ).alias("dist"),
         )
         .withColumn("nearness", F.row_number().over(wv))

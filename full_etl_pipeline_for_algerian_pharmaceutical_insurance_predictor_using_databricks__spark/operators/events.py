@@ -1,9 +1,11 @@
-"""Event-stream analytics over the `events` table — batch semantics.
+"""Event-stream analytics over the `events` table.
 
-The same logical transformations run under Structured Streaming in
-`streaming/jobs.py` (readStream + watermark); batch/stream parity is
-asserted in tests via Trigger.AvailableNow. Here they're batch
-DataFrames so the correctness harness can oracle-check them.
+The windowed aggregates, the click→purchase join and the hourly
+partials are `DataFrame → DataFrame` bodies: the entry builders here
+apply them to the static table (so the correctness harness can
+oracle-check them), and `streaming/jobs.py` applies the same bodies to
+a watermarked `readStream`. Batch/stream parity is asserted in tests
+via Trigger.AvailableNow.
 
 Timestamps are surfaced as epoch *seconds* (BIGINT) in every output:
 the fixture stores TIMESTAMP(NANOS), Spark reads µs, DuckDB ns —
@@ -63,11 +65,10 @@ ORDER BY event_type
 """
 
 
-def tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5-minute tumbling window counts per event type. Built with
-    F.window (the same expression Structured Streaming uses), surfaced
-    as epoch seconds."""
-    ev = load_table(spark, sf_dir, "events")
+def tumbling_counts(ev: DataFrame) -> DataFrame:
+    """5-minute tumbling window counts and value totals per event type,
+    surfaced as epoch seconds.  A body over any events frame: static
+    here, watermarked stream in `streaming.jobs`."""
     return (
         ev.groupBy(
             F.window("ts", "5 minutes").alias("w"),
@@ -83,6 +84,11 @@ def tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`tumbling_counts` over the events table."""
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
+
+
 _TUMBLING_SQL = """
 SELECT
     CAST(FLOOR(EXTRACT(epoch FROM ts) / 300) * 300 AS BIGINT) AS window_start,
@@ -94,10 +100,20 @@ GROUP BY 1, 2
 """
 
 
-def sliding_10min_every_5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10-minute windows sliding every 5 — each event lands in 2 windows.
-    Oracle reproduces via a 2-offset generate/unnest."""
-    ev = load_table(spark, sf_dir, "events")
+def top_k_per_window(counts: DataFrame, k: int) -> DataFrame:
+    """The `k` busiest event types of each window of `tumbling_counts`
+    output, ranked by (events DESC, event_type) — a window-partitioned
+    row_number, so it runs per window on a static frame or on a
+    micro-batch of closed windows alike."""
+    w = Window.partitionBy("window_start").orderBy(F.desc("events"), "event_type")
+    return counts.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def sliding_counts(ev: DataFrame) -> DataFrame:
+    """10-minute windows sliding every 5 — each event lands in 2
+    windows."""
     return (
         ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
         .agg(F.count("*").alias("events"))
@@ -106,6 +122,12 @@ def sliding_10min_every_5(spark: SparkSession, sf_dir: str) -> DataFrame:
             "events",
         )
     )
+
+
+def sliding_10min_every_5(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`sliding_counts` over the events table.  Oracle reproduces via a
+    2-offset generate/unnest."""
+    return sliding_counts(load_table(spark, sf_dir, "events"))
 
 
 _SLIDING_SQL = """
@@ -320,15 +342,13 @@ ORDER BY 1
 """
 
 
-def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+def session_counts(ev: DataFrame) -> DataFrame:
     """Native session windows (F.session_window, 30-min gap) per user —
     the built-in counterpart of `sessionization`. Boundary semantics
     differ at EXACTLY the gap: session_window's half-open interval
     [start, last+gap) splits a pair of events exactly gap apart, while
     `sessionization`'s `diff > gap` keeps them together — swap the two
-    operators only if that edge doesn't matter for your data.
-    Streaming twin in streaming/jobs.py."""
-    ev = load_table(spark, sf_dir, "events")
+    operators only if that edge doesn't matter for your data."""
     return (
         ev.groupBy(
             F.session_window("ts", f"{SESSION_GAP_SEC} seconds").alias("w"),
@@ -342,6 +362,11 @@ def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
+
+
+def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`session_counts` over the events table."""
+    return session_counts(load_table(spark, sf_dir, "events"))
 
 
 # Session-window oracle: gap-based grouping where diff >= gap opens a
@@ -621,6 +646,18 @@ WHERE n_window = 24
   AND (sq - s * s / n_window) / (n_window - 1) > 0
 ORDER BY event_type, hour_start
 """
+
+
+def hourly_partials(ev: DataFrame) -> DataFrame:
+    """Hourly count and value sum per event type — both mergeable, so
+    partials over any split of the events re-aggregate (sums of sums)
+    to the partial over their union."""
+    return ev.groupBy(
+        F.date_trunc("hour", F.col("ts")).alias("hour_start"), "event_type"
+    ).agg(
+        F.count("*").alias("events"),
+        F.sum("value").alias("value_sum"),
+    )
 
 
 def gapfill_locf_counts(hourly: DataFrame) -> DataFrame:
@@ -918,6 +955,44 @@ FROM skewed
 JOIN customer ON user_id = c_custkey
 GROUP BY c_mktsegment
 """
+
+
+def click_purchase_join(ev: DataFrame, how: str = "inner") -> DataFrame:
+    """Interval join of each purchase to the same user's clicks in the
+    preceding 30 minutes; `how` is "inner", "left_outer" (every
+    purchase emits, with NULL click columns when unmatched) or
+    "full_outer" (unmatched clicks emit too, with NULL purchase
+    columns).  Both user keys are projected because either side may be
+    the NULL one.
+
+    On a stream, pass a watermarked frame (`streaming.jobs.watermarked`):
+    the `ts` watermark carries through the aliases to `click_ts` and
+    `purchase_ts`, and with the join's two-sided time bound it evicts
+    click state older than (watermark - 30 min), so state stays finite.
+    An unmatched row of an outer join can only be declared unmatched
+    once the watermark passes its join window, so NULL rows surface
+    with watermark latency while matches emit immediately."""
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user"),
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    return purchases.join(
+        clicks,
+        F.expr(
+            "p_user = c_user AND "
+            "click_ts >= purchase_ts - INTERVAL 30 MINUTES AND "
+            "click_ts < purchase_ts"
+        ),
+        how,
+    ).select(
+        "purchase_id", "click_id", "p_user", "c_user", "purchase_ts", "click_ts"
+    )
 
 
 def purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:

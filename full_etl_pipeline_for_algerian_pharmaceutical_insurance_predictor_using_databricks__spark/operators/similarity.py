@@ -38,6 +38,16 @@ def norm_col(a: Column) -> Column:
     )
 
 
+def sqdist_col(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance via the same sequential fold.  No
+    casts: callers pass arrays of the element types they want."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def cosine_col(a: Column, b: Column) -> Column:
     """Sequential-fold double cosine (bit-compatible with DuckDB's
     list_cosine_similarity over DOUBLE[])."""
@@ -370,14 +380,8 @@ def ann_ivf(
             "q_emb",
             "q_norm",
             "centroid_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("q_emb").cast("array<double>"),
-                    F.col("centroid"),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+            sqdist_col(
+                F.col("q_emb").cast("array<double>"), F.col("centroid")
             ).alias("dist"),
         )
         .withColumn("probe_rank", F.row_number().over(wq))
@@ -574,18 +578,11 @@ def ann_pq(
             "query_id",
             "m",
             "code",
-            F.aggregate(
-                F.zip_with(
-                    F.slice(
-                        F.col("q_emb").cast("array<double>"),
-                        F.col("m") * sub_d + 1,
-                        sub_d,
-                    ),
-                    F.col("centroid"),
-                    lambda x, y: (x - y) * (x - y),
+            sqdist_col(
+                F.slice(
+                    F.col("q_emb").cast("array<double>"), F.col("m") * sub_d + 1, sub_d
                 ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+                F.col("centroid"),
             ).alias("pdist"),
         )
     )
@@ -705,14 +702,8 @@ def _ivf_pq_query(
         .select(
             "query_id",
             "centroid_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("q_emb").cast("array<double>"),
-                    F.col("centroid"),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+            sqdist_col(
+                F.col("q_emb").cast("array<double>"), F.col("centroid")
             ).alias("dist"),
         )
         .withColumn("probe_rank", F.row_number().over(wq))
@@ -725,18 +716,11 @@ def _ivf_pq_query(
             "query_id",
             "m",
             "code",
-            F.aggregate(
-                F.zip_with(
-                    F.slice(
-                        F.col("q_emb").cast("array<double>"),
-                        F.col("m") * sub_d + 1,
-                        sub_d,
-                    ),
-                    F.col("centroid"),
-                    lambda x, y: (x - y) * (x - y),
+            sqdist_col(
+                F.slice(
+                    F.col("q_emb").cast("array<double>"), F.col("m") * sub_d + 1, sub_d
                 ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+                F.col("centroid"),
             ).alias("pdist"),
         )
     )

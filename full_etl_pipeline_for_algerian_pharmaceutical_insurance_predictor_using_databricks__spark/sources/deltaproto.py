@@ -3166,23 +3166,27 @@ def merge_upsert_delta(
     part_cols = list(meta.get("partitionColumns") or [])
     bounds = updates.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
     lo, hi = bounds["lo"], bounds["hi"]
-    vs = delta_versions(path)
     if lo is None:
-        return vs[-1]  # empty update set: no-op
-    touched = {
-        f: a
-        for f, a in live.items()
-        if not (
-            _add_outside_range(a, part_cols, key, lo, hi)
-            and _add_outside_range(
-                a,
-                [mapping.get(c, c) for c in part_cols],
-                mapping.get(key, key),
-                lo,
-                hi,
+        # no non-NULL key: nothing can match, so the rows (if any) are
+        # pure inserts that touch no file and read no key range
+        if updates.isEmpty():
+            return delta_versions(path)[-1]  # empty update set: no-op
+        touched = {}
+    else:
+        touched = {
+            f: a
+            for f, a in live.items()
+            if not (
+                _add_outside_range(a, part_cols, key, lo, hi)
+                and _add_outside_range(
+                    a,
+                    [mapping.get(c, c) for c in part_cols],
+                    mapping.get(key, key),
+                    lo,
+                    hi,
+                )
             )
-        )
-    }
+        }
     rt_cols = _rt_materialized_cols(meta)
     cols = updates.columns
     rows = updates.withColumn(_DP_NEW, F.lit(True))
@@ -3262,7 +3266,7 @@ def merge_upsert_delta(
                 }
             )
         )
-    _scope = {
+    _scope = None if lo is None else {
         "part_cols": part_cols, "col": key, "lo": lo, "hi": hi,
         "phys_part": [mapping.get(c, c) for c in part_cols],
         "phys_col": mapping.get(key, key),

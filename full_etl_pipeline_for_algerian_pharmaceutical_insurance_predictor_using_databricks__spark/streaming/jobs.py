@@ -1,10 +1,16 @@
 """Structured Streaming jobs over the `events` table (SURVEY.md §7a).
 
-The batch twins of these transformations live in `operators/events.py`
-and are oracle-checked; here the SAME logical plans run as streams:
-`readStream` → event-time windows + watermark → sink. Tests assert
-batch/stream parity by draining the stream with Trigger.AvailableNow
-into a memory sink and comparing against the batch result.
+One DataFrame query runs on a static or a streaming table: the
+windowed aggregates, the click→purchase join and the hourly partials
+are `DataFrame → DataFrame` bodies in `operators/events.py`, and the
+corpus gate and the enrichment join are bodies here.  A batch entry
+applies a body to `load_table(...)`; a stream applies the same body to
+`watermarked(readStream)`.  Tests assert batch/stream parity by
+draining the stream with Trigger.AvailableNow (`_drain`, the one drain
+every job here goes through) and comparing against the body's batch
+result.  Only operators Spark cannot run on a stream as written — the
+four `applyInPandasWithState` ones below — have their own streaming
+algorithm.
 
 Watermarking: `withWatermark("ts", ...)` bounds state for late data —
 aggregation state for windows older than (max event time - delay) is
@@ -19,11 +25,43 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..operators.events import SESSION_GAP_SEC
+from ..operators.events import (
+    SESSION_GAP_SEC,
+    hourly_partials,
+    top_k_per_window,
+    tumbling_counts,
+)
 from ..schemas import EVENTS
 from ..sources import load_table, local_rows_df
 
 WATERMARK_DELAY = "10 minutes"
+
+
+def watermarked(stream: DataFrame) -> DataFrame:
+    """`stream` under the event-time watermark every windowed, joined or
+    deduplicated body here runs with (the one place it is applied)."""
+    return stream.withWatermark("ts", WATERMARK_DELAY)
+
+
+def _drain(writer, what: str, checkpoint_dir: str | None = None) -> None:
+    """Run a DataStreamWriter whose sink is set with Trigger.AvailableNow
+    (process everything available, then stop), waiting up to 300 s.
+
+    `checkpoint_dir=None` uses a throwaway checkpoint — a one-shot
+    drain.  A persistent directory gives RESTART CONTINUATION: a later
+    drain with the same checkpoint resumes from the committed offsets
+    and processes only data that arrived since."""
+    if checkpoint_dir is None:
+        with tempfile.TemporaryDirectory() as ckpt:
+            return _drain(writer, what, ckpt)
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"{what} drain exceeded 300s")
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,53 +97,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # division loses 1µs precision past double's 2^53 exact range
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
-
-
-def tumbling_counts_stream(stream: DataFrame) -> DataFrame:
-    """Watermarked 5-minute tumbling counts — the streaming twin of
-    operators.events.tumbling_5min."""
-    return (
-        stream.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("events"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "events",
-        )
-    )
-
-
-def session_window_stream(stream: DataFrame) -> DataFrame:
-    """Watermarked per-user session windows (30-min gap) — the
-    streaming twin of operators.events.session_window_agg. Session
-    state is merged incrementally and evicted once the watermark passes
-    a session's close."""
-    return (
-        stream.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.session_window("ts", f"{SESSION_GAP_SEC} seconds").alias("w"), "user_id")
-        .agg(F.count("*").alias("events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("w.start")).alias("session_start"),
-            "events",
-        )
-    )
-
-
-def sliding_counts_stream(stream: DataFrame) -> DataFrame:
-    """Watermarked 10-min/5-min sliding counts — streaming twin of
-    operators.events.sliding_10min_every_5 (each event contributes to
-    two overlapping windows; state holds both until watermark close)."""
-    return (
-        stream.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"))
-        .agg(F.count("*").alias("events"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "events",
-        )
-    )
 
 
 def stateful_user_totals_stream(stream: DataFrame) -> DataFrame:
@@ -216,7 +207,7 @@ def stateful_sessionizer_stream(stream: DataFrame) -> DataFrame:
             )
 
     return (
-        stream.withWatermark("ts", WATERMARK_DELAY)
+        watermarked(stream)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -452,8 +443,6 @@ def user_dim_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     user row to a single task (the unpartitioned-window trap,
     SURVEY §4.3.1); this form stays a map-side expression after the one
     per-user aggregation and scales to any number of users."""
-    from ..sources import load_table
-
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         F.count("*").alias("user_events"),
@@ -469,148 +458,6 @@ def user_dim_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_user.select(
         "user_id", "user_events", rank.alias("user_value_rank")
     )
-
-
-def click_purchase_interval_join_stream(stream: DataFrame) -> DataFrame:
-    """Stream-stream inner join: each purchase matched to the same
-    user's clicks in the preceding 30 minutes. Both sides carry
-    watermarks and the join condition bounds both event times, so click
-    state older than (watermark - 30 min) is evicted — the state stays
-    finite no matter how long the streams run."""
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK_DELAY)
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", WATERMARK_DELAY)
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND "
-            "click_ts >= purchase_ts - INTERVAL 30 MINUTES AND "
-            "click_ts < purchase_ts"
-        ),
-        "inner",
-    ).select("purchase_id", "click_id", "p_user", "purchase_ts", "click_ts")
-
-
-def click_purchase_left_outer_stream(stream: DataFrame) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every purchase emits —
-    matched against the user's preceding-30-minute clicks when any
-    exist, with NULL click columns otherwise.  The outer side is the
-    semantically hard part of streaming joins: an unmatched purchase
-    can only be declared unmatched once the WATERMARK passes its join
-    window (no future click can still arrive), so null rows surface
-    with watermark latency while matches emit immediately — state
-    eviction and outer-row emission share the same clock.  Both-side
-    watermarks + both-side time bounds keep state finite forever, same
-    as the inner twin above."""
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK_DELAY)
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", WATERMARK_DELAY)
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND "
-            "click_ts >= purchase_ts - INTERVAL 30 MINUTES AND "
-            "click_ts < purchase_ts"
-        ),
-        "left_outer",
-    ).select("purchase_id", "click_id", "p_user", "purchase_ts", "click_ts")
-
-
-def click_purchase_full_outer_stream(stream: DataFrame) -> DataFrame:
-    """Stream-stream FULL OUTER interval join — completes the outer
-    matrix (inner/left/full): matched pairs emit immediately; an
-    unmatched PURCHASE emits null click columns and an unmatched CLICK
-    emits null purchase columns, each only once the watermark passes
-    its side's join window (no future partner can still arrive).  Both
-    sides therefore need both the watermark AND a time bound — the
-    same state-eviction clock as the left twin, now driving outer-row
-    emission in both directions.  Both user keys are projected because
-    either side may be the null one."""
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK_DELAY)
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", WATERMARK_DELAY)
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND "
-            "click_ts >= purchase_ts - INTERVAL 30 MINUTES AND "
-            "click_ts < purchase_ts"
-        ),
-        "full_outer",
-    ).select(
-        "purchase_id", "click_id", "p_user", "c_user", "purchase_ts", "click_ts"
-    )
-
-
-def click_purchase_interval_join_batch(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Batch twin of the stream-stream interval join (parity check)."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            "p_user = c_user AND "
-            "click_ts >= purchase_ts - INTERVAL 30 MINUTES AND "
-            "click_ts < purchase_ts"
-        ),
-        "inner",
-    ).select("purchase_id", "click_id", "p_user", "purchase_ts", "click_ts")
 
 
 def transform_with_state_available() -> bool:
@@ -688,27 +535,11 @@ def foreach_batch_to_parquet(
     CONTINUATION: a later call with the same checkpoint resumes from
     the committed offsets and processes only data that arrived since
     (exactly-once across restarts — the production contract)."""
-    import tempfile
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    def drain(ckpt: str) -> None:
-        q = (
-            result.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("foreachBatch drain exceeded 300s")
-
-    if checkpoint_dir is not None:
-        drain(checkpoint_dir)
-    else:
-        with tempfile.TemporaryDirectory() as ckpt:
-            drain(ckpt)
+    _drain(result.writeStream.foreachBatch(write_batch), "foreachBatch", checkpoint_dir)
 
 
 def documents_stream(
@@ -739,9 +570,9 @@ def corpus_registry_ingest(stream: DataFrame, registry_dir: str) -> None:
     `operators.dedup.exact_dedup` for a corpus that arrives batch by
     batch forever.
 
-    Each micro-batch: canonical fingerprint (same normalization as the
-    batch operator) → keep min doc_id per fingerprint WITHIN the batch
-    → left-anti join against every prior batch's registry partition →
+    Each micro-batch: the batch operator's own body
+    (`dedup.exact_fingerprints`: canonical fingerprint, min doc_id per
+    fingerprint WITHIN the batch) → left-anti join against every prior batch's registry partition →
     land only never-seen-before fingerprints under `batch=<id>`,
     written with overwrite so a micro-batch RETRY replaces its own
     partition instead of duplicating it (the current batch's partition
@@ -755,16 +586,11 @@ def corpus_registry_ingest(stream: DataFrame, registry_dir: str) -> None:
     disk and the probe side is batch-sized)."""
     import glob
 
+    from ..operators.dedup import exact_fingerprints
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        normalized = F.trim(
-            F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]+", " ")
-        )
-        fps = (
-            batch_df.select("doc_id", F.md5(normalized).alias("fingerprint"))
-            .groupBy("fingerprint")
-            .agg(F.min("doc_id").alias("keeper_doc_id"))
-        )
+        fps = exact_fingerprints(batch_df).drop("copies")
         own = f"{registry_dir}/batch={batch_id}"
         prior = [p for p in glob.glob(f"{registry_dir}/batch=*") if p != own]
         if prior:
@@ -772,16 +598,7 @@ def corpus_registry_ingest(stream: DataFrame, registry_dir: str) -> None:
             fps = fps.join(seen, "fingerprint", "left_anti")
         fps.write.mode("overwrite").parquet(own)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("registry ingest drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "registry ingest")
 
 
 MEMBERSHIP_BUCKETS = 1 << 16
@@ -814,19 +631,14 @@ def corpus_registry_ingest_gated(
     dimension."""
     import glob
 
+    from ..operators.dedup import exact_fingerprints
+
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        normalized = F.trim(
-            F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9]+", " ")
-        )
-        fps = (
-            batch_df.select("doc_id", F.md5(normalized).alias("fingerprint"))
-            .groupBy("fingerprint")
-            .agg(F.min("doc_id").alias("keeper_doc_id"))
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("fingerprint"), F.lit(n_buckets)),
-            )
+        fps = exact_fingerprints(batch_df).select(
+            "fingerprint",
+            "keeper_doc_id",
+            F.pmod(F.xxhash64("fingerprint"), F.lit(n_buckets)).alias("bucket"),
         )
         own = f"{registry_dir}/batch={batch_id}"
         own_sketch = f"{registry_dir}/_sketch/batch={batch_id}"
@@ -873,16 +685,7 @@ def corpus_registry_ingest_gated(
             own_sketch
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("gated registry ingest drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "gated registry ingest")
 
 
 def near_dup_registry_ingest(
@@ -1004,16 +807,7 @@ def near_dup_registry_ingest(
             f"{registry_dir}/arrays/batch={batch_id}"
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("near-dup registry drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "near-dup registry")
 
 
 def embeddings_stream(
@@ -1062,7 +856,7 @@ def ann_registry_ingest(
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        from ..operators.similarity import norm_col
+        from ..operators.similarity import norm_col, sqdist_col
 
         spark = batch_df.sparkSession
         cdir = f"{registry_dir}/centroids"
@@ -1107,14 +901,8 @@ def ann_registry_ingest(
                 "embedding",
                 "norm",
                 "list_id",
-                F.aggregate(
-                    F.zip_with(
-                        F.col("embedding").cast("array<double>"),
-                        F.col("centroid"),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
+                sqdist_col(
+                    F.col("embedding").cast("array<double>"), F.col("centroid")
                 ).alias("dist"),
             )
             .withColumn("rn", F.row_number().over(wv))
@@ -1125,16 +913,7 @@ def ann_registry_ingest(
             f"{registry_dir}/lists/batch={batch_id}"
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("ANN registry ingest drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "ANN registry ingest")
 
 
 def ann_registry_query(
@@ -1150,7 +929,7 @@ def ann_registry_query(
     partitions via a hash join on list_id, and re-ranks candidates by
     exact cosine — identical physics to `ann_ivf`, with the registry
     parquet standing in for the in-session assignment table."""
-    from ..operators.similarity import dot_col
+    from ..operators.similarity import dot_col, sqdist_col
 
     centroids = spark.read.parquet(f"{registry_dir}/centroids")
     lists = spark.read.parquet(f"{registry_dir}/lists/batch=*")
@@ -1162,14 +941,8 @@ def ann_registry_query(
             "q_emb",
             "q_norm",
             "list_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("q_emb").cast("array<double>"),
-                    F.col("centroid"),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
+            sqdist_col(
+                F.col("q_emb").cast("array<double>"), F.col("centroid")
             ).alias("dist"),
         )
         .withColumn("pr", F.row_number().over(wq))
@@ -1201,77 +974,65 @@ def ann_registry_query(
 
 
 def cdc_latest_value_ingest(
-    stream: DataFrame, target_dir: str, keys: list[str] | None = None
+    stream: DataFrame, target_dir: str, key: str = "user_id"
 ) -> None:
-    """Streaming CDC apply: maintain a parquet table holding each key's
-    LATEST row as changes flow in — `foreachBatch` + the batch
-    `merge_upsert` sink, the standard "MERGE per micro-batch" pattern
-    (Delta calls it exactly this; here the target is plain parquet).
+    """Streaming CDC apply: maintain a Delta table holding each key's
+    LATEST row as changes flow in — `foreachBatch` + one MERGE per
+    micro-batch, the pattern Delta documents for exactly this.
 
-    The merge runs with `order_col="ts"` — the
-    `WHEN MATCHED AND s.ts > t.ts` rule — so a late-arriving OLDER
-    change can never clobber newer state even when micro-batches are
-    not in commit order, several updates to one key may share a batch,
-    and a replayed batch re-merges the same rows to the same result —
-    idempotent, the exactly-once contract every foreachBatch sink here
-    follows."""
-    from ..sources.sinks import merge_upsert
-
-    keys = keys or ["user_id"]
+    Each batch is unioned with the target, every row tagged with the
+    side it came from, and one winner kept per key: highest `ts`, then
+    the other columns DESC, and on a full tie the target row.  So a
+    late-arriving OLDER change can never clobber newer state even when
+    micro-batches are not in commit order, several updates to one key
+    may share a batch, and a replayed batch finds no winner of its own
+    and commits nothing — the exactly-once contract every foreachBatch
+    sink here follows.  Only the winners that came from the batch are
+    MERGEd (`merge_upsert_delta`); the first batch creates the
+    table."""
+    from ..sources import deltaproto as dp
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(
-            batch_df.sparkSession, target_dir, batch_df, keys, order_col="ts"
+        spark = batch_df.sparkSession
+        exists = bool(dp.delta_versions(target_dir))
+        rows = batch_df.withColumn("_from_batch", F.lit(True))
+        if exists:
+            rows = (
+                dp.read_delta(spark, target_dir)
+                .withColumn("_from_batch", F.lit(False))
+                .unionByName(rows)
+            )
+        tiebreak = [F.desc(c) for c in batch_df.columns if c not in (key, "ts")]
+        w = Window.partitionBy(key).orderBy(F.desc("ts"), *tiebreak, "_from_batch")
+        winners = (
+            rows.withColumn("_rn", F.row_number().over(w))
+            .filter((F.col("_rn") == 1) & F.col("_from_batch"))
+            .drop("_rn", "_from_batch")
         )
+        if exists:
+            dp.merge_upsert_delta(spark, winners, target_dir, key)
+        else:
+            dp.write_delta(winners, target_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("CDC upsert drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "CDC upsert")
 
 
-def corpus_curation_gate_stream(stream: DataFrame) -> DataFrame:
+def corpus_curation_gate(docs: DataFrame) -> DataFrame:
     """Stateless ingestion gate for a continuously-arriving corpus: per
     incoming document, quality verdict (Gopher/C4 rules), PII scrub +
     redaction counts, and the salted-hash dataset-split assignment —
     the filter-at-the-door stage every streaming corpus pipeline runs
     before anything lands.
 
-    Map-only (no state, no watermark, no shuffle): the streaming plan
-    is literally the batch expressions applied per micro-batch, so
-    batch/stream parity is exact by construction and the job scales
-    with source parallelism alone.  Reuses the SAME expression helpers
-    as the batch operators (`text.with_quality`,
-    `curation.with_redaction`, `curation.with_split`)."""
+    Map-only (no state, no watermark, no shuffle): one body over the
+    documents table or its stream, so batch/stream parity is exact by
+    construction and the job scales with source parallelism alone.
+    Reuses the SAME expression helpers as the batch operators
+    (`text.with_quality`, `curation.with_redaction`,
+    `curation.with_split`)."""
     from ..operators.curation import with_redaction, with_split
     from ..operators.text import with_quality
 
-    gated = with_split(with_redaction(with_quality(stream)))
-    return gated.select(
-        "doc_id",
-        "lang",
-        "source",
-        "verdict",
-        "n_redactions",
-        "clean_text",
-        "split",
-    )
-
-
-def corpus_curation_gate_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of `corpus_curation_gate_stream` over the same
-    documents table (parity oracle for the streaming test)."""
-    from ..operators.curation import with_redaction, with_split
-    from ..operators.text import with_quality
-    from ..sources import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
     gated = with_split(with_redaction(with_quality(docs)))
     return gated.select(
         "doc_id",
@@ -1294,35 +1055,27 @@ def hourly_rollup_registry_ingest(stream: DataFrame, registry_dir: str) -> None:
     another partial for the same hour and merges on read.
 
     At 100 TB/day this is how long-retention rollups actually run —
-    the state-store windowed aggregate (tumbling_counts_stream) holds
+    the state-store windowed aggregate (`tumbling_counts`) holds
     only the watermark-recent hours, while this registry accumulates
     partials forever at one batch-sized shuffle per trigger, and the
     read-side merge (`hourly_rollup_read`) touches |hours × types|
     rows, not events."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = (
-            batch_df.groupBy(
-                F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-                "event_type",
-            )
-            .agg(
-                F.count("*").alias("events"),
-                F.sum("value").alias("value_sum"),
-            )
+        hourly_partials(batch_df).write.mode("overwrite").parquet(
+            f"{registry_dir}/batch={batch_id}"
         )
-        partial.write.mode("overwrite").parquet(f"{registry_dir}/batch={batch_id}")
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("hourly rollup registry drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "hourly rollup registry")
+
+
+def _merge_hourly(partials: DataFrame) -> DataFrame:
+    """Re-aggregate `hourly_partials` rows (sums of sums — exact,
+    because both metrics are mergeable)."""
+    return partials.groupBy("hour_start", "event_type").agg(
+        F.sum("events").alias("events"),
+        F.sum("value_sum").alias("value_sum"),
+    )
 
 
 def _batch_span(path: str) -> tuple[int, int]:
@@ -1399,14 +1152,7 @@ def hourly_rollup_read_asof(
     """`hourly_rollup_read` against an as-of snapshot: merge-on-read
     over only the partials that existed at `as_of_batch` — what the
     dashboard showed then, reproducible now."""
-    return (
-        read_registry_asof(spark, registry_dir, as_of_batch)
-        .groupBy("hour_start", "event_type")
-        .agg(
-            F.sum("events").alias("events"),
-            F.sum("value_sum").alias("value_sum"),
-        )
-    )
+    return _merge_hourly(read_registry_asof(spark, registry_dir, as_of_batch))
 
 
 def scrub_registry(
@@ -1425,11 +1171,11 @@ def scrub_registry(
     rewrite cost is proportional to where the subject actually
     appears, not registry size.
 
-    Crash safety mirrors `merge_upsert`'s swap: per dir, write to a
-    tmp, rename the original OUT of the `batch=*` namespace (so a
-    half-finished scrub never double-feeds the readers' glob), rename
-    tmp in, then drop the old copy; an entry-time sweep restores or
-    discards leftovers from a crashed run, making reruns idempotent.
+    Crash safety: per dir, write to a tmp, rename the original OUT of
+    the `batch=*` namespace (so a half-finished scrub never double-feeds
+    the readers' glob), rename tmp in, then drop the old copy; an
+    entry-time sweep restores or discards leftovers from a crashed run,
+    making reruns idempotent.
 
     `values` is a driver-side list — forget requests are small by
     nature; a massive purge would use an anti-join against a forget
@@ -1527,12 +1273,7 @@ def compact_registry(
     size-targeted `repartition` would replace the `coalesce(1)` on a
     real corpus."""
     import glob as g
-    import re
     import shutil
-
-    def lo_hi(path: str) -> tuple[int, int]:
-        ids = [int(x) for x in re.findall(r"\d+", path.rsplit("batch=", 1)[1])]
-        return min(ids), max(ids)
 
     # Crash recovery BEFORE compacting, so a rerun after a mid-compact
     # crash is idempotent instead of (a) permanently double-counting
@@ -1546,7 +1287,7 @@ def compact_registry(
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
     dirs = g.glob(f"{registry_dir}/batch=*")
-    spans = {p: lo_hi(p) for p in dirs}
+    spans = {p: _batch_span(p) for p in dirs}
     for p, (slo, shi) in spans.items():
         for q, (qlo, qhi) in spans.items():
             if p != q and qlo <= slo and shi <= qhi and (qlo, qhi) != (slo, shi):
@@ -1554,14 +1295,14 @@ def compact_registry(
                     shutil.rmtree(p)
                 break
 
-    parts = sorted(g.glob(f"{registry_dir}/batch=*"), key=lo_hi)
+    parts = sorted(g.glob(f"{registry_dir}/batch=*"), key=_batch_span)
     written = 0
     for i in range(0, len(parts), group_size):
         chunk = parts[i : i + group_size]
         if len(chunk) < 2:
             continue
-        lo = min(lo_hi(p)[0] for p in chunk)
-        hi = max(lo_hi(p)[1] for p in chunk)
+        lo = min(_batch_span(p)[0] for p in chunk)
+        hi = max(_batch_span(p)[1] for p in chunk)
         df = spark.read.parquet(*chunk)
         if merge is not None:
             df = merge(df)
@@ -1585,14 +1326,7 @@ def compact_hourly_rollup_registry(
     """`compact_registry` for the partial-aggregate rollup registry:
     merged partials RE-AGGREGATE (sums of sums — both metrics are
     mergeable), so compaction also shrinks rows, not just files."""
-
-    def merge(df: DataFrame) -> DataFrame:
-        return df.groupBy("hour_start", "event_type").agg(
-            F.sum("events").alias("events"),
-            F.sum("value_sum").alias("value_sum"),
-        )
-
-    return compact_registry(spark, registry_dir, group_size, merge=merge)
+    return compact_registry(spark, registry_dir, group_size, merge=_merge_hourly)
 
 
 def hll_rollup_registry_ingest(stream: DataFrame, registry_dir: str) -> None:
@@ -1613,16 +1347,7 @@ def hll_rollup_registry_ingest(stream: DataFrame, registry_dir: str) -> None:
         ).agg(F.hll_sketch_agg("user_id").alias("sketch"))
         partial.write.mode("overwrite").parquet(f"{registry_dir}/batch={batch_id}")
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("HLL rollup registry drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "HLL rollup registry")
 
 
 def hll_rollup_read(spark: SparkSession, registry_dir: str) -> DataFrame:
@@ -1711,16 +1436,7 @@ def quantile_sketch_registry_ingest(
             f"{registry_dir}/bins/batch={batch_id}"
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("quantile sketch registry drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "quantile sketch registry")
 
 
 def quantile_sketch_read(
@@ -1793,14 +1509,7 @@ def hourly_rollup_read(spark: SparkSession, registry_dir: str) -> DataFrame:
     """Merge-on-read over the partial-aggregate registry: final hourly
     rollup = re-aggregate the partials (sums of sums — exact because
     both metrics are mergeable)."""
-    return (
-        spark.read.parquet(f"{registry_dir}")
-        .groupBy("hour_start", "event_type")
-        .agg(
-            F.sum("events").alias("events"),
-            F.sum("value_sum").alias("value_sum"),
-        )
-    )
+    return _merge_hourly(spark.read.parquet(registry_dir))
 
 
 def hourly_rollup_anomaly_read(
@@ -1821,11 +1530,7 @@ def hourly_rollup_anomaly_read(
     monitor-every-trigger loop affordable at 100 TB/day."""
     from ..operators.events import score_hourly_counts
 
-    merged = (
-        spark.read.parquet(registry_dir)
-        .groupBy("hour_start", "event_type")
-        .agg(F.sum("events").alias("events"))
-    )
+    merged = _merge_hourly(spark.read.parquet(registry_dir))
     return score_hourly_counts(merged, window_hours, z_thresh)
 
 
@@ -1841,38 +1546,14 @@ def hourly_rollup_gapfill_read(
     boundaries the stream arrived in — parity-tested."""
     from ..operators.events import gapfill_locf_counts
 
-    merged = (
-        spark.read.parquet(registry_dir)
-        .groupBy("hour_start", "event_type")
-        .agg(
-            F.sum("events").alias("events"),
-            F.sum("value_sum").alias("value_sum"),
-        )
-    )
-    return gapfill_locf_counts(merged)
-
-
-def hourly_rollup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the registry rollup over the full events table."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour_start"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("events"),
-            F.sum("value").alias("value_sum"),
-        )
-    )
+    return gapfill_locf_counts(_merge_hourly(spark.read.parquet(registry_dir)))
 
 
 def dedup_within_watermark_stream(stream: DataFrame) -> DataFrame:
     """Streaming exact dedup on event_id with bounded state:
     dropDuplicatesWithinWatermark keeps ids only while they can still
     collide under the watermark."""
-    return stream.withWatermark("ts", WATERMARK_DELAY).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
+    return watermarked(stream).dropDuplicatesWithinWatermark(["event_id"])
 
 
 # --------------------------------------------------------------------------
@@ -1944,16 +1625,7 @@ def dashboard_registry_ingest(stream: DataFrame, registry_dir: str) -> None:
             f"{registry_dir}/batch={batch_id}"
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("dashboard registry drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "dashboard registry")
 
 
 def _dashboard_partials(spark: SparkSession, registry_dir: str) -> DataFrame:
@@ -2041,20 +1713,11 @@ def run_available_now(
     windows/sessions still open when the source drains stay in state
     and are NOT emitted (correct streaming semantics, but a parity
     test against batch must use "complete" to see them)."""
-    spark = result.sparkSession
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(f"stream {name} did not drain within 300s")
-    return spark.table(name)
+    _drain(
+        result.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        f"stream {name}",
+    )
+    return result.sparkSession.table(name)
 
 
 # --------------------------------------------------------------------------
@@ -2078,46 +1741,16 @@ def trending_topk_ingest(stream: DataFrame, out_dir: str, k: int = TRENDING_K) -
     under micro-batch retry, same contract as the registries above.
     State is the open windows only (bounded by the watermark), and the
     per-batch rank touches ≤ |event types| rows per closed window."""
-    counts = tumbling_counts_stream(stream)
+    counts = tumbling_counts(watermarked(stream))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("window_start").orderBy(
-            F.desc("events"), "event_type"
-        )
-        (
-            batch_df.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/batch={batch_id}")
+        top_k_per_window(batch_df, k).write.mode("overwrite").parquet(
+            f"{out_dir}/batch={batch_id}"
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            counts.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("trending drain exceeded 300s")
-
-
-def trending_topk_batch(
-    spark: SparkSession, sf_dir: str, k: int = TRENDING_K
-) -> DataFrame:
-    """Batch twin: same tumbling counts, same rank, over the full
-    fixture (including windows a streaming drain would hold open)."""
-    from ..operators.events import tumbling_5min
-
-    counts = tumbling_5min(spark, sf_dir).select(
-        "window_start", "event_type", "events"
-    )
-    w = Window.partitionBy("window_start").orderBy(F.desc("events"), "event_type")
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    _drain(
+        counts.writeStream.foreachBatch(write_batch).outputMode("append"),
+        "trending",
     )
 
 
@@ -2151,16 +1784,7 @@ def boilerplate_registry_ingest(stream: DataFrame, registry_dir: str) -> None:
         )
         partial.write.mode("overwrite").parquet(f"{registry_dir}/batch={batch_id}")
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("boilerplate registry drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "boilerplate registry")
 
 
 def boilerplate_topk_read(
@@ -2190,8 +1814,6 @@ def user_tier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static user dimension for enrichment demos: tier derived
     deterministically from the id (stands in for any slowly-changing
     dim table the stream joins against)."""
-    from ..sources import load_table
-
     users = load_table(spark, sf_dir, "events").select("user_id").distinct()
     tier = (
         F.when(F.col("user_id") % 4 == 0, "platinum")
@@ -2202,8 +1824,10 @@ def user_tier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return users.withColumn("tier", tier)
 
 
-def enriched_events_stream(stream: DataFrame, dim: DataFrame) -> DataFrame:
-    """STREAM-STATIC join: enrich each micro-batch with a broadcast
+def enriched_events(ev: DataFrame, dim: DataFrame) -> DataFrame:
+    """Dimension enrichment, one body for the events table or its
+    stream.  On a stream it is a STREAM-STATIC join: each micro-batch
+    joins a broadcast
     dimension — stateless (no watermark, no state store, APPEND-legal),
     because the static side is fixed per trigger; the planner re-reads
     the dim each micro-batch, which is how slowly-changing dims pick up
@@ -2211,23 +1835,8 @@ def enriched_events_stream(stream: DataFrame, dim: DataFrame) -> DataFrame:
     fact-stream × dim-table enrichment: the dim broadcasts, the stream
     never shuffles.  Row-level on purpose — a downstream watermarked
     agg composes on top; the parity test rolls the landed rows up."""
-    return stream.join(F.broadcast(dim), "user_id").select(
+    return ev.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "tier", "event_type", "value"
-    )
-
-
-def enriched_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin over the full fixture (parity oracle)."""
-    from ..sources import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.join(F.broadcast(user_tier_dim(spark, sf_dir)), "user_id")
-        .groupBy("tier", "event_type")
-        .agg(
-            F.count("*").alias("events"),
-            F.countDistinct("user_id").alias("users"),
-        )
     )
 
 
@@ -2252,8 +1861,6 @@ def dq_gate_stream(
     Both sinks are batch-id-keyed overwrites, so retries replace their
     own partition; pass + quarantine partition every input row."""
     from ..operators.constraints import RowRule  # noqa: F401 (type docs)
-
-    import tempfile
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         oks = [
@@ -2285,22 +1892,7 @@ def dq_gate_stream(
             .parquet(f"{quarantine_dir}/batch={batch_id}")
         )
 
-    def drain(ckpt: str) -> None:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("DQ gate drain exceeded 300s")
-
-    if checkpoint_dir is not None:
-        drain(checkpoint_dir)
-    else:
-        with tempfile.TemporaryDirectory() as ckpt:
-            drain(ckpt)
+    _drain(stream.writeStream.foreachBatch(write_batch), "DQ gate", checkpoint_dir)
 
 
 def hourly_rollup_seasonal_read(
@@ -2317,11 +1909,7 @@ def hourly_rollup_seasonal_read(
     arrival batching (parity-tested)."""
     from ..operators.events import score_seasonal_counts
 
-    merged = (
-        spark.read.parquet(registry_dir)
-        .groupBy("hour_start", "event_type")
-        .agg(F.sum("events").alias("events"))
-    )
+    merged = _merge_hourly(spark.read.parquet(registry_dir))
     return score_seasonal_counts(merged, z_thresh, min_peers)
 
 
@@ -2333,8 +1921,6 @@ def hourly_rollup_seasonal_read(
 def baseline_type_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frozen reference distribution of event types (the training-time
     snapshot a production monitor compares live traffic against)."""
-    from ..sources import load_table
-
     ev = load_table(spark, sf_dir, "events")
     per_type = ev.groupBy("event_type").agg(F.count("*").alias("n"))
     total = per_type.agg(F.sum("n")).first()[0]
@@ -2375,16 +1961,7 @@ def drift_monitor_stream(
         )
         out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("drift monitor drain exceeded 300s")
+    _drain(stream.writeStream.foreachBatch(write_batch), "drift monitor")
 
 
 def registry_diff(

@@ -3280,6 +3280,7 @@ MERGE_SHAPES = [
     "dv_touched",
     "no_touched",
     "empty_updates",
+    "all_null_keys",
 ]
 
 
@@ -3373,6 +3374,9 @@ def _merge_shape(spark, path, shape):
     elif shape == "no_touched":
         table(base)
         ups = [(100, "i", 1), (101, "j", 2)]
+    elif shape == "all_null_keys":
+        table(base + [(None, "0", -1)])
+        ups = [(None, "n", 4), (None, "m", 5)]
     else:
         assert shape == "empty_updates"
         table(base)

@@ -124,144 +124,6 @@ def test_delta_available_looked_up_once_per_context(spark, py4j_calls):
     assert calls[0] == 0
 
 
-def test_merge_upsert_semantics(spark, tmp_path):
-    """MERGE on a parquet dir: matched rows replaced, unmatched
-    inserted, untouched carried over; duplicate-key updates rejected;
-    re-applying the same updates is a no-op."""
-    import pytest
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.sinks import (
-        merge_upsert,
-    )
-
-    tgt = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], "id long, name string, v double"
-    )
-    merge_upsert(spark, tgt, base, ["id"])
-    assert spark.read.parquet(tgt).count() == 3
-
-    updates = spark.createDataFrame(
-        [(2, "b2", 99.0), (4, "d", 40.0)], "id long, name string, v double"
-    )
-    merge_upsert(spark, tgt, updates, ["id"])
-    rows = {r.id: (r.name, r.v) for r in spark.read.parquet(tgt).collect()}
-    assert rows == {1: ("a", 10.0), 2: ("b2", 99.0), 3: ("c", 30.0), 4: ("d", 40.0)}
-
-    # idempotent re-apply
-    merge_upsert(spark, tgt, updates, ["id"])
-    rows2 = {r.id: (r.name, r.v) for r in spark.read.parquet(tgt).collect()}
-    assert rows2 == rows
-
-    dup = spark.createDataFrame(
-        [(5, "x", 1.0), (5, "y", 2.0)], "id long, name string, v double"
-    )
-    with pytest.raises(ValueError, match="multiple rows"):
-        merge_upsert(spark, tgt, dup, ["id"])
-    assert {r.id for r in spark.read.parquet(tgt).collect()} == {1, 2, 3, 4}
-
-
-def test_merge_upsert_partition_pruned(spark, tmp_path):
-    """Partition-pruned MERGE: only partitions holding updated keys are
-    rewritten; untouched partition files stay byte-identical (the Delta
-    MERGE file-pruning contract on plain parquet)."""
-    import glob
-    import hashlib
-    import os
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.sinks import (
-        merge_upsert,
-    )
-
-    tgt = str(tmp_path / "ptbl")
-    base = spark.createDataFrame(
-        [(1, "east", 10.0), (2, "east", 20.0), (3, "west", 30.0), (4, "north", 40.0)],
-        "id long, region string, v double",
-    )
-    merge_upsert(spark, tgt, base, ["id"], partition_col="region")
-    assert spark.read.parquet(tgt).count() == 4
-
-    def digest(pattern):
-        out = {}
-        for f in sorted(glob.glob(os.path.join(tgt, pattern, "*.parquet"))):
-            out[os.path.relpath(f, tgt)] = (
-                hashlib.sha256(open(f, "rb").read()).hexdigest(),
-                os.path.getmtime(f),
-            )
-        return out
-
-    west_before = digest("region=west")
-    north_before = digest("region=north")
-    assert west_before and north_before
-
-    updates = spark.createDataFrame(
-        [(2, "east", 99.0), (5, "south", 50.0)], "id long, region string, v double"
-    )
-    merge_upsert(spark, tgt, updates, ["id"], partition_col="region")
-
-    rows = {r.id: (r.region, r.v) for r in spark.read.parquet(tgt).collect()}
-    assert rows == {
-        1: ("east", 10.0),
-        2: ("east", 99.0),
-        3: ("west", 30.0),
-        4: ("north", 40.0),
-        5: ("south", 50.0),
-    }
-    # untouched partitions: same files, same bytes, same mtime
-    assert digest("region=west") == west_before
-    assert digest("region=north") == north_before
-
-    # idempotent re-apply, still pruned
-    merge_upsert(spark, tgt, updates, ["id"], partition_col="region")
-    assert digest("region=west") == west_before
-    rows2 = {r.id: (r.region, r.v) for r in spark.read.parquet(tgt).collect()}
-    assert rows2 == rows
-
-
-def test_merge_upsert_crash_recovery(spark, tmp_path):
-    """Leftover _merge_tmp / _merge_old dirs from a crashed merge are
-    repaired at entry instead of failing the rerun."""
-    import os
-    import shutil
-
-    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.sinks import (
-        merge_upsert,
-    )
-
-    tgt = str(tmp_path / "ctbl")
-    base = spark.createDataFrame([(1, 10.0), (2, 20.0)], "id long, v double")
-    merge_upsert(spark, tgt, base, ["id"])
-
-    # crash mid-write: stale _merge_tmp left behind
-    os.makedirs(str(tmp_path / "_merge_tmp" / "junk"))
-    upd = spark.createDataFrame([(2, 99.0)], "id long, v double")
-    merge_upsert(spark, tgt, upd, ["id"])
-    assert not os.path.exists(str(tmp_path / "_merge_tmp"))
-    assert {r.id: r.v for r in spark.read.parquet(tgt).collect()} == {1: 10.0, 2: 99.0}
-
-    # crash mid-swap: target renamed away, _merge_old holds the data
-    os.rename(tgt, str(tmp_path / "_merge_old"))
-    merge_upsert(spark, tgt, upd, ["id"])
-    assert {r.id: r.v for r in spark.read.parquet(tgt).collect()} == {1: 10.0, 2: 99.0}
-    assert not os.path.exists(str(tmp_path / "_merge_old"))
-
-    # partitioned mid-swap crash: displaced partition restored when its
-    # replacement was never published
-    ptgt = str(tmp_path / "ptbl2")
-    pbase = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0)], "id long, part string, v double"
-    )
-    merge_upsert(spark, ptgt, pbase, ["id"], partition_col="part")
-    os.makedirs(str(tmp_path / "_merge_old"), exist_ok=True)
-    shutil.move(
-        os.path.join(ptgt, "part=b"), str(tmp_path / "_merge_old" / "part=b")
-    )
-    pupd = spark.createDataFrame([(1, "a", 5.0)], "id long, part string, v double")
-    merge_upsert(spark, ptgt, pupd, ["id"], partition_col="part")
-    rows = {r.id: (r.part, r.v) for r in spark.read.parquet(ptgt).collect()}
-    assert rows == {1: ("a", 5.0), 2: ("b", 2.0)}
-
-
 def test_csv_quarantine_split(spark, tmp_path):
     """Every input line lands in exactly one of good/bad; good rows are
     typed per the explicit schema; bad keeps the raw line."""

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.operators import (
@@ -19,37 +20,37 @@ def test_stream_tumbling_matches_batch(spark, sf_dir):
     stream = jobs.events_stream(spark, sf_dir)
     assert stream.isStreaming
     result = jobs.run_available_now(
-        jobs.tumbling_counts_stream(stream), "t_tumbling", output_mode="complete"
+        batch_events.tumbling_counts(jobs.watermarked(stream)),
+        "t_tumbling",
+        output_mode="complete",
     )
-    got = {
-        (r.window_start, r.event_type): r.events for r in result.collect()
-    }
-    expected = {
-        (r.window_start, r.event_type): r.events
-        for r in batch_events.tumbling_5min(spark, sf_dir)
-        .select("window_start", "event_type", "events")
-        .collect()
-    }
+    got = sorted(tuple(r) for r in result.collect())
+    expected = sorted(
+        tuple(r) for r in batch_events.tumbling_5min(spark, sf_dir).collect()
+    )
     assert got == expected
 
 
 def test_stream_session_window_matches_batch(spark, sf_dir):
     stream = jobs.events_stream(spark, sf_dir)
     result = jobs.run_available_now(
-        jobs.session_window_stream(stream), "t_sessions", output_mode="complete"
+        batch_events.session_counts(jobs.watermarked(stream)),
+        "t_sessions",
+        output_mode="complete",
     )
-    got = {(r.user_id, r.session_start): r.events for r in result.collect()}
-    expected = {
-        (r.user_id, r.session_start): r.events
-        for r in batch_events.session_window_agg(spark, sf_dir).collect()
-    }
+    got = sorted(tuple(r) for r in result.collect())
+    expected = sorted(
+        tuple(r) for r in batch_events.session_window_agg(spark, sf_dir).collect()
+    )
     assert got == expected
 
 
 def test_stream_sliding_matches_batch(spark, sf_dir):
     stream = jobs.events_stream(spark, sf_dir)
     result = jobs.run_available_now(
-        jobs.sliding_counts_stream(stream), "t_sliding", output_mode="complete"
+        batch_events.sliding_counts(jobs.watermarked(stream)),
+        "t_sliding",
+        output_mode="complete",
     )
     got = {r.window_start: r.events for r in result.collect()}
     expected = {
@@ -159,12 +160,14 @@ def test_transform_with_state_running_max(spark, sf_dir):
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     stream = jobs.events_stream(spark, sf_dir)
     result = jobs.run_available_now(
-        jobs.click_purchase_interval_join_stream(stream), "t_ssjoin"
+        batch_events.click_purchase_join(jobs.watermarked(stream)), "t_ssjoin"
     )
     got = {(r.purchase_id, r.click_id) for r in result.collect()}
     expected = {
         (r.purchase_id, r.click_id)
-        for r in jobs.click_purchase_interval_join_batch(spark, sf_dir).collect()
+        for r in batch_events.click_purchase_join(
+            load_table(spark, sf_dir, "events")
+        ).collect()
     }
     assert got == expected
     assert got, "join produced no pairs"
@@ -308,10 +311,10 @@ def test_corpus_curation_gate_stream_matches_batch(spark, sf_dir):
     split assignment) must emit exactly the batch twin's rows when the
     corpus is drained through the streaming source."""
     got = jobs.run_available_now(
-        jobs.corpus_curation_gate_stream(jobs.documents_stream(spark, sf_dir)),
+        jobs.corpus_curation_gate(jobs.documents_stream(spark, sf_dir)),
         "curation_gate",
     )
-    want = jobs.corpus_curation_gate_batch(spark, sf_dir)
+    want = jobs.corpus_curation_gate(load_table(spark, sf_dir, "documents"))
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
@@ -326,7 +329,7 @@ def test_hourly_rollup_registry_matches_batch(spark, sf_dir, tmp_path):
     reg = str(tmp_path / "rollup")
     jobs.hourly_rollup_registry_ingest(jobs.events_stream(spark, sf_dir), reg)
     got = jobs.hourly_rollup_read(spark, reg)
-    want = jobs.hourly_rollup_batch(spark, sf_dir)
+    want = batch_events.hourly_partials(load_table(spark, sf_dir, "events"))
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
@@ -373,7 +376,7 @@ def test_hourly_rollup_registry_two_batches_and_retry(spark, sf_dir, tmp_path):
     jobs.hourly_rollup_registry_ingest(stream, reg)
     assert len(g.glob(reg + "/batch=*")) == 2
     got = jobs.hourly_rollup_read(spark, reg)
-    want = jobs.hourly_rollup_batch(spark, sf_dir)
+    want = batch_events.hourly_partials(load_table(spark, sf_dir, "events"))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
     # retry path: re-ingesting the same source (fresh checkpoint →
@@ -393,10 +396,12 @@ def test_trending_topk_stream_matches_batch(spark, sf_dir, tmp_path):
     held back)."""
     out = str(tmp_path / "trend")
     jobs.trending_topk_ingest(jobs.events_stream(spark, sf_dir), out)
-    got = spark.read.parquet(out + "/batch=*").select(
-        "window_start", "event_type", "events", "rank"
-    )
-    batch = jobs.trending_topk_batch(spark, sf_dir)
+    cols = ["window_start", "event_type", "events", "total_value", "rank"]
+    got = spark.read.parquet(out + "/batch=*").select(cols)
+    batch = batch_events.top_k_per_window(
+        batch_events.tumbling_counts(load_table(spark, sf_dir, "events")),
+        jobs.TRENDING_K,
+    ).select(cols)
     streamed_windows = [r[0] for r in got.select("window_start").distinct().collect()]
     assert streamed_windows, "stream emitted no closed windows"
     expected = batch.filter(F.col("window_start").isin(streamed_windows))
@@ -508,7 +513,7 @@ def test_hourly_rollup_compaction_matches_batch(spark, sf_dir, tmp_path):
     assert jobs.compact_hourly_rollup_registry(spark, reg, group_size=2) == 1
     assert len(g.glob(reg + "/batch=*")) == 1
     got = jobs.hourly_rollup_read(spark, reg)
-    want = jobs.hourly_rollup_batch(spark, sf_dir)
+    want = batch_events.hourly_partials(load_table(spark, sf_dir, "events"))
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
@@ -677,11 +682,15 @@ def test_cdc_latest_value_matches_batch(spark, sf_dir, tmp_path):
         .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     )
     tgt = str(tmp_path / "latest")
-    jobs.cdc_latest_value_ingest(stream, tgt, keys=["user_id"])
+    jobs.cdc_latest_value_ingest(stream, tgt, key="user_id")
+
+    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources import (
+        deltaproto as dp,
+    )
 
     got = {
         r.user_id: (r.ts, r.event_id)
-        for r in spark.read.parquet(tgt).collect()
+        for r in dp.read_delta(spark, tgt).collect()
     }
     from pyspark.sql import Window
 
@@ -900,7 +909,7 @@ def test_hourly_rollup_gapfill_read_matches_batch(spark, sf_dir, tmp_path):
     jobs.hourly_rollup_registry_ingest(jobs.events_stream(spark, sf_dir), reg)
     got = jobs.hourly_rollup_gapfill_read(spark, reg)
     want = ev_ops.gapfill_locf_counts(
-        jobs.hourly_rollup_batch(spark, sf_dir)
+        batch_events.hourly_partials(load_table(spark, sf_dir, "events"))
     )
     g = {(r.event_type, r.hour_start): (r.events, r.value_sum, r.value_sum_locf) for r in got.collect()}
     w = {(r.event_type, r.hour_start): (r.events, r.value_sum, r.value_sum_locf) for r in want.collect()}
@@ -1098,7 +1107,8 @@ def test_stream_stream_left_outer_join_matches_batch(spark, sf_dir):
     stream could not yet declare unmatched are the only legal gap)."""
     stream = jobs.events_stream(spark, sf_dir)
     result = jobs.run_available_now(
-        jobs.click_purchase_left_outer_stream(stream), "t_ssouter",
+        batch_events.click_purchase_join(jobs.watermarked(stream), "left_outer"),
+        "t_ssouter",
         output_mode="append",
     ).collect()
     got_matched = {
@@ -1108,7 +1118,9 @@ def test_stream_stream_left_outer_join_matches_batch(spark, sf_dir):
 
     inner = {
         (r.purchase_id, r.click_id)
-        for r in jobs.click_purchase_interval_join_batch(spark, sf_dir).collect()
+        for r in batch_events.click_purchase_join(
+            load_table(spark, sf_dir, "events")
+        ).collect()
     }
     assert got_matched == inner
 
@@ -1281,7 +1293,7 @@ def test_stream_static_enrichment_matches_batch(spark, sf_dir, tmp_path):
     )
     dim = jobs.user_tier_dim(spark, sf_dir)
     out = str(tmp_path / "enriched")
-    jobs.foreach_batch_to_parquet(jobs.enriched_events_stream(stream, dim), out)
+    jobs.foreach_batch_to_parquet(jobs.enriched_events(stream, dim), out)
     landed = spark.read.parquet(out + "/batch=*")
     got = {
         (r.tier, r.event_type): (r.events, r.users)
@@ -1291,7 +1303,10 @@ def test_stream_static_enrichment_matches_batch(spark, sf_dir, tmp_path):
     }
     want = {
         (r.tier, r.event_type): (r.events, r.users)
-        for r in jobs.enriched_events_batch(spark, sf_dir).collect()
+        for r in jobs.enriched_events(load_table(spark, sf_dir, "events"), dim)
+        .groupBy("tier", "event_type")
+        .agg(F.count("*").alias("events"), F.countDistinct("user_id").alias("users"))
+        .collect()
     }
     assert got == want
     # every event enriched exactly once (join lost/duplicated nothing)
@@ -1683,7 +1698,8 @@ def test_stream_stream_full_outer_join_matches_batch(spark, sf_dir):
     engine latency of the left-outer test applies per side)."""
     stream = jobs.events_stream(spark, sf_dir)
     result = jobs.run_available_now(
-        jobs.click_purchase_full_outer_stream(stream), "t_ssfull",
+        batch_events.click_purchase_join(jobs.watermarked(stream), "full_outer"),
+        "t_ssfull",
         output_mode="append",
     ).collect()
     got_matched = {
@@ -1696,7 +1712,9 @@ def test_stream_stream_full_outer_join_matches_batch(spark, sf_dir):
 
     inner = {
         (r.purchase_id, r.click_id)
-        for r in jobs.click_purchase_interval_join_batch(spark, sf_dir).collect()
+        for r in batch_events.click_purchase_join(
+            load_table(spark, sf_dir, "events")
+        ).collect()
     }
     assert got_matched == inner
 
@@ -2010,3 +2028,83 @@ def test_cep_stream_matches_batch_two_batches(spark, sf_dir, tmp_path):
         for r in ev_ops.cep_pattern(spark, sf_dir).collect()
     }
     assert got == want and got
+
+
+# --------------------------------------------------------------------------
+# Shared bodies on degenerate input; the single drain
+# --------------------------------------------------------------------------
+
+#: name -> (body over an events frame, streaming output mode); a None
+#: mode means the body runs per micro-batch (`trending_topk_ingest`)
+ZERO_ROW_BODIES = {
+    "tumbling_counts": (batch_events.tumbling_counts, "complete"),
+    "sliding_counts": (batch_events.sliding_counts, "complete"),
+    "session_counts": (batch_events.session_counts, "complete"),
+    **{
+        f"click_purchase_join_{how}": (
+            lambda ev, how=how: batch_events.click_purchase_join(ev, how),
+            "append",
+        )
+        for how in ("inner", "left_outer", "full_outer")
+    },
+    "hourly_partials": (batch_events.hourly_partials, "complete"),
+    "top_k_per_window": (
+        lambda ev: batch_events.top_k_per_window(
+            batch_events.tumbling_counts(ev), jobs.TRENDING_K
+        ),
+        None,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(ZERO_ROW_BODIES))
+def test_shared_body_on_zero_rows(spark, tmp_path, name):
+    """Every body shared by a batch entry and a stream gives zero rows,
+    and raises nothing, on a zero-row static frame and on a stream
+    whose only file holds zero rows."""
+    import glob as g
+
+    body, mode = ZERO_ROW_BODIES[name]
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    )
+    empty = spark.createDataFrame([], schema)
+    assert body(empty).count() == 0
+
+    src = str(tmp_path / "src")
+    empty.coalesce(1).write.parquet(src)
+    assert g.glob(src + "/part-*.parquet")
+    stream = spark.readStream.schema(schema).parquet(src)
+    if mode is None:
+        out = str(tmp_path / "out")
+        jobs.trending_topk_ingest(stream, out)
+        landed = g.glob(out + "/batch=*")
+        assert not landed or spark.read.parquet(*landed).count() == 0
+        return
+    result = jobs.run_available_now(
+        body(jobs.watermarked(stream)), f"t_zero_{name}", output_mode=mode
+    )
+    assert result.count() == 0
+
+
+def test_streaming_jobs_drain_only_through_one_helper():
+    """`.start()` and `.awaitTermination(` appear in `streaming/jobs.py`
+    only inside `_drain`: every job drains through the one helper."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(jobs))
+    drain = next(
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_drain"
+    )
+    inside = {id(n) for n in ast.walk(drain)}
+    sites = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("start", "awaitTermination")
+    ]
+    assert len(sites) == 2
+    assert all(id(n) in inside for n in sites)
