@@ -33,6 +33,13 @@ ENGINE_CONFS: dict[str, str] = {
     # Broadcast threshold: dims (region/nation/supplier/part at test SF)
     # should broadcast; AQE may still upgrade larger joins at runtime.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # No Python call-site capture: with it on, every classic Column
+    # method and F.col call makes ~5 extra py4j round trips (and tries
+    # `import IPython`) to record its file:line.  The cost: analysis
+    # errors no longer name the Python line that built the failing
+    # expression.  PySpark reads this once per process, from the first
+    # active session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -29,6 +29,7 @@ the optimistic concurrency the protocol requires of writers.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -39,6 +40,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..parallel import run_concurrently
 from .catalog import local_rows_df
 
 _LOG_FMT = "{:020d}.json"
@@ -1403,6 +1405,19 @@ class _shredded_variant_writes(_unshredded_variant_writes):
     _VALUE = "true"
 
 
+def _variant_writes(
+    spark: SparkSession, frames: list[DataFrame], shred: bool = False
+):
+    """The landing guard for `frames`: shredding pinned off (on with
+    `shred`) when any of them carries a VARIANT, else a no-op.  It sets
+    a SESSION conf, so concurrent landings share one guard, entered on
+    the calling thread around all of them."""
+    if not any(_schema_has_variant(df.schema) for df in frames):
+        return contextlib.nullcontext()
+    guard = _shredded_variant_writes if shred else _unshredded_variant_writes
+    return guard(spark)
+
+
 def _file_stats_json(local_path: str) -> str | None:
     """The add-action `stats` JSON the Delta spec defines —
     numRecords / minValues / maxValues / nullCount, read from the
@@ -1486,6 +1501,17 @@ def _land_parquet(
     id-mode tables (`mapping.ids`) each column also stamps its
     `parquet.field.id` — Spark writes the ids natively, and id-mode
     readers resolve by them."""
+    with _variant_writes(df.sparkSession, [df], shred_variants):
+        return _land_files(df, path, partition_by, mapping)
+
+
+def _land_files(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None,
+    mapping: dict[str, str] | None,
+) -> list[tuple[str, dict, int, str | None]]:
+    """`_land_parquet` under a variant guard the caller holds."""
     if mapping:
         df = _phys_select(df, mapping)
         partition_by = (
@@ -1494,24 +1520,10 @@ def _land_parquet(
             else partition_by
         )
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    import contextlib
-
-    shred_guard = (
-        (
-            _shredded_variant_writes(df.sparkSession)
-            if shred_variants
-            else _unshredded_variant_writes(df.sparkSession)
-        )
-        if _schema_has_variant(df.schema)
-        else contextlib.nullcontext()
-    )
-    with shred_guard:
-        if partition_by:
-            df.write.mode("overwrite").partitionBy(*partition_by).parquet(
-                staging
-            )
-        else:
-            df.write.mode("overwrite").parquet(staging)
+    if partition_by:
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
+    else:
+        df.write.mode("overwrite").parquet(staging)
     out = []
     for dirpath, _dirs, files in sorted(os.walk(staging)):
         rel = os.path.relpath(dirpath, staging)
@@ -1898,17 +1910,7 @@ def write_delta(
                     {"remove": _remove_action(live[fname], now_ms, True)}
                 )
             )
-    for relname, pvals, size, stats in files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = stats  # spec: a JSON string inside the action
-        lines.append(json.dumps({"add": add}))
+    lines += _file_lines(now_ms, files)
     if txn is not None:
         lines.append(
             json.dumps(
@@ -2331,10 +2333,9 @@ def _delete_delta_pred(
         # spec's MATERIALIZED columns
         kept = _rt_materialize(kept, rt_cols)
         dropped = dropped.drop("_row_id", "_row_commit_version")
-    files = _land_parquet(kept, path, part_cols or None, mapping=mapping)
-    cdc_files = _land_cdc(
-        dropped.withColumn("_change_type", F.lit("delete")), path,
-        mapping=mapping,
+    files, cdc_files = _land_commit(
+        path, kept, dropped.withColumn("_change_type", F.lit("delete")),
+        part_cols, mapping,
     )
     # a scan that dropped no row commits nothing, and a file the
     # delete emptied gets its remove action only: a zero-row add has
@@ -2366,30 +2367,7 @@ def _delete_delta_pred(
                 {"remove": _remove_action(touched[fname], now_ms, True)}
             )
         )
-    for relname, pvals, size, stats in files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        lines.append(json.dumps({"add": add}))
-    for rel, size in cdc_files:
-        lines.append(
-            json.dumps(
-                {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": {},
-                        "size": size,
-                        "dataChange": False,
-                    }
-                }
-            )
-        )
+    lines += _file_lines(now_ms, files, cdc_files)
     _v_new = _claim_delta_version(
         path, lines, read_version=_v,
         read_scope=pred.scope(part_cols, mapping),
@@ -2503,7 +2481,7 @@ def _delete_where_delta_dv(
         )
         matches = matches.join(adf, [_DP_FILE, _DP_RI], "left_anti")
     matches = matches.localCheckpoint(eager=True)  # scan once, use twice
-    post_files: list = []
+    post = None
     if set_exprs is None:
         cdc_df = matches.drop(_DP_FILE, _DP_RI).withColumn(
             "_change_type", F.lit("delete")
@@ -2516,15 +2494,14 @@ def _delete_where_delta_dv(
         post = post.select(*pre.columns)
         _enforce_constraints(post, meta)
         post = post.localCheckpoint(eager=True)  # landed + fed to CDF
-        post_files = _land_parquet(
-            post, path, part_cols or None, mapping=mapping
-        )
         cdc_df = pre.withColumn(
             "_change_type", F.lit("update_preimage")
         ).unionByName(
             post.withColumn("_change_type", F.lit("update_postimage"))
         )
-    cdc_files = _land_cdc(cdc_df, path, mapping=mapping)
+    post_files, cdc_files = _land_commit(
+        path, post, cdc_df, part_cols, mapping
+    )
 
     # per-file roaring bitmaps are serialized ON EXECUTORS (groupBy
     # file → applyInPandas); the driver only ever handles the KB-scale
@@ -2616,36 +2593,67 @@ def _delete_where_delta_dv(
     # update strategy: the post-image rows land as NEW data files in
     # the same commit (the matched positions are hidden by the DVs
     # above, so no reader sees both images)
-    for relname, pvals, size, stats in post_files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        lines.append(json.dumps({"add": add}))
-    for rel, size in cdc_files:
-        lines.append(
-            json.dumps(
-                {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": {},
-                        "size": size,
-                        "dataChange": False,
-                    }
-                }
-            )
-        )
+    lines += _file_lines(now_ms, post_files, cdc_files)
     _v_new = _claim_delta_version(
         path, lines, read_version=read_version,
         read_scope=pred.scope(part_cols, mapping),
     )
     _maybe_auto_checkpoint(spark, path, _v_new)
     return _v_new
+
+
+def _land_commit(
+    path: str,
+    data: DataFrame | None,
+    cdc: DataFrame,
+    part_cols: list[str],
+    mapping: dict[str, str] | None,
+) -> tuple[list[tuple[str, dict, int, str | None]], list[tuple[str, int]]]:
+    """Land one DML commit's files: `data` as data files (none when it
+    is None) and `cdc` as change-feed files, the two Spark jobs run
+    concurrently.  Both land under ONE variant guard, so cdc files of
+    a variant table are unshredded like its data files.  Returns
+    (`_land_parquet` tuples, `_land_cdc` pairs)."""
+    with _variant_writes(cdc.sparkSession, [cdc] if data is None else [data, cdc]):
+        if data is None:
+            return [], _land_cdc(cdc, path, mapping)
+        files, cdc_files = run_concurrently(
+            lambda: _land_files(data, path, part_cols or None, mapping),
+            lambda: _land_cdc(cdc, path, mapping),
+        )
+    return files, cdc_files
+
+
+def _file_lines(
+    now_ms: int,
+    files: list[tuple[str, dict, int, str | None]],
+    cdc_files: list[tuple[str, int]] = (),
+    data_change: bool = True,
+) -> list[str]:
+    """The `add` log lines of landed data files (their `stats` a JSON
+    string inside the action, per spec) and the `cdc` lines of landed
+    change-feed files."""
+    lines = []
+    for relname, pvals, size, stats in files:
+        add = {
+            "path": relname,
+            "partitionValues": pvals,
+            "size": size,
+            "modificationTime": now_ms,
+            "dataChange": data_change,
+        }
+        if stats is not None:
+            add["stats"] = stats
+        lines.append(json.dumps({"add": add}))
+    for relname, size in cdc_files:
+        cdc = {
+            "path": relname,
+            "partitionValues": {},
+            "size": size,
+            "dataChange": False,
+        }
+        lines.append(json.dumps({"cdc": cdc}))
+    return lines
 
 
 def _land_cdc(
@@ -2655,7 +2663,8 @@ def _land_cdc(
     `_change_data/` — the directory the Delta CDF spec prescribes —
     and return (relative path, size) pairs for `cdc` actions.
     `mapping` renames to PHYSICAL column names (mapped tables' cdc
-    files live in the same namespace as data files, per spec)."""
+    files live in the same namespace as data files, per spec).  The
+    caller holds the variant guard (`_land_commit`)."""
     if mapping:
         df = _phys_select(df, mapping)
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
@@ -2943,14 +2952,13 @@ def _update_delta_pred(
         merged = _rt_materialize(merged, rt_cols)
         pre = pre.drop("_row_id", "_row_commit_version")
         post = post.drop("_row_id", "_row_commit_version")
-    files = _land_parquet(merged, path, part_cols or None, mapping=mapping)
     cdc = (
         pre.withColumn("_change_type", F.lit("update_preimage"))
         .unionByName(
             post.withColumn("_change_type", F.lit("update_postimage"))
         )
     )
-    cdc_files = _land_cdc(cdc, path, mapping=mapping)
+    files, cdc_files = _land_commit(path, merged, cdc, part_cols, mapping)
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -2968,30 +2976,7 @@ def _update_delta_pred(
         lines.append(
             json.dumps({"remove": _remove_action(touched[fname], now_ms, True)})
         )
-    for relname, pvals, size, stats in files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        lines.append(json.dumps({"add": add}))
-    for relname, size in cdc_files:
-        lines.append(
-            json.dumps(
-                {
-                    "cdc": {
-                        "path": relname,
-                        "partitionValues": {},
-                        "size": size,
-                        "dataChange": False,
-                    }
-                }
-            )
-        )
+    lines += _file_lines(now_ms, files, cdc_files)
     _v_new = _claim_delta_version(
         path, lines, read_version=_v,
         read_scope=pred.scope(part_cols, mapping),
@@ -3067,17 +3052,7 @@ def optimize_zorder_delta(
         lines.append(
             json.dumps({"remove": _remove_action(live[fname], now_ms, False)})
         )
-    for relname, pvals, size, stats in files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": False,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        lines.append(json.dumps({"add": add}))
+    lines += _file_lines(now_ms, files, data_change=False)
     _v_new = _claim_delta_version(path, lines, read_version=_v)
     _maybe_auto_checkpoint(spark, path, _v_new)
     return _v_new
@@ -3216,7 +3191,6 @@ def merge_upsert_delta(
         merged = _rt_materialize(
             merged.withColumn("_row_id", F.explode_outer("_row_id")), rt_cols
         )
-    files = _land_parquet(merged, path, part_cols or None, mapping=mapping)
     cdc = tagged.where(new | F.col(_DP_HAS_NEW)).select(
         *cols,
         F.when(~new, "update_preimage")
@@ -3224,7 +3198,7 @@ def merge_upsert_delta(
         .otherwise("insert")
         .alias("_change_type"),
     )
-    cdc_files = _land_cdc(cdc, path, mapping=mapping)
+    files, cdc_files = _land_commit(path, merged, cdc, part_cols, mapping)
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -3242,30 +3216,7 @@ def merge_upsert_delta(
         lines.append(
             json.dumps({"remove": _remove_action(touched[fname], now_ms, True)})
         )
-    for relname, pvals, size, stats in files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        lines.append(json.dumps({"add": add}))
-    for relname, size in cdc_files:
-        lines.append(
-            json.dumps(
-                {
-                    "cdc": {
-                        "path": relname,
-                        "partitionValues": {},
-                        "size": size,
-                        "dataChange": False,
-                    }
-                }
-            )
-        )
+    lines += _file_lines(now_ms, files, cdc_files)
     _scope = None if lo is None else {
         "part_cols": part_cols, "col": key, "lo": lo, "hi": hi,
         "phys_part": [mapping.get(c, c) for c in part_cols],
@@ -3326,12 +3277,11 @@ def delete_keys_delta(
     carried = old_rows.join(F.broadcast(keys), key, "left_anti")
     deleted = old_rows.join(F.broadcast(keys), key, "left_semi")
     merged = _rt_materialize(carried, rt_cols) if rt_cols else carried
-    files = _land_parquet(merged, path, part_cols or None, mapping=mapping)
     cdc = deleted
     if rt_cols:
         cdc = cdc.drop("_row_id", "_row_commit_version")
     cdc = cdc.withColumn("_change_type", F.lit("delete"))
-    cdc_files = _land_cdc(cdc, path, mapping=mapping)
+    files, cdc_files = _land_commit(path, merged, cdc, part_cols, mapping)
     now_ms = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -3351,30 +3301,7 @@ def delete_keys_delta(
         lines.append(
             json.dumps({"remove": _remove_action(touched[fname], now_ms, True)})
         )
-    for relname, pvals, size, stats in files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        lines.append(json.dumps({"add": add}))
-    for relname, size in cdc_files:
-        lines.append(
-            json.dumps(
-                {
-                    "cdc": {
-                        "path": relname,
-                        "partitionValues": {},
-                        "size": size,
-                        "dataChange": False,
-                    }
-                }
-            )
-        )
+    lines += _file_lines(now_ms, files, cdc_files)
     _scope = {
         "part_cols": part_cols, "col": key, "lo": lo, "hi": hi,
         "phys_part": [mapping.get(c, c) for c in part_cols],
@@ -3973,17 +3900,7 @@ def recluster_delta(
         lines.append(
             json.dumps({"remove": _remove_action(live[fname], now_ms, False)})
         )
-    for relname, pvals, size, stats in files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": False,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        lines.append(json.dumps({"add": add}))
+    lines += _file_lines(now_ms, files, data_change=False)
     _v_new = _claim_delta_version(path, lines, read_version=_v)
     _maybe_auto_checkpoint(spark, path, _v_new)
     return _v_new
@@ -4205,17 +4122,7 @@ def compact_delta(spark: SparkSession, path: str, target_mb: int = 128) -> int:
                 {"remove": _remove_action(live[fname], now_ms, False)}
             )
         )
-    for relname, pvals, size, stats in files:
-        add = {
-            "path": relname,
-            "partitionValues": pvals,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": False,
-        }
-        if stats is not None:
-            add["stats"] = stats
-        lines.append(json.dumps({"add": add}))
+    lines += _file_lines(now_ms, files, data_change=False)
     _v_new = _claim_delta_version(path, lines, read_version=_v)
     _maybe_auto_checkpoint(spark, path, _v_new)
     return _v_new

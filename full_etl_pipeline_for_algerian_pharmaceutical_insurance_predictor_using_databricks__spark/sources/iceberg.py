@@ -61,6 +61,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..parallel import run_concurrently
 from .catalog import local_rows_df
 
 from . import avrotiny
@@ -2960,16 +2961,9 @@ def _land_data(
         ]
     )
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    import contextlib
+    from .deltaproto import _variant_writes
 
-    from .deltaproto import _schema_has_variant, _unshredded_variant_writes
-
-    shred_guard = (
-        _unshredded_variant_writes(df.sparkSession)
-        if _schema_has_variant(df.schema)
-        else contextlib.nullcontext()
-    )
-    with shred_guard:
+    with _variant_writes(df.sparkSession, [df]):
         w = df.write.mode("overwrite")
         if part_cols:
             w = w.partitionBy(*part_cols)
@@ -5239,13 +5233,18 @@ def upsert_iceberg(
         eq_sid = _ensure_unpartitioned_spec(path)
     else:
         eq_spec, eq_sid = spec, spec_sid
-    data_files = _land_data(df, path, spec, fields)
-    if not data_files:  # empty update frame: no-op
+    # the data and the equality-delete files land in two concurrent
+    # Spark jobs; the data landing (and its variant guard, a session
+    # conf) runs on the calling thread
+    data_files, eq_recs = run_concurrently(
+        lambda: _land_data(df, path, spec, fields),
+        lambda: _land_eq_deletes_df(
+            df.select(*keys).distinct(), path, fields, keys, {}
+        ),
+    )
+    if not data_files:  # empty update frame (so no keys either): no-op
         snap = _snapshot(meta0, None)
         return int(snap["snapshot-id"]) if snap else 0
-    eq_recs = _land_eq_deletes_df(
-        df.select(*keys).distinct(), path, fields, keys, {}
-    )
     schema_json = {"type": "struct", "schema-id": 0, "fields": fields}
 
     def build(base: dict | None, snapshot_id: int, seq: int, fv: int):

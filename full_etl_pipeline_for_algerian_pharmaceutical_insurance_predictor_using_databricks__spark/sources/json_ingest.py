@@ -5,16 +5,18 @@ The reference flattens `{"A": [{...}], "B": [...]}` with a Python
 for-loop on the driver (Pharma_Ingestion_Cleaning.py:30-39) — O(dataset)
 through driver memory. Here the flatten is a logical-plan transform:
 
-    one-row DF of letter columns → stack → explode → records
+    whole-file text row → from_json(map<letter, array<record>>) →
+    sorted (letter, records) entries → explode → records
 
-so executors do the work from byte one. At real scale the landing
-format should be JSONL (one record per line, splittable); `read_jsonl`
-covers that path with an explicit schema (no inference scan).
+parsed once against the declared schema, with no inference job. At
+real scale the landing format should be JSONL (one record per line,
+splittable); `read_jsonl` covers that path with an explicit schema.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from ..schemas import RAW_MEDICATION
 
@@ -23,63 +25,63 @@ from ..schemas import RAW_MEDICATION
 _RECORD_FIELDS = [f for f in RAW_MEDICATION.fields if f.name != "first_letter"]
 
 
+def _as_strings(dt: T.DataType) -> T.DataType:
+    """The parse type of a declared type: every leaf a string, structs
+    kept, so a leaf of any JSON kind (number, boolean, string) parses
+    and the cast to the declared type decides its value."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_strings(f.dataType)) for f in dt.fields]
+        )
+    return T.StringType()
+
+
+#: The landing document as one value: letter → that letter's records.
+_DOC_TYPE = T.MapType(
+    T.StringType(),
+    T.ArrayType(_as_strings(T.StructType(_RECORD_FIELDS))),
+)
+
+
+def _leaf(col: F.Column, dt: T.DataType) -> F.Column:
+    """Cast a string-parsed field to its declared type; a struct is
+    rebuilt field by field, so an absent or null parent gives a struct
+    of NULLs, never a NULL struct."""
+    if isinstance(dt, T.StructType):
+        return F.struct(
+            *[_leaf(col.getField(f.name), f.dataType).alias(f.name) for f in dt.fields]
+        )
+    return col.cast(dt)
+
+
 def read_letter_keyed_json(spark: SparkSession, path: str) -> DataFrame:
     """Load the letter-keyed document and flatten to one row per
     medication, injecting `first_letter` (parity with ING:30-39).
 
-    multiLine JSON is unsplittable (one task reads the document) —
-    acceptable for the reference's ~3 MB feed; see `read_jsonl` for the
-    scale path."""
-    import pyspark.sql.types as T
+    The file is read whole (`text(wholetext=True)`) and parsed once by
+    `from_json` into `map<string, array<record>>`, each leaf parsed as a
+    string and cast to its RAW_MEDICATION type: a numeric
+    `reference_rate` keeps its JSON text, a `"true"` string `refundable`
+    casts to true, and a missing field is NULL.  Letters come out in
+    sorted order, records in document order.  A row no longer depends
+    on the rest of the document: schema inference typed a field that
+    was numeric in every record as double (120 read "120.0"), and
+    failed outright when two letters inferred different types.
 
-    doc = spark.read.option("multiLine", "true").json(path)
-    letters = sorted(doc.columns)
-    # stack('A', A, 'B', B, ...) → (first_letter, meds); explode arrays.
-    stack_args = ", ".join(f"'{c}', `{c}`" for c in letters)
-    stacked = doc.selectExpr(
-        f"stack({len(letters)}, {stack_args}) as (first_letter, meds)"
+    The whole document is one row, so one task parses it — acceptable
+    for the reference's ~3 MB feed; see `read_jsonl` for the scale
+    path."""
+    doc = spark.read.text(path, wholetext=True)
+    letters = doc.select(
+        F.inline(F.array_sort(F.map_entries(F.from_json("value", _DOC_TYPE))))
     )
-    exploded = stacked.select(
-        "first_letter", F.explode("meds").alias("med")
+    med = letters.select(
+        F.col("key").alias("first_letter"), F.explode("value").alias("med")
     )
-    # align to the declared record schema BY NAME, field by field —
-    # never by a positional struct cast: json inference sorts nested
-    # fields alphabetically, and casting the whole struct re-labels
-    # them positionally (lab.name would silently receive the address,
-    # therapeutic↔pharmacological would swap).  Inference also DROPS
-    # all-null nested fields, so each subfield is looked up defensively
-    # and NULLed when absent.
-    inferred = {f.name: f.dataType for f in exploded.schema["med"].dataType.fields}
-
-    def subfield(parent: str, name: str, dtype) -> F.Column:
-        # An all-null parent is inferred as StringType, not StructType —
-        # guard the fieldNames() probe or the lookup raises instead of
-        # emitting a null-filled struct.
-        parent_type = inferred.get(parent)
-        present = (
-            isinstance(parent_type, T.StructType)
-            and name in parent_type.fieldNames()
-        )
-        col = F.col(f"med.{parent}.{name}") if present else F.lit(None)
-        return col.cast(dtype).alias(name)
-
-    cols: list[F.Column] = []
-    for f in _RECORD_FIELDS:
-        if isinstance(f.dataType, T.StructType):
-            cols.append(
-                F.struct(
-                    *[
-                        subfield(f.name, sf.name, sf.dataType)
-                        for sf in f.dataType.fields
-                    ]
-                ).alias(f.name)
-            )
-        else:
-            present = f.name in inferred
-            col = F.col(f"med.{f.name}") if present else F.lit(None)
-            cols.append(col.cast(f.dataType).alias(f.name))
-    flat = exploded.select(*cols, F.col("first_letter").cast("string"))
-    return flat.select(*[F.col(f.name) for f in RAW_MEDICATION.fields])
+    return med.select(
+        *[_leaf(F.col("med").getField(f.name), f.dataType).alias(f.name) for f in _RECORD_FIELDS],
+        "first_letter",
+    )
 
 
 def read_jsonl(spark: SparkSession, path: str) -> DataFrame:

@@ -2083,6 +2083,47 @@ def test_variant_dv_delete_keeps_features(spark, tmp_path):
     assert got == [i for i in range(12) if not 3 <= i <= 5]
 
 
+def test_variant_cdc_files_land_unshredded(spark, tmp_path):
+    """A DELETE and a MERGE on a variant table land their change-feed
+    files under the same unshredded guard as their data files: the
+    table declares only `variantType`, so no landed file may carry a
+    `typed_value` leaf.  The shredding conf is back to its value after
+    each commit."""
+    from full_etl_pipeline_for_algerian_pharmaceutical_insurance_predictor_using_databricks__spark.sources.pqfooter import (
+        read_footer,
+    )
+
+    path = str(tmp_path / "varcdc")
+    dp.write_delta(_vdf(spark, 0, 12), path)
+    dp.delete_where_delta(spark, path, "doc_id", 3, 5)
+    dp.merge_upsert_delta(spark, _vdf(spark, 8, 16), path, "doc_id")
+    assert (
+        spark.conf.get("spark.sql.variant.writeShredding.enabled") == "true"
+    )
+    assert "variantShredding" not in dp._current_protocol(path).get(
+        "writerFeatures", []
+    )
+    cdc = sorted(os.listdir(os.path.join(path, "_change_data")))
+    data = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(cdc) == 2 and data
+    for f in [os.path.join(path, "_change_data", c) for c in cdc] + [
+        os.path.join(path, d) for d in data
+    ]:
+        cols = read_footer(f)["columns"]
+        assert any(c.startswith("props.") for c in cols), cols
+        assert not any("typed_value" in c for c in cols), (f, sorted(cols))
+    got = sorted(
+        (r["doc_id"], r["_change_type"])
+        for r in dp.read_changes_delta(spark, path, 1).collect()
+    )
+    assert got == sorted(
+        [(i, "delete") for i in (3, 4, 5)]
+        + [(i, "update_preimage") for i in range(8, 12)]
+        + [(i, "update_postimage") for i in range(8, 12)]
+        + [(i, "insert") for i in range(12, 16)]
+    )
+
+
 def test_variant_shredded_foreign_table_reads(spark, tmp_path):
     """A FOREIGN table whose files are SHREDDED (typed_value subtrees,
     the layout Databricks/Spark write with shredding on) and whose
@@ -3454,7 +3495,8 @@ def test_merge_over_touched_files_is_one_pass(spark, tmp_path):
     change-feed write — and lands one data file and one cdc file.
     Jobs are counted by job group from the status tracker, on the
     ingest shape: name-keyed upserts of 5,000 rows over a 4-file
-    table."""
+    table.  The two writes run on two threads, and no job leaves the
+    caller's group."""
     import uuid
 
     def batch(seed):
@@ -3470,6 +3512,7 @@ def test_merge_over_touched_files_is_one_pass(spark, tmp_path):
     updates = spark.read.parquet(ups)
     sc = spark.sparkContext
     group = f"merge-{uuid.uuid4().hex}"
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
     sc.setJobGroup(group, "merge_upsert_delta")
     try:
         v = dp.merge_upsert_delta(spark, updates, path, "name")
@@ -3478,6 +3521,7 @@ def test_merge_over_touched_files_is_one_pass(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
     acts = dp._read_actions(path, v)
     assert sum("remove" in a for a in acts) == 4
     assert sum("add" in a for a in acts) == 1

@@ -221,16 +221,64 @@ def test_observed_read_metrics_match_routed_counts(spark, tmp_path):
 
 
 def test_nested_fields_align_by_name_not_position(spark, landing):
-    """JSON inference sorts nested fields alphabetically and drops
-    all-null ones; alignment must be BY NAME — a positional struct cast
-    hands lab.name the address value and swaps
+    """Nested fields align BY NAME, all-null ones included — a
+    positional struct cast hands lab.name the address value and swaps
     therapeutic↔pharmacological (regression: the original reader did)."""
     raw = read_letter_keyed_json(spark, landing)
     r = {row["name"]: row for row in raw.collect()}["ASPIRINE"]
     assert r.lab.name == "LabA"
-    assert r.lab.address is None  # all-null in fixture, dropped by inference
+    assert r.lab.address is None  # all-null in fixture
     assert r["class"].therapeutic == "analgesic"
     assert r["class"].pharmacological == "analgesic-ph"
+
+
+def test_letter_keyed_parse_matches_inference_parser(spark, landing, tmp_path):
+    """The schema-declared parse gives, row for row and in order
+    (letters sorted, records in document order), what the schema-
+    inference parser it replaced gave.  That parser failed outright
+    when letters inferred different types (an empty letter array, or a
+    letter missing fields another has), so its rows for the edge
+    document below are those of each non-empty letter parsed alone."""
+    def fixture_row(name, lab, th, rate, refundable, letter):
+        return (name, (lab, None, None, None), (th, f"{th}-ph"), "tablet", "x",
+                rate, refundable, letter)
+
+    assert [tuple(r) for r in read_letter_keyed_json(spark, landing).collect()] == [
+        fixture_row("ASPIRINE", "LabA", "analgesic", "120 DA", True, "A"),
+        fixture_row("AMOXIL", "LabA", "antibiotic", "450 DA", None, "A"),
+        fixture_row("BRUFEN", "LabB", "analgesic", "85 DA", False, "B"),
+        fixture_row("BADPRICE", "LabB", "antibiotic", "N/A", True, "B"),
+        fixture_row("BZERO", "LabB", "antibiotic", "0 DA", True, "B"),
+        fixture_row("CLAMOXYL", "LabC", "antibiotic", "620 DA", True, "C"),
+    ]
+
+    edge = {
+        "B": [  # lab null in every record
+            {"name": "BNULL1", "lab": None, "class": {"therapeutic": "t"},
+             "form": "tablet", "generic": "g", "reference_rate": "85 DA",
+             "refundable": False},
+            {"name": "BNULL2", "lab": None, "reference_rate": None, "refundable": None},
+        ],
+        "A": [  # numeric rate, string "true", missing nested fields
+            {"name": "ANUM", "lab": {"name": "LabA", "tel": "021"},
+             "class": {"pharmacological": "ph"}, "form": "syrup", "generic": "x",
+             "reference_rate": 1500, "refundable": "true"},
+            {"name": "ASTR", "lab": {"name": "LabB", "address": "addr", "tel": None, "web": "w"},
+             "class": {"therapeutic": "t", "pharmacological": "p"}, "form": "tablet",
+             "generic": "y", "reference_rate": "120 DA", "refundable": True},
+            {"name": "AMISS"},
+        ],
+        "C": [],
+    }
+    path = land_dict(edge, str(tmp_path / "edge.json"))
+    nulls = (None, None, None, None)
+    assert [tuple(r) for r in read_letter_keyed_json(spark, path).collect()] == [
+        ("ANUM", ("LabA", None, "021", None), (None, "ph"), "syrup", "x", "1500", True, "A"),
+        ("ASTR", ("LabB", "addr", None, "w"), ("t", "p"), "tablet", "y", "120 DA", True, "A"),
+        ("AMISS", nulls, (None, None), None, None, None, None, "A"),
+        ("BNULL1", nulls, ("t", None), "tablet", "g", "85 DA", False, "B"),
+        ("BNULL2", nulls, (None, None), None, None, None, None, "B"),
+    ]
 
 
 # --------------------------------------------------------------------------
@@ -249,13 +297,13 @@ def registered(spark):
 
 
 def test_datasource_single_file_parity(spark, landing, registered):
-    """format('letterjson') on a landed document == the stack/explode
+    """format('letterjson') on a landed document == the from_json
     reader, row for row (the DataSource moves the parse into per-letter
     tasks without changing semantics)."""
     ds = spark.read.format("letterjson").load(landing)
     ref = read_letter_keyed_json(spark, landing)
-    # same names/types (nullable flags differ: the DataSource declares
-    # the contract schema, inference marks everything nullable)
+    # same names/types (nullable flags may differ: the DataSource
+    # declares the contract schema)
     assert ds.schema.simpleString() == ref.schema.simpleString()
     assert sorted(map(tuple, ds.collect())) == sorted(map(tuple, ref.collect()))
 

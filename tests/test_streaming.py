@@ -191,7 +191,7 @@ def test_stream_dedup_within_watermark(spark, sf_dir):
     assert result.count() == n_events
 
 
-def test_stream_static_enrichment_matches_batch(spark, sf_dir):
+def test_stream_static_user_dim_enrichment_matches_batch(spark, sf_dir):
     """Stream-static broadcast join: every streamed event is enriched
     with the batch-derived user dimension; result must equal the same
     join done fully in batch."""

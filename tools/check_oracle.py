@@ -5,6 +5,8 @@ over the same parquet dir, then compares row count + order-insensitive
 values (normalized). Usage:
 
     python tools/check_oracle.py [sf_dir] [name ...]
+
+A name that is not a `queries()` entry fails the run before any check.
 """
 
 from __future__ import annotations
@@ -76,6 +78,12 @@ def main():
         TABLE_NAMES,
     )
 
+    queries = entry.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"FAIL  not queries() entries: {unknown}")
+        sys.exit(1)
+
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLE_NAMES:
@@ -83,7 +91,6 @@ def main():
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    queries = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
     for name, fn in queries.items():
