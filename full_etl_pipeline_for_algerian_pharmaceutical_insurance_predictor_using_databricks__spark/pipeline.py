@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .functions import extract_price, price_category
 from .parallel import run_concurrently
 from .sources.json_ingest import read_letter_keyed_json
-from .sources.sinks import read_back_verified, save_as_table
+from .sources.sinks import read_back_verified, save_as_table, swap_in_table
 
 
 @dataclass
@@ -93,11 +93,20 @@ def run_ingestion(
     Returns (saved DataFrame, ingest stats). The stats job and the
     sink write run concurrently, each parsing the landing document
     itself: a parse of one document costs less than filling and
-    dropping a cache for it."""
+    dropping a cache for it.  The write goes to a staged table that
+    replaces `table_name` only once both jobs have succeeded, so a
+    landing file that fails to parse leaves the previous table in
+    place."""
     extracted = flatten_and_extract(read_letter_keyed_json(spark, landing_path))
-    stats, _fmt = run_concurrently(
-        lambda: price_stats(extracted),
-        lambda: save_as_table(clean(extracted), table_name),
-    )
+    staged = f"{table_name}__staged"
+    try:
+        stats, _fmt = run_concurrently(
+            lambda: price_stats(extracted),
+            lambda: save_as_table(clean(extracted), staged),
+        )
+    except Exception:
+        spark.sql(f"DROP TABLE IF EXISTS {staged}")
+        raise
+    swap_in_table(spark, staged, table_name)
     saved = read_back_verified(spark, table_name, expected_rows=stats.valid_price)
     return saved, stats

@@ -70,10 +70,25 @@ def read_letter_keyed_json(spark: SparkSession, path: str) -> DataFrame:
 
     The whole document is one row, so one task parses it — acceptable
     for the reference's ~3 MB feed; see `read_jsonl` for the scale
-    path."""
+    path.
+
+    A landing file that is not such a document raises instead of
+    reading as zero rows, so a failed fetch never replaces the catalog
+    table with an empty one: the parse is FAILFAST (a non-JSON body, a
+    truncated download, a top level that is not an object of arrays),
+    and an empty file raises here, since it gives the text reader no
+    row at all."""
     doc = spark.read.text(path, wholetext=True)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.getContentSummary(jpath).getLength() == 0:
+        raise ValueError(f"landing file {path} is empty")
     letters = doc.select(
-        F.inline(F.array_sort(F.map_entries(F.from_json("value", _DOC_TYPE))))
+        F.inline(
+            F.array_sort(
+                F.map_entries(F.from_json("value", _DOC_TYPE, {"mode": "FAILFAST"}))
+            )
+        )
     )
     med = letters.select(
         F.col("key").alias("first_letter"), F.explode("value").alias("med")

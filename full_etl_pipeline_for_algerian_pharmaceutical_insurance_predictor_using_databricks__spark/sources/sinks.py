@@ -37,6 +37,15 @@ def save_as_table(df: DataFrame, name: str, mode: str = "overwrite") -> str:
     return fmt
 
 
+def swap_in_table(spark: SparkSession, staged: str, name: str) -> None:
+    """Replace catalog table `name` by table `staged`: drop the old one,
+    then rename the staged one.  Neither step runs a Spark job, so a
+    caller that writes `staged` first takes the old table away only
+    once that write has succeeded."""
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    spark.sql(f"ALTER TABLE {staged} RENAME TO {name}")
+
+
 def write_partitioned(
     df: DataFrame, path: str, partition_col: str, mode: str = "overwrite"
 ) -> None:

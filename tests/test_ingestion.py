@@ -281,6 +281,44 @@ def test_letter_keyed_parse_matches_inference_parser(spark, landing, tmp_path):
     ]
 
 
+_MALFORMED = {
+    "html": "<html><body>502 Bad Gateway</body></html>",
+    "truncated": '{"A": [{"name": "ASPIRINE", "reference_rate": "12',
+    "top_level_array": '[{"name": "ASPIRINE"}]',
+    "letter_not_array": '{"A": 5}',
+    "record_not_object": '{"A": [5]}',
+    "empty": "",
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_MALFORMED))
+def test_malformed_landing_raises(spark, tmp_path, kind):
+    """A landing file that is not a letter-keyed object of record
+    arrays — a fetch that wrote an error page, a truncated or empty
+    download — raises instead of reading as zero rows."""
+    path = tmp_path / f"{kind}.json"
+    path.write_text(_MALFORMED[kind], encoding="utf-8")
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING|is empty"):
+        read_letter_keyed_json(spark, str(path)).collect()
+
+
+def test_failed_ingest_keeps_previous_table(spark, landing, tmp_path):
+    """run_ingestion over a landing file that fails to parse raises and
+    leaves the table of the previous run, and no staged table, behind."""
+    table = "medications_keep_test"
+    run_ingestion(spark, landing, table_name=table)
+    try:
+        for kind in ("html", "empty"):
+            path = tmp_path / f"{kind}.json"
+            path.write_text(_MALFORMED[kind], encoding="utf-8")
+            with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING|is empty"):
+                run_ingestion(spark, str(path), table_name=table)
+            assert spark.table(table).count() == 4
+            assert not spark.catalog.tableExists(f"{table}__staged")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 # --------------------------------------------------------------------------
 # Spark 4 Python DataSource (sources/pydatasource.py)
 # --------------------------------------------------------------------------
